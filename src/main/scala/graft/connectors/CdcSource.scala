@@ -1,27 +1,29 @@
 package graft.connectors
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Change-stream source with N-way server-side-style splits.
+/** Change-stream source.
   *
   * The reference's custom CDC connector
   * (connector/mongo/MongoChangeStreamSource.java:30-328) tails a Mongo change
   * stream, checkpoints the resume token in split state, and prunes
   * server-side with a hash-mod `$match` on `documentKey._id`
   * (buildHashModPipeline :49-57); MultiCdcSourceBuilder unions N such
-  * readers.
+  * readers, so each event is read by exactly one cursor.
   *
   * Spark mapping (zero-egress fixture route): the change log is a directory
   * of JSON change events consumed with the file stream source —
   * Structured Streaming's checkpoint plays the resume token role exactly
   * (offsets are committed per micro-batch, restart resumes after the last
   * committed batch; an invalid/lost checkpoint falls back to a fresh cursor
-  * like the reference's token-invalid path). The hash-mod split becomes a
-  * deterministic filter per split; Catalyst pushes it into the scan, and at
-  * scale each split is an independent partition of the stream — the same
-  * effect as the reference's server-side `$match` fan-out.
+  * like the reference's token-invalid path). The N-way split is ONE reader
+  * here: a file source cannot prune by key, so N filtered readers would each
+  * list and parse every file (N× the read for the same rows — the union of
+  * the disjoint hash-mod branches is the unfiltered stream), and the keyed
+  * state pass downstream already hash-partitions by key, which is the
+  * reference's per-split parallelism. `CdcV2` keeps a real hash-mod split
+  * for sources that can prune per partition.
   */
 object CdcSource {
 
@@ -35,24 +37,18 @@ object CdcSource {
     StructField("eventTime", TimestampType)
   ))
 
-  /** The reference's hash-mod split predicate on the document key. */
-  def splitFilter(numSplits: Int, splitIndex: Int) =
-    pmod(abs(hash(get_json_object(col("documentKey"), "$._id"))), lit(numSplits)) === splitIndex
-
-  /** One split of the change stream (streaming). */
-  def split(spark: SparkSession, path: String, numSplits: Int, splitIndex: Int): DataFrame =
+  /** The change stream (streaming), one reader over the change-log
+    * directory (reference MultiCdcSourceBuilder.java:20-42 — see above for
+    * why its N splits are one reader here).
+    */
+  def multi(spark: SparkSession, path: String): DataFrame =
     spark.readStream
       .schema(cdcSchema)
       .option("maxFilesPerTrigger", "16")
       .json(path)
-      .filter(splitFilter(numSplits, splitIndex))
 
-  /** N unioned splits (reference MultiCdcSourceBuilder.java:20-42, default
-    * parallelism 4). Union of N filtered readers keeps per-split ordering
-    * like N independent change-stream cursors.
-    */
-  def multi(spark: SparkSession, path: String, numSplits: Int = 4): DataFrame =
-    (0 until numSplits).map(i => split(spark, path, numSplits, i)).reduce(_.unionByName(_))
+  @deprecated("the split count no longer changes the stream; use multi(spark, path)", "0.1.0")
+  def multi(spark: SparkSession, path: String, numSplits: Int): DataFrame = multi(spark, path)
 
   /** Batch face over the same change-log directory (for replay/backfill and
     * the correctness harness).

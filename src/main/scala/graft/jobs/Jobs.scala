@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.connectors.{CdcSource, EsSink, KafkaConnectors, UpsertSink}
-import graft.core.{Dlq, PipelineBuilder, Tables}
+import graft.core.{Dlq, Persist, PipelineBuilder, Tables}
 import graft.joins.{DynamicJoiner, StaticJoiner}
 import graft.parsers.{CdcParser, EnvelopeParser}
 import graft.patterns._
@@ -88,30 +88,23 @@ class MongoToKafkaJob extends GraftJob {
     "payloadJson",
     Seq(SchemaVersion(1, Seq(FieldSpec("_id", FieldType.ANY)))))
 
-  /** Parse → null-key bypass → fused dedup+suppression. Builds a FRESH
+  /** Parse → fused dedup+suppression. Builds a FRESH
     * StatefulProcessor per call: a processor instance must belong to
     * exactly one streaming query (concurrent driver inits on a shared
     * instance race on its state-var fields).
     *
-    * A payload without _id parses to primaryKey NULL; a null grouping key
-    * crashes transformWithState (INTERNAL_ERROR_TWS "implicit key not
-    * found"), so null-key rows BYPASS the keyed dedup — there is nothing
-    * to dedup without a key — and rejoin before the schema gate, which
-    * dead-letters them (missing:_id). Self-union of one streaming source
-    * is a single scan per micro-batch.
+    * A payload without _id parses to primaryKey NULL; the keyed pass lets
+    * such rows through untouched (Processors.cdcPipeline) and the schema
+    * gate dead-letters them (missing:_id) — one scan, one state pass.
     */
   private def dedupedPipeline(cdcStream: DataFrame, ttlMs: Long): DataFrame = {
     import cdcStream.sparkSession.implicits._
     val parsed = CdcParser
       .parse(cdcStream)
       .filter(col("operation") =!= "unknown")
-    val piped = graft.stateful.Processors
-      .cdcPipeline(
-        parsed.filter(col("primaryKey").isNotNull).as[graft.model.StreamEnvelop],
-        ttlMs,
-        Set("updatedAt", "modifiedAt"))
+    graft.stateful.Processors
+      .cdcPipeline(parsed.as[graft.model.StreamEnvelop], ttlMs, Set("updatedAt", "modifiedAt"))
       .toDF()
-    piped.unionByName(parsed.filter(col("primaryKey").isNull))
   }
 
   private def finishGood(good: DataFrame): DataFrame =
@@ -149,7 +142,8 @@ class MongoToKafkaJob extends GraftJob {
   }
 
   /** Production single-pass face: ONE stateful pipeline, one query, one
-    * state store; each micro-batch splits at the schema gate and writes
+    * state store; each micro-batch is persisted (the keyed state pass runs
+    * and commits once per epoch), splits at the schema gate and writes
     * envelopes to `outPath/epoch=N` and dead letters to `dlqPath/epoch=N`
     * (per-epoch overwrite → replayed epochs converge instead of
     * double-appending). Requires the RocksDB state store provider.
@@ -171,12 +165,14 @@ class MongoToKafkaJob extends GraftJob {
     dedupedPipeline(cdcStream, ttlMs).writeStream
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val (good, bad) = streamingEnforcer.enforce(batch)
-        finishGood(good).write.mode("overwrite").parquet(s"$outPath/epoch=$epoch")
-        Dlq
-          .toDlq(bad, graft.model.ErrorCodes.SchemaViolation, col("violations"), name,
-            col("payloadJson"), current_timestamp())
-          .write.mode("overwrite").parquet(s"$dlqPath/epoch=$epoch")
+        Persist.once(batch) { b =>
+          val (good, bad) = streamingEnforcer.enforce(b)
+          finishGood(good).write.mode("overwrite").parquet(s"$outPath/epoch=$epoch")
+          Dlq
+            .toDlq(bad, graft.model.ErrorCodes.SchemaViolation, col("violations"), name,
+              col("payloadJson"), current_timestamp())
+            .write.mode("overwrite").parquet(s"$dlqPath/epoch=$epoch")
+        }
       }
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
@@ -217,8 +213,13 @@ class KafkaToMongoJob extends GraftJob {
       envelopes: DataFrame,
       refs: Seq[(String, DataFrame)],
       clock: Column
-  ): (DataFrame, DataFrame) = {
-    val enriched = refs.foldLeft(envelopes) { case (df, (refName, ref)) =>
+  ): (DataFrame, DataFrame) = gate(enrich(envelopes, refs), clock)
+
+  /** Broadcast enrichment from each reference, plus the `_id_check`
+    * column [[gate]] tests.
+    */
+  private def enrich(envelopes: DataFrame, refs: Seq[(String, DataFrame)]): DataFrame =
+    refs.foldLeft(envelopes) { case (df, (refName, ref)) =>
       val compact = StaticJoiner("primaryKey", "r_key")
         .latestPerKey(ref.select(col("primaryKey").as("r_key"), col("payloadJson").as("r_payload"),
           col("eventTime").as("r_ts"), col("traceId").as("r_tie")), "r_ts", "r_tie")
@@ -231,9 +232,11 @@ class KafkaToMongoJob extends GraftJob {
             .otherwise(col("metadata"))
         )
         .drop("r_key", "r_payload")
-    }
-    val withId = enriched.withColumn("_id_check", get_json_object(col("payloadJson"), "$._id"))
-    val (good, bad) = ConstraintEnforcer(Seq(NotNullRule("_id_check"))).enforce(withId)
+    }.withColumn("_id_check", get_json_object(col("payloadJson"), "$._id"))
+
+  /** Constraint gate over an [[enrich]]ed frame: (good, dead letters). */
+  private def gate(enriched: DataFrame, clock: Column): (DataFrame, DataFrame) = {
+    val (good, bad) = ConstraintEnforcer(Seq(NotNullRule("_id_check"))).enforce(enriched)
     val dlq = Dlq.toDlq(bad, graft.model.ErrorCodes.ConstraintViolation, col("violations"), name, col("payloadJson"), clock)
     (good.drop("_id_check"), dlq)
   }
@@ -266,7 +269,10 @@ class KafkaToMongoJob extends GraftJob {
     * constraint gate's dead letters land in `tablePath_gate_dlq` instead of
     * being discarded — one source read, two writes, matching the
     * reference's publish-from-every-stage DLQ contract
-    * (DLQPublisher.java:18-97). Returns the started query.
+    * (DLQPublisher.java:18-97). The parsed and the enriched frames are
+    * persisted per epoch, so the parse, the enrichment and the gate run
+    * once for the upsert write and the DLQ write together. Returns the
+    * started query.
     */
   def startStreaming(
       raw: DataFrame,
@@ -276,17 +282,21 @@ class KafkaToMongoJob extends GraftJob {
   ): org.apache.spark.sql.streaming.StreamingQuery =
     raw.writeStream
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val (good, dlq) = build(batch, refs, current_timestamp())
-        graft.connectors.UpsertSink
-          .writer(tablePath, dlqPath = Some(tablePath + "_dlq"))(good, epoch)
-        // per-epoch overwrite (not a bare append): a replayed micro-batch
-        // rewrites its own epoch directory instead of appending the same
-        // dead letters twice — the same idempotence the keyed table write
-        // has. No emptiness probe: that would execute the whole
-        // parse+enrich+gate plan an extra time per epoch, and an empty
-        // overwrite is harmless.
-        dlq.foreach(
-          _.write.mode("overwrite").parquet(s"${tablePath}_gate_dlq/epoch=$epoch"))
+        val clock = current_timestamp()
+        Persist.once(EnvelopeParser.withEnvelope(batch, "value")) { parsed =>
+          val (envelopes, parseDlq) = EnvelopeParser.split(parsed, "value", clock, source = name)
+          Persist.once(enrich(envelopes, refs)) { enriched =>
+            val (good, gateDlq) = gate(enriched, clock)
+            graft.connectors.UpsertSink
+              .writer(tablePath, dlqPath = Some(tablePath + "_dlq"))(good, epoch)
+            // per-epoch overwrite (not a bare append): a replayed micro-batch
+            // rewrites its own epoch directory instead of appending the same
+            // dead letters twice — the same idempotence the keyed table
+            // write has. No emptiness probe: an empty overwrite is harmless.
+            parseDlq.unionByName(gateDlq)
+              .write.mode("overwrite").parquet(s"${tablePath}_gate_dlq/epoch=$epoch")
+          }
+        }
       }
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
@@ -412,13 +422,12 @@ class EventRouterJob extends GraftJob {
   ): org.apache.spark.sql.streaming.StreamingQuery =
     envelopes.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val routed = splitter.routed(batch).persist()
-        try
+        Persist.once(splitter.routed(batch)) { routed =>
           (routes.map(_.name) :+ "main").foreach { r =>
             routed.filter(col("route") === r).drop("route")
               .write.mode("append").parquet(s"$outDir/$r")
           }
-        finally { routed.unpersist(); () }
+        }
       }
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
@@ -426,13 +435,12 @@ class EventRouterJob extends GraftJob {
 
   def runBatch(spark: SparkSession, sfDir: String, outDir: String): DataFrame = {
     val env = Tables.eventsAsEnvelopes(spark, sfDir)
-    val routed = splitter.routed(env).persist()
-    try {
+    Persist.once(splitter.routed(env)) { routed =>
       (routes.map(_.name) :+ "main").foreach { r =>
         EsSink.writer(s"$outDir/$name/$r")(routed.filter(col("route") === r), 0L)
       }
       routed.groupBy(col("route")).count()
-    } finally { routed.unpersist(); () }
+    }
   }
 }
 

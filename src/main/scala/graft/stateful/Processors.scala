@@ -521,6 +521,12 @@ object Processors {
     * supported by the engine, so fusing is the correct streaming shape).
     * MapState tracks seen event-times per key, ValueState the last payload
     * hash, both with native TTL.
+    *
+    * A row with a NULL primaryKey (a payload without `_id`) has nothing to
+    * dedup or suppress against: it passes through untouched and never
+    * reads or writes state. The check is on the row itself, not on the
+    * group key — [[cdcPipeline]] groups null keys under a placeholder that
+    * a real key can equal, and those real rows are deduped as usual.
     */
   class CdcPipelineProcessor(ttlMs: Long, excludedFields: Set[String])
       extends StatefulProcessor[String, StreamEnvelop, StreamEnvelop] {
@@ -539,8 +545,9 @@ object Processors {
         timerValues: TimerValues
     ): Iterator[StreamEnvelop] =
       rows.filter { e =>
-        val ts = micros(e.eventTime) // micros: ms would merge distinct events
-        if (seenTs.containsKey(ts)) false // duplicate (key, eventTime)
+        lazy val ts = micros(e.eventTime) // micros: ms would merge distinct events
+        if (e.primaryKey == null) true // no key: pass through, state untouched
+        else if (seenTs.containsKey(ts)) false // duplicate (key, eventTime)
         else {
           seenTs.updateValue(ts, true)
           // __op joins the composite (reference MongoToKafkaJob buildChain):
@@ -554,13 +561,18 @@ object Processors {
       }.toVector.iterator
   }
 
+  /** Group key for null-primaryKey rows: a null grouping key crashes
+    * transformWithState (INTERNAL_ERROR_TWS "implicit key not found").
+    */
+  private val NullKeyGroup = ""
+
   def cdcPipeline(
       ds: Dataset[StreamEnvelop],
       ttlMs: Long,
       excludedFields: Set[String]
   ): Dataset[StreamEnvelop] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.primaryKey)
+    ds.groupByKey(e => if (e.primaryKey == null) NullKeyGroup else e.primaryKey)
       .transformWithState(
         new CdcPipelineProcessor(ttlMs, excludedFields),
         if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None(),

@@ -124,15 +124,19 @@ class PatternsSpec extends SparkSpec {
       """{"operation":"insert","source":"s","primaryKey":"k1","eventTime":"2024-01-01T00:00:00.000000Z"}""",
       """{"operation":"update","source":"s","primaryKey":"k2"}""", // no eventTime -> clock
       """not json at all""",
-      """{"broken"""
+      """{"broken""",
+      // `{...}`-shaped but malformed: from_json gives a struct of nulls,
+      // which must still be a parse error, not an empty envelope
+      """{"operation":"insert","source"}"""
     ).toDF("value")
     val (good, bad) = EnvelopeParser.parse(df, "value", clock = clock)
     assert(good.count() === 2)
     val byKey = good.select($"primaryKey", unix_micros($"eventTime")).as[(String, Long)].collect().toMap
     assert(byKey("k1") === 1704067200000000L)
     assert(byKey("k2") === 1717200000000000L) // defaulted to clock
-    assert(bad.count() === 2)
+    assert(bad.count() === 3)
     assert(bad.select("errorType").as[String].collect().toSet === Set("PARSING_ERROR"))
+    assert(bad.filter($"rawEvent" === """{"operation":"insert","source"}""").count() === 1)
   }
 
   test("CdcParser: op normalization and payload decision tree") {

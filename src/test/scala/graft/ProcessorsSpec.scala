@@ -89,6 +89,34 @@ class ProcessorsSpec extends SparkSpec {
     }
   }
 
+  test("Processors.cdcPipeline: null-key rows pass through untouched and never reach state") {
+    withRocksDb {
+      implicit val sc = spark.sqlContext
+      val mem = MemoryStream[StreamEnvelop]
+      val out = Processors.cdcPipeline(mem.toDS(), ttlMs = 0, Set.empty)
+      val q = out.writeStream.format("memory").queryName("tws_cdc_nullkey").outputMode("append").start()
+      try {
+        // same (null key, eventTime) and same payload twice: nothing to
+        // dedup or suppress against, so both flow through as they came
+        val nullRows = Seq(mkEnv("insert", null, """{"v": 1}""", 1), mkEnv("insert", null, """{"v": 1}""", 1))
+        mem.addData(nullRows: _*)
+        q.processAllAvailable()
+        assert(spark.table("tws_cdc_nullkey").as[StreamEnvelop].collect().toSeq === nullRows)
+        assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum === 0L, "null-key rows wrote state")
+        // a real "" key shares the null rows' group and is still deduped
+        mem.addData(mkEnv("insert", "", """{"v": 2}""", 1), mkEnv("insert", "", """{"v": 2}""", 1),
+          mkEnv("insert", null, """{"v": 1}""", 1))
+        q.processAllAvailable()
+        val got = spark.table("tws_cdc_nullkey")
+          .select($"primaryKey", $"payloadJson").as[(String, String)].collect().toSeq
+        assert(got.count(_._1 == null) === 3)
+        assert(got.filter(_._1 != null) === Seq(("", """{"v": 2}""")))
+        // the zero above is a real count: the "" key's state shows up
+        assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum > 0L)
+      } finally q.stop()
+    }
+  }
+
   test("Processors.materialize (transformWithState): changelog with delete reset") {
     withRocksDb {
       implicit val sc = spark.sqlContext
