@@ -65,7 +65,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * still exactly once). The one
   * residual caveat is physical: a foreign JVM's COMPACTION swaps base
   * files in place, so a tail-less base read captured mid-swap can fail
-  * on vanished files (never silently double) — the documented
+  * on vanished files (never silently double), and a tail read's pinned
+  * listing taken mid-swap can silently miss swapped-in files — the documented
   * single-maintainer model keeps compaction in the serving JVM, where
   * the path monitor serializes it with plan capture.
   */
@@ -244,7 +245,9 @@ object MultiWriterIndex {
     * mutation removes/rewrites the marker first, and the stamp must equal
     * the absorbed vector the tail was derived from); any disturbance
     * degrades to the delta log's manifest-pinned attempt files — the r20
-    * always-log shape — never to a trusted-but-torn listing. Bucket
+    * always-log shape. The one torn listing the check cannot see is a
+    * foreign JVM's compaction completing between its two marker reads (a
+    * silent under-read; see the residual note in the body). Bucket
     * pruning (`SelectedBucketsCount`) and the co-located layout therefore
     * survive tail-reads on a quiet index, the steady state of a hot index
     * between fold ticks. When the log shows NOTHING unfolded, the bucketed
@@ -280,17 +283,26 @@ object MultiWriterIndex {
             // filter was derived from and (b) be byte-identical before and
             // after the listing — every maintainer mutation removes or
             // rewrites the marker first, so an equal marker brackets one
-            // coherent fold generation. Any disturbance falls back to the
-            // immutable log files (the r21 behavior), never to a guess.
-            // The residual is unchanged from the tail-less read: a FOREIGN
-            // JVM's compaction swapping files mid-listing (in-JVM
-            // maintainers serialize on the same path lock), which surfaces
-            // as a vanished-file scan error, never a silent duplicate.
+            // coherent fold generation. The marker must also carry the
+            // caller's (key, buckets) spec, as Bucketing.requireMarkerSpec
+            // demands: the pinned read declares that spec to the planner,
+            // so a base folded under another one would be pruned and
+            // co-located by the wrong hash. Any disturbance or mismatch
+            // falls back to the immutable log files (the r21 behavior),
+            // never to a guess.
+            // Residual, from a FOREIGN JVM's compaction only (in-JVM
+            // maintainers serialize on the same path lock): one that
+            // deletes pinned files after the listing fails the scan on a
+            // vanished file; one that FINISHES inside the window between
+            // the two marker reads restores the marker byte-for-byte, so
+            // both reads agree while the listing, taken mid-swap, can miss
+            // the swapped-in files — a silent under-read of those buckets.
             val pinnedBase = Bucketing.withPathLock(bd) {
               for {
                 before <- Bucketing.readMarkerContent(bd)
-                if before.linesIterator
-                  .exists(_ == s"stamp=${foldStamp(absorbed, storedSuffix)}")
+                lines = before.linesIterator.toSet
+                if lines(s"stamp=${foldStamp(absorbed, storedSuffix)}") &&
+                  lines(s"key=$keyCol") && lines(s"buckets=$nBuckets")
                 files = Bucketing.listDataFiles(bd)
                 if files.nonEmpty
                 after <- Bucketing.readMarkerContent(bd)

@@ -8,6 +8,9 @@ import org.apache.spark.sql.SparkSession
   * 1000-executor cluster, minus the master: AQE on (runtime re-plan, skew-join
   * splitting, dynamic coalesce), broadcast threshold generous enough for the
   * dimension tables, UTC so timestamp arithmetic matches the DuckDB oracle.
+  * Streaming state lives in RocksDB: transformWithState, which every
+  * [[graft.stateful.Processors]] operator uses, requires that provider, and
+  * it keeps large keyed state off the JVM heap.
   */
 object GraftSession {
 
@@ -34,6 +37,8 @@ object GraftSession {
       // hung commit is strictly worse than an undetected-corruption risk
       // the state-store format already guards with its own file listings.
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.ui.enabled", "false")
 
   def getOrCreate(appName: String = "graft"): SparkSession = {

@@ -437,7 +437,8 @@ object Dedup {
     * a non-integral id is rejected up front with a clear error instead of
     * an opaque encoder cast failure at analysis time.
     *
-    * Requires the RocksDB state store provider.
+    * Needs the RocksDB state store provider, which
+    * [[graft.core.GraftSession]] sessions carry.
     */
   def streamingNearDupCandidates(
       docs: DataFrame,

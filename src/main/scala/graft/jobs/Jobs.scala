@@ -75,15 +75,7 @@ class MongoToKafkaJob extends GraftJob {
     (pb.df, pb.deadLetters)
   }
 
-  /** Streaming face: parse → fused dedup+change-suppression (ONE
-    * transformWithState pass — see CdcPipelineProcessor) → schema gate →
-    * decoration → processor. Returns (envelope stream, DLQ stream): the
-    * schema gate's dead letters are SURFACED, matching the batch face and
-    * the reference's publish-from-every-stage contract (DLQPublisher
-    * .java:18-97) — r3 silently discarded them here. Each returned frame is
-    * ready for its own sink (KafkaConnectors.sink / keyedProjection; a DLQ
-    * topic or path). Requires the RocksDB state store provider.
-    */
+  /** The streaming face's schema gate: `_id` required, as in [[build]]. */
   private def streamingEnforcer = SchemaEnforcer(
     "payloadJson",
     Seq(SchemaVersion(1, Seq(FieldSpec("_id", FieldType.ANY)))))
@@ -116,37 +108,17 @@ class MongoToKafkaJob extends GraftJob {
         coalesce(col("traceId"), concat(lit("trace-"), col("primaryKey"), lit("-"), unix_micros(col("eventTime")))))
       .withColumn("processedTime", current_timestamp())
 
-  def buildStreaming(
-      cdcStream: DataFrame,
-      ttlMs: Long = 0): (DataFrame, DataFrame) = {
-    // each returned frame is its OWN pipeline (see dedupedPipeline). With
-    // ttlMs = 0 (the DEFAULT — deterministic, and the only configuration
-    // the specs pin) the two pipelines see identical survivors; with a
-    // processing-time TTL their state stores evict on independent wall
-    // clocks and can diverge near the TTL boundary — a keyed row could be
-    // deduped out of ONE pipeline but not the other and vanish from both
-    // outputs. Callers that need a processing-time TTL must use
-    // [[startStreaming]], which runs ONE pipeline and fans out per
-    // micro-batch.
-    require(
-      ttlMs == 0,
-      s"buildStreaming materializes two independent state stores; a processing-time " +
-        s"TTL ($ttlMs ms) makes them diverge — use startStreaming's single-pass " +
-        "fan-out for TTL'd dedup")
-    val (good, _) = streamingEnforcer.enforce(dedupedPipeline(cdcStream, ttlMs))
-    val (_, bad) = streamingEnforcer.enforce(dedupedPipeline(cdcStream, ttlMs))
-    val dlq = Dlq.toDlq(
-      bad, graft.model.ErrorCodes.SchemaViolation, col("violations"), name,
-      col("payloadJson"), current_timestamp())
-    (finishGood(good), dlq)
-  }
-
-  /** Production single-pass face: ONE stateful pipeline, one query, one
-    * state store; each micro-batch is persisted (the keyed state pass runs
-    * and commits once per epoch), splits at the schema gate and writes
+  /** Streaming face: parse → fused dedup+change-suppression (ONE
+    * transformWithState pass — see CdcPipelineProcessor) → schema gate →
+    * decoration → processor. One stateful pipeline, one query, one state
+    * store; each micro-batch is persisted (the keyed state pass runs and
+    * commits once per epoch), splits at the schema gate and writes
     * envelopes to `outPath/epoch=N` and dead letters to `dlqPath/epoch=N`
     * (per-epoch overwrite → replayed epochs converge instead of
-    * double-appending). Requires the RocksDB state store provider.
+    * double-appending). The schema gate's dead letters are surfaced, as in
+    * the batch face and the reference's publish-from-every-stage contract
+    * (DLQPublisher.java:18-97). Needs the RocksDB state store provider,
+    * which [[graft.core.GraftSession]] sessions carry.
     */
   def startStreaming(
       cdcStream: DataFrame,
@@ -468,7 +440,8 @@ class UserStateMaterializeJob extends GraftJob {
 
   /** Streaming face: transformWithState materialization → changelog
     * envelopes → compacted keyed projection (tombstones for deletes).
-    * Requires the RocksDB state store.
+    * Needs the RocksDB state store provider, which
+    * [[graft.core.GraftSession]] sessions carry.
     */
   def buildStreaming(envelopes: org.apache.spark.sql.Dataset[graft.model.StreamEnvelop],
       ttlMs: Long = 24 * 3600 * 1000): DataFrame = {
@@ -537,8 +510,8 @@ class UserSessionAnalysisJob extends GraftJob {
     * on close, once the watermark passes start+gap) → session envelopes.
     */
   def buildStreaming(envelopes: DataFrame, gap: String, outOfOrderness: String = "0 seconds"): DataFrame = {
-    // null-key guard: sessions are per-key; a null key row would crash the
-    // stateful session operator (see MongoToKafkaJob.buildStreaming)
+    // null-key guard: sessions are per-key, so keyless rows are dropped
+    // rather than merged into one null-key session
     val sessions = SessionAnalyzer("primaryKey", "eventTime", gap, outOfOrderness)
       .analyze(envelopes.filter(col("primaryKey").isNotNull), actionCol = "operation", tieCol = "traceId")
     toEnvelop(sessions, current_timestamp())
@@ -548,8 +521,8 @@ class UserSessionAnalysisJob extends GraftJob {
     * ([[graft.stateful.Processors.sessionsWithLateness]]): the first firing
     * maps to a SESSION_CLOSED envelope, late-event re-firings to
     * SESSION_UPDATED — an update changelog downstream compacts by
-    * (primaryKey, sessionStart) last-firing-wins. Requires the RocksDB
-    * state store provider.
+    * (primaryKey, sessionStart) last-firing-wins. Needs the RocksDB state
+    * store provider, which [[graft.core.GraftSession]] sessions carry.
     */
   def buildStreamingWithLateness(
       envelopes: org.apache.spark.sql.Dataset[graft.model.StreamEnvelop],

@@ -178,8 +178,9 @@ object StreamingAsOfJoiner {
     }
   }
 
-  /** Wire the two streams through one keyed state pass. Requires the
-    * RocksDB state store provider (as all transformWithState operators do).
+  /** Wire the two streams through one keyed state pass. Needs the RocksDB
+    * state store provider (as all transformWithState operators do), which
+    * [[graft.core.GraftSession]] sessions carry.
     *
     * @param ttlMs state TTL for version history; 0 = keep forever
     * @param compactLagUs event-time compaction horizon for version history

@@ -1,25 +1,21 @@
 package graft.stateful
 
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.model.StreamEnvelop
 
-/** First-seen-wins dedup by key within a TTL.
+/** First-seen-wins dedup by key.
   * Reference pattern/dedup/Deduplicator.java:18-72: ValueState<Boolean> "seen"
   * with StateTtlConfig; duplicates are dropped.
   *
-  * Three faces:
-  *  - `batch`: global first-seen per key (TTL = ∞) via row_number — one
-  *    shuffle on the key, the classic distributed dedup.
-  *  - `streamingWithinWatermark`: `dropDuplicatesWithinWatermark` — Spark's
-  *    built-in state-TTL dedup, state evicted by watermark (TTL → watermark
-  *    delay). Scale path: state size is bounded by keys-per-TTL-window.
-  *  - `streamingExact`: flatMapGroupsWithState replica of the reference
-  *    (processing-time TTL like Flink's StateTtlConfig).
+  * Batch faces only: `batch` is the global first-seen per key (TTL = ∞) via
+  * row_number — one shuffle on the key, the classic distributed dedup — and
+  * `batchWithin` the same survivors windowed by a parent key. The streaming
+  * face, with the reference's processing-time TTL, is
+  * [[Processors.dedup]] (fused with change-suppression for CDC in
+  * [[Processors.cdcPipeline]]).
   */
-final case class Deduplicator(keyCols: Seq[String], ttlMs: Long = 10 * 60 * 1000) {
+final case class Deduplicator(keyCols: Seq[String]) {
 
   /** Keep the first row per key, ordered by (tsCol, tieCol). */
   def batch(df: DataFrame, tsCol: String, tieCol: String): DataFrame = {
@@ -54,73 +50,5 @@ final case class Deduplicator(keyCols: Seq[String], ttlMs: Long = 10 * 60 * 1000
     df.withColumn("_prev_sub", lag(sub, 1).over(w))
       .filter(!(col("_prev_sub") <=> sub))
       .drop("_prev_sub")
-  }
-
-  /** Built-in streaming dedup: requires an upstream withWatermark on tsCol. */
-  def streamingWithinWatermark(df: DataFrame, tsCol: String, delay: String): DataFrame =
-    df.withWatermark(tsCol, delay).dropDuplicatesWithinWatermark(keyCols)
-
-  /** Exact replica of the reference semantics on the envelope stream:
-    * processing-time TTL'd "seen" state per key.
-    *
-    * State holds the expiry DEADLINE (epoch ms) anchored to the accepted
-    * write. Spark's GroupState contract clears a stored timeout whenever the
-    * function runs for a key without re-setting it, so the timeout must be
-    * re-armed on EVERY invocation — including ones that only suppress
-    * duplicates — with the remaining time to the stored deadline. The
-    * deadline itself never moves (reference StateTtlConfig OnCreateAndWrite:
-    * duplicates arriving faster than the TTL can't postpone expiry).
-    *
-    * ttlMs <= 0 disables the timeout (state lives forever). NOTE:
-    * ProcessingTimeTimeout makes Spark run micro-batches continuously so
-    * timers can fire — pair it with a real trigger interval in production
-    * queries (the jobs do), and use ttlMs=0 in synchronous tests.
-    */
-  def streamingExact(
-      ds: Dataset[StreamEnvelop],
-      key: StreamEnvelop => String
-  ): Dataset[StreamEnvelop] = {
-    import ds.sparkSession.implicits._
-    val conf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    ds.groupByKey(key)
-      .flatMapGroupsWithState(OutputMode.Append, conf)(stateFunc _)
-  }
-
-  /** State function behind [[streamingExact]], named so the TTL contract can
-    * be pinned with [[org.apache.spark.sql.streaming.TestGroupState]].
-    *
-    * CHECKPOINT COMPATIBILITY: the state encoding changed from `Boolean`
-    * (seen flag) to `Long` (TTL deadline). A streaming query restarted from
-    * a checkpoint written by the old encoding will fail to decode its state
-    * store — wipe the checkpoint (or start a new checkpoint location) when
-    * upgrading across that change; state is TTL-bounded, so a replay from
-    * the source re-establishes it.
-    */
-  private[graft] def stateFunc(
-      key: String,
-      events: Iterator[StreamEnvelop],
-      state: GroupState[Long]
-  ): Iterator[StreamEnvelop] = {
-    val ttl = ttlMs
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val fresh = !state.exists
-      if (fresh) {
-        val deadline =
-          if (ttl > 0) state.getCurrentProcessingTimeMs() + ttl else Long.MaxValue
-        state.update(deadline)
-      }
-      // Re-arm from the stored deadline on every invocation, or the
-      // duplicate-only invocation would silently cancel the TTL.
-      if (ttl > 0) {
-        val remaining = math.max(1L, state.get - state.getCurrentProcessingTimeMs())
-        state.setTimeoutDuration(remaining)
-      }
-      if (fresh && events.hasNext) Iterator.single(events.next())
-      else Iterator.empty
-    }
   }
 }

@@ -2,11 +2,9 @@ package graft.stateful
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.model.StreamEnvelop
 
 /** Emitted by the streaming detector: `kind` ∈ {DISRUPTED, RECOVERED}. */
 case class FlowSignal(key: String, lastEventTime: Timestamp, at: Timestamp, kind: String)
@@ -22,9 +20,8 @@ case class FlowState(lastEventMs: Long, disrupted: Boolean)
   * Two faces:
   *  - `detectBatch`: the batch/forensic view — finds every inter-event gap
   *    larger than the timeout per key. One shuffle (window partitionBy key).
-  *  - streaming: see [[graft.stateful.StatefulOps.flowDisruption]] —
-  *    flatMapGroupsWithState with a processing-time timeout, the Spark
-  *    equivalent of the Flink timer.
+  *  - streaming: [[Processors.flowDisruption]] — transformWithState with a
+  *    processing-time timer, the Spark equivalent of the Flink timer.
   */
 object FlowDisruptionDetector {
 
@@ -51,41 +48,6 @@ object FlowDisruptionDetector {
         col("prev_us"),
         col("ts_us"),
         (col("ts_us") - col("prev_us")).as("gap_us")
-      )
-  }
-
-  /** Streaming face: each event re-arms a per-key processing-time timer; a
-    * timer firing with no new events emits DISRUPTED, the next event after a
-    * disruption emits RECOVERED (reference :61-89). flatMapGroupsWithState +
-    * ProcessingTimeTimeout is the Spark analogue of the Flink timer.
-    */
-  def streaming(
-      ds: Dataset[StreamEnvelop],
-      key: StreamEnvelop => String,
-      timeoutMs: Long
-  ): Dataset[FlowSignal] = {
-    import ds.sparkSession.implicits._
-    val conf =
-      if (timeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    ds.groupByKey(key)
-      .flatMapGroupsWithState(OutputMode.Append, conf)(
-        (k: String, events: Iterator[StreamEnvelop], state: GroupState[FlowState]) => {
-          val now = new Timestamp(state.getCurrentProcessingTimeMs())
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.update(s.copy(disrupted = true))
-            // no new events: do not re-arm; recovery happens on next event
-            Iterator.single(FlowSignal(k, new Timestamp(s.lastEventMs), now, "DISRUPTED"))
-          } else {
-            val wasDisrupted = state.getOption.exists(_.disrupted)
-            val lastTs = events.foldLeft(0L)((acc, e) => math.max(acc, e.eventTime.getTime))
-            state.update(FlowState(lastTs, disrupted = false))
-            if (timeoutMs > 0) state.setTimeoutDuration(timeoutMs)
-            if (wasDisrupted)
-              Iterator.single(FlowSignal(k, new Timestamp(lastTs), now, "RECOVERED"))
-            else Iterator.empty
-          }
-        }
       )
   }
 }

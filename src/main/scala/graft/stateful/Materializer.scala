@@ -1,26 +1,19 @@
 package graft.stateful
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.model.{ChangelogEvent, StreamEnvelop}
 
 /** Latest-value-per-key materialized view emitting a changelog.
   * Reference pattern/materialization/Materializer.java:19-166:
   * first value per key → INSERT(before=null); subsequent → mergeFunction
   * (default last-write-wins) → UPDATE(before, merged); deletePredicate hit →
   * DELETE(before, null) + state clear; delete with no state → no emission.
-  * State TTL default 24h.
+  *
+  * This is the batch face; the streaming face, with the reference's state
+  * TTL, is [[Processors.materialize]].
   */
-final case class Materializer(
-    keyCol: String,
-    payloadCol: String,
-    deletePredicate: Column,
-    ttlMs: Long = 24 * 3600 * 1000
-) {
+final case class Materializer(keyCol: String, payloadCol: String, deletePredicate: Column) {
 
   /** Batch face: the full changelog replay, per key in (ts, tie) order.
     * `after`-state of each row is payload (or null on delete); `before` is the
@@ -46,53 +39,6 @@ final case class Materializer(
         col("_before").as("before"),
         col("_after_state").as("after"),
         col(tsCol).as("ts")
-      )
-  }
-
-  /** Streaming face: ValueState[payload] per key with processing-time TTL,
-    * emitting ChangelogEvents (reference's toEnvelop wrapper lives in the
-    * materialize job).
-    */
-  def streaming(
-      ds: Dataset[StreamEnvelop],
-      isDelete: StreamEnvelop => Boolean,
-      merge: (String, String) => String = (_, incoming) => incoming
-  ): Dataset[ChangelogEvent] = {
-    import ds.sparkSession.implicits._
-    val ttl = ttlMs
-    val conf =
-      if (ttl > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    ds.groupByKey(_.primaryKey)
-      .flatMapGroupsWithState(OutputMode.Append, conf)(
-        (key: String, events: Iterator[StreamEnvelop], state: GroupState[String]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var current = state.getOption
-            val out = events.flatMap { e =>
-              if (isDelete(e)) {
-                val before = current
-                current = None
-                before.map(b => ChangelogEvent("DELETE", key, Some(b), None, e.eventTime))
-              } else {
-                val merged = current.map(merge(_, e.payloadJson)).getOrElse(e.payloadJson)
-                val ev = current match {
-                  case None => ChangelogEvent("INSERT", key, None, Some(merged), e.eventTime)
-                  case Some(b) => ChangelogEvent("UPDATE", key, Some(b), Some(merged), e.eventTime)
-                }
-                current = Some(merged)
-                Some(ev)
-              }
-            }.toVector
-            current match {
-              case Some(v) => state.update(v)
-              case None => if (state.exists) state.remove()
-            }
-            if (current.isDefined && ttl > 0) state.setTimeoutDuration(ttl)
-            out.iterator
-          }
-        }
       )
   }
 }

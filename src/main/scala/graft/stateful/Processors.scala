@@ -9,16 +9,12 @@ import graft.model.{ChangelogEvent, StreamEnvelop}
 /** Spark-4-native stateful operators on `transformWithState`
   * (`StatefulProcessor` + per-key state with built-in TTL + timers) — the
   * direct replacement for Flink's `KeyedProcessFunction` + `StateTtlConfig`
-  * the reference uses (SURVEY §4.2). These are the production streaming faces
-  * of the same operators whose flatMapGroupsWithState fallbacks live in
-  * Deduplicator/Materializer/FlowDisruptionDetector (the fallback exists
-  * because transformWithState requires the RocksDB state store).
+  * the reference uses (SURVEY §4.2). These are the only streaming faces of
+  * the dedup, materialize and flow-disruption operators; Deduplicator,
+  * Materializer and FlowDisruptionDetector hold their batch faces.
   *
-  * Use with:
-  * {{{
-  * spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-  *   "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-  * }}}
+  * transformWithState needs the RocksDB state store provider, which every
+  * [[graft.core.GraftSession]] session carries.
   */
 object Processors {
 
@@ -517,8 +513,8 @@ object Processors {
     * change-suppression in ONE keyed state pass — what MongoToKafka's
     * Deduplicator→StatefulMerger chain becomes when productionized (one
     * shuffle, one state lookup per event, instead of two stateful hops;
-    * chaining arbitrary flatMapGroupsWithState operators is also not
-    * supported by the engine, so fusing is the correct streaming shape).
+    * the engine also does not support chaining two arbitrary per-group
+    * stateful operators, so fusing is the correct streaming shape).
     * MapState tracks seen event-times per key, ValueState the last payload
     * hash, both with native TTL.
     *
@@ -734,7 +730,8 @@ object Processors {
   }
 
   /** See [[SessionLatenessProcessor]]. Applies the lateness-delayed
-    * watermark itself; requires the RocksDB state store provider.
+    * watermark itself; needs the RocksDB state store provider, which
+    * [[graft.core.GraftSession]] sessions carry.
     */
   def sessionsWithLateness(
       ds: Dataset[StreamEnvelop],
@@ -780,9 +777,9 @@ object Processors {
       val wasDisrupted = st.exists() && st.get().disrupted
       val lastTs = rows.foldLeft(0L)((acc, e) => math.max(acc, e.eventTime.getTime))
       // re-arm: drop old timers, register a fresh one. timeoutMs <= 0
-      // disables detection (the sync-test contract FlowDisruptionDetector
-      // .streaming documents) — an always-now timer would otherwise emit a
-      // DISRUPTED/RECOVERED storm every batch.
+      // disables detection (no timers, so synchronous drives with
+      // processAllAvailable work) — an always-now timer would otherwise
+      // emit a DISRUPTED/RECOVERED storm every batch.
       if (timeoutMs > 0) {
         getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
         getHandle.registerTimer(timerValues.getCurrentProcessingTimeInMs() + timeoutMs)

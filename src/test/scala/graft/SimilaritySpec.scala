@@ -721,6 +721,30 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("fence-cost curve past the argmax branch: a pSub > 4 sweep slices row-identical to the single calls") {
+    // pMax = 5 takes topPFromCosines' full-sort branch for the ONE top-code
+    // pass the curve slices every depth from; the single calls take the
+    // imiAssign (p = 1), argmax (p = 2) and sort (p = 5) arms — equal
+    // slices mean the sort order's prefixes match the argmax picks
+    val kSub = 6
+    val corpus = emb.limit(200)
+    val queries = corpus.filter($"vec_id" % 25 === 0)
+    val icbs = Similarity.imiCodebooksTrained(
+      corpus, "vec_id", "embedding", kSub, iters = 2, sampleN = 256)
+    val pSubs = Seq(1, 2, 5)
+    val curve = Similarity.imiFenceCandidateCurve(
+      corpus, queries, "vec_id", "embedding", icbs, pSubs)
+      .as[(Int, Long, Long)].collect()
+      .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toMap).toMap
+    assert(curve.keySet === pSubs.toSet)
+    pSubs.foreach { p =>
+      val single = Similarity.imiFenceCandidateCounts(
+        corpus, queries, "vec_id", "embedding", icbs, pSub = p)
+        .as[(Long, Long)].collect().toMap
+      assert(curve(p) === single, s"curve slice pSub=$p must match the single call")
+    }
+  }
+
   test("broadcast flood guards: rerank and fence estimator fail loudly above maxBroadcastRows") {
     // the under-cap arm is the two tests above: default cap, plan-pinned
     // BroadcastHashJoin, hash-green oracle faces. This arm pins the

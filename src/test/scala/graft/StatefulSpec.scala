@@ -129,22 +129,6 @@ class StatefulSpec extends SparkSpec {
 
   // -------------------------------------------------------- streaming faces
 
-  test("Deduplicator.streamingExact drops duplicates across micro-batches") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[StreamEnvelop]
-    val out = Deduplicator(Seq.empty, ttlMs = 0)
-      .streamingExact(mem.toDS(), e => e.primaryKey)
-    val q = out.writeStream.format("memory").queryName("dedup_out").outputMode("append").start()
-    try {
-      mem.addData(mkEnv("insert", "a", "{}", 1), mkEnv("insert", "a", "{}", 2), mkEnv("insert", "b", "{}", 3))
-      q.processAllAvailable()
-      mem.addData(mkEnv("insert", "a", "{}", 4), mkEnv("insert", "c", "{}", 5))
-      q.processAllAvailable()
-      val got = spark.table("dedup_out").select("primaryKey").as[String].collect().sorted
-      assert(got === Array("a", "b", "c"))
-    } finally q.stop()
-  }
-
   test("StatefulMerger.streaming suppresses per-key unchanged payloads across batches") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[StreamEnvelop]
@@ -164,25 +148,6 @@ class StatefulSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("merger_out").select("traceId").as[String].collect().sorted
       assert(got === Array("t-a-1", "t-a-4"))
-    } finally q.stop()
-  }
-
-  test("Materializer.streaming emits changelog across batches with delete reset") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[StreamEnvelop]
-    val out = Materializer("primaryKey", "payloadJson", lit(true), ttlMs = 0)
-      .streaming(mem.toDS(), _.operation == "delete")
-    val q = out.writeStream.format("memory").queryName("mat_out").outputMode("append").start()
-    try {
-      mem.addData(mkEnv("insert", "a", """{"v":1}""", 1))
-      q.processAllAvailable()
-      mem.addData(mkEnv("update", "a", """{"v":2}""", 2), mkEnv("delete", "a", null, 3))
-      q.processAllAvailable()
-      mem.addData(mkEnv("insert", "a", """{"v":3}""", 4))
-      q.processAllAvailable()
-      val got = spark.table("mat_out").as[graft.model.ChangelogEvent].collect().sortBy(_.timestamp.getTime)
-      assert(got.map(_.changeType).toSeq === Seq("INSERT", "UPDATE", "DELETE", "INSERT"))
-      assert(got(2).before === Some("""{"v":2}"""))
     } finally q.stop()
   }
 
@@ -225,26 +190,6 @@ class StatefulSpec extends SparkSpec {
       Optional.empty[Long](),
       timedOut)
 
-  test("Deduplicator TTL: duplicate-only invocation re-arms timeout without moving the deadline") {
-    val d = Deduplicator(Seq("k"), ttlMs = 10000)
-    // first sight at t=1000 -> emit, deadline 11000, timer armed
-    val s1 = mkState[Long](None, 1000)
-    assert(d.stateFunc("k", Iterator(mkEnv("i", "k", "{}", 1)), s1).size === 1)
-    assert(s1.get === 11000L)
-    assert(s1.getTimeoutTimestampMs.get === 11000L)
-    // duplicate at t=5000 -> suppressed, but timer MUST be re-armed to the
-    // same deadline (the bug: skipping this cancels the TTL outright)
-    val s2 = mkState[Long](Some(s1.get), 5000)
-    assert(d.stateFunc("k", Iterator(mkEnv("i", "k", "{}", 2)), s2).isEmpty)
-    assert(s2.getTimeoutTimestampMs.isPresent, "duplicate-only invocation cancelled the TTL")
-    assert(s2.getTimeoutTimestampMs.get === 11000L, "duplicate postponed the expiry deadline")
-    // timer fires -> state removed; the key then re-emits as fresh
-    val s3 = mkState[Long](Some(s1.get), 12000, timedOut = true)
-    assert(d.stateFunc("k", Iterator.empty, s3).isEmpty && s3.isRemoved)
-    val s4 = mkState[Long](None, 13000)
-    assert(d.stateFunc("k", Iterator(mkEnv("i", "k", "{}", 3)), s4).size === 1)
-  }
-
   test("StatefulMerger TTL: suppressed batch re-arms; accepted write re-anchors the deadline") {
     val m = StatefulMerger(Seq("k"), "payloadJson", ttlMs = 10000)
     // accepted write at t=1000 -> deadline 11000
@@ -281,17 +226,5 @@ class StatefulSpec extends SparkSpec {
       .withColumn("ts", timestamp_seconds($"tie"))
     val out = StatefulMerger(Seq("k"), "payload", opCol = Some("operation")).batch(df, "ts", "tie")
     assert(out.select("tie").as[Long].collect().sorted === Array(1L, 3L))
-  }
-
-  test("FlowDisruptionDetector.streaming: no signals while flow is healthy") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[StreamEnvelop]
-    val out = FlowDisruptionDetector.streaming(mem.toDS(), _.source, timeoutMs = 0)
-    val q = out.writeStream.format("memory").queryName("flow_out").outputMode("append").start()
-    try {
-      mem.addData(mkEnv("i", "a", "{}", 1), mkEnv("i", "b", "{}", 2))
-      q.processAllAvailable()
-      assert(spark.table("flow_out").count() === 0)
-    } finally q.stop()
   }
 }

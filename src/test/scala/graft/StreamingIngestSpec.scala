@@ -40,31 +40,27 @@ class StreamingIngestSpec extends SparkSpec {
       .select($"doc_id", $"reject_reason").as[(Long, Option[String])].collect()
     assert(nullRow.toSeq === Seq((9L, Some("too_short"))))
 
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    implicit val sc = spark.sqlContext
+    val mem = MemoryStream[(Long, String)]
+    val (accepted, hits) = CorpusIngest.ingest(
+      mem.toDS().toDF("doc_id", "text"), "doc_id", "text", Seq("en"), 5)
+    val qa = accepted.writeStream.format("memory").queryName("ingest_ok").outputMode("append").start()
+    val qh = hits.writeStream.format("memory").queryName("ingest_dup").outputMode("append").start()
     try {
-      implicit val sc = spark.sqlContext
-      val mem = MemoryStream[(Long, String)]
-      val (accepted, hits) = CorpusIngest.ingest(
-        mem.toDS().toDF("doc_id", "text"), "doc_id", "text", Seq("en"), 5)
-      val qa = accepted.writeStream.format("memory").queryName("ingest_ok").outputMode("append").start()
-      val qh = hits.writeStream.format("memory").queryName("ingest_dup").outputMode("append").start()
-      try {
-        mem.addData(rows: _*)
-        qa.processAllAvailable(); qh.processAllAvailable()
-        // streaming accept set matches the batch verdict
-        val okIds = spark.table("ingest_ok").select($"doc_id").as[Long].collect().toSet
-        assert(okIds === Set(1L, 5L))
-        // a re-crawl of doc 1 in a later batch: passes the gates, flagged by state
-        mem.addData((6L, en))
-        qa.processAllAvailable(); qh.processAllAvailable()
-        assert(spark.table("ingest_ok").select($"doc_id").as[Long].collect().toSet === Set(1L, 5L, 6L))
-        val dup = spark.table("ingest_dup").as[(Long, Long)].collect().toSet
-        assert(dup.contains((6L, 1L)), s"dup stream must flag 6 against 1, got $dup")
-        // rejected docs never flag: the state only ever saw accepted ids
-        assert(!dup.exists(p => p._1 == 2L || p._1 == 3L || p._1 == 4L))
-      } finally { qa.stop(); qh.stop() }
-    } finally spark.conf.unset(key)
+      mem.addData(rows: _*)
+      qa.processAllAvailable(); qh.processAllAvailable()
+      // streaming accept set matches the batch verdict
+      val okIds = spark.table("ingest_ok").select($"doc_id").as[Long].collect().toSet
+      assert(okIds === Set(1L, 5L))
+      // a re-crawl of doc 1 in a later batch: passes the gates, flagged by state
+      mem.addData((6L, en))
+      qa.processAllAvailable(); qh.processAllAvailable()
+      assert(spark.table("ingest_ok").select($"doc_id").as[Long].collect().toSet === Set(1L, 5L, 6L))
+      val dup = spark.table("ingest_dup").as[(Long, Long)].collect().toSet
+      assert(dup.contains((6L, 1L)), s"dup stream must flag 6 against 1, got $dup")
+      // rejected docs never flag: the state only ever saw accepted ids
+      assert(!dup.exists(p => p._1 == 2L || p._1 == 3L || p._1 == 4L))
+    } finally { qa.stop(); qh.stop() }
   }
 
   test("decontamination gate: prebuilt bloom rejects every exact hit, FP-bounded; batch and streaming agree") {
@@ -274,32 +270,28 @@ class StreamingIngestSpec extends SparkSpec {
       1L -> None, 2L -> None, 3L -> Some("too_small"), 4L -> Some("too_large"),
       5L -> Some("mime"), 6L -> Some("too_small")))
 
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    implicit val sc = spark.sqlContext
+    val mem = MemoryStream[(Long, Array[Byte], String)]
+    val (accepted, hits) = Multimodal.ingest(
+      mem.toDS().toDF("doc_id", "bin", "mime"),
+      "doc_id", "bin", "mime", allowed, minBytes = 64, maxBytes = 1024L)
+    val qa = accepted.writeStream.format("memory").queryName("media_ok").outputMode("append").start()
+    val qh = hits.writeStream.format("memory").queryName("media_dup").outputMode("append").start()
     try {
-      implicit val sc = spark.sqlContext
-      val mem = MemoryStream[(Long, Array[Byte], String)]
-      val (accepted, hits) = Multimodal.ingest(
-        mem.toDS().toDF("doc_id", "bin", "mime"),
-        "doc_id", "bin", "mime", allowed, minBytes = 64, maxBytes = 1024L)
-      val qa = accepted.writeStream.format("memory").queryName("media_ok").outputMode("append").start()
-      val qh = hits.writeStream.format("memory").queryName("media_dup").outputMode("append").start()
-      try {
-        // batch 1: the original + the junk (incl. the DISALLOWED near-dup
-        // payload 5 — if it leaked into state, doc 2 would dup against 5)
-        mem.addData(rows.filter(_._1 != 2L): _*)
-        qa.processAllAvailable(); qh.processAllAvailable()
-        val okIds = spark.table("media_ok").select($"doc_id").as[Long].collect().toSet
-        assert(okIds === Set(1L), s"streaming accept set diverged: $okIds")
-        // batch 2: the near-dup arrives — it must hit doc 1, NOT doc 5
-        mem.addData((2L, img2, "image/jpeg"))
-        qa.processAllAvailable(); qh.processAllAvailable()
-        assert(spark.table("media_ok").select($"doc_id").as[Long].collect().toSet === Set(1L, 2L))
-        val dup = spark.table("media_dup").as[(Long, Long)].collect().toSet
-        assert(dup === Set((2L, 1L)),
-          s"near image must dup against the ACCEPTED original only, got $dup")
-      } finally { qa.stop(); qh.stop() }
-    } finally spark.conf.unset(key)
+      // batch 1: the original + the junk (incl. the DISALLOWED near-dup
+      // payload 5 — if it leaked into state, doc 2 would dup against 5)
+      mem.addData(rows.filter(_._1 != 2L): _*)
+      qa.processAllAvailable(); qh.processAllAvailable()
+      val okIds = spark.table("media_ok").select($"doc_id").as[Long].collect().toSet
+      assert(okIds === Set(1L), s"streaming accept set diverged: $okIds")
+      // batch 2: the near-dup arrives — it must hit doc 1, NOT doc 5
+      mem.addData((2L, img2, "image/jpeg"))
+      qa.processAllAvailable(); qh.processAllAvailable()
+      assert(spark.table("media_ok").select($"doc_id").as[Long].collect().toSet === Set(1L, 2L))
+      val dup = spark.table("media_dup").as[(Long, Long)].collect().toSet
+      assert(dup === Set((2L, 1L)),
+        s"near image must dup against the ACCEPTED original only, got $dup")
+    } finally { qa.stop(); qh.stop() }
   }
 
   test("streaming perceptual gate: near image hits its first-seen original, far image passes clean") {
@@ -322,26 +314,22 @@ class StreamingIngestSpec extends SparkSpec {
     assert((b1 & b2).nonEmpty, "near pair must share a band (hamming <= 2 over 8 bands)")
     assert((b3 & (b1 ++ b2)).isEmpty, "far image accidentally collides — re-craft the fixture")
 
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    implicit val sc = spark.sqlContext
+    val mem = MemoryStream[(Long, Array[Byte])]
+    val hits = Multimodal.streamingPerceptualDupCandidates(
+      mem.toDS().toDF("doc_id", "bin"), "doc_id", "bin")
+    val q = hits.writeStream.format("memory").queryName("phash_dup").outputMode("append").start()
     try {
-      implicit val sc = spark.sqlContext
-      val mem = MemoryStream[(Long, Array[Byte])]
-      val hits = Multimodal.streamingPerceptualDupCandidates(
-        mem.toDS().toDF("doc_id", "bin"), "doc_id", "bin")
-      val q = hits.writeStream.format("memory").queryName("phash_dup").outputMode("append").start()
-      try {
-        mem.addData((1L, img1))
-        q.processAllAvailable()
-        assert(spark.table("phash_dup").as[(Long, Long)].collect().isEmpty,
-          "first-seen image must not self-hit")
-        mem.addData((2L, img2), (3L, img3))
-        q.processAllAvailable()
-        val dup = spark.table("phash_dup").as[(Long, Long)].collect().toSet
-        assert(dup.contains((2L, 1L)), s"near image must hit its original, got $dup")
-        assert(!dup.exists(_._1 == 3L), s"far image must pass clean, got $dup")
-      } finally q.stop()
-    } finally spark.conf.unset(key)
+      mem.addData((1L, img1))
+      q.processAllAvailable()
+      assert(spark.table("phash_dup").as[(Long, Long)].collect().isEmpty,
+        "first-seen image must not self-hit")
+      mem.addData((2L, img2), (3L, img3))
+      q.processAllAvailable()
+      val dup = spark.table("phash_dup").as[(Long, Long)].collect().toSet
+      assert(dup.contains((2L, 1L)), s"near image must hit its original, got $dup")
+      assert(!dup.exists(_._1 == 3L), s"far image must pass clean, got $dup")
+    } finally q.stop()
   }
 
   test("streaming index maintenance: epoch-fenced appends per micro-batch through foreachBatch — kill-and-resume, replay skips, index == accepted-rows rebuild") {
@@ -535,6 +523,36 @@ class StreamingIngestSpec extends SparkSpec {
           "torn-fold rebuild drifted from the committed log")
         assert(served === want2)
       } finally { qA.stop(); qB.stop() }
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("multi-writer index: a tail read under another key/bucket spec than the fold's serves the log's rows") {
+    // the pinned-base read declares the CALLER's (key, buckets) to the
+    // planner; a base folded under a different spec must not be served
+    // through it (bucket pruning would pick the wrong files), so the read
+    // falls back to the log and answers every per-key lookup exactly
+    import graft.connectors.{MultiWriterIndex, TxnLogSink}
+    import org.apache.spark.sql.functions.col
+    val idx = java.nio.file.Files.createTempDirectory("mw_spec").toString + "/idx"
+    val table = "graft_mw_spec_mismatch"
+    def rows(ks: Range) = ks.map(k => (k.toLong, s"val$k")).toDF("k", "v")
+    try {
+      MultiWriterIndex.appendDelta(rows(0 until 16), idx, "w", 0L)
+      MultiWriterIndex.fold(spark, idx, table, "k", 4).count()
+      // an unfolded tail, so reads take the pinned-base path
+      MultiWriterIndex.appendDelta(rows(16 until 20), idx, "w", 1L)
+      val logView = TxnLogSink(s"$idx/deltalog").readSlice(spark).get
+      def sorted(df: org.apache.spark.sql.DataFrame) = df.as[(Long, String)].collect().toSeq.sorted
+      assert(sorted(logView) === sorted(rows(0 until 20)))
+      for ((key, buckets) <- Seq(("k", 8), ("v", 4), ("k", 4))) {
+        val served = MultiWriterIndex.read(spark, idx, table, key, buckets)
+        assert(sorted(served) === sorted(logView), s"read under ($key, $buckets)")
+        (0 until 20).foreach { k =>
+          val probe = col(key) === (if (key == "k") k.toLong else s"val$k")
+          assert(sorted(served.filter(probe)) === Seq((k.toLong, s"val$k")),
+            s"lookup of $k under ($key, $buckets)")
+        }
+      }
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 

@@ -15,23 +15,19 @@ class StreamingJobsSpec extends SparkSpec {
     StreamEnvelop(op, src, payload, new Timestamp(tsSec * 1000), new Timestamp(tsSec * 1000), s"t-$pk-$tsSec", pk, Map.empty)
 
   test("UserStateMaterialize streaming: compacted changelog with tombstones") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    implicit val sc = spark.sqlContext
+    val mem = MemoryStream[StreamEnvelop]
+    val out = UserStateMaterializeJob.buildStreaming(mem.toDS(), ttlMs = 0)
+    val q = out.writeStream.format("memory").queryName("mat_stream").outputMode("append").start()
     try {
-      implicit val sc = spark.sqlContext
-      val mem = MemoryStream[StreamEnvelop]
-      val out = UserStateMaterializeJob.buildStreaming(mem.toDS(), ttlMs = 0)
-      val q = out.writeStream.format("memory").queryName("mat_stream").outputMode("append").start()
-      try {
-        mem.addData(mkEnv("insert", "u1", """{"v":1}""", 1))
-        q.processAllAvailable()
-        mem.addData(mkEnv("delete", "u1", null, 2))
-        q.processAllAvailable()
-        val rows = spark.table("mat_stream")
-          .select($"key".cast("string"), $"value".isNull).as[(String, Boolean)].collect().toSet
-        assert(rows === Set(("u1", false), ("u1", true))) // INSERT then tombstone
-      } finally q.stop()
-    } finally spark.conf.unset(key)
+      mem.addData(mkEnv("insert", "u1", """{"v":1}""", 1))
+      q.processAllAvailable()
+      mem.addData(mkEnv("delete", "u1", null, 2))
+      q.processAllAvailable()
+      val rows = spark.table("mat_stream")
+        .select($"key".cast("string"), $"value".isNull).as[(String, Boolean)].collect().toSet
+      assert(rows === Set(("u1", false), ("u1", true))) // INSERT then tombstone
+    } finally q.stop()
   }
 
   test("UserSessionAnalysis streaming: closed sessions become SESSION_CLOSED envelopes") {
@@ -55,31 +51,27 @@ class StreamingJobsSpec extends SparkSpec {
   }
 
   test("UserSessionAnalysis streaming with lateness: late event emits SESSION_UPDATED") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    implicit val sc = spark.sqlContext
+    val mem = MemoryStream[StreamEnvelop]
+    val out = UserSessionAnalysisJob.buildStreamingWithLateness(
+      mem.toDS(), gapMs = 10000, latenessMs = 60000)
+    val q = out.writeStream.format("memory").queryName("sess_late_job").outputMode("append").start()
     try {
-      implicit val sc = spark.sqlContext
-      val mem = MemoryStream[StreamEnvelop]
-      val out = UserSessionAnalysisJob.buildStreamingWithLateness(
-        mem.toDS(), gapMs = 10000, latenessMs = 60000)
-      val q = out.writeStream.format("memory").queryName("sess_late_job").outputMode("append").start()
-      try {
-        mem.addData(mkEnv("login", "u1", "{}", 100), mkEnv("click", "u1", "{}", 104))
-        q.processAllAvailable()
-        mem.addData(mkEnv("x", "u2", "{}", 150))
-        q.processAllAvailable()
-        mem.addData(mkEnv("y", "u2", "{}", 151)) // timer batch: u1 closes
-        q.processAllAvailable()
-        mem.addData(mkEnv("late", "u1", "{}", 106)) // within lateness: re-fire
-        q.processAllAvailable()
-        val u1 = spark.table("sess_late_job").filter($"primaryKey" === "u1")
-          .select($"operation", get_json_object($"payloadJson", "$.count").cast("long"),
-            element_at($"metadata", "firing"))
-          .as[(String, Long, String)].collect().toSet
-        assert(u1.contains(("SESSION_CLOSED", 2L, "1")))
-        assert(u1.contains(("SESSION_UPDATED", 3L, "2")))
-      } finally q.stop()
-    } finally spark.conf.unset(key)
+      mem.addData(mkEnv("login", "u1", "{}", 100), mkEnv("click", "u1", "{}", 104))
+      q.processAllAvailable()
+      mem.addData(mkEnv("x", "u2", "{}", 150))
+      q.processAllAvailable()
+      mem.addData(mkEnv("y", "u2", "{}", 151)) // timer batch: u1 closes
+      q.processAllAvailable()
+      mem.addData(mkEnv("late", "u1", "{}", 106)) // within lateness: re-fire
+      q.processAllAvailable()
+      val u1 = spark.table("sess_late_job").filter($"primaryKey" === "u1")
+        .select($"operation", get_json_object($"payloadJson", "$.count").cast("long"),
+          element_at($"metadata", "firing"))
+        .as[(String, Long, String)].collect().toSet
+      assert(u1.contains(("SESSION_CLOSED", 2L, "1")))
+      assert(u1.contains(("SESSION_UPDATED", 3L, "2")))
+    } finally q.stop()
   }
 
   test("KafkaToMongo streaming: foreachBatch upsert maintains the keyed table") {

@@ -7,7 +7,7 @@ SF001="${1:-/root/testdata/sf0.01}"
 SF01="${2:-/root/testdata/sf0.1}"
 OUT=/tmp/graft_gate_verify
 
-sbt -batch test
+sbt -batch "testOnly * -- -oD"
 SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Verify $SF001 $OUT"
 python3 tools/check.py "$SF001" "$OUT"
 SPARK_GRAFT_SF_DIR="$SF01" sbt -batch "runMain graft.Bench"
