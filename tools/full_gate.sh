@@ -10,6 +10,13 @@ OUT=/tmp/graft_gate_verify
 sbt -batch "testOnly * -- -oD"
 SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Verify $SF001 $OUT"
 python3 tools/check.py "$SF001" "$OUT"
+# the cold bootstrap -> append -> serve chain of the curation faces on a
+# seeded corpus, each face's output hash checked against its DuckDB oracle;
+# the last stdout line is the run's JSON verdict
+CURATION="$(python3 perfbench/run.py --workload curation_batch --seed 1 --seconds 20 | tail -n 1)"
+echo "$CURATION"
+python3 -c 'import json, sys; sys.exit(0 if json.loads(sys.argv[1])["correct"] is True else 1)' \
+  "$CURATION" || { echo "full_gate: curation_batch is not correct" >&2; exit 1; }
 SPARK_GRAFT_SF_DIR="$SF01" sbt -batch "runMain graft.Bench"
 python3 tools/bench_compare.py bench_full.json
 python3 tools/round_gate.py stamp
