@@ -7,7 +7,7 @@ object Bench {
     * the host (VM noisy neighbor, frequency change) instead of reading as
     * a hundred simultaneous engine regressions — r12 measured exactly
     * that: a 1.33× median shift across all 127 queries with byte-identical
-    * code, confirmed by steady-state BenchOne reps. min-of-3 for JIT
+    * code, confirmed by steady-state ProfileOne reps. min-of-3 for JIT
     * steady state; the value is folded into a volatile sink so the loop
     * cannot be dead-code-eliminated.
     */
@@ -30,17 +30,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false") // GraftSession scaladoc: hang in checksum stream close
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.getOrCreate("graft-bench")
     // Prebuild every /tmp fixture OUTSIDE the timers — fixture construction
     // (JSON string building, change-log staging) is harness work, not engine
     // work, and must not be absorbed into the first query that touches it.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** ORGANIC corpus generator for native-scale bench slices (VERDICT r17 #6).
   *
   * TESTDATA.md publishes no generator recipe (the driver owns it), so scale
@@ -82,15 +80,11 @@ object GenCorpus {
     val nDocs = args(1).toLong
     val nVecs = args(2).toLong
     val seed = if (args.length > 3) args(3).toLong else 42L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.getOrCreate("graft-gencorpus")
+    val cpus = spark.sparkContext.defaultParallelism
     import spark.implicits._
 
-    val docs = spark.range(0L, nDocs, 1L, cpus.toInt).map { id =>
+    val docs = spark.range(0L, nDocs, 1L, cpus).map { id =>
       val r = rndFor(seed, id, 1)
       val lang = if (r.nextDouble() < 0.41) "en" else Langs(1 + r.nextInt(4))
       val source = "src" + r.nextInt(20)
@@ -117,7 +111,7 @@ object GenCorpus {
       v.map(x => (x / n).toFloat)
     }
     val bc = spark.sparkContext.broadcast(centers)
-    val vecs = spark.range(0L, nVecs, 1L, cpus.toInt).map { id =>
+    val vecs = spark.range(0L, nVecs, 1L, cpus).map { id =>
       val r = rndFor(seed, id, 2)
       val label = r.nextInt(10)
       val c = bc.value(label)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -23,19 +22,13 @@ object ProfileOne {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.getOrCreate("graft-profile")
+    // the same fixtures Bench warms, built outside the timers, so rep
+    // times compare with Bench's per-face times
     graft.jobs.JobFixtures.warm(spark, sfDir)
     graft.queries.SourceQueries.warm(spark, sfDir)
+    graft.queries.JoinQueries.warm(spark, sfDir)
+    graft.queries.Relational.warm(spark, sfDir)
     val jobs = mutable.ArrayBuffer[J]()
     // @volatile: written by the main thread, read on the listener-bus
     // thread — without it the last-rep recording can miss early jobs to

@@ -1,347 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-
-/** k-growth probe (VERDICT r10 #2): the replication sweep holds k near
-  * minK, so the O(n·k) flat-assignment term stays invisible — this probe
-  * scales n AND lets [[graft.data.Similarity.autoK]] grow k across decades,
-  * timing the coarse-quantizer ASSIGNMENT STAGE alone: flat
-  * (`assignNearest`, k·dim per row) vs the two-level product quantizer
-  * (`imiAssign`, √k·dim per row). Expectation: the flat per-decade ratio
-  * grows ~10× per decade ON TOP of the row growth (k ∝ n), while the IMI
-  * ratio grows ~√10× — the measured evidence for the auto-k switch in
-  * DataQueries (FlatQuantizerMaxK). Models are trained OUTSIDE the timers
-  * (the ModelStore train-once contract); results recorded in SCALE.md.
-  *
-  * usage: runMain graft.KGrowthProbe [srcDir] [outBase] [maxFactor] [maxFlatK]
-  * (`maxFlatK` caps the FLAT arm: beyond it the flat measurement is
-  * skipped — loudly, never silently — because its O(n·k·dim) work grows
-  * ~100× per decade; the IMI arm runs at every decade)
-  */
-object KGrowthProbe {
-  def main(args: Array[String]): Unit = {
-    val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val outBase = if (args.length > 1) args(1) else "/tmp/graft-kgrowth"
-    val maxFactor = if (args.length > 2) args(2).toInt else 100
-    val maxFlatK = if (args.length > 3) args(3).toInt else Int.MaxValue
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false") // GraftSession scaladoc: hang in checksum stream close
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.data.Similarity
-    val factors = Iterator.iterate(1)(_ * 10).takeWhile(_ <= maxFactor).toVector
-    println(f"${"n"}%10s ${"k"}%8s ${"kSub"}%6s ${"flat(s)"}%10s ${"imi(s)"}%10s " +
-      f"${"train(s)"}%9s ${"skewSeed"}%9s ${"skewTrn"}%8s ${"cells"}%8s ${"heapMB"}%7s")
-    val rows = factors.map { f =>
-      val dir =
-        if (f == 1) srcDir
-        else {
-          val d = s"$outBase/f$f"
-          ScaleProbe.buildScaled(spark, srcDir, d, f, only = Set("embeddings"))
-          d
-        }
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      val n = emb.count()
-      val k = Similarity.autoK(n)
-      val kSub = Similarity.imiKSub(k)
-      val cbsSeed = Similarity.imiCodebooks(emb, "vec_id", "embedding", kSub)
-      // train(s) = the FULL model build from scratch (seeding scan +
-      // sample collection + Lloyd refinement) — what a fresh campaign
-      // pays before ModelStore persistence; cbsSeed above is held only
-      // for the skew comparison and re-derives the same seeding outside
-      // any timer
-      val t0 = System.nanoTime()
-      val cbsTrained = Similarity.imiCodebooksTrained(
-        emb, "vec_id", "embedding", kSub, iters = 2,
-        sampleN = Similarity.imiTrainSampleN(kSub))
-      val tTrain = (System.nanoTime() - t0) / 1e9
-      // assignment stage ONLY: materialize the bucket column through the
-      // noop sink (1 codegen rep + min of 2 warm, the ScaleProbe protocol)
-      def time(c: org.apache.spark.sql.Column): Double = {
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          emb.withColumn("_bk", c).select("_bk").write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once(); math.min(once(), once())
-      }
-      // cell-size skew (VERDICT r11 #2): max/mean over NON-EMPTY cells —
-      // the per-cell quadratic fence only holds while cells stay balanced,
-      // so the probe records whether Lloyd refinement actually narrows the
-      // hotspot the seeded codebooks might leave under content-correlated
-      // ids. Also reports how many of the kSub² product cells are live.
-      def skewOf(cbs: Seq[Seq[Seq[Double]]]): (Double, Long) = {
-        val r = emb.withColumn("_bk", Similarity.imiAssign(col("embedding"), cbs))
-          .groupBy(col("_bk")).count()
-          .agg(max(col("count")).as("mx"), avg(col("count")).as("mean"),
-            count(lit(1)).as("cells"))
-          .collect()(0)
-        (r.getLong(0) / r.getDouble(1), r.getLong(2))
-      }
-      val tFlat =
-        if (k <= maxFlatK) {
-          val seeds = Similarity.seedCentroids(emb, "vec_id", "embedding", k)
-          time(Similarity.assignNearest(col("embedding").cast("array<double>"), seeds))
-        } else {
-          println(s"[kgrowth] flat arm SKIPPED at k=$k > maxFlatK=$maxFlatK " +
-            "(O(n·k·dim) work; extrapolate from the measured decades)")
-          Double.NaN
-        }
-      val tImi = time(Similarity.imiAssign(col("embedding"), cbsTrained))
-      // assignment-stage heap (VERDICT r11 #7): used heap right after the
-      // timed runs — at n=20M the ~√k·dim model is no longer trivially
-      // cached per task, so record what the stage actually held live
-      val rt = Runtime.getRuntime
-      val heapMB = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
-      val (skewSeed, _) = skewOf(cbsSeed)
-      val (skewTrained, cellsLive) = skewOf(cbsTrained)
-      println(f"$n%10d $k%8d $kSub%6d $tFlat%10.2f $tImi%10.2f " +
-        f"$tTrain%9.2f $skewSeed%9.2f $skewTrained%8.2f $cellsLive%8d $heapMB%7d")
-      (n, k, kSub, tFlat, tImi)
-    }
-    rows.sliding(2).foreach {
-      case Seq(a, b) =>
-        println(
-          f"decade ${a._1}->${b._1} (rows x${b._1.toDouble / a._1}%.0f, k ${a._2}->${b._2}): " +
-            f"flat x${b._4 / a._4}%.1f  imi x${b._5 / a._5}%.1f")
-      case _ => ()
-    }
-    spark.stop()
-  }
-}
-
-/** Multi-index-Hamming band selectivity probe (VERDICT r13 #3): measures
-  * the CANDIDATE volume [[graft.data.Multimodal.perceptualPairs]] would
-  * feed its verify join at each banding configuration — the number the
-  * band-space scaling rule predicts as ≈ nBands · probeValues/2^bandBits
-  * · n² (ordered probe×stored matches). Computed WITHOUT running the
-  * quadratic join: per (band, value) bucket, candidates = probe-side
-  * count × stored-side count, so the probe is a pair of linear
-  * aggregations and stays cheap at any corpus size (and cannot trip the
-  * operator's flood guard — it never materializes a pair).
-  *
-  * Rows: exact 4-bit bands (the family's first shape), radius-1 8-bit
-  * (the fixture/production shape), and radius-1 16-bit — the documented
-  * billion-image configuration, whose ~2^-16 per-band bucket selectivity
-  * claim this probe turns into a measured number (DataOpsSpec pins its
-  * EXACTNESS on crafted pairs; this pins its VOLUME).
-  *
-  * usage: runMain graft.MihSelectivityProbe [sfDir]
-  */
-object MihSelectivityProbe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    val fp = graft.core.Tables.documents(spark, sfDir)
-      .select(
-        col("doc_id"),
-        graft.functions.ComputeOnce(
-          graft.data.Multimodal.perceptualHash(col("text").cast("binary"))).as("fp"))
-      .localCheckpoint()
-    val n = fp.count()
-    println(f"n=$n%d docs  all-ordered-pairs=${n * n}%d")
-    println(f"${"bandBits"}%8s ${"radius"}%6s ${"bands"}%5s ${"probeVals"}%9s " +
-      f"${"maxHam"}%6s ${"candidates"}%12s ${"sel"}%10s ${"maxBucket"}%9s")
-    Seq((4, 0), (8, 1), (16, 1)).foreach { case (bandBits, radius) =>
-      val nBands = 64 / bandBits
-      val mask = (1L << bandBits) - 1
-      def counted(probe: Boolean, cName: String) = fp
-        .select(explode(array((0 until nBands).flatMap { b =>
-          val bv = shiftright(col("fp"), b * bandBits).bitwiseAND(lit(mask))
-          val vals =
-            if (probe && radius == 1) bv +: (0 until bandBits).map(i => bv.bitwiseXOR(lit(1L << i)))
-            else Seq(bv)
-          vals.map(v => struct(lit(b).as("bi"), v.as("bv")))
-        }: _*)).as("x"))
-        .groupBy(col("x.bi").as("bi"), col("x.bv").as("bv"))
-        .agg(count(lit(1)).as(cName))
-      val agg = counted(probe = true, "pc")
-        .join(counted(probe = false, "sc"), Seq("bi", "bv"))
-        .agg(sum(col("pc") * col("sc")).as("cand"), max(col("sc")).as("mx"))
-        .as[(Long, Long)].head()
-      val probeVals = if (radius == 1) 1 + bandBits else 1
-      val maxHam = nBands * (radius + 1) - 1
-      println(f"$bandBits%8d $radius%6d $nBands%5d $probeVals%9d $maxHam%6d " +
-        f"${agg._1}%12d ${agg._1.toDouble / (n * n)}%10.2e ${agg._2}%9d")
-    }
-    spark.stop()
-  }
-}
-
-/** Driver-side Lloyd training ceiling (VERDICT r12 #4): the adaptive
-  * sample (32·kSub per half) makes training cost grow ~kSub² in the
-  * driver (sampleN·kSub·dim mul-adds per iteration), and the measured
-  * decades stopped at kSub=791 (25.9 s pre-flattening) — this probe
-  * times [[graft.data.Similarity.imiCodebooksTrained]] at the NEXT
-  * decade, kSub≈2500 (the n≈200M operating point: autoK k≈6.25M), on a
-  * synthetic clustered corpus. The corpus here is deliberately modest
-  * (1M rows): the corpus-scan phases (seeding limit + md5 sample) scale
-  * with Spark and were measured across the KGrowth decades; the DRIVER
-  * phase (collect + unrolled iterations) is corpus-size-independent,
-  * which is exactly what the ceiling question is about. Also reports the
-  * seeding-only time so the iteration cost is separable. Results in
-  * SCALE.md ("Lloyd training ceiling").
-  *
-  * Also times the DISTRIBUTED assignment arm
-  * (`imiCodebooksTrained(distributedAssign = true)` — the bit-identical
-  * executor-side path that engages past `DriverIterKSubCeiling`), so the
-  * crossover the switch encodes is a measured row, not an extrapolation.
-  * `maxDriverKSub` caps the driver arm (its kSub² loop reaches minutes at
-  * kSub≈7900) — skipped loudly, never silently, the KGrowthProbe
-  * maxFlatK pattern.
-  *
-  * usage: runMain graft.LloydCeilingProbe [kSub,kSub,...] [nRows] [maxDriverKSub]
-  */
-object LloydCeilingProbe {
-  def main(args: Array[String]): Unit = {
-    val kSubs = (if (args.length > 0) args(0) else "791,2500").split(",").map(_.trim.toInt).toSeq
-    val n = if (args.length > 1) args(1).toLong else 1000000L
-    val maxDriverKSub = if (args.length > 2) args(2).toInt else Int.MaxValue
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    import graft.data.Similarity
-    val emb = spark.range(n).map { id =>
-      val dim = 64
-      val c = (id / 50).toInt
-      val cRnd = new scala.util.Random(c * 7919L + 17)
-      val center = Array.fill(dim)(cRnd.nextGaussian())
-      val vRnd = new scala.util.Random(id * 6007L + 23)
-      (id, Array.tabulate(dim)(i => center(i) + 0.55 * vRnd.nextGaussian()).toSeq)
-    }.toDF("vec_id", "embedding").repartition(16).cache()
-    emb.count()
-    println(f"${"kSub"}%6s ${"sampleN"}%8s ${"seed(s)"}%8s ${"sample(s)"}%9s " +
-      f"${"train(s)"}%9s ${"iter(s)"}%8s ${"dist(s)"}%8s")
-    kSubs.foreach { kSub =>
-      val sampleN = Similarity.imiTrainSampleN(kSub)
-      def timed[T](f: => T): (T, Double) = {
-        val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-      }
-      val (_, tSeed) = timed(Similarity.imiCodebooks(emb, "vec_id", "embedding", kSub))
-      // the md5-ordered sample scan + driver collect, timed on its own
-      // (ADVICE r13: lumping it into the subtraction overstated the
-      // driver-iteration share the kSub² extrapolation rests on)
-      val (_, tSample) = timed(Similarity.trainSample(emb, "vec_id", "embedding", sampleN))
-      val tTrain =
-        if (kSub <= maxDriverKSub)
-          timed(Similarity.imiCodebooksTrained(
-            emb, "vec_id", "embedding", kSub, iters = 2, sampleN = sampleN))._2
-        else {
-          println(s"[lloyd] driver arm SKIPPED at kSub=$kSub > maxDriverKSub=$maxDriverKSub " +
-            "(kSub² driver loop; extrapolate from the measured decades)")
-          Double.NaN
-        }
-      val (_, tDist) = timed(Similarity.imiCodebooksTrained(
-        emb, "vec_id", "embedding", kSub, iters = 2, sampleN = sampleN,
-        distributedAssign = true))
-      // iteration cost ≈ full training − (its own seeding pass + its own
-      // sample collect); both subtracted terms re-run the same distributed
-      // scans, so the remainder is the DRIVER-only iteration share
-      println(f"$kSub%6d $sampleN%8d $tSeed%8.1f $tSample%9.1f $tTrain%9.1f " +
-        f"${tTrain - tSeed - tSample}%8.1f $tDist%8.1f")
-    }
-    spark.stop()
-  }
-}
-
-/** Probe-depth curve for the IVFADC+R composed face (SCALE.md r14): after
-  * exact re-ranking, composed-ANN quality is FENCE-gated (the R=1000
-  * plateau == the pSub=8 cell coverage), so the remaining lever is probe
-  * depth. This measures, at the n=200k operating point with the full
-  * trained production shape, recall@10 vs brute and wall seconds for each
-  * pSub × {ADC-only, rerank R=100} arm, plus the fence's candidate volume
-  * (the quantity probe depth actually buys/costs).
-  *
-  * usage: runMain graft.RerankDepthProbe [pSubs=8,12,16] [n=200000] [R=100]
-  */
-object RerankDepthProbe {
-  def main(args: Array[String]): Unit = {
-    val pSubs = (if (args.length > 0) args(0) else "8,12,16").split(",").map(_.trim.toInt).toSeq
-    val n = if (args.length > 1) args(1).toLong else 200000L
-    val rerankR = if (args.length > 2) args(2).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    import graft.data.Similarity
-    import org.apache.spark.sql.functions._
-    // the ScaleMechanicsSpec operating-point fixture (clustered-boundary
-    // corpus, deterministic)
-    val emb = spark.range(n).map { id =>
-      val dim = 64
-      val c = (id / 50).toInt
-      val cRnd = new scala.util.Random(c * 7919L + 17)
-      val center = Array.fill(dim)(cRnd.nextGaussian())
-      val vRnd = new scala.util.Random(id * 6007L + 23)
-      (id, Array.tabulate(dim)(i => center(i) + 0.55 * vRnd.nextGaussian()).toSeq)
-    }.toDF("vec_id", "embedding").repartition(16).cache()
-    emb.count()
-    val kSubAnn = 42
-    val icbs = Similarity.imiCodebooksTrained(
-      emb, "vec_id", "embedding", kSubAnn, iters = 2,
-      sampleN = Similarity.imiTrainSampleN(kSubAnn))
-    val cbs = Similarity.pqCodebooksTrainedDet(
-      emb, "vec_id", "embedding", m = 8, k = 256, iters = 2,
-      sampleN = Similarity.imiTrainSampleN(256))
-    val q = emb.filter(pmod($"vec_id", lit(1601)) === 0)
-    val brute = Similarity.bruteTopK(emb, q, "vec_id", "embedding", 10)
-      .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    def recallOf(df: org.apache.spark.sql.DataFrame): (Double, Double) = {
-      val (got, t) = timed(df.select($"q_id", $"n_id").as[(Long, Long)].collect().toSet)
-      ((got & brute).size.toDouble / brute.size, t)
-    }
-    // fence candidate volume per pSub: the shipped estimator itself
-    // (exact to the row, incl. the join's self-row exclusion — ADVICE
-    // r14: the probe's printed column must match the estimator it
-    // motivates, not re-derive an off-by-~1 decomposition)
-    println(f"${"pSub"}%5s ${"cand/query"}%11s ${"adc"}%7s ${"adc(s)"}%7s ${"rr"}%7s ${"rr(s)"}%7s")
-    pSubs.foreach { p =>
-      val candPerQuery = Similarity.imiFenceCandidateCounts(
-        emb, q, "vec_id", "embedding", icbs, pSub = p)
-        .agg(avg($"n_cand")).as[Double].head().toLong
-      val (adc, tAdc) = recallOf(Similarity.pqTopKPrunedImi(
-        emb, q, "vec_id", "embedding", icbs, cbs, k = 10, pSub = p,
-        nearestEncode = true))
-      val (rr, tRr) = recallOf(Similarity.pqTopKPrunedImiRerank(
-        emb, q, "vec_id", "embedding", icbs, cbs, k = 10, rerankR = rerankR,
-        pSub = p, nearestEncode = true))
-      println(f"$p%5d $candPerQuery%11d $adc%7.3f $tAdc%7.1f $rr%7.3f $tRr%7.1f")
-    }
-    spark.stop()
-  }
-}
 
 /** One-off sf0.1 → sf1 scale probe: replicates the sf0.1 tables `factor`
   * times with shifted keys (id spaces AND key cardinalities scale linearly,
@@ -489,17 +149,7 @@ object ScaleProbe {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft-sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false") // GraftSession scaladoc: hang in checksum stream close
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.getOrCreate("graft-scaleprobe")
     buildScaled(spark, srcDir, outDir, factor)
     // fixtures for both scales built outside the timers, as Bench does
     graft.jobs.JobFixtures.warm(spark, srcDir)
@@ -561,251 +211,6 @@ object ScaleProbe {
     if (failed.nonEmpty) println(s"FAILED (excluded from totals): ${failed.mkString(", ")}")
     if (flagged.nonEmpty)
       println(s"SUPERLINEAR (>12x): ${flagged.map(r => f"${r._1}:${r._4}%.1fx").mkString(", ")}")
-    spark.stop()
-  }
-}
-
-/** OPQ rotation probe (Ge/He/Ke/Sun, "Optimized Product Quantization",
-  * CVPR'13 — public): measures whether a TRAINED orthogonal rotation lifts
-  * the m=8 ADC score model above its ~0.40 recall ceiling at the n=200k
-  * operating point (VERDICT r14 #3 — post-rerank, recall is fence-gated,
-  * but a better pre-rerank ADC ranking shrinks the R and pSub a target
-  * needs; this is the last unexplored published lever on that surface).
-  *
-  * Non-parametric OPQ alternation, driver-side on the deterministic
-  * training sample: (a) Lloyd-train PQ codebooks on the rotated sample,
-  * (b) encode (Euclidean-nearest) and reconstruct, (c) orthogonal
-  * Procrustes — R = U·Vᵀ from svd(Y·Xᵀ) — then repeat. The EVALUATION
-  * arms are symmetric: both train with the production
-  * `pqCodebooksTrainedDet` (m=8, k=256, iters=2, same sample) and score
-  * with the production ADC face (`pqTopK`, nearest encode); the OPQ arm
-  * differs ONLY in the rotation applied to corpus+queries first, so any
-  * recall delta is attributable to the rotation.
-  *
-  * fixture=aniso is the MACHINERY-VALIDATION arm: the same corpus with a
-  * decaying per-dimension spectrum (geometric, 8× across the 64 dims) —
-  * the variance-imbalanced geometry OPQ exists to fix (all high-variance
-  * dims land in the first subspaces, so plain PQ wastes codewords).
-  * A probe that shows a gain there and none on the operating-point
-  * fixture is evidence about the DATA, not a broken probe.
-  *
-  * usage: runMain graft.OpqProbe [n=200000] [opqIters=8] [fixture=iso|aniso]
-  */
-/** Connected-components round-count probe on the worst-case geometry for
-  * min-label propagation: an n-node chain (diameter n−1). Measures the
-  * alternating face's (Kiveris et al. SoCC'14) convergence rounds + wall
-  * time across chain decades — the evidence that near-dup clustering
-  * survives a pathological duplicate topology (frame-by-frame video
-  * stills) where one-hop min-label would need n−1 shuffle rounds.
-  *
-  * usage: runMain graft.ChainCcProbe [n1,n2,...=2000,20000,200000]
-  */
-object ChainCcProbe {
-  def main(args: Array[String]): Unit = {
-    val ns = (if (args.length > 0) args(0) else "2000,20000,200000")
-      .split(",").map(_.trim.toLong).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    println(f"${"n"}%10s ${"rounds"}%7s ${"sec"}%8s  check")
-    ns.foreach { n =>
-      val pairs = spark.range(0, n - 1)
-        .select(col("id").as("i"), (col("id") + 1).as("j"))
-        .localCheckpoint()
-      val t0 = System.nanoTime()
-      val (labels, rounds) =
-        graft.data.Dedup.duplicateClustersAlternatingWithRounds(pairs)
-      // single component, min id 0: the cheapest exact full check
-      val agg = labels.agg(
-        count(lit(1)).as("n"), max(col("cluster_id")).as("mx"),
-        min(col("cluster_id")).as("mn")).head()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val ok = agg.getLong(0) == n && agg.getLong(1) == 0L && agg.getLong(2) == 0L
-      println(f"$n%10d $rounds%7d $sec%8.1f  ${if (ok) "OK" else s"WRONG: $agg"}")
-      graft.core.Checkpoints.release(labels)
-      graft.core.Checkpoints.release(pairs)
-    }
-    spark.stop()
-  }
-}
-
-object OpqProbe {
-  private def matVec(r: Array[Array[Double]], v: Array[Double]): Array[Double] = {
-    val d = r.length
-    val out = new Array[Double](d)
-    var i = 0
-    while (i < d) {
-      var s = 0.0; var j = 0
-      val ri = r(i)
-      while (j < d) { s += ri(j) * v(j); j += 1 }
-      out(i) = s; i += 1
-    }
-    out
-  }
-
-  def main(args: Array[String]): Unit = {
-    val n = if (args.length > 0) args(0).toLong else 200000L
-    val opqIters = if (args.length > 1) args(1).toInt else 8
-    val fixture = if (args.length > 2) args(2) else "iso"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    import graft.data.Similarity
-    import org.apache.spark.sql.functions._
-    val dim = 64
-    // geometric spectrum 1 → 1/8 across dims in the aniso arm
-    val spectrum = Array.tabulate(dim)(i =>
-      if (fixture == "aniso") math.pow(8.0, -i.toDouble / (dim - 1)) else 1.0)
-    // the RerankDepthProbe / ScaleMechanicsSpec operating-point fixture
-    val emb = spark.range(n).map { id =>
-      val c = (id / 50).toInt
-      val cRnd = new scala.util.Random(c * 7919L + 17)
-      val center = Array.fill(dim)(cRnd.nextGaussian())
-      val vRnd = new scala.util.Random(id * 6007L + 23)
-      (id, Array.tabulate(dim)(i =>
-        spectrum(i) * (center(i) + 0.55 * vRnd.nextGaussian())).toSeq)
-    }.toDF("vec_id", "embedding").repartition(16).cache()
-    emb.count()
-    val q = emb.filter(pmod($"vec_id", lit(1601)) === 0)
-    val brute = Similarity.bruteTopK(emb, q, "vec_id", "embedding", 10)
-      .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
-    def recallOf(df: org.apache.spark.sql.DataFrame): Double = {
-      val got = df.select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
-      (got & brute).size.toDouble / brute.size
-    }
-
-    val m = 8; val k = 256; val sub = dim / m
-    val sampleN = Similarity.imiTrainSampleN(k)
-    val sample = Similarity.trainSample(emb, "vec_id", "embedding", sampleN).map(_._2)
-
-    // ---- driver-side pieces of the alternation ----
-    // Lloyd on an in-memory sample, the pqCodebooksTrainedDet fold shape
-    // (Euclidean-nearest assignment, mean update, empty cells keep seeds)
-    def lloyd(
-        xs: Array[Array[Double]],
-        iters: Int,
-        seed: Array[Array[Array[Double]]] = null
-    ): Array[Array[Array[Double]]] = {
-      val cbs =
-        if (seed != null) seed.map(_.map(_.clone()))
-        else Array.tabulate(m) { mi =>
-          Array.tabulate(k)(j => java.util.Arrays.copyOfRange(xs(j), mi * sub, (mi + 1) * sub))
-        }
-      (0 until iters).foreach { _ =>
-        (0 until m).foreach { mi =>
-          val cws = cbs(mi)
-          val sums = Array.fill(k)(new Array[Double](sub))
-          val cnts = new Array[Int](k)
-          xs.foreach { x =>
-            var bestJ = 0; var bestD = Double.NegativeInfinity
-            var j = 0
-            while (j < k) {
-              var d = 0.0; var ss = 0.0; var i = 0
-              while (i < sub) {
-                val c0 = cws(j)(i); d += x(mi * sub + i) * c0; ss += c0 * c0; i += 1
-              }
-              val sc = d - 0.5 * ss
-              if (sc > bestD) { bestD = sc; bestJ = j }
-              j += 1
-            }
-            var i = 0
-            while (i < sub) { sums(bestJ)(i) += x(mi * sub + i); i += 1 }
-            cnts(bestJ) += 1
-          }
-          (0 until k).foreach { j =>
-            if (cnts(j) > 0) {
-              var i = 0
-              while (i < sub) { cws(j)(i) = sums(j)(i) / cnts(j); i += 1 }
-            }
-          }
-        }
-      }
-      cbs
-    }
-    def reconstruct(x: Array[Double], cbs: Array[Array[Array[Double]]]): Array[Double] = {
-      val y = new Array[Double](dim)
-      (0 until m).foreach { mi =>
-        val cws = cbs(mi)
-        var bestJ = 0; var bestD = Double.NegativeInfinity
-        var j = 0
-        while (j < k) {
-          var d = 0.0; var ss = 0.0; var i = 0
-          while (i < sub) { val c0 = cws(j)(i); d += x(mi * sub + i) * c0; ss += c0 * c0; i += 1 }
-          val sc = d - 0.5 * ss
-          if (sc > bestD) { bestD = sc; bestJ = j }
-          j += 1
-        }
-        var i = 0
-        while (i < sub) { y(mi * sub + i) = cws(bestJ)(i); i += 1 }
-      }
-      y
-    }
-    def mse(xs: Array[Array[Double]], cbs: Array[Array[Array[Double]]]): Double =
-      xs.map { x =>
-        val y = reconstruct(x, cbs)
-        var s = 0.0; var i = 0
-        while (i < dim) { val d = x(i) - y(i); s += d * d; i += 1 }
-        s
-      }.sum / xs.length
-
-    var rot = Array.tabulate(dim, dim)((i, j) => if (i == j) 1.0 else 0.0)
-    println(f"${"iter"}%5s ${"sampleMSE"}%12s")
-    println(f"${0}%5d ${mse(sample, lloyd(sample, 2))}%12.5f  (identity rotation baseline)")
-    // warm-start codebooks across OPQ iterations (the rotation moves
-    // slowly once the alternation settles, so prior codewords are good
-    // seeds — fresh re-seeding each round never catches the baseline)
-    var warmCbs: Array[Array[Array[Double]]] = null
-    (1 to opqIters).foreach { it =>
-      val rx = sample.map(matVec(rot, _))
-      val cbs = lloyd(rx, if (warmCbs == null) 2 else 1, warmCbs)
-      warmCbs = cbs
-      // Procrustes: minimize ||R·X − Y||_F over orthogonal R, where X is
-      // the UNROTATED sample and Y its reconstruction in rotated space
-      val mMat = breeze.linalg.DenseMatrix.zeros[Double](dim, dim)
-      sample.zip(rx).foreach { case (x, rxv) =>
-        val y = reconstruct(rxv, cbs)
-        var i = 0
-        while (i < dim) {
-          var j = 0
-          while (j < dim) { mMat(i, j) += y(i) * x(j); j += 1 }
-          i += 1
-        }
-      }
-      val breeze.linalg.svd.SVD(u, _, vt) = breeze.linalg.svd(mMat)
-      val ruv = u * vt
-      rot = Array.tabulate(dim, dim)((i, j) => ruv(i, j))
-      println(f"$it%5d ${mse(sample.map(matVec(rot, _)), cbs)}%12.5f")
-    }
-
-    // ---- symmetric evaluation arms ----
-    val rotB = spark.sparkContext.broadcast(rot)
-    val rotate = udf { (v: Seq[Double]) => matVec(rotB.value, v.toArray).toSeq }
-    val rotEmb = emb.select($"vec_id", rotate($"embedding").as("embedding"))
-      .repartition(16).cache()
-    rotEmb.count()
-    val rotQ = rotEmb.filter(pmod($"vec_id", lit(1601)) === 0)
-
-    val baseCbs = Similarity.pqCodebooksTrainedDet(
-      emb, "vec_id", "embedding", m, k, iters = 2, sampleN = sampleN)
-    val opqCbs = Similarity.pqCodebooksTrainedDet(
-      rotEmb, "vec_id", "embedding", m, k, iters = 2, sampleN = sampleN)
-    val rBase = recallOf(Similarity.pqTopK(
-      emb, q, "vec_id", "embedding", baseCbs, k = 10, nearestEncode = true))
-    val rOpq = recallOf(Similarity.pqTopK(
-      rotEmb, rotQ, "vec_id", "embedding", opqCbs, k = 10, nearestEncode = true))
-    println(f"[OpqProbe] n=$n m=$m k=$k ADC-only recall@10: baseline=$rBase%.3f opq=$rOpq%.3f (delta=${rOpq - rBase}%+.3f)")
     spark.stop()
   }
 }

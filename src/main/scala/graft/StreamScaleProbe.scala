@@ -319,19 +319,7 @@ object StreamScaleProbe {
   def main(args: Array[String]): Unit = {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val scaledDir = if (args.length > 1) args(1) else "/tmp/graft-sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false") // GraftSession scaladoc: hang in checksum stream close
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.getOrCreate("graft-streamscaleprobe")
 
     // compaction horizon: a tenth of the event-time span, so the lag face
     // actually trims history while staying data-derived and deterministic
@@ -398,216 +386,6 @@ object StreamScaleProbe {
     }
     // eviction plateau runs last (it leaves no providers loaded either)
     if (wantEviction) cdcEviction(spark, srcDir, ttlMs = 5000)
-    spark.stop()
-  }
-}
-
-/** Streaming ingest-capstone SOAK (VERDICT r12 #6): hundreds of
-  * micro-batches through [[graft.data.CorpusIngest.ingest]] under a
-  * duplicate-heavy, junk-heavy feed, with per-batch state-store telemetry
-  * — the one streaming-state claim previously verified only at small
-  * batch counts: that near-dup gate state grows with ACCEPTED DISTINCT
-  * content, not feed volume (rejected docs never reach state; re-sent
-  * duplicates re-probe existing band buckets without creating new ones).
-  *
-  * The final pin is EXACT, not a bound: the gate's state is keyed by band
-  * bucket, so final state rows must equal the distinct band buckets of
-  * the distinct accepted texts — computed independently here by the BATCH
-  * signature path over the accepted corpus. Feed shape per batch:
-  * `fresh` unique docs + `dup` re-sends of a 10-doc core + `junk`
-  * too-short docs (batch order is whatever the file source lists, which
-  * only permutes WHICH copy is first-seen — the bucket set is
-  * order-independent).
-  *
-  * `mode=media` (VERDICT r13 #5) runs the IMAGE capstone instead —
-  * [[graft.data.Multimodal.ingest]]: fresh PRNG payloads + a re-sent
-  * 10-image core + junk split between too-small payloads and
-  * valid-size/disallowed-mime images (the latter carry DISTINCT
-  * fingerprints, so a rejected image leaking into the perceptual band
-  * state breaks the equality pin loudly). The media gate runs
-  * bandBits=16 — the billion-image MIH configuration, soaked in
-  * streaming for the first time; expectation = distinct `p{b}_{value}`
-  * buckets of the ACCEPTED images through the batch fingerprint path.
-  *
-  * usage: runMain graft.IngestSoakProbe [batches] [fresh] [dup] [junk] [mode]
-  */
-object IngestSoakProbe {
-  def main(args: Array[String]): Unit = {
-    val batches = if (args.length > 0) args(0).toInt else 300
-    val fresh = if (args.length > 1) args(1).toInt else 10
-    val dup = if (args.length > 2) args(2).toInt else 100
-    val junk = if (args.length > 3) args(3).toInt else 90
-    val mode = if (args.length > 4) args(4) else "text"
-    require(mode == "text" || mode == "media", s"mode must be text|media, got $mode")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    import graft.data.{CorpusIngest, Dedup, Multimodal, TextAnalysis}
-
-    val feedDir = java.nio.file.Files.createTempDirectory(s"graft-ingest-soak-$mode").toString
-    // (expectedBuckets, mkHits) per mode; the drive below is shared
-    val (expectedBuckets, mkHits): (Long, DataFrame => org.apache.spark.sql.Dataset[graft.model.NearDupHit]) =
-      if (mode == "text") {
-        // deterministic feed: fresh docs are seeded word soups over a common-
-        // English vocabulary (diverse shingles — near-dup collisions between
-        // DIFFERENT fresh docs would blur the state-per-accepted-doc pin),
-        // dups re-send a fixed 10-doc core verbatim, junk fails the token gate
-        val vocab = ("the of and to in is you that it he was for on are as with his they at be this " +
-          "have from or one had by word but not what all were we when your can said there use an each " +
-          "which she do how their if will up other about out many then them these so some her would " +
-          "make like him into time has look two more write go see number no way could people my than " +
-          "first water been call who oil its now find long down day did get come made may part over").split(" ")
-        val core = (0 until 10).map(i =>
-          s"the quick brown fox number core$i jumps over the lazy dog while rain keeps falling " +
-            "on the quiet green field near the old stone bridge")
-        def soup(b: Int, i: Int): String = {
-          val r = new scala.util.Random(b * 100003L + i * 7919L + 5)
-          Seq.fill(30)(vocab(r.nextInt(vocab.length))).mkString(" ")
-        }
-        val rows = for {
-          b <- 0 until batches
-          (text, off) <- (0 until fresh).map(i => (soup(b, i), i.toLong)) ++
-            (0 until dup).map(j => (core(j % 10), 1000L + j)) ++
-            (0 until junk).map(j => ("zz", 5000L + j))
-        } yield (b * 10000L + off, text, b)
-        rows.toDF("doc_id", "text", "batch")
-          .repartition(batches, col("batch"))
-          .write.mode("overwrite").partitionBy("batch").parquet(feedDir)
-
-        val minTokens = 8
-        val langs = Seq("en")
-        val feed = spark.read.parquet(feedDir)
-        val verdictB = CorpusIngest.verdict(feed, "text", langs, minTokens)
-        val acceptedB = verdictB.filter(col("reject_reason").isNull).cache()
-        val nAccepted = acceptedB.count()
-        // independent expectation: distinct band buckets of distinct accepted
-        // texts through the BATCH signature path (n=3, k=16, 2-row bands — the
-        // streamingNearDupCandidates defaults)
-        val distinctTexts = acceptedB.select(col("text")).distinct()
-          .withColumn("tid", monotonically_increasing_id())
-          .withColumn("_t", graft.functions.ComputeOnce(TextAnalysis.tokens(col("text"))))
-          .filter(size(col("_t")) >= 3)
-        val sig = Dedup.minhashSignaturesFromTokens(distinctTexts, "tid", col("_t"), 3, 16)
-        val bandArr = array((0 until 8).map { b =>
-          concat_ws("_", lit(b) +: (0 until 2).map(r => col(s"h${b * 2 + r}")): _*)
-        }: _*)
-        val expected = sig.select(explode(bandArr).as("bucket")).distinct().count()
-        println(s"[soak] mode=text feed=${feed.count()} accepted=$nAccepted " +
-          s"distinctAcceptedTexts=${distinctTexts.count()} expectedBuckets=$expected")
-        (expected, (stream: DataFrame) =>
-          CorpusIngest.ingest(stream, "doc_id", "text", langs, minTokens)._2)
-      } else {
-        // media feed: fresh PRNG payloads (distinct fingerprints), a
-        // re-sent 10-image core, junk half too-small / half valid-size
-        // with a disallowed mime — the latter's DISTINCT fingerprints
-        // make any rejected-media state leak break the equality pin
-        val minBytes = 64
-        val maxBytes = 100000L
-        val allowed = Seq("image/png", "image/jpeg")
-        val mediaBandBits = 16
-        def img(seed: Long): Array[Byte] = {
-          val r = new scala.util.Random(seed)
-          Array.fill(144)(r.nextInt(256).toByte)
-        }
-        val core = (0 until 10).map(i => img(900000L + i))
-        val rows = for {
-          b <- 0 until batches
-          (media, mime, off) <- (0 until fresh).map(i =>
-              (img(b * 100003L + i * 7919L + 11), "image/png", i.toLong)) ++
-            (0 until dup).map(j => (core(j % 10), "image/jpeg", 1000L + j)) ++
-            (0 until junk).map(j =>
-              if (j % 2 == 0) (Array.fill(16)(j.toByte), "image/png", 5000L + j)
-              else (img(b * 999983L + j * 104729L + 13), "image/gif", 5000L + j))
-        } yield (b * 10000L + off, media, mime, b)
-        rows.toDF("doc_id", "media", "mime", "batch")
-          .repartition(batches, col("batch"))
-          .write.mode("overwrite").partitionBy("batch").parquet(feedDir)
-
-        val feed = spark.read.parquet(feedDir)
-        val acceptedB = Multimodal
-          .mediaVerdict(feed, "media", "mime", allowed, minBytes, maxBytes)
-          .filter(col("reject_reason").isNull).cache()
-        val nAccepted = acceptedB.count()
-        // independent expectation: distinct p-namespaced (band, value)
-        // buckets of the accepted images through the batch fingerprint
-        // path — the exact strings Processors.nearDupBands keys state by
-        val nBands = 64 / mediaBandBits
-        val mask = (1L << mediaBandBits) - 1
-        val fp = acceptedB.select(
-          graft.functions.ComputeOnce(Multimodal.perceptualHash(col("media"))).as("_fp"))
-        val bandArr = array((0 until nBands).map { b =>
-          concat_ws("_",
-            lit(s"p$b"),
-            shiftright(col("_fp"), b * mediaBandBits).bitwiseAND(lit(mask)).cast("string"))
-        }: _*)
-        val expected = fp.select(explode(bandArr).as("bucket")).distinct().count()
-        println(s"[soak] mode=media feed=${feed.count()} accepted=$nAccepted " +
-          s"distinctAcceptedFps=${fp.distinct().count()} expectedBuckets=$expected " +
-          s"(bandBits=$mediaBandBits)")
-        (expected, (stream: DataFrame) =>
-          Multimodal.ingest(stream, "doc_id", "media", "mime", allowed,
-            minBytes, maxBytes, bandBits = mediaBandBits)._2)
-      }
-    val feed = spark.read.parquet(feedDir)
-    val nFeed = feed.count()
-
-    val series = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = {
-        val st = e.progress.stateOperators.toSeq.map(_.numRowsTotal).sum
-        series.add((e.progress.batchId, e.progress.numInputRows, st))
-        ()
-      }
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-soak-ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-soak-out").toString
-    val stream = spark.readStream
-      .schema(feed.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feedDir)
-    val hits = mkHits(stream)
-    val t0 = System.nanoTime()
-    val q = hits.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", s"$out/hits")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .start()
-    q.awaitTermination()
-    val wall = (System.nanoTime() - t0) / 1e9
-    spark.streams.removeListener(listener)
-    val snaps = series.toArray(Array.empty[(Long, Long, Long)]).sortBy(_._1)
-    println(f"${"batch"}%7s ${"inRows"}%8s ${"stateRows"}%10s")
-    snaps.zipWithIndex.foreach { case ((bid, in, st), i) =>
-      if (i % 25 == 0 || i == snaps.length - 1) println(f"$bid%7d $in%8d $st%10d")
-    }
-    val finalState = snaps.lastOption.map(_._3).getOrElse(-1L)
-    val nBatches = snaps.length
-    println(f"[soak] batches=$nBatches wall=$wall%.1fs finalStateRows=$finalState " +
-      f"expected=$expectedBuckets feedRows=$nFeed " +
-      f"stateOverFeed=${finalState.toDouble / nFeed}%.3f")
-    require(nBatches >= batches,
-      s"soak ran $nBatches micro-batches, wanted >= $batches (maxFilesPerTrigger honored?)")
-    require(finalState == expectedBuckets,
-      s"state rows $finalState != expected distinct accepted band buckets $expectedBuckets " +
-        "— state is NOT tracking accepted distinct content")
-    if (spark.streams.active.isEmpty)
-      org.apache.spark.sql.execution.streaming.state.GraftStateStoreAccess.unloadAll()
     spark.stop()
   }
 }

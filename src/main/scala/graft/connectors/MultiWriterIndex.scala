@@ -160,8 +160,8 @@ object MultiWriterIndex {
     * [[Bucketing.compactBucketed]] pass (`maxFilesPerBucket`, default 1):
     * each fold's append lands up to one file per bucket, so a long
     * cadence without compaction re-creates the small-files decay the
-    * single-writer pipelines already close per batch (CompactProbe,
-    * SCALE.md r18) — and compaction is physical-only (marker restored
+    * single-writer pipelines already close per batch (SCALE.md "r18:
+    * bucketed-index compaction") — and compaction is physical-only (marker restored
     * byte-for-byte, per-bucket no-op skip), so the fold fence and every
     * stamp-validated reader see nothing.
     */

@@ -22,7 +22,7 @@ object Tables {
   def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
   /** `events.ts` is parquet TIMESTAMP(NANOS) which Spark only reads as a long
-    * (spark.sql.legacy.parquet.nanosAsLong=true, set in every session factory).
+    * (spark.sql.legacy.parquet.nanosAsLong=true, set in GraftSession).
     * Normalize to a microsecond TIMESTAMP here — `div 1000` floors like the
     * DuckDB `CAST(ts AS TIMESTAMP)` the oracle uses.
     */

@@ -787,9 +787,8 @@ object Dedup {
     * aggregation already grouped). The old label rides along as
     * min(label where _own) — `labels` holds one row per id, so that min IS
     * the old label — and the convergence count compares the two aggregates
-    * (`label != _old`), observed on the caller's save. Shared by the
-    * [[duplicateClusters]] loop and the `CcLoopPlanDump` plan receipt so
-    * the committed plan evidence cannot drift from the shipped loop body.
+    * (`label != _old`), observed on the caller's save. The loop body's
+    * plan receipt is `plans/r22/cc_loop_body_r22.txt`.
     *
     * `coalesceTo` < `shuffleParts`: cached plans are exempt from AQE
     * coalescing, so the aggregate's exchange would pin the label cache at
@@ -799,7 +798,7 @@ object Dedup {
     * the graph is large the two counts agree and the aggregate's hash(id)
     * partitioning is kept so the next round's join stays exchange-aligned.
     */
-  private[graft] def minLabelNext(
+  private def minLabelNext(
       edges: DataFrame,
       labels: DataFrame,
       coalesceTo: Int,
@@ -824,7 +823,7 @@ object Dedup {
     * min(Γ(u) ∪ {u}). Output edges are canonically oriented (src > dst),
     * self-loops dropped, deduped.
     */
-  private[graft] def largeStar(e: DataFrame): DataFrame = {
+  private def largeStar(e: DataFrame): DataFrame = {
     val nbrs = e.select(col("src"), col("dst"))
       .unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
     // min(Γ(u) ∪ {u}) as a window over the SAME key the old groupBy+join
@@ -844,7 +843,7 @@ object Dedup {
     * larger endpoint; each node u links its smaller neighbors AND itself
     * to min(Γ(u) ∪ {u}). Keeps the src > dst canonical orientation.
     */
-  private[graft] def smallStar(e: DataFrame): DataFrame = {
+  private def smallStar(e: DataFrame): DataFrame = {
     val oriented = e.select(
         greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst"))
@@ -884,14 +883,7 @@ object Dedup {
     * materialized edge frame); hitting `maxIter` unconverged fails loudly
     * like the min-label face.
     */
-  def duplicateClustersAlternating(pairs: DataFrame, maxIter: Int = 30): DataFrame =
-    duplicateClustersAlternatingWithRounds(pairs, maxIter)._1
-
-  /** [[duplicateClustersAlternating]] + the round count it converged in —
-    * the measurement face (ChainCcProbe pins rounds ~ log n on chains).
-    */
-  private[graft] def duplicateClustersAlternatingWithRounds(
-      pairs: DataFrame, maxIter: Int = 30): (DataFrame, Int) = {
+  def duplicateClustersAlternating(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
     var edges = pairs
       .select(greatest(col("i"), col("j")).as("src"), least(col("i"), col("j")).as("dst"))
       .where(col("src") =!= col("dst"))
@@ -935,7 +927,7 @@ object Dedup {
       .agg(min(col("cluster_id")).as("cluster_id"))
     val result = out.localCheckpoint()
     graft.core.Checkpoints.release(edges)
-    (result, iter)
+    result
   }
 
   /** Embedding-cosine near-dup pairs within a blocking key (coarse bucket:

@@ -441,7 +441,7 @@ object Similarity {
     *
     * `idCol` must be integral (the update fold sorts members by id).
     *
-    * Driver-side ceiling (measured, LloydCeilingProbe / SCALE.md r13):
+    * Driver-side ceiling (measured, SCALE.md "r13: Lloyd training ceiling"):
     * the iteration phase is sampleN·kSub·dim·iters mul-adds on the driver
     * at ~1.2e9/s — 22.4 s full training at kSub=2500 (the n≈200M
     * operating point) with the adaptive 32·kSub sample. Cost grows ~kSub²
@@ -470,11 +470,9 @@ object Similarity {
     * trainers ([[imiCodebooksTrained]], [[pqCodebooksTrainedDet]]): the
     * `sampleN` rows smallest by `(md5(id), id)` — content-DEcorrelated and
     * engine-independent — collected to the driver and re-sorted ascending
-    * by id (the replayable fold order). Exposed `private[graft]` so
-    * LloydCeilingProbe can time the distributed sample scan separately
-    * from the driver-side iteration loop (ADVICE r13).
+    * by id (the replayable fold order).
     */
-  private[graft] def trainSample(
+  private def trainSample(
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
@@ -528,8 +526,8 @@ object Similarity {
         // hot loop on FLATTENED primitive arrays, identical fold order —
         // dotting against boxed Vector codewords ran the r12 k-growth
         // probe at ~1e8 mul-adds/s; flat double[] plus the single-pass
-        // per-cell accumulation below measures ~1.2e9/s (LloydCeilingProbe,
-        // SCALE.md r13), bit-identical output
+        // per-cell accumulation below measures ~1.2e9/s (SCALE.md "r13:
+        // Lloyd training ceiling"), bit-identical output
         val flat = new Array[Double](kSub * sub)
         var j0 = 0
         while (j0 < kSub) {
@@ -1551,10 +1549,11 @@ object Similarity {
     *
     * Once refined, quality is FENCE-gated again, so `pSub` becomes the
     * operating lever — and it only pays WITH refinement (measured at the
-    * n=200k production shape, RerankDepthProbe / SCALE.md r14: ADC-only
-    * is flat at ~0.40 for pSub 8→16 while rerank R=100 climbs 0.773 →
-    * 0.875 → 0.933; cost tracks the fence's candidate volume, 4.1k →
-    * 15.5k rows/query). Pick pSub from the recall target, keep R≈10·k.
+    * n=200k production shape, SCALE.md "Probe-depth curve after
+    * refinement" (r14): ADC-only is flat at ~0.40 for pSub 8→16 while
+    * rerank R=100 climbs 0.773 → 0.875 → 0.933; cost tracks the fence's
+    * candidate volume, 4.1k → 15.5k rows/query). Pick pSub from the
+    * recall target, keep R≈10·k.
     *
     * ==Broadcast flood guard==
     * The refinement joins broadcast the shortlist (nQueries·R id pairs)

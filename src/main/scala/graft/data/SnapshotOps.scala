@@ -218,7 +218,8 @@ object SnapshotOps {
     * both, spec-pinned).
     *
     * `maxPruneBuckets` caps the literal count, and the cap is a PLAN-cost
-    * bound, not a correctness one (measured r17, NearDupIdxProbe-style):
+    * bound, not a correctness one (SCALE.md "r17: near-dup band index
+    * persisted"):
     * Catalyst clones the whole IN literal list on every optimizer pass of
     * every consumer, so an 18k-string probe set cost 4–8 s of pure
     * planning PER consumer at sf0.1 (the flood guard and the candidate

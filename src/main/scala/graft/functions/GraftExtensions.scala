@@ -8,9 +8,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * expressions as SQL functions:
   *
   * {{{
-  * SparkSession.builder()
+  * graft.core.GraftSession.builder("app")
   *   .config("spark.sql.extensions", "graft.functions.GraftExtensions")
   *   // or: .withExtensions(new GraftExtensions)
+  *   .getOrCreate()
   * }}}
   *
   * then `SELECT cosine_sim(a.embedding, b.embedding)`,

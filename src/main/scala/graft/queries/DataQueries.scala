@@ -531,6 +531,8 @@ object DataQueries {
     * checking the owning context. Residual: an abandoned-but-unstopped
     * session's frames stay memoized until its context stops — the memo's
     * purpose (reuse within a live session) makes that the right trade.
+    * Within a session, entries key on [[docsKey]], so a corpus rewritten
+    * under the same path is a new entry once its stamp is invalidated.
     */
   private val pairsMemo =
     new java.util.IdentityHashMap[SparkSession, scala.collection.concurrent.TrieMap[String, DataFrame]]()
@@ -541,9 +543,17 @@ object DataQueries {
       while (it.hasNext) if (it.next().getKey.sparkContext.isStopped) it.remove()
       pairsMemo.computeIfAbsent(spark, _ => scala.collection.concurrent.TrieMap.empty)
     }
+  /** Memo key for values derived from a corpus's `documents` table: the
+    * dir plus its source stamp. A corpus rewritten under the same path gets
+    * a new key once [[graft.connectors.Bucketing.invalidateStamp]] drops
+    * the old stamp, so no memo serves the previous generation.
+    */
+  private def docsKey(dir: String): String =
+    s"$dir@${graft.connectors.Bucketing.cachedStamp(s"$dir/documents.parquet")}"
+
   private def minhashPairsShared(spark: SparkSession, dir: String): DataFrame =
     sessionMemo(spark).getOrElseUpdate(
-      dir,
+      docsKey(dir),
       Dedup.minhashPairs(Tables.documents(spark, dir), "doc_id", "text").localCheckpoint())
 
   /** The connectivity-preserving pair subset for the CLUSTER consumers
@@ -555,7 +565,7 @@ object DataQueries {
     */
   private def clusterPairsShared(spark: SparkSession, dir: String): DataFrame =
     sessionMemo(spark).getOrElseUpdate(
-      s"$dir#clusters",
+      s"${docsKey(dir)}#clusters",
       Dedup.minhashPairsForClustering(Tables.documents(spark, dir), "doc_id", "text")
         .localCheckpoint())
 
@@ -591,7 +601,7 @@ object DataQueries {
   private def clustersShared(spark: SparkSession, dir: String): DataFrame =
     // duplicateClusters already returns a checkpoint-backed frame
     sessionMemo(spark).getOrElseUpdate(
-      s"$dir#clustermap", Dedup.duplicateClusters(clusterPairsShared(spark, dir)))
+      s"${docsKey(dir)}#clustermap", Dedup.duplicateClusters(clusterPairsShared(spark, dir)))
 
   /** The scored importance-weights frame, materialized once per
     * (session, sfDir) for its CONSUMER faces (`d_importance_select`,
@@ -607,7 +617,7 @@ object DataQueries {
     */
   private def importanceWeightsShared(spark: SparkSession, dir: String): DataFrame =
     sessionMemo(spark).getOrElseUpdate(
-      s"$dir#impweights", dImportanceWeights(spark, dir).localCheckpoint())
+      s"${docsKey(dir)}#impweights", dImportanceWeights(spark, dir).localCheckpoint())
 
   /** Recursive-CTE connected components over the (oracle-replayed) LSH
     * pair list: cluster id = min reachable doc id.
@@ -931,8 +941,10 @@ object DataQueries {
     * system trains its quantizer once per corpus, not once per query, so
     * the six ANN/semdedup faces that share a corpus share one training
     * pass instead of each paying the seed-collect + count jobs serially.
-    * Keyed by directory only: the values are data-derived, not
-    * session-bound, so a fresh session reuses them safely.
+    * Keyed by the model path ([[annModelPath]]: dir, source stamp and
+    * training parameters): the values are data-derived, not session-bound,
+    * so a fresh session reuses them safely, and a corpus rewritten under
+    * the same path retrains once its stamp is invalidated.
     */
   /** The in-JVM memos are backed by [[ModelStore]] on disk, keyed by the
     * corpus dir plus a metadata stamp of the source file — the production
@@ -949,10 +961,9 @@ object DataQueries {
     * embeddings-derived quantizers and the documents-derived blooms) are
     * kept, everything else under the root is stranded cache. Once-per-JVM
     * is deliberate: a corpus regenerated MID-JVM strands the old stamp's
-    * models until the next restart (consistent with the memoized cache
-    * contract — the in-session memos pin the old generation anyway);
-    * long-lived services that swap corpora in place should call
-    * [[ModelStore.evictStale]] on their own cadence.
+    * models on disk until the next restart (the memos key on the stamp,
+    * so nothing serves them); long-lived services that swap corpora in
+    * place should call [[ModelStore.evictStale]] on their own cadence.
     */
   private val evictedDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private def evictOnce(dir: String): Unit =
@@ -971,12 +982,12 @@ object DataQueries {
   }
   private val corpusCounts = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def embCount(spark: SparkSession, dir: String): Long =
-    corpusCounts.computeIfAbsent(dir, _ => Long.box(
-      new String(ModelStore.bytesOrTrain(annModelPath(dir, "embcount"))(
+    corpusCounts.computeIfAbsent(annModelPath(dir, "embcount"), path => Long.box(
+      new String(ModelStore.bytesOrTrain(path)(
         Tables.embeddings(spark, dir).count().toString.getBytes("UTF-8")), "UTF-8").toLong)).longValue()
   private val docCounts = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def docCount(spark: SparkSession, dir: String): Long =
-    docCounts.computeIfAbsent(dir, _ =>
+    docCounts.computeIfAbsent(docsKey(dir), _ =>
       Long.box(Tables.documents(spark, dir).count())).longValue()
 
   /** The scale-derived MIH band geometry every `m_phash_*` face runs under
@@ -994,13 +1005,13 @@ object DataQueries {
 
   private val seedMemo = new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Double]]]()
   private def seedsFor(spark: SparkSession, dir: String, k: Int): Seq[Seq[Double]] =
-    seedMemo.computeIfAbsent(s"$dir#$k", _ =>
-      ModelStore.centroidsOrTrain(spark, annModelPath(dir, s"centroids-k$k"))(
+    seedMemo.computeIfAbsent(annModelPath(dir, s"centroids-k$k"), path =>
+      ModelStore.centroidsOrTrain(spark, path)(
         Similarity.seedCentroids(Tables.embeddings(spark, dir), "vec_id", "embedding", k)))
   private val cbMemo = new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Seq[Double]]]]()
   private def codebooksFor(spark: SparkSession, dir: String, m: Int, k: Int): Seq[Seq[Seq[Double]]] =
-    cbMemo.computeIfAbsent(s"$dir#$m#$k", _ =>
-      ModelStore.codebooksOrTrain(spark, annModelPath(dir, s"codebooks-m$m-k$k"))(
+    cbMemo.computeIfAbsent(annModelPath(dir, s"codebooks-m$m-k$k"), path =>
+      ModelStore.codebooksOrTrain(spark, path)(
         Similarity.pqCodebooks(Tables.embeddings(spark, dir), "vec_id", "embedding", m, k)))
   // Lloyd-TRAINED PQ SCORING codebooks (deterministic, oracle-replayable —
   // the s_ann_pq_imi_t fixture unrolls both iterations; VERDICT r12 #1).
@@ -1010,9 +1021,9 @@ object DataQueries {
   private val pqTrainedMemo = new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Seq[Double]]]]()
   private def pqTrainedFor(spark: SparkSession, dir: String, m: Int, k: Int): Seq[Seq[Seq[Double]]] = {
     val sampleN = Similarity.imiTrainSampleN(k)
-    pqTrainedMemo.computeIfAbsent(s"$dir#$m#$k", _ =>
-      ModelStore.codebooksOrTrain(
-        spark, annModelPath(dir, s"pqcbt-m$m-k$k-i$PqTrainIters-s$sampleN"))(
+    pqTrainedMemo.computeIfAbsent(
+      annModelPath(dir, s"pqcbt-m$m-k$k-i$PqTrainIters-s$sampleN"), path =>
+      ModelStore.codebooksOrTrain(spark, path)(
         Similarity.pqCodebooksTrainedDet(
           Tables.embeddings(spark, dir), "vec_id", "embedding", m, k,
           iters = PqTrainIters, sampleN = sampleN)))
@@ -1034,9 +1045,9 @@ object DataQueries {
     // floored at ImiTrainSample so the fixture kSub=4 keeps the exact 256
     // the oracle SQL replays)
     val sampleN = Similarity.imiTrainSampleN(kSub, ImiTrainSample)
-    imiCbMemo.computeIfAbsent(s"$dir#$kSub", _ =>
-      ModelStore.codebooksOrTrain(
-        spark, annModelPath(dir, s"imicb-k$kSub-i$ImiTrainIters-s$sampleN"))(
+    imiCbMemo.computeIfAbsent(
+      annModelPath(dir, s"imicb-k$kSub-i$ImiTrainIters-s$sampleN"), path =>
+      ModelStore.codebooksOrTrain(spark, path)(
         Similarity.imiCodebooksTrained(
           Tables.embeddings(spark, dir), "vec_id", "embedding", kSub,
           iters = ImiTrainIters, sampleN = sampleN)))
@@ -2058,15 +2069,14 @@ object DataQueries {
   private val rpqTrainedMemo = new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Seq[Double]]]]()
   private def rpqTrainedFor(spark: SparkSession, dir: String): Seq[Seq[Seq[Double]]] = {
     val sampleN = Similarity.imiTrainSampleN(PqK)
-    rpqTrainedMemo.computeIfAbsent(dir, _ =>
-      ModelStore.codebooksOrTrain(
-        spark,
-        // "proj" marks the PROJECTION residual construction (v − s·cw):
-        // a residual-definition change is an algorithm change, and the
-        // name is what stops a stale persisted generation from riding in
-        annModelPath(dir,
-          s"rpqcbt-proj-m$PqM-k$PqK-i$PqTrainIters-s$sampleN-" +
-            s"cells$ImiKSub-i$ImiTrainIters-s$ImiTrainSample"))({
+    // "proj" marks the PROJECTION residual construction (v − s·cw): a
+    // residual-definition change is an algorithm change, and the name is
+    // what stops a stale persisted generation from riding in
+    val modelPath = annModelPath(dir,
+      s"rpqcbt-proj-m$PqM-k$PqK-i$PqTrainIters-s$sampleN-" +
+        s"cells$ImiKSub-i$ImiTrainIters-s$ImiTrainSample")
+    rpqTrainedMemo.computeIfAbsent(modelPath, _ =>
+      ModelStore.codebooksOrTrain(spark, modelPath)({
         val icbs = imiCodebooksFor(spark, dir, ImiKSub)
         val resid = Tables.embeddings(spark, dir).select(
           col("vec_id"),
@@ -2813,7 +2823,7 @@ object DataQueries {
     * [[dDecontaminate]] — the bloom is a pure pruner; the exact join
     * decides — verified against the same exact-SQL oracle shape.
     */
-  /** The bloom model is built ONCE per (corpus dir, n) campaign and reused
+  /** The bloom model is built ONCE per (corpus snapshot, n) campaign and reused
     * across runs (reference operational shape: one fixed eval set, many
     * training batches). The scalar-subquery build path stays exercised by
     * DataOpsSpec; rebuilding it per run was the measured data-proportional
@@ -2825,7 +2835,7 @@ object DataQueries {
     val docs = Tables.documents(spark, dir)
     val bench = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
     val model = bloomModels.computeIfAbsent(
-      s"$dir#3",
+      s"${docsKey(dir)}#3",
       _ => Decontaminate.buildBloomModel(bench, "text", n = 3))
     Decontaminate.hitsBloomWith(
       docs.filter(pmod(col("doc_id"), lit(97)) =!= 0),
@@ -2853,15 +2863,19 @@ object DataQueries {
     * join decides; the bloom only prunes), so both faces share one oracle
     * shape. The in-JVM memo makes repeat runs skip even the file read.
     */
+  private def campaignBloom(dir: String, bench: DataFrame): Array[Byte] = {
+    val stamp = graft.connectors.Bucketing.cachedStamp(s"$dir/documents.parquet")
+    evictOnce(dir)
+    bloomModels.computeIfAbsent(
+      s"${ModelStore.rootFor(dir)}/bloom-n3-$stamp",
+      path => ModelStore.bytesOrTrain(path)(
+        Decontaminate.buildBloomModel(bench, "text", n = 3)))
+  }
+
   def dDecontaminateCampaign(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val bench = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-    val stamp = graft.connectors.Bucketing.cachedStamp(s"$dir/documents.parquet")
-    evictOnce(dir)
-    val model = bloomModels.computeIfAbsent(
-      s"$dir#3#campaign",
-      _ => ModelStore.bytesOrTrain(s"${ModelStore.rootFor(dir)}/bloom-n3-$stamp")(
-        Decontaminate.buildBloomModel(bench, "text", n = 3)))
+    val model = campaignBloom(dir, bench)
     Decontaminate.hitsBloomWith(
       docs.filter(pmod(col("doc_id"), lit(97)) =!= 0),
       bench, "doc_id", "text", n = 3, model)
@@ -2887,12 +2901,7 @@ object DataQueries {
   def dIngestGate(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val bench = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-    val stamp = graft.connectors.Bucketing.cachedStamp(s"$dir/documents.parquet")
-    evictOnce(dir)
-    val model = bloomModels.computeIfAbsent(
-      s"$dir#3#campaign",
-      _ => ModelStore.bytesOrTrain(s"${ModelStore.rootFor(dir)}/bloom-n3-$stamp")(
-        Decontaminate.buildBloomModel(bench, "text", n = 3)))
+    val model = campaignBloom(dir, bench)
     CorpusIngest.verdict(
       docs.filter(pmod(col("doc_id"), lit(97)) =!= 0),
       "text", allowedLangs = Seq("en"), minTokens = 5,
@@ -3916,8 +3925,8 @@ object DataQueries {
     * change an answer. What this face adds over `d_neardup_indexed` is the
     * small-files story: per-batch appends land ~nBuckets files each, and
     * at production cadence the index read pays thousands of file opens per
-    * bucket until compaction folds them back (CompactProbe measures the
-    * decay and the win; SCALE.md r18).
+    * bucket until compaction folds them back (SCALE.md "r18:
+    * bucketed-index compaction" records the decay and the win).
     */
   def dNearDupCompacted(spark: SparkSession, dir: String): DataFrame = {
     import graft.connectors.Bucketing

@@ -313,56 +313,49 @@ object JoinQueries {
     * enrichment must be bit-identical to the batch faces. The collect()s
     * stage the fixture into MemoryStream (driver-side by definition — the
     * production wiring reads the CDC source); the operator itself runs
-    * distributed over the keyed state.
+    * distributed over the keyed state. The session must carry the RocksDB
+    * state store ([[graft.core.GraftSession]] sets it): transformWithState
+    * fails loudly without it.
     */
   def j4AsOfStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.joins.StreamingAsOfJoiner.{AsOfEvent, AsOfVersion}
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val (versions, events) = asofStreamFixtureFor(spark, dir)
+    implicit val sqlCtx = spark.sqlContext
+    val vMem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[AsOfVersion]
+    val eMem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[AsOfEvent]
+    val enriched = graft.joins.StreamingAsOfJoiner.enrich(eMem.toDS(), vMem.toDS())
+    val runId = streamQueryCounter.incrementAndGet()
+    // each run leaves a memory-sink table behind (the returned DataFrame
+    // reads it) — drop the PREVIOUS run's table so repeated bench passes
+    // hold at most one result in driver memory
+    if (runId > 1) spark.catalog.dropTempView(s"j4_asof_stream_${runId - 1}")
+    val qname = s"j4_asof_stream_$runId"
+    val q = enriched.writeStream.format("memory").queryName(qname).outputMode("append").start()
     try {
-      val (versions, events) = asofStreamFixtureFor(spark, dir)
-      implicit val sqlCtx = spark.sqlContext
-      val vMem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[AsOfVersion]
-      val eMem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[AsOfEvent]
-      val enriched = graft.joins.StreamingAsOfJoiner.enrich(eMem.toDS(), vMem.toDS())
-      val runId = streamQueryCounter.incrementAndGet()
-      // each run leaves a memory-sink table behind (the returned DataFrame
-      // reads it) — drop the PREVIOUS run's table so repeated bench passes
-      // hold at most one result in driver memory
-      if (runId > 1) spark.catalog.dropTempView(s"j4_asof_stream_${runId - 1}")
-      val qname = s"j4_asof_stream_$runId"
-      val q = enriched.writeStream.format("memory").queryName(qname).outputMode("append").start()
-      try {
-        vMem.addData(versions)
-        q.processAllAvailable()
-        eMem.addData(events)
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        // unload the RocksDB providers + maintenance threads NOW: the
-        // memory-sink table is already materialized, and leaving native
-        // RocksDB state behind measurably taxes UNRELATED queries later in
-        // a bench pass (BisectBench pairwise: v1_schema_dlq 1.1 → 2.8 s
-        // after repeated j4_asof_stream runs without this). unloadAll is
-        // JVM-global — it would force a concurrently running streaming
-        // query into a checkpoint reload mid-run — so only fire when no
-        // OTHER stream is active (ours is already stopped above).
-        if (spark.streams.active.isEmpty)
-          org.apache.spark.sql.execution.streaming.state.GraftStateStoreAccess.unloadAll()
-      }
-      spark.table(qname).select(
-        col("payload").cast("long").as("event_id"),
-        col("key").cast("long").as("user_id"),
-        col("tsUs").as("ev_us"),
-        col("asofTsUs").as("cfg_us"),
-        col("asofValue").cast("long").as("cfg_version"))
-    } finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
+      vMem.addData(versions)
+      q.processAllAvailable()
+      eMem.addData(events)
+      q.processAllAvailable()
+    } finally {
+      q.stop()
+      // unload the RocksDB providers + maintenance threads NOW: the
+      // memory-sink table is already materialized, and leaving native
+      // RocksDB state behind measurably taxes UNRELATED queries later in
+      // a bench pass (SCALE.md, "Measured (local[32], sf0.1)": leftover
+      // providers slowed later queries 2-2.8×). unloadAll is JVM-global —
+      // it would force a concurrently running streaming query into a
+      // checkpoint reload mid-run — so only fire when no OTHER stream is
+      // active (ours is already stopped above).
+      if (spark.streams.active.isEmpty)
+        org.apache.spark.sql.execution.streaming.state.GraftStateStoreAccess.unloadAll()
     }
+    spark.table(qname).select(
+      col("payload").cast("long").as("event_id"),
+      col("key").cast("long").as("user_id"),
+      col("tsUs").as("ev_us"),
+      col("asofTsUs").as("cfg_us"),
+      col("asofValue").cast("long").as("cfg_version"))
   }
 
   // ------------------------------------------------------ J5 range join

@@ -1061,4 +1061,37 @@ class ScaleMechanicsSpec extends SparkSpec {
       s"repeated capstone call walked the source tree ${Bucketing.stampWalkCount.get() - w0} " +
         "time(s) — the per-batch maintenance path regressed to O(source-files) driver listing")
   }
+
+  test("corpus memos follow the source stamp: a corpus rewritten under the same dir serves the new generation after invalidateStamp") {
+    import graft.connectors.Bucketing
+    val base = java.nio.file.Files.createTempDirectory("graft_memo_regen").toFile
+    val reused = new java.io.File(base, "reused").toString
+    val fresh = new java.io.File(base, "fresh").toString
+    val faces = Seq("d_minhash_pairs", "s_ann_pq_ivf")
+    // two generations of one corpus: disjoint-enough id slices, so the
+    // pair lists, quantizer seeds and codebooks all differ between them
+    def writeCorpus(dir: String, mod: Int): Unit = {
+      graft.core.Tables.documents(spark, sf).filter(col("doc_id") % mod === 0)
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      graft.core.Tables.embeddings(spark, sf).filter(col("vec_id") % mod === 0)
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    }
+    def run(face: String, dir: String) = SparkEntry.queries(face)(spark, dir).localCheckpoint()
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Boolean =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    try {
+      writeCorpus(reused, 2)
+      val genA = faces.map(f => f -> run(f, reused)).toMap
+      writeCorpus(reused, 3)
+      Seq("documents", "embeddings").foreach(t => Bucketing.invalidateStamp(s"$reused/$t.parquet"))
+      writeCorpus(fresh, 3)
+      faces.foreach { f =>
+        val want = run(f, fresh)
+        assert(want.count() > 0, s"$f: empty on the second generation — the check would be vacuous")
+        assert(!same(genA(f), want), s"$f: both generations give one answer — the check would be vacuous")
+        assert(same(run(f, reused), want),
+          s"$f on a corpus rewritten in place served the previous generation's memo")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(base)
+  }
 }

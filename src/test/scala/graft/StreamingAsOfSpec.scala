@@ -11,6 +11,20 @@ import graft.joins.StreamingAsOfJoiner.{AsOfEnriched, AsOfEvent, AsOfVersion}
 class StreamingAsOfSpec extends SparkSpec {
   import spark.implicits._
 
+  test("j4_asof_stream through SparkEntry: twice in one session, each run equals the batch face on its event slice, no stream left active") {
+    val face = SparkEntry.queries("j4_asof_stream")
+    val cols = Seq("event_id", "user_id", "ev_us", "cfg_us", "cfg_version").map(c => col(c).cast("long").as(c))
+    val want = SparkEntry.queries("j4_asof_join")(spark, sf)
+      .filter(col("event_id") % 10 === 0).select(cols: _*).localCheckpoint()
+    assert(want.count() > 0, "empty event slice — the comparison would be vacuous")
+    (1 to 2).foreach { run =>
+      val got = face(spark, sf).select(cols: _*)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"run $run of j4_asof_stream differs from j4_asof_join on event_id % 10 = 0")
+      assert(spark.streams.active.isEmpty, s"run $run left a stream active")
+    }
+  }
+
   test("versions arriving mid-stream change subsequent enrichments, never emitted ones") {
     implicit val sc = spark.sqlContext
     val vMem = MemoryStream[AsOfVersion]
