@@ -65,8 +65,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * still exactly once). The one
   * residual caveat is physical: a foreign JVM's COMPACTION swaps base
   * files in place, so a tail-less base read captured mid-swap can fail
-  * on vanished files (never silently double), and a tail read's pinned
-  * listing taken mid-swap can silently miss swapped-in files — the documented
+  * on vanished files (never silently double); a tail read's pinned
+  * listing taken mid-swap is caught by the compaction generation the
+  * marker carries and falls back to the log. The documented
   * single-maintainer model keeps compaction in the serving JVM, where
   * the path monitor serializes it with plan capture.
   */
@@ -161,9 +162,9 @@ object MultiWriterIndex {
     * each fold's append lands up to one file per bucket, so a long
     * cadence without compaction re-creates the small-files decay the
     * single-writer pipelines already close per batch (SCALE.md "r18:
-    * bucketed-index compaction") — and compaction is physical-only (marker restored
-    * byte-for-byte, per-bucket no-op skip), so the fold fence and every
-    * stamp-validated reader see nothing.
+    * bucketed-index compaction") — and compaction is physical-only (marker
+    * restored with only its `gen=` generation bumped, per-bucket no-op
+    * skip), so the fold fence and every stamp-validated reader see nothing.
     */
   def fold(
       spark: SparkSession,
@@ -245,9 +246,10 @@ object MultiWriterIndex {
     * mutation removes/rewrites the marker first, and the stamp must equal
     * the absorbed vector the tail was derived from); any disturbance
     * degrades to the delta log's manifest-pinned attempt files — the r20
-    * always-log shape. The one torn listing the check cannot see is a
-    * foreign JVM's compaction completing between its two marker reads (a
-    * silent under-read; see the residual note in the body). Bucket
+    * always-log shape. A foreign JVM's compaction completing between the
+    * two marker reads is seen too: every compaction bumps the marker's
+    * `gen=` line (the residual note in the body covers the loud case that
+    * remains). Bucket
     * pruning (`SelectedBucketsCount`) and the co-located layout therefore
     * survive tail-reads on a quiet index, the steady state of a hot index
     * between fold ticks. When the log shows NOTHING unfolded, the bucketed
@@ -289,14 +291,13 @@ object MultiWriterIndex {
             // so a base folded under another one would be pruned and
             // co-located by the wrong hash. Any disturbance or mismatch
             // falls back to the immutable log files (the r21 behavior),
-            // never to a guess.
-            // Residual, from a FOREIGN JVM's compaction only (in-JVM
-            // maintainers serialize on the same path lock): one that
-            // deletes pinned files after the listing fails the scan on a
-            // vanished file; one that FINISHES inside the window between
-            // the two marker reads restores the marker byte-for-byte, so
-            // both reads agree while the listing, taken mid-swap, can miss
-            // the swapped-in files — a silent under-read of those buckets.
+            // never to a guess. A FOREIGN JVM's compaction (in-JVM
+            // maintainers serialize on the same path lock) that finishes
+            // inside the window between the two marker reads bumps the
+            // marker's gen= line, so the reads disagree and the read falls
+            // back. Residual: one that deletes pinned files AFTER the
+            // second read fails the scan on a vanished file — loud, never
+            // a silent under-read.
             val pinnedBase = Bucketing.withPathLock(bd) {
               for {
                 before <- Bucketing.readMarkerContent(bd)

@@ -1010,17 +1010,11 @@ object Dedup {
         (assigned, assigned.select(col(idCol), col("_bk").cast("long").as("cluster")))
       } else {
         // Multi-probe: primary label = head of the top-P list, materialized
-        // BEFORE the explode so the k-cosine argmax runs once per row. The
-        // cosine array is pinned in its own ComputeOnce column first: the
-        // top-P argmax passes reference it ~3^p times, and without the
-        // barrier each reference re-runs all k·dim cosine loops on the
-        // interpreted HOF path (measured: the sf1 auto-k probe crawled at
-        // k=625 with the array inlined).
-        val assigned = base
-          .withColumn(
-            "_cos",
-            graft.functions.ComputeOnce(Similarity.centroidCosines(col("_v"), centroids)))
-          .withColumn("_bks", Similarity.topPFromCosines(col("_cos"), centroids.length, probes))
+        // BEFORE the explode so the k-cosine argmax runs once per row; the
+        // cosine array is pinned by the IVF fence's probe block.
+        val (pinned, buckets) = Similarity.Fence.Ivf(centroids, probes).pinnedProbes(base, col("_v"))
+        val assigned = pinned
+          .withColumn("_bks", buckets)
           .withColumn("_bk0", element_at(col("_bks"), 1))
           .drop("_cos")
         (assigned.select(col(idCol), col("_v"), explode(col("_bks")).as("_bk")),
@@ -1146,24 +1140,13 @@ object Dedup {
         val assigned = base.withColumn("_bk", Similarity.imiAssign(col("_v"), codebooks))
         (assigned, assigned.select(col(idCol), col("_bk").cast("long").as("cluster")))
       } else {
-        // multi-probe: the per-half dot table AND each half's top-p list
-        // are pinned in their own ComputeOnce columns — the probe array
-        // references each top list pSub+ times, and the top-p splice fold
-        // references its lut slice ~3^pSub times; inlined, every reference
-        // would re-run the whole subtree (the flat face's _cos precedent)
-        val assigned = base
-          .withColumn(
-            "_lut",
-            graft.functions.ComputeOnce(graft.functions.Pq.lut(col("_v"), codebooks)))
-          .withColumn(
-            "_t0",
-            graft.functions.ComputeOnce(Similarity.imiTopCodes(col("_lut"), kSub, pSub, 0)))
-          .withColumn(
-            "_t1",
-            graft.functions.ComputeOnce(Similarity.imiTopCodes(col("_lut"), kSub, pSub, 1)))
-          .withColumn("_bks", Similarity.imiProbeCells(col("_t0"), col("_t1"), kSub, pSub))
+        // multi-probe: the dot table and both top-p lists are pinned by the
+        // IMI fence's probe block
+        val (pinned, probeCells) = Similarity.Fence.Imi(codebooks, pSub).pinnedProbes(base, col("_v"))
+        val assigned = pinned
+          .withColumn("_bks", probeCells)
           .withColumn("_bk0", element_at(col("_bks"), 1))
-          .drop("_lut", "_t0", "_t1")
+          .drop("_ilut", "_t0", "_t1")
         (assigned.select(col(idCol), col("_v"), explode(col("_bks")).as("_bk")),
          assigned.select(col(idCol), col("_bk0").cast("long").as("cluster")))
       }

@@ -1,17 +1,20 @@
 package graft.data
 
+import org.apache.spark.sql
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
-  * Scale design: `bruteTopK` is the exact baseline — it broadcasts the query
-  * set (small) against the corpus (huge), so the corpus is scanned once with
-  * zero shuffle of the vectors; ranking shuffles only (query, id, score)
-  * triples. `bucketedTopK` is the IVF-style path: a coarse bucket column
-  * (cluster id / LSH bucket) turns the scan into a bucket-equi join, cutting
-  * candidates by the bucket fan-out.
+  * One pipeline, [[topK]]: a [[Fence]] picks the candidate (query, corpus)
+  * pairs, a [[Scorer]] scores them, one rank tail keeps the best k per
+  * query, and [[rerank]] optionally refines an approximate shortlist with
+  * the exact cosine — the filter-then-refine shape of top-k search. The
+  * query set (small) broadcasts against one corpus scan, so the vectors
+  * never shuffle; ranking shuffles only (query, id, score) triples. The
+  * rest of this object trains and applies the models the fences and
+  * scorers take (coarse centroids, IMI cell codebooks, PQ codebooks).
   */
 object Similarity {
 
@@ -35,32 +38,6 @@ object Similarity {
     dot / (sqrt(na) * sqrt(nb))
   }
 
-  /** Exact top-k neighbors for each query vector (self excluded), ranked by
-    * cosine desc with id tie-break.
-    */
-  def bruteTopK(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int
-  ): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec")))
-    val c = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
-    val scored = c
-      .join(q, col("n_id") =!= col("q_id"))
-      .withColumn("cos", cosine(col("q_vec"), col("n_vec")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(
-        col("q_id"),
-        col("n_id"),
-        col("rank"),
-        floor(col("cos") * 1e6).cast("long").as("cos_e6")
-      )
-  }
 
   /** Deterministic random hyperplanes for sign-LSH bucketing: component
     * (i, j) = (md5_60("i_j") mod 2001 − 1000) / 1000 ∈ [−1, 1]. Derived
@@ -106,7 +83,7 @@ object Similarity {
       .reduce(_ + _)
 
   /** Sign-LSH bucket id: bit i set iff dot(v, plane_i) > 0 — the
-    * data-independent bucketing for [[bucketedTopK]] when no natural coarse
+    * data-independent bucketing for [[Fence.Column]] when no natural coarse
     * column exists (the "swap label for learned/LSH buckets" scale path).
     * Same-bucket vectors agree on all nbits hyperplane sides, so cosine
     * neighbors collide with high probability.
@@ -140,43 +117,6 @@ object Similarity {
     concat(array(bucket), flips)
   }
 
-  /** Multi-probe ANN: like [[bucketedTopK]], but each query probes the
-    * bucket LIST in `probesCol` (its own bucket + the lowest-margin flips
-    * from [[lshProbes]]). The probe explode happens on the SMALL broadcast
-    * query side — the corpus is still scanned once and joined on bucket
-    * equality, so the 100 TB shape is unchanged; candidates grow by the
-    * probe fan-out only. Probe lists are distinct by construction (XOR of
-    * distinct bits), so no candidate dedup is needed.
-    */
-  def multiProbeTopK(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      bucketCol: String,
-      probesCol: String,
-      k: Int
-  ): DataFrame = {
-    val q = broadcast(
-      queries
-        .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"), explode(col(probesCol)).as("q_bk")))
-    val c = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"), col(bucketCol).as("n_bk"))
-    val scored = c
-      .join(q, col("n_bk") === col("q_bk") && col("n_id") =!= col("q_id"))
-      .withColumn("cos", cosine(col("q_vec"), col("n_vec")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(
-        col("q_id"),
-        col("n_id"),
-        col("rank"),
-        floor(col("cos") * 1e6).cast("long").as("cos_e6")
-      )
-  }
-
-  /** IVF-style ANN: candidates restricted to the query's coarse bucket. */
   /** The k corpus vectors with the smallest ids, as driver-side model
     * parameters (k·dim doubles — the standard "fetch the trained model"
     * collect, not a data collect).
@@ -977,314 +917,6 @@ object Similarity {
     }: _*)
   }
 
-  /** Asymmetric-distance (ADC) top-k for maximum-inner-product search:
-    * queries stay EXACT, the corpus is PQ codes only — each query
-    * precomputes its m×k lookup table of subspace dots (q_mi · codeword),
-    * and a candidate's score is the m-term sum of table lookups picked by
-    * its codes, folded in subspace order (pinned — float addition is not
-    * associative). The scan never touches corpus vectors: at 100 TB that
-    * is the difference between reading 256 B/vector and reading m bytes.
-    * Candidate pruning is orthogonal — compose with the IVF bucket join
-    * ([[bucketedTopK]]) or LSH to cut the candidate set first; this face
-    * scores ALL candidates, the exact analogue of [[bruteTopK]] on codes.
-    */
-  def pqTopK(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      codebooks: Seq[Seq[Seq[Double]]],
-      k: Int,
-      nearestEncode: Boolean = false
-  ): DataFrame = {
-    val m = codebooks.length
-    val cbK = codebooks.head.length
-    val c = corpus.select(
-      col(idCol).as("n_id"),
-      pqEncode(col(vecCol), codebooks, nearestEncode).as("n_codes"))
-    // flattened native LUT: element mi·k + j = dot(query subvec mi, codeword j)
-    val lut = graft.functions.Pq.lut(col(vecCol), codebooks)
-    val q = broadcast(queries.select(col(idCol).as("q_id"), lut.as("q_lut")))
-    val score = (0 until m)
-      .map(mi => element_at(col("q_lut"), lit(mi * cbK) + element_at(col("n_codes"), mi + 1) + 1))
-      .reduce(_ + _) // left-assoc: subspace order, matches the oracle fold
-    val scored = c.join(q, col("n_id") =!= col("q_id")).withColumn("score", score)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(
-        col("q_id"),
-        col("n_id"),
-        col("rank"),
-        floor(col("score") * 1e6).cast("long").as("score_e6")
-      )
-  }
-
-  /** IVF-pruned ADC — the composed 100 TB ANN query shape: the coarse
-    * quantizer prunes candidates to the query's probe buckets FIRST, then
-    * ADC scores only the survivors through the PQ lookup tables. Corpus
-    * side ships (id, bucket, m codes) — never vectors; the query side
-    * (small) broadcasts its probe list exploded, so candidates grow by
-    * probes× over single-probe IVF while the scan stays one pass. Each
-    * corpus row has exactly ONE bucket and a query's probe buckets are
-    * distinct, so no candidate dedup is needed ([[multiProbeTopK]]'s
-    * argument). Scores are bit-identical to [[pqTopK]] on the shared
-    * candidates: same LUT dots, same subspace-ordered fold.
-    */
-  def pqTopKPruned(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Seq[Seq[Double]],
-      codebooks: Seq[Seq[Seq[Double]]],
-      k: Int,
-      probes: Int = 1
-  ): DataFrame = {
-    val m = codebooks.length
-    val cbK = codebooks.head.length
-    val c = corpus.select(
-      col(idCol).as("n_id"),
-      assignNearest(col(vecCol).cast("array<double>"), centroids).as("n_bk"),
-      pqEncode(col(vecCol), codebooks).as("n_codes"))
-    // flattened native LUT: element mi·k + j = dot(query subvec mi, codeword j)
-    val lut = graft.functions.Pq.lut(col(vecCol), codebooks)
-    // cosine array pinned in ComputeOnce BEFORE the top-p argmax: the splice
-    // fold references it ~3^p times, and inlined it would replicate the
-    // O(k·dim) unrolled-cosine subtree at every reference (measured +1.1 s
-    // fixed analysis/codegen cost per run at k=16) — the exact hazard the
-    // topPFromCosines scaladoc pins
-    val q = broadcast(
-      queries
-        .withColumn(
-          "_cos",
-          graft.functions.ComputeOnce(
-            centroidCosines(col(vecCol).cast("array<double>"), centroids)))
-        .select(
-          col(idCol).as("q_id"),
-          lut.as("q_lut"),
-          explode(topPFromCosines(col("_cos"), centroids.length, probes)).as("q_bk")))
-    val score = (0 until m)
-      .map(mi => element_at(col("q_lut"), lit(mi * cbK) + element_at(col("n_codes"), mi + 1) + 1))
-      .reduce(_ + _) // left-assoc: subspace order, matches the oracle fold
-    val scored = c
-      .join(q, col("n_bk") === col("q_bk") && col("n_id") =!= col("q_id"))
-      .withColumn("score", score)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(
-        col("q_id"),
-        col("n_id"),
-        col("rank"),
-        floor(col("score") * 1e6).cast("long").as("score_e6")
-      )
-  }
-
-  /** IMI-pruned ADC — [[pqTopKPruned]] with the two-level product (IMI)
-    * coarse quantizer in place of the flat centroid list: the AUTO-K form
-    * of the composed 100 TB ANN query shape. Past the flat regime the
-    * centroid pruner stops scaling on both axes (k·dim per-row assignment,
-    * k·dim model — the [[imiAssign]] scaladoc's argument); here candidates
-    * are pruned to each query's rank-sum-capped probe CELLS
-    * (pSub(pSub+1)/2 of the kSub² product cells, [[imiProbeCells]]) and
-    * only the survivors are ADC-scored through the PQ lookup tables. The
-    * corpus side ships (id, cell, m codes) — vectors never leave the scan;
-    * per-query candidate volume is pSub(pSub+1)/2 · n/kSub² on balanced
-    * cells. Cell quantizer and score quantizer are INDEPENDENT models:
-    * `imiCodebooks` must be the unit-norm cell codebooks
-    * ([[imiCodebooksTrained]]), `pqCodebooks` the raw scoring codebooks
-    * ([[pqCodebooks]] — ADC scores are inner products against raw
-    * codewords). Scores bit-match [[pqTopK]] on shared candidates (same
-    * LUT dots, same subspace-ordered fold). A corpus row has exactly ONE
-    * cell and a query's probe cells are distinct by construction, so no
-    * candidate dedup is needed ([[multiProbeTopK]]'s argument).
-    * `nearestEncode = true` switches the corpus encode to the
-    * Euclidean-nearest codeword — REQUIRED when `pqCodebooks` are
-    * Lloyd-trained ([[pqCodebooksTrainedDet]] contract: mean codewords
-    * are not norm-equalized, raw argmax-dot encode funnels mass to
-    * high-norm codewords); the LUT scoring fold is identical either way.
-    *
-    * Operating guidance (measured at n=200k on the clustered-boundary
-    * corpus — ScaleMechanicsSpec composed-face gate, SCALE.md r12): top-k
-    * ANN needs all k neighbors co-probed, so probe DEEP — at pSub=8 the
-    * fence loses ~nothing against the unpruned scoring ceiling while
-    * cutting candidates ~50-180×, and end-to-end recall is gated by the
-    * SCORE codebooks (k=16 fixture seeds 0.25 vs brute, k=256 seeds 0.39;
-    * Lloyd-train for production — [[pqCodebooksTrained]]), not the fence.
-    * pSub=2 is a dedup-shaped fence (any-shared-cell semantics), not an
-    * ANN-shaped one: it holds only ~0.2 of the top-10 at either grid size.
-    */
-  def pqTopKPrunedImi(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      imiCodebooks: Seq[Seq[Seq[Double]]],
-      pqCodebooks: Seq[Seq[Seq[Double]]],
-      k: Int,
-      pSub: Int = 1,
-      nearestEncode: Boolean = false
-  ): DataFrame = {
-    pqImiAdcTopK(
-      encodeImiPq(corpus, idCol, vecCol, imiCodebooks, pqCodebooks, nearestEncode),
-      queries, idCol, vecCol, imiCodebooks, pqCodebooks, k, pSub)
-  }
-
-  /** The corpus-side IMI+PQ ENCODE — the (n_id, n_bk, n_codes) columns the
-    * pruned-ADC faces join against. Split out so it can be computed ONCE
-    * and PERSISTED as a cell-bucketed index table
-    * ([[pqTopKPrunedImiIndexed]]): inline, every query batch re-pays the
-    * full per-row PqEncode/imiAssign scan — at 100 TB that is re-encoding
-    * the corpus per batch, and it is the dominant term of the composed
-    * faces (the scoring join touches only fenced candidates).
-    */
-  def encodeImiPq(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      imiCodebooks: Seq[Seq[Seq[Double]]],
-      pqCodebooks: Seq[Seq[Seq[Double]]],
-      nearestEncode: Boolean = false
-  ): DataFrame = {
-    require(imiCodebooks.length == 2,
-      s"encodeImiPq: need exactly 2 half-space cell codebooks, got ${imiCodebooks.length}")
-    corpus.select(
-      col(idCol).as("n_id"),
-      imiAssign(col(vecCol), imiCodebooks).as("n_bk"),
-      pqEncode(col(vecCol), pqCodebooks, nearestEncode).as("n_codes"))
-  }
-
-  /** Query-side probe frame (q_id, q_lut, q_bk) of the IMI-pruned ADC
-    * faces — one row per probed cell (pSub(pSub+1)/2 per query).
-    */
-  private def imiQueryProbes(
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      imiCodebooks: Seq[Seq[Seq[Double]]],
-      pqCodebooks: Seq[Seq[Seq[Double]]],
-      pSub: Int
-  ): DataFrame = {
-    val kSub = imiCodebooks.head.length
-    // flattened native LUT against the SCORING codebooks (raw codewords)
-    val lut = graft.functions.Pq.lut(col(vecCol), pqCodebooks)
-    if (pSub == 1)
-      queries.select(
-        col(idCol).as("q_id"),
-        lut.as("q_lut"),
-        imiAssign(col(vecCol), imiCodebooks).as("q_bk"))
-    else
-      // probe machinery pinned exactly like [[Dedup.semanticDedupImi]]:
-      // the per-half CELL dot table and both top-p lists each in their
-      // own ComputeOnce column — the probe array references each top
-      // list pSub+ times and the top-p splice fold references its lut
-      // slice ~3^pSub times; inlined, every reference would re-run the
-      // whole subtree on the interpreted HOF path
-      queries
-        .withColumn(
-          "_ilut",
-          graft.functions.ComputeOnce(graft.functions.Pq.lut(col(vecCol), imiCodebooks)))
-        .withColumn(
-          "_t0",
-          graft.functions.ComputeOnce(imiTopCodes(col("_ilut"), kSub, pSub, 0)))
-        .withColumn(
-          "_t1",
-          graft.functions.ComputeOnce(imiTopCodes(col("_ilut"), kSub, pSub, 1)))
-        .select(
-          col(idCol).as("q_id"),
-          lut.as("q_lut"),
-          explode(imiProbeCells(col("_t0"), col("_t1"), kSub, pSub)).as("q_bk"))
-  }
-
-  /** ADC fence-join + top-k over an already-encoded corpus frame. */
-  private def pqImiAdcTopK(
-      encoded: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      imiCodebooks: Seq[Seq[Seq[Double]]],
-      pqCodebooks: Seq[Seq[Seq[Double]]],
-      k: Int,
-      pSub: Int
-  ): DataFrame = {
-    val kSub = imiCodebooks.head.length
-    require(pSub >= 1 && pSub <= kSub, s"pqImiAdcTopK: pSub=$pSub out of 1..$kSub")
-    val m = pqCodebooks.length
-    val cbK = pqCodebooks.head.length
-    val q = broadcast(
-      imiQueryProbes(queries, idCol, vecCol, imiCodebooks, pqCodebooks, pSub))
-    val score = (0 until m)
-      .map(mi => element_at(col("q_lut"), lit(mi * cbK) + element_at(col("n_codes"), mi + 1) + 1))
-      .reduce(_ + _) // left-assoc: subspace order, matches the oracle fold
-    val scored = encoded
-      .join(q, col("n_bk") === col("q_bk") && col("n_id") =!= col("q_id"))
-      .withColumn("score", score)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(
-        col("q_id"),
-        col("n_id"),
-        col("rank"),
-        floor(col("score") * 1e6).cast("long").as("score_e6")
-      )
-  }
-
-  /** [[pqTopKPrunedImi]] over a PERSISTED index — the "build once, query
-    * many" production shape: `index` is the [[encodeImiPq]] frame written
-    * as a table BUCKETED BY `n_bk` (e.g. via
-    * [[graft.connectors.Bucketing.ensureBucketed]]), so every query batch
-    * reads 3 small columns instead of re-encoding the corpus, and — when
-    * `pruneBuckets` — the probed cells are collected (a bounded
-    * q·pSub(pSub+1)/2-value driver action) and pushed as an `IN` filter
-    * on the bucket column, which Spark turns into BUCKET PRUNING: the
-    * scan reads only files of probed buckets
-    * (`SelectedBucketsCount` in the plan, spec-pinned). At 100 TB the
-    * fence thereby becomes an I/O bound, not just a join bound — the
-    * non-probed part of the index is never read.
-    *
-    * Results are row-identical to [[pqTopKPrunedImi]] on the same corpus
-    * and codebooks (spec-pinned): the IN filter is implied by the join
-    * condition, so pruning is plan-only.
-    */
-  def pqTopKPrunedImiIndexed(
-      index: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      imiCodebooks: Seq[Seq[Seq[Double]]],
-      pqCodebooks: Seq[Seq[Seq[Double]]],
-      k: Int,
-      pSub: Int = 1,
-      pruneBuckets: Boolean = true,
-      maxPruneCells: Int = 65536
-  ): DataFrame = {
-    Seq("n_id", "n_bk", "n_codes").foreach(c =>
-      require(index.columns.contains(c),
-        s"pqTopKPrunedImiIndexed: index lacks column $c — build it with encodeImiPq"))
-    val pruned =
-      if (!pruneBuckets) index
-      else {
-        val cells = imiQueryProbes(queries, idCol, vecCol, imiCodebooks, pqCodebooks, pSub)
-          .select(col("q_bk")).distinct().collect().map(_.get(0))
-        // a probe set larger than the IN-filter budget would bloat the plan
-        // for no pruning win (most buckets touched anyway) — skip, loudly
-        if (cells.length > maxPruneCells) {
-          org.slf4j.LoggerFactory.getLogger("graft.data.Similarity").warn(
-            s"pqTopKPrunedImiIndexed: probe set (${cells.length} cells) exceeds " +
-              s"maxPruneCells=$maxPruneCells — falling back to the UNPRUNED index scan " +
-              "(answers unchanged, bucket-pruning I/O win lost); raise maxPruneCells " +
-              "or probe fewer cells (lower pSub / fewer queries per batch)")
-          index
-        } else index.where(col("n_bk").isin(cells.toSeq: _*))
-      }
-    pqImiAdcTopK(pruned, queries, idCol, vecCol, imiCodebooks, pqCodebooks, k, pSub)
-  }
-
   /** Residual of a vector against its own IMI product cell —
     * `v − concat(cw₀[code₀], cw₁[code₁])` via the fused
     * [[graft.functions.PqResidual]] kernel (per-half argmax shares the
@@ -1314,300 +946,420 @@ object Similarity {
     }: _*))
   }
 
-  /** RESIDUAL-encoded IMI-pruned ADC — the full IVFADC construction
-    * (Jégou/Douze/Schmid TPAMI'11 §IV) on the two-level product cells:
-    * instead of PQ-coding raw vectors, the corpus codes each vector's
-    * residual against its own cell center, and a candidate's score
-    * decomposes as
-    *   ⟨q, x⟩ = s₀·⟨q₀, cw₀⟩ + s₁·⟨q₁, cw₁⟩ + ⟨q, residual⟩
-    * with sₕ = ⟨vₕ, cwₕ⟩ the candidate's per-half projection scales
-    * (2 doubles it ships) and the half-dots already sitting in the
-    * [[graft.functions.PqLut]] table the probe machinery pins. The
-    * center term is EXACT — only the residual is quantized through the
-    * m-term ADC fold — and projection residuals are strictly smaller
-    * than the halves (‖r‖² = ‖vₕ‖² − s², the
-    * [[graft.functions.PqResidual]] scaladoc's argument), so the same
-    * code budget quantizes far more accurately — the classic IVFADC
-    * recall lever, measured at the n=200k operating point in
-    * ScaleMechanicsSpec. Train `rpqCodebooks` on residuals
-    * ([[imiResidual]] → [[pqCodebooksTrainedDet]]) and the corpus encodes
-    * them Euclidean-nearest; fold order is pinned as
-    * `(s₀·i₀ + s₁·i₁) + (term₀ + term₁ + …)` (left-assoc), the order
-    * the oracle replays. Candidate volume and shuffle shape are identical
-    * to [[pqTopKPrunedImi]] — the corpus ships (id, 2 cell codes,
-    * 2 scales, m residual codes), never vectors.
+  // ---------------------------------------------------------------- top-k
+  /** Candidate generator of [[topK]]: which (query, corpus) pairs get
+    * scored. Each case owns its corpus-side bucket column and its pinned
+    * query-side probe builder. A fence changes only WHICH pairs are scored,
+    * never their scores: probing every bucket reproduces [[Fence.All]] row
+    * for row (SimilaritySpec pins it per scorer). A corpus row has exactly
+    * one bucket and a query's probes are distinct by construction, so no
+    * candidate dedup is needed. At 100 TB the query side (small) is what
+    * explodes and broadcasts; the corpus is one scan joined on bucket
+    * equality, and candidates grow by the probe fan-out only.
     */
-  def pqTopKPrunedImiResidual(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      imiCodebooks: Seq[Seq[Seq[Double]]],
-      rpqCodebooks: Seq[Seq[Seq[Double]]],
-      k: Int,
-      pSub: Int = 1
-  ): DataFrame = {
-    require(imiCodebooks.length == 2,
-      s"pqTopKPrunedImiResidual: need exactly 2 half-space cell codebooks, got ${imiCodebooks.length}")
-    val kSub = imiCodebooks.head.length
-    require(pSub >= 1 && pSub <= kSub, s"pqTopKPrunedImiResidual: pSub=$pSub out of 1..$kSub")
-    val m = rpqCodebooks.length
-    val cbK = rpqCodebooks.head.length
-    // cell codes and the per-half dot table pinned once each (codes feed
-    // the bk fold and both LUT hits; the dot table feeds both projection
-    // scales); residual encode is its own fused kernel
-    val c = corpus
-      .withColumn(
-        "n_cell",
-        graft.functions.ComputeOnce(graft.functions.Pq.encode(col(vecCol), imiCodebooks)))
-      .withColumn(
-        "_nlut",
-        graft.functions.ComputeOnce(graft.functions.Pq.lut(col(vecCol), imiCodebooks)))
-      .select(
-        col(idCol).as("n_id"),
-        col("n_cell"),
-        aggregate(col("n_cell"), lit(0), (acc, cd) => acc * kSub + cd).as("n_bk"),
-        element_at(col("_nlut"), element_at(col("n_cell"), 1) + 1).as("n_s0"),
-        element_at(col("_nlut"), lit(kSub) + element_at(col("n_cell"), 2) + 1).as("n_s1"),
-        pqEncode(imiResidual(col(vecCol), imiCodebooks), rpqCodebooks, nearest = true)
-          .as("n_codes"))
-    val rlut = graft.functions.Pq.lut(col(vecCol), rpqCodebooks)
-    val q = broadcast(
-      if (pSub == 1)
-        queries
-          .withColumn(
-            "_ilut",
-            graft.functions.ComputeOnce(graft.functions.Pq.lut(col(vecCol), imiCodebooks)))
-          .select(
-            col(idCol).as("q_id"),
-            col("_ilut").as("q_ilut"),
-            rlut.as("q_rlut"),
-            imiAssign(col(vecCol), imiCodebooks).as("q_bk"))
-      else
-        queries
-          .withColumn(
-            "_ilut",
-            graft.functions.ComputeOnce(graft.functions.Pq.lut(col(vecCol), imiCodebooks)))
-          .withColumn(
-            "_t0",
-            graft.functions.ComputeOnce(imiTopCodes(col("_ilut"), kSub, pSub, 0)))
-          .withColumn(
-            "_t1",
-            graft.functions.ComputeOnce(imiTopCodes(col("_ilut"), kSub, pSub, 1)))
-          .select(
-            col(idCol).as("q_id"),
-            col("_ilut").as("q_ilut"),
-            rlut.as("q_rlut"),
-            explode(imiProbeCells(col("_t0"), col("_t1"), kSub, pSub)).as("q_bk")))
-    // center term from the CELL lut (element h·kSub + code) scaled by the
-    // candidate's projections, then the residual ADC fold — association
-    // pinned: (s0·i0 + s1·i1) + (t0 + t1 + …)
-    val centerDot =
-      col("n_s0") * element_at(col("q_ilut"), element_at(col("n_cell"), 1) + 1) +
-        col("n_s1") * element_at(col("q_ilut"), lit(kSub) + element_at(col("n_cell"), 2) + 1)
-    val rsum = (0 until m)
-      .map(mi => element_at(col("q_rlut"), lit(mi * cbK) + element_at(col("n_codes"), mi + 1) + 1))
-      .reduce(_ + _)
-    val scored = c
-      .join(q, col("n_bk") === col("q_bk") && col("n_id") =!= col("q_id"))
-      .withColumn("score", centerDot + rsum)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(
-        col("q_id"),
-        col("n_id"),
-        col("rank"),
-        floor(col("score") * 1e6).cast("long").as("score_e6")
-      )
+  sealed trait Fence {
+    /** Corpus-side bucket column; None when every pair is a candidate. */
+    def corpusBucket(vec: Column): Option[Column]
+    /** `queries` with the probe machinery pinned, plus its bucket column
+      * (exploded when a query probes several buckets).
+      */
+    def queryBucket(queries: DataFrame, vec: Column): (DataFrame, Option[Column])
   }
 
-  /** Int8-quantized ANN — the BANDWIDTH face (PQ is the memory face): both
-    * sides symmetric-int8 quantized ([[Embeddings.quantizeInt8]]), each
-    * candidate scored by the EXACT integer dot product of the codes,
-    * rescaled by the two per-vector scales. At 100 TB the corpus scan reads
-    * 1 byte per dimension instead of 4-8 — a 4-8× bandwidth cut with ~1%
-    * score error (bounded by scale/2 per axis); compose with the IVF
-    * bucket join for candidate pruning exactly as [[pqTopKPruned]]. The
-    * integer dot is order-free (exact), and the two float rescales are
-    * association-pinned, so the oracle replays scores bit-exactly.
+  object Fence {
+    /** Every pair — the exact baseline: the query set (small) broadcasts
+      * against one corpus scan, ranking shuffles only (query, id, score).
+      */
+    case object All extends Fence {
+      def corpusBucket(vec: sql.Column): Option[sql.Column] = None
+      def queryBucket(queries: DataFrame, vec: sql.Column): (DataFrame, Option[sql.Column]) =
+        (queries, None)
+    }
+
+    /** A precomputed coarse column on both sides (label, LSH bucket,
+      * IMI cell): the scan becomes a bucket equi-join.
+      */
+    final case class Column(bucketCol: String) extends Fence {
+      def corpusBucket(vec: sql.Column): Option[sql.Column] = Some(col(bucketCol))
+      def queryBucket(queries: DataFrame, vec: sql.Column): (DataFrame, Option[sql.Column]) =
+        (queries, Some(col(bucketCol)))
+    }
+
+    /** Multi-probe: each query probes the bucket LIST in `probesCol` (its
+      * own bucket plus the lowest-margin flips of [[lshProbes]]).
+      */
+    final case class Probes(bucketCol: String, probesCol: String) extends Fence {
+      def corpusBucket(vec: sql.Column): Option[sql.Column] = Some(col(bucketCol))
+      def queryBucket(queries: DataFrame, vec: sql.Column): (DataFrame, Option[sql.Column]) =
+        (queries, Some(explode(col(probesCol))))
+    }
+
+    /** Flat coarse quantizer: corpus rows bucket by [[assignNearest]],
+      * queries probe their `probes` nearest centroids ([[assignTopP]]).
+      */
+    final case class Ivf(centroids: Seq[Seq[Double]], probes: Int = 1) extends Fence {
+      def corpusBucket(vec: sql.Column): Option[sql.Column] =
+        Some(assignNearest(vec.cast("array<double>"), centroids))
+
+      /** The pinned IVF probe block: the centroid cosine array in its own
+        * ComputeOnce column BEFORE the top-p argmax, whose splice fold
+        * references it ~3^p times; inlined, every reference would replicate
+        * the O(k·dim) unrolled-cosine subtree (measured +1.1 s fixed
+        * analysis/codegen cost per run at k=16, and a crawl at k=625 on the
+        * interpreted HOF path). Returns the frame (with `_cos`) and the
+        * top-`probes` bucket array, element 1 the [[assignNearest]] bucket.
+        */
+      def pinnedProbes(df: DataFrame, vec: sql.Column): (DataFrame, sql.Column) = (
+        df.withColumn(
+          "_cos",
+          graft.functions.ComputeOnce(centroidCosines(vec.cast("array<double>"), centroids))),
+        topPFromCosines(col("_cos"), centroids.length, probes))
+
+      def queryBucket(queries: DataFrame, vec: sql.Column): (DataFrame, Option[sql.Column]) = {
+        val (pinned, buckets) = pinnedProbes(queries, vec)
+        (pinned, Some(explode(buckets)))
+      }
+    }
+
+    /** Two-level product (IMI) quantizer: corpus rows bucket by their
+      * [[imiAssign]] cell, queries probe the pSub(pSub+1)/2 rank-sum-capped
+      * cells of [[imiProbeCells]]. The auto-k form of [[Ivf]]: √k·dim
+      * assignment and model instead of k·dim ([[imiAssign]] scaladoc).
+      *
+      * Top-k ANN needs all k neighbors co-probed, so probe DEEP: at pSub=8
+      * the fence loses ~nothing against the unpruned scoring ceiling while
+      * cutting candidates ~50-180× (n=200k, ScaleMechanicsSpec, SCALE.md
+      * r12). pSub=2 is a dedup-shaped fence, not an ANN-shaped one: it holds
+      * only ~0.2 of the top-10.
+      */
+    final case class Imi(cells: Seq[Seq[Seq[Double]]], pSub: Int = 1) extends Fence {
+      require(cells.length == 2, s"Fence.Imi: need exactly 2 half-space cell codebooks, got ${cells.length}")
+      val kSub: Int = cells.head.length
+      require(pSub >= 1 && pSub <= kSub, s"Fence.Imi: pSub=$pSub out of 1..$kSub")
+
+      def corpusBucket(vec: sql.Column): Option[sql.Column] = Some(imiAssign(vec, cells))
+
+      /** The pinned IMI probe block: the per-half cell dot table `_ilut` and
+        * both halves' top-pSub code lists `_t0`/`_t1`, each in its own
+        * ComputeOnce column — the probe array references each top list
+        * pSub+ times and the top-p splice fold references its lut slice
+        * ~3^pSub times; inlined, every reference would re-run the whole
+        * subtree on the interpreted HOF path. Returns the frame and the
+        * probe-cell array. Columns a caller does not reference are pruned
+        * from the plan.
+        */
+      def pinnedProbes(df: DataFrame, vec: sql.Column): (DataFrame, sql.Column) = (
+        df.withColumn("_ilut", graft.functions.ComputeOnce(graft.functions.Pq.lut(vec, cells)))
+          .withColumn("_t0", graft.functions.ComputeOnce(imiTopCodes(col("_ilut"), kSub, pSub, 0)))
+          .withColumn("_t1", graft.functions.ComputeOnce(imiTopCodes(col("_ilut"), kSub, pSub, 1))),
+        imiProbeCells(col("_t0"), col("_t1"), kSub, pSub))
+
+      /** pSub = 1 probes the scalar [[imiAssign]] cell: no single-element
+        * explode, which would block plan collapse for zero candidate gain.
+        */
+      def queryBucket(queries: DataFrame, vec: sql.Column): (DataFrame, Option[sql.Column]) = {
+        val (pinned, probeCells) = pinnedProbes(queries, vec)
+        (pinned, Some(if (pSub == 1) imiAssign(vec, cells) else explode(probeCells)))
+      }
+    }
+  }
+
+  /** Pair scorer of [[topK]]: each case owns its corpus columns, its query
+    * columns, its score expression and its output columns. Query-side
+    * tables and codes are computed once per query and broadcast; the
+    * corpus side ships codes, never vectors, except under [[Scorer.Cosine]].
     */
-  def int8TopK(
+  sealed trait Scorer {
+    /** The score column ranks order by (desc, `n_id` asc tie-break). */
+    private[data] def key: String
+    /** Per-row pins taken before either side's select. */
+    private[data] def pin(df: DataFrame, vec: Column): DataFrame = df
+    protected def corpusCols(vec: Column): Seq[Column] = Nil
+    private[data] def queryCols(vec: Column): Seq[Column]
+    /** Adds the score column(s) to the fence-joined pairs. */
+    private[data] def score(pairs: DataFrame, fence: Fence): DataFrame
+    private[data] def output: Seq[Column]
+
+    /** Corpus half: (n_id, the fence's n_bk, this scorer's columns). */
+    private[data] def corpus(df: DataFrame, idCol: String, vec: Column, fence: Fence): DataFrame =
+      pin(df, vec).select(
+        (col(idCol).as("n_id") +: fence.corpusBucket(vec).map(_.as("n_bk")).toSeq) ++
+          corpusCols(vec): _*)
+  }
+
+  object Scorer {
+    private def e6(score: String, as: String): Column = floor(col(score) * 1e6).cast("long").as(as)
+
+    /** m-term ADC sum of LUT hits picked by the candidate's codes,
+      * left-assoc in subspace order (the oracle's fold; float addition is
+      * not associative).
+      */
+    private def adcSum(lut: String, codebooks: Seq[Seq[Seq[Double]]]): Column = {
+      val cbK = codebooks.head.length
+      codebooks.indices
+        .map(mi => element_at(col(lut), lit(mi * cbK) + element_at(col("n_codes"), mi + 1) + 1))
+        .reduce(_ + _)
+    }
+
+    /** Exact cosine over full vectors; output `cos_e6`. */
+    case object Cosine extends Scorer {
+      private[data] val key = "cos"
+      override protected def corpusCols(vec: Column): Seq[Column] = Seq(vec.as("n_vec"))
+      private[data] def queryCols(vec: Column): Seq[Column] = Seq(vec.as("q_vec"))
+      private[data] def score(pairs: DataFrame, fence: Fence): DataFrame =
+        pairs.withColumn("cos", cosine(col("q_vec"), col("n_vec")))
+      private[data] def output: Seq[Column] = Seq(e6("cos", "cos_e6"))
+    }
+
+    /** Asymmetric-distance (ADC) maximum-inner-product scoring: queries
+      * stay EXACT, the corpus is PQ codes only. Each query precomputes its
+      * flattened m×k lookup table of subspace dots (element mi·k + j =
+      * q_mi · codeword j) and a candidate's score is the m-term sum of the
+      * hits its codes pick. At 100 TB the scan reads m bytes per vector
+      * instead of 256. `nearest` encodes Euclidean-nearest — REQUIRED for
+      * Lloyd-trained codebooks ([[pqCodebooksTrainedDet]] contract: raw
+      * argmax-dot funnels mass to high-norm mean codewords); the LUT fold is
+      * identical either way. Recall is gated by the SCORE codebooks, not the
+      * fence (n=200k: k=16 seeds 0.25 vs brute, k=256 seeds 0.39); rerank
+      * recovers it ([[rerank]]). Output `score_e6`.
+      */
+    final case class Adc(codebooks: Seq[Seq[Seq[Double]]], nearest: Boolean = false) extends Scorer {
+      private[data] val key = "score"
+      override protected def corpusCols(vec: Column): Seq[Column] =
+        Seq(pqEncode(vec, codebooks, nearest).as("n_codes"))
+      private[data] def queryCols(vec: Column): Seq[Column] =
+        Seq(graft.functions.Pq.lut(vec, codebooks).as("q_lut"))
+      private[data] def score(pairs: DataFrame, fence: Fence): DataFrame =
+        pairs.withColumn("score", adcSum("q_lut", codebooks))
+      private[data] def output: Seq[Column] = Seq(e6("score", "score_e6"))
+    }
+
+    /** Int8 scoring — the BANDWIDTH face (PQ is the memory face): both
+      * sides symmetric-int8 quantized ([[Embeddings.quantizeInt8]]), each
+      * pair scored by the EXACT integer dot of the codes rescaled by the
+      * two per-vector scales — 1 byte per dimension instead of 4-8, ~1%
+      * score error. The native integer dot is order-free (exact), and the
+      * rescale is association-pinned `(idot·q_scale)·n_scale`, so the oracle
+      * replays scores bit-exactly. Output `idot` + `approx_e6`.
+      */
+    case object Int8 extends Scorer {
+      private[data] val key = "approx"
+      // scale as a PINNED column (ComputeOnce defeats projection collapse):
+      // one maxAbs fold + one rounding transform per row, not O(dim²)
+      override private[data] def pin(df: DataFrame, vec: Column): DataFrame =
+        df.withColumn("_s", graft.functions.ComputeOnce(Embeddings.int8Scale(vec)))
+      override protected def corpusCols(vec: Column): Seq[Column] =
+        Seq(col("_s").as("n_scale"), Embeddings.int8Codes(vec, col("_s")).as("n_q"))
+      private[data] def queryCols(vec: Column): Seq[Column] =
+        Seq(col("_s").as("q_scale"), Embeddings.int8Codes(vec, col("_s")).as("q_vq"))
+      private[data] def score(pairs: DataFrame, fence: Fence): DataFrame =
+        pairs
+          .withColumn("idot", graft.functions.IntDotProduct.column(col("q_vq"), col("n_q")))
+          .withColumn("approx", col("idot").cast("double") * col("q_scale") * col("n_scale"))
+      private[data] def output: Seq[Column] = Seq(col("idot"), e6("approx", "approx_e6"))
+    }
+
+    /** RESIDUAL ADC — the full IVFADC construction (Jégou/Douze/Schmid
+      * TPAMI'11 §IV) on the [[Fence.Imi]] cells: the corpus PQ-codes each
+      * vector's residual against its own cell center ([[imiResidual]]),
+      * and a candidate's score decomposes as
+      *   ⟨q, x⟩ = s₀·⟨q₀, cw₀⟩ + s₁·⟨q₁, cw₁⟩ + ⟨q, residual⟩
+      * with sₕ the candidate's per-half projection scales (2 doubles it
+      * ships) and the half-dots read from the fence's pinned `_ilut`. The
+      * center term is EXACT; only the smaller residual is quantized. Train
+      * `rpqCodebooks` on residuals ([[imiResidual]] →
+      * [[pqCodebooksTrainedDet]]); the corpus encodes them
+      * Euclidean-nearest. Fold order pinned as
+      * `(s₀·i₀ + s₁·i₁) + (term₀ + term₁ + …)`. Output `score_e6`.
+      */
+    final case class ResidualAdc(rpqCodebooks: Seq[Seq[Seq[Double]]]) extends Scorer {
+      private[data] val key = "score"
+      private def imi(fence: Fence): Fence.Imi = fence match {
+        case f: Fence.Imi => f
+        case other => throw new IllegalArgumentException(
+          s"Scorer.ResidualAdc codes residuals against IMI cells; it needs Fence.Imi, got $other")
+      }
+
+      // cell codes and the per-half dot table pinned once each (codes feed
+      // the bucket fold and both LUT hits; the dot table feeds both
+      // projection scales); the residual encode is its own fused kernel
+      override private[data] def corpus(
+          df: DataFrame, idCol: String, vec: Column, fence: Fence): DataFrame = {
+        val f = imi(fence)
+        df.withColumn("n_cell", graft.functions.ComputeOnce(graft.functions.Pq.encode(vec, f.cells)))
+          .withColumn("_nlut", graft.functions.ComputeOnce(graft.functions.Pq.lut(vec, f.cells)))
+          .select(
+            col(idCol).as("n_id"),
+            col("n_cell"),
+            aggregate(col("n_cell"), lit(0), (acc, cd) => acc * f.kSub + cd).as("n_bk"),
+            element_at(col("_nlut"), element_at(col("n_cell"), 1) + 1).as("n_s0"),
+            element_at(col("_nlut"), lit(f.kSub) + element_at(col("n_cell"), 2) + 1).as("n_s1"),
+            pqEncode(imiResidual(vec, f.cells), rpqCodebooks, nearest = true).as("n_codes"))
+      }
+      private[data] def queryCols(vec: Column): Seq[Column] =
+        Seq(col("_ilut").as("q_ilut"), graft.functions.Pq.lut(vec, rpqCodebooks).as("q_rlut"))
+      private[data] def score(pairs: DataFrame, fence: Fence): DataFrame = {
+        val kSub = imi(fence).kSub
+        val centerDot =
+          col("n_s0") * element_at(col("q_ilut"), element_at(col("n_cell"), 1) + 1) +
+            col("n_s1") * element_at(col("q_ilut"), lit(kSub) + element_at(col("n_cell"), 2) + 1)
+        pairs.withColumn("score", centerDot + adcSum("q_rlut", rpqCodebooks))
+      }
+      private[data] def output: Seq[Column] = Seq(e6("score", "score_e6"))
+    }
+  }
+
+  /** Top-k neighbors of each query (self excluded): `fence` picks the
+    * candidate pairs, `scorer` scores them, and one rank tail keeps the
+    * best k per query (score desc, `n_id` asc). Output
+    * (q_id, n_id, rank, the scorer's score columns).
+    */
+  def topK(
       corpus: DataFrame,
       queries: DataFrame,
       idCol: String,
       vecCol: String,
+      fence: Fence,
+      scorer: Scorer,
+      k: Int
+  ): DataFrame =
+    topKEncoded(encode(corpus, idCol, vecCol, fence, scorer), queries, idCol, vecCol, fence, scorer, k)
+
+  /** The corpus half of [[topK]] — (n_id, n_bk, the scorer's columns).
+    * Split out so it can be computed ONCE and PERSISTED as an index
+    * bucketed by `n_bk` ([[topKIndexed]]): inline, every query batch
+    * re-pays the full per-row encode, the dominant term of the composed
+    * faces (the scoring join touches only fenced candidates).
+    */
+  def encode(
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      fence: Fence,
+      scorer: Scorer
+  ): DataFrame = scorer.corpus(corpus, idCol, col(vecCol), fence)
+
+  /** [[topK]] over a PERSISTED index — the "build once, query many"
+    * shape: `index` is the [[encode]] frame written as a table BUCKETED BY
+    * `n_bk` (e.g. via [[graft.connectors.Bucketing.ensureBucketed]]). The
+    * probed buckets are collected (a bounded driver action, one value per
+    * distinct probe) and pushed as an `IN` filter on the bucket column,
+    * which Spark turns into BUCKET PRUNING: the scan reads only files of
+    * probed buckets (`SelectedBucketsCount` in the plan, spec-pinned). The
+    * IN filter is implied by the join condition, so results are
+    * row-identical to [[topK]] on the same corpus and models (spec-pinned).
+    */
+  def topKIndexed(
+      index: DataFrame,
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      fence: Fence,
+      scorer: Scorer,
+      k: Int,
+      maxPruneCells: Int = 65536
+  ): DataFrame = {
+    Seq("n_id", "n_bk").foreach(c =>
+      require(index.columns.contains(c), s"topKIndexed: index lacks column $c — build it with encode"))
+    val (probed, bucket) = fence.queryBucket(queries, col(vecCol))
+    require(bucket.nonEmpty, s"topKIndexed: $fence has no bucket to prune on")
+    val cells = probed.select(bucket.get.as("q_bk")).distinct().collect().map(_.get(0))
+    // a probe set larger than the IN-filter budget would bloat the plan
+    // for no pruning win (most buckets touched anyway) — skip, loudly
+    val pruned =
+      if (cells.length > maxPruneCells) {
+        org.slf4j.LoggerFactory.getLogger("graft.data.Similarity").warn(
+          s"topKIndexed: probe set (${cells.length} cells) exceeds " +
+            s"maxPruneCells=$maxPruneCells — falling back to the UNPRUNED index scan " +
+            "(answers unchanged, bucket-pruning I/O win lost); raise maxPruneCells " +
+            "or probe fewer cells (lower pSub / fewer queries per batch)")
+        index
+      } else index.where(col("n_bk").isin(cells.toSeq: _*))
+    topKEncoded(pruned, queries, idCol, vecCol, fence, scorer, k)
+  }
+
+  /** Query half of [[topK]]: the broadcast probe frame, the fence join and
+    * the rank tail over an already-encoded corpus frame.
+    */
+  private def topKEncoded(
+      encoded: DataFrame,
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      fence: Fence,
+      scorer: Scorer,
       k: Int
   ): DataFrame = {
-    // scale as a PINNED column (ComputeOnce defeats projection collapse):
-    // one maxAbs fold + one rounding transform per row, not O(dim²)
-    def quantized(df: DataFrame, idAs: String, scaleAs: String, qAs: String): DataFrame =
-      df.withColumn("_s", graft.functions.ComputeOnce(Embeddings.int8Scale(col(vecCol))))
-        .select(
-          col(idCol).as(idAs),
-          col("_s").as(scaleAs),
-          Embeddings.int8Codes(col(vecCol), col("_s")).as(qAs))
-    val c = quantized(corpus, "n_id", "n_scale", "n_q")
-    val q = broadcast(quantized(queries, "q_id", "q_scale", "q_vq"))
-    // native codegen'd integer dot (one fused primitive loop per pair) —
-    // integer adds are order-free, so it is EXACTLY the HOF fold and the
-    // oracle's list_reduce (FunctionsSpec cross-checks bit-parity)
-    val idot = graft.functions.IntDotProduct.column(col("q_vq"), col("n_q"))
-    val scored = c
-      .join(q, col("n_id") =!= col("q_id"))
-      .withColumn("idot", idot)
-      // association pinned left-to-right: (idot·q_scale)·n_scale
-      .withColumn("approx", col("idot").cast("double") * col("q_scale") * col("n_scale"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("approx").desc, col("n_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(
-        col("q_id"),
-        col("n_id"),
-        col("rank"),
-        col("idot"),
-        floor(col("approx") * 1e6).cast("long").as("approx_e6")
-      )
+    val vec = col(vecCol)
+    val (probed, bucket) = fence.queryBucket(scorer.pin(queries, vec), vec)
+    val q = broadcast(probed.select(
+      (col(idCol).as("q_id") +: scorer.queryCols(vec)) ++ bucket.map(_.as("q_bk")): _*))
+    val notSelf = col("n_id") =!= col("q_id")
+    val pairs = encoded.join(q, bucket.fold(notSelf)(_ => col("n_bk") === col("q_bk") && notSelf))
+    rankTail(scorer.score(pairs, fence), scorer, k)
   }
 
-  /** IVF-pruned int8 ANN — [[int8TopK]]'s scale path, the exact analogue
-    * of [[pqTopKPruned]]: the coarse quantizer prunes candidates to each
-    * query's probe buckets, then only the survivors pay the (native)
-    * integer code dot. Corpus ships (id, bucket, scale, codes) — 1
-    * byte/dim plus one int — and scored volume is probes·(n/k) per query
-    * instead of n. Scores bit-match [[int8TopK]] on shared candidates.
+  /** The one rank tail: best k per query by the scorer's key desc, id
+    * tie-break, projected to (q_id, n_id, rank, the scorer's outputs).
     */
-  def int8TopKPruned(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Seq[Seq[Double]],
-      k: Int,
-      probes: Int = 1
-  ): DataFrame = {
-    def quantized(df: DataFrame): DataFrame =
-      df.withColumn("_s", graft.functions.ComputeOnce(Embeddings.int8Scale(col(vecCol))))
-    val c = quantized(corpus).select(
-      col(idCol).as("n_id"),
-      assignNearest(col(vecCol).cast("array<double>"), centroids).as("n_bk"),
-      col("_s").as("n_scale"),
-      Embeddings.int8Codes(col(vecCol), col("_s")).as("n_q"))
-    // cosine array pinned like [[pqTopKPruned]]'s: inlining it into the
-    // top-p splice fold replicates the unrolled-cosine subtree ~3^p times
-    val q = broadcast(
-      quantized(queries)
-        .withColumn(
-          "_cos",
-          graft.functions.ComputeOnce(
-            centroidCosines(col(vecCol).cast("array<double>"), centroids)))
-        .select(
-          col(idCol).as("q_id"),
-          col("_s").as("q_scale"),
-          Embeddings.int8Codes(col(vecCol), col("_s")).as("q_vq"),
-          explode(topPFromCosines(col("_cos"), centroids.length, probes)).as("q_bk")))
-    val idot = graft.functions.IntDotProduct.column(col("q_vq"), col("n_q"))
-    val scored = c
-      .join(q, col("n_bk") === col("q_bk") && col("n_id") =!= col("q_id"))
-      .withColumn("idot", idot)
-      .withColumn("approx", col("idot").cast("double") * col("q_scale") * col("n_scale"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("approx").desc, col("n_id").asc)
+  private def rankTail(scored: DataFrame, scorer: Scorer, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col(scorer.key).desc, col("n_id").asc)
     scored
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(
-        col("q_id"),
-        col("n_id"),
-        col("rank"),
-        col("idot"),
-        floor(col("approx") * 1e6).cast("long").as("approx_e6")
-      )
+      .select(Seq(col("q_id"), col("n_id"), col("rank")) ++ scorer.output: _*)
   }
 
-  /** IVFADC+R — exact re-ranking of the composed face's ADC shortlist
-    * (Jégou/Douze/Schmid, "Searching with quantization" / TPAMI'11 §V:
-    * keep the R best ADC candidates, refine them with the true vectors).
-    * The composed ANN's recall at the operating point is SCORE-MODEL
-    * gated, not fence-gated (SCALE.md r12: pSub=8 fence reaches the
-    * unpruned scoring ceiling, and that ceiling is ~0.40 for m=8 codes) —
-    * so the published refinement step is the lever that recovers it:
-    * m=8-code ADC ranks the fence survivors, the top `rerankR` per query
-    * fetch their FULL vectors, and the exact cosine re-ranks those R down
-    * to the final k. Output shape matches [[bruteTopK]] (`cos_e6`), so
-    * recall comparisons read directly against the exact face.
+  /** IVFADC+R — the refine stage: [[topK]] keeps its top `rerankR` per
+    * query, those candidates fetch their FULL vectors, and the exact
+    * cosine re-ranks them down to k (Jégou/Douze/Schmid TPAMI'11 §V).
+    * Output is [[Scorer.Cosine]]'s (`cos_e6`), so recall reads directly
+    * against the exact face. The composed ANN's recall is SCORE-MODEL
+    * gated (m=8-code ADC tops out ~0.40 at n=200k, SCALE.md r12); refined,
+    * it is fence-gated again, so pSub becomes the lever and only pays
+    * WITH refinement (SCALE.md r14: ADC-only flat at ~0.40 for pSub 8→16
+    * while R=100 climbs 0.773 → 0.875 → 0.933). Pick pSub from the recall
+    * target ([[imiProbePlan]] prices it), keep R≈10·k.
     *
-    * Scale shape (the part that matters at 100 TB): the expensive exact
-    * math runs on R rows per query instead of n — the corpus-sized work
-    * stays the code-only ADC scan of [[pqTopKPrunedImi]]. The shortlist
-    * (nQueries·R ids) is broadcast back against the full-vector corpus
-    * scan, so the ONLY per-candidate cost of refinement is one
-    * broadcast-hash probe + one dim-length dot on R·nQueries rows; full
-    * vectors never shuffle and never leave their scan. R trades recall
-    * against that targeted read — R≈10·k is the paper's operating band.
-    *
-    * Once refined, quality is FENCE-gated again, so `pSub` becomes the
-    * operating lever — and it only pays WITH refinement (measured at the
-    * n=200k production shape, SCALE.md "Probe-depth curve after
-    * refinement" (r14): ADC-only is flat at ~0.40 for pSub 8→16 while
-    * rerank R=100 climbs 0.773 → 0.875 → 0.933; cost tracks the fence's
-    * candidate volume, 4.1k → 15.5k rows/query). Pick pSub from the
-    * recall target, keep R≈10·k.
+    * Scale shape: the exact math runs on R rows per query instead of n.
+    * The shortlist (nQueries·R ids) broadcasts back against the
+    * full-vector corpus scan, so refinement costs one broadcast-hash probe
+    * and one dim-length dot per shortlisted row; vectors never shuffle.
     *
     * ==Broadcast flood guard==
-    * The refinement joins broadcast the shortlist (nQueries·R id pairs)
-    * and the query vectors — driver-resident frames, so a large query
-    * batch at a deep R (10⁶ queries × R=1000 = 10⁹ rows) would OOM the
-    * driver mid-job. Same stance as the `maxBucketRows`/`maxCellRows`
-    * guards on the banded self-joins: one cheap count of the QUERY side
-    * at construction (the guard's whole price — the corpus is never
-    * touched), and a loud failure above `maxBroadcastRows` naming the
-    * sizes. The remedy is to chunk the query batch — per-query results
-    * are independent, so splitting the batch and unioning the outputs is
-    * EXACT; raise the cap only if the driver is actually sized for the
-    * broadcast. Default 8M rows ≈ 128 MB of id pairs.
+    * The shortlist and the query vectors are driver-resident broadcast
+    * frames, so a large query batch at a deep R (10⁶ queries × R=1000 =
+    * 10⁹ rows) would OOM the driver mid-job. One cheap count of the QUERY
+    * side at construction, and a loud failure above `maxBroadcastRows`
+    * naming the sizes ([[broadcastGuard]]). Default 8M rows ≈ 128 MB of
+    * id pairs.
     */
-  def pqTopKPrunedImiRerank(
+  def rerank(
       corpus: DataFrame,
       queries: DataFrame,
       idCol: String,
       vecCol: String,
-      imiCodebooks: Seq[Seq[Seq[Double]]],
-      pqCodebooks: Seq[Seq[Seq[Double]]],
+      fence: Fence,
+      scorer: Scorer,
       k: Int,
       rerankR: Int,
-      pSub: Int = 1,
-      nearestEncode: Boolean = false,
       maxBroadcastRows: Long = 8000000L
   ): DataFrame = {
     require(rerankR >= k,
-      s"pqTopKPrunedImiRerank: rerankR=$rerankR must be >= k=$k (the shortlist feeds the final top-k)")
-    broadcastGuard("pqTopKPrunedImiRerank", queries.count() * rerankR,
+      s"rerank: rerankR=$rerankR must be >= k=$k (the shortlist feeds the final top-k)")
+    broadcastGuard("rerank", queries.count() * rerankR,
       maxBroadcastRows, s"the nQueries·rerankR shortlist (R=$rerankR)")
-    val shortlist = pqTopKPrunedImi(
-      corpus, queries, idCol, vecCol, imiCodebooks, pqCodebooks,
-      k = rerankR, pSub = pSub, nearestEncode = nearestEncode)
+    val shortlist = topK(corpus, queries, idCol, vecCol, fence, scorer, rerankR)
       .select(col("q_id"), col("n_id"))
-    val cvec = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
-    val qvec = broadcast(queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec")))
-    val rescored = broadcast(shortlist)
-      .join(cvec, Seq("n_id"))
-      .join(qvec, Seq("q_id"))
-      .withColumn("cos", cosine(col("q_vec"), col("n_vec")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    rescored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(
-        col("q_id"),
-        col("n_id"),
-        col("rank"),
-        floor(col("cos") * 1e6).cast("long").as("cos_e6"))
+    val exact = Scorer.Cosine
+    val cvec = encode(corpus, idCol, vecCol, Fence.All, exact)
+    val qvec = broadcast(queries.select(col(idCol).as("q_id") +: exact.queryCols(col(vecCol)): _*))
+    val pairs = broadcast(shortlist).join(cvec, Seq("n_id")).join(qvec, Seq("q_id"))
+    rankTail(exact.score(pairs, Fence.All), exact, k)
   }
 
   /** Fence-cost estimator for the composed IMI faces — the EXACT realized
-    * candidate count of [[pqTopKPrunedImi]]'s fence join per query,
+    * candidate count of the [[Fence.Imi]] join of [[topK]] per query,
     * computed WITHOUT running the join: a per-cell corpus histogram
     * (kSub² rows, metadata-sized) is broadcast against each query's probe
     * cells and summed, minus the query's own corpus row where it sits
@@ -1617,11 +1369,11 @@ object Similarity {
     * — candidate volume decomposes additively over probed cells, so two
     * linear passes (O(n) assignment + O(q·pSub²) histogram lookups)
     * reproduce the join's row count to the row (spec-pinned against
-    * [[pqTopKPrunedImi]] run at k = n).
+    * [[topK]] run at k = n).
     *
     * This is the budgeting tool the post-refinement operating guidance
     * needs at 100 TB: with IVFADC+R, recall is fence-gated and pSub is
-    * picked from the recall target ([[pqTopKPrunedImiRerank]] scaladoc,
+    * picked from the recall target ([[rerank]] scaladoc,
     * SCALE.md r14 probe-depth curve) — this prices what that choice costs
     * (the ADC scan volume, the corpus-sized term) BEFORE committing to
     * the scan. To price several candidate depths from ONE corpus pass,
@@ -1629,7 +1381,7 @@ object Similarity {
     *
     * Broadcast flood guard: the probe frame (exactly pSub(pSub+1)/2 cells
     * per query) broadcasts into the self-row join — guarded by
-    * `maxBroadcastRows` exactly like [[pqTopKPrunedImiRerank]]'s
+    * `maxBroadcastRows` exactly like [[rerank]]'s
     * shortlist (one q-sided count at construction, loud failure, chunk
     * the query batch to stay exact). The kSub²-row histogram broadcast
     * is model-sized and needs no guard.
@@ -1643,10 +1395,7 @@ object Similarity {
       pSub: Int = 1,
       maxBroadcastRows: Long = 8000000L
   ): DataFrame = {
-    require(imiCodebooks.length == 2,
-      s"imiFenceCandidateCounts: need exactly 2 half-space cell codebooks, got ${imiCodebooks.length}")
-    val kSub = imiCodebooks.head.length
-    require(pSub >= 1 && pSub <= kSub, s"imiFenceCandidateCounts: pSub=$pSub out of 1..$kSub")
+    val fence = Fence.Imi(imiCodebooks, pSub)
     broadcastGuard("imiFenceCandidateCounts",
       queries.count() * (pSub.toLong * (pSub + 1) / 2),
       maxBroadcastRows, s"the per-query probe frame (pSub=$pSub → ${pSub * (pSub + 1) / 2} cells/query)")
@@ -1654,27 +1403,8 @@ object Similarity {
       col(idCol).as("n_id"),
       imiAssign(col(vecCol), imiCodebooks).as("n_bk"))
     val hist = cells.groupBy(col("n_bk")).agg(count(lit(1)).as("_cnt"))
-    // probe machinery pinned like [[pqTopKPrunedImi]]'s (cell dot table +
-    // both top-p lists in their own ComputeOnce columns)
-    val probes =
-      if (pSub == 1)
-        queries.select(
-          col(idCol).as("q_id"),
-          imiAssign(col(vecCol), imiCodebooks).as("q_bk"))
-      else
-        queries
-          .withColumn(
-            "_ilut",
-            graft.functions.ComputeOnce(graft.functions.Pq.lut(col(vecCol), imiCodebooks)))
-          .withColumn(
-            "_t0",
-            graft.functions.ComputeOnce(imiTopCodes(col("_ilut"), kSub, pSub, 0)))
-          .withColumn(
-            "_t1",
-            graft.functions.ComputeOnce(imiTopCodes(col("_ilut"), kSub, pSub, 1)))
-          .select(
-            col(idCol).as("q_id"),
-            explode(imiProbeCells(col("_t0"), col("_t1"), kSub, pSub)).as("q_bk"))
+    val (probed, bucket) = fence.queryBucket(queries, col(vecCol))
+    val probes = probed.select(col(idCol).as("q_id"), bucket.get.as("q_bk"))
     val gross = probes
       .join(broadcast(hist), col("q_bk") === col("n_bk"), "left")
       .groupBy(col("q_id"))
@@ -1719,11 +1449,11 @@ object Similarity {
       pSubs: Seq[Int],
       maxBroadcastRows: Long = 8000000L
   ): DataFrame = {
-    require(imiCodebooks.length == 2,
-      s"imiFenceCandidateCurve: need exactly 2 half-space cell codebooks, got ${imiCodebooks.length}")
-    val kSub = imiCodebooks.head.length
-    require(pSubs.nonEmpty && pSubs.forall(p => p >= 1 && p <= kSub),
-      s"imiFenceCandidateCurve: pSubs=$pSubs must be non-empty within 1..$kSub")
+    require(pSubs.nonEmpty && pSubs.forall(_ >= 1),
+      s"imiFenceCandidateCurve: pSubs=$pSubs must be non-empty and positive")
+    // the deepest fence validates the codebooks and pSubs.max against kSub
+    val deepest = Fence.Imi(imiCodebooks, pSubs.max)
+    val kSub = deepest.kSub
     broadcastGuard("imiFenceCandidateCurve",
       queries.count() * pSubs.map(p => p.toLong * (p + 1) / 2).sum,
       maxBroadcastRows, s"the stacked probe frame (pSubs=${pSubs.mkString(",")})")
@@ -1746,13 +1476,7 @@ object Similarity {
     // the per-(kSub, p) re-planning was ~1 s of driver gaps on the
     // probe-plan face); the per-p arms are q-sized selects over a
     // checkpoint leaf.
-    val pMax = pSubs.max
-    val qTop = queries
-      .withColumn(
-        "_ilut",
-        graft.functions.ComputeOnce(graft.functions.Pq.lut(col(vecCol), imiCodebooks)))
-      .withColumn("_t0", graft.functions.ComputeOnce(imiTopCodes(col("_ilut"), kSub, pMax, 0)))
-      .withColumn("_t1", graft.functions.ComputeOnce(imiTopCodes(col("_ilut"), kSub, pMax, 1)))
+    val qTop = deepest.pinnedProbes(queries, col(vecCol))._1
       .select(col(idCol).as("q_id"), col("_t0"), col("_t1"))
       .localCheckpoint()
     val probesByP = pSubs.map { p =>
@@ -1807,8 +1531,8 @@ object Similarity {
     * At 100 TB this is the control loop the rerank face's scaladoc
     * prescribes ("pick pSub from the recall target") made executable:
     * sweep once per (corpus snapshot, query-batch shape), read off the
-    * chosen fence, run [[pqTopKPrunedImiRerankAuto]] — which does exactly
-    * this end-to-end. Broadcast guard inherited from the curve.
+    * chosen fence, then [[rerank]] at that depth (the auto face: price →
+    * choose → scan → refine). Broadcast guard inherited from the curve.
     */
   def imiProbePlan(
       corpus: DataFrame,
@@ -1837,44 +1561,6 @@ object Similarity {
       .drop("_chosen")
   }
 
-  /** Budget-tuned IVFADC+R: [[imiProbePlan]] picks the fence, then
-    * [[pqTopKPrunedImiRerank]] runs at exactly that depth — the full
-    * self-tuning ANN query: price → choose → scan → refine, with the
-    * corpus touched once for pricing (assignment histogram) and once for
-    * the chosen scan. The plan read is a |pSubs|-row driver action
-    * (model-sized, like the codebooks themselves); equality with the
-    * manually-parameterized face at the chosen depth is spec-pinned.
-    */
-  def pqTopKPrunedImiRerankAuto(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      imiCodebooks: Seq[Seq[Seq[Double]]],
-      pqCodebooks: Seq[Seq[Seq[Double]]],
-      k: Int,
-      rerankR: Int,
-      pSubs: Seq[Int],
-      maxCandPerQuery: Long,
-      nearestEncode: Boolean = false,
-      maxBroadcastRows: Long = 8000000L
-  ): DataFrame = {
-    val plan = imiProbePlan(
-      corpus, queries, idCol, vecCol, imiCodebooks, pSubs, maxCandPerQuery, maxBroadcastRows)
-    // an EMPTY query batch yields an empty plan frame (no probes → no
-    // curve rows): name the cause instead of a bare head() NoSuchElement
-    val chosenRows = plan.filter(col("chosen")).select(col("p_sub")).collect()
-    require(chosenRows.nonEmpty,
-      "pqTopKPrunedImiRerankAuto: probe plan is empty — the query batch has no rows, " +
-        "so there is no fence to choose (an unsatisfiable budget is reported separately, " +
-        "via the plan's fits=false fallback row)")
-    val chosen = chosenRows.head.getInt(0)
-    pqTopKPrunedImiRerank(
-      corpus, queries, idCol, vecCol, imiCodebooks, pqCodebooks,
-      k = k, rerankR = rerankR, pSub = chosen,
-      nearestEncode = nearestEncode, maxBroadcastRows = maxBroadcastRows)
-  }
-
   /** Loud ceiling on driver-resident broadcast frames — the fourth face of
     * the flood-guard stance (`maxBucketRows` on the banded pair joins,
     * `maxCellRows` on the semdedup cells): fail at construction with the
@@ -1891,104 +1577,5 @@ object Similarity {
           "risks driver OOM / the broadcast limit mid-job. Split the query batch into chunks " +
           "and union the outputs (per-query results are independent, so chunking is exact), " +
           "or raise maxBroadcastRows only if the driver is actually sized for it.")
-  }
-
-  /** IMI-pruned int8 ANN — [[int8TopKPruned]] with the two-level product
-    * (IMI) coarse quantizer: the auto-k form of the bandwidth face, the
-    * exact analogue of [[pqTopKPrunedImi]] (see its scaladoc for the cell
-    * quantizer's scale argument). Candidates are pruned to each query's
-    * rank-sum-capped probe cells, then only survivors pay the native
-    * integer code dot; corpus ships (id, cell, scale, codes) — 1 byte/dim
-    * plus one int. Scores bit-match [[int8TopK]] on shared candidates.
-    */
-  def int8TopKPrunedImi(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      imiCodebooks: Seq[Seq[Seq[Double]]],
-      k: Int,
-      pSub: Int = 1
-  ): DataFrame = {
-    require(imiCodebooks.length == 2,
-      s"int8TopKPrunedImi: need exactly 2 half-space cell codebooks, got ${imiCodebooks.length}")
-    val kSub = imiCodebooks.head.length
-    require(pSub >= 1 && pSub <= kSub, s"int8TopKPrunedImi: pSub=$pSub out of 1..$kSub")
-    def quantized(df: DataFrame): DataFrame =
-      df.withColumn("_s", graft.functions.ComputeOnce(Embeddings.int8Scale(col(vecCol))))
-    val c = quantized(corpus).select(
-      col(idCol).as("n_id"),
-      imiAssign(col(vecCol), imiCodebooks).as("n_bk"),
-      col("_s").as("n_scale"),
-      Embeddings.int8Codes(col(vecCol), col("_s")).as("n_q"))
-    val q = broadcast {
-      val base = quantized(queries)
-      if (pSub == 1)
-        base.select(
-          col(idCol).as("q_id"),
-          col("_s").as("q_scale"),
-          Embeddings.int8Codes(col(vecCol), col("_s")).as("q_vq"),
-          imiAssign(col(vecCol), imiCodebooks).as("q_bk"))
-      else
-        // probe machinery pinned like [[pqTopKPrunedImi]]'s (cell dot
-        // table + both top-p lists in their own ComputeOnce columns)
-        base
-          .withColumn(
-            "_ilut",
-            graft.functions.ComputeOnce(graft.functions.Pq.lut(col(vecCol), imiCodebooks)))
-          .withColumn(
-            "_t0",
-            graft.functions.ComputeOnce(imiTopCodes(col("_ilut"), kSub, pSub, 0)))
-          .withColumn(
-            "_t1",
-            graft.functions.ComputeOnce(imiTopCodes(col("_ilut"), kSub, pSub, 1)))
-          .select(
-            col(idCol).as("q_id"),
-            col("_s").as("q_scale"),
-            Embeddings.int8Codes(col(vecCol), col("_s")).as("q_vq"),
-            explode(imiProbeCells(col("_t0"), col("_t1"), kSub, pSub)).as("q_bk"))
-    }
-    val idot = graft.functions.IntDotProduct.column(col("q_vq"), col("n_q"))
-    val scored = c
-      .join(q, col("n_bk") === col("q_bk") && col("n_id") =!= col("q_id"))
-      .withColumn("idot", idot)
-      .withColumn("approx", col("idot").cast("double") * col("q_scale") * col("n_scale"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("approx").desc, col("n_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(
-        col("q_id"),
-        col("n_id"),
-        col("rank"),
-        col("idot"),
-        floor(col("approx") * 1e6).cast("long").as("approx_e6")
-      )
-  }
-
-  def bucketedTopK(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      bucketCol: String,
-      k: Int
-  ): DataFrame = {
-    val q = broadcast(
-      queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"), col(bucketCol).as("q_bk")))
-    val c = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"), col(bucketCol).as("n_bk"))
-    val scored = c
-      .join(q, col("n_bk") === col("q_bk") && col("n_id") =!= col("q_id"))
-      .withColumn("cos", cosine(col("q_vec"), col("n_vec")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(
-        col("q_id"),
-        col("n_id"),
-        col("rank"),
-        floor(col("cos") * 1e6).cast("long").as("cos_e6")
-      )
   }
 }

@@ -199,7 +199,7 @@ object SnapshotOps {
   def bandStamp(n: Int, k: Int, rows: Int): String = s"bands(n=$n,k=$k,rows=$rows)"
 
   /** [[incrementalNearDup]] served from a PERSISTED band index — the
-    * production shape (VERDICT r16 #1, the [[graft.data.Similarity.pqTopKPrunedImiIndexed]]
+    * production shape (VERDICT r16 #1, the [[graft.data.Similarity.topKIndexed]]
     * precedent): the corpus side's (sid, band, bucket) frame comes from
     * `bandIndex` (a [[nearDupBandIndex]] table, ideally bucketed by
     * `bucket`) instead of a per-call tokenize+shingle+k-hash re-scan of
@@ -304,7 +304,7 @@ object SnapshotOps {
 
   /** The index slice a delta batch actually probes: the delta's DISTINCT
     * bucket keys (bounded by deltaRows × nBands — a driver-bounded collect,
-    * the probed-cells stance of `pqTopKPrunedImiIndexed`) pushed as an `IN`
+    * the probed-cells stance of `Similarity.topKIndexed`) pushed as an `IN`
     * filter on the index's bucket column. On a bucket-bucketed table this
     * plans as BUCKET PRUNING (`SelectedBucketsCount` — spec-pinned in
     * SnapshotOpsSpec). Plan-only: the filter is implied by the candidate

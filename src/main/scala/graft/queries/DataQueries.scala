@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.data._
+import graft.data.Similarity.{Fence, Scorer}
 
 /** Verification queries for the training-data-pipeline operators:
   * text analysis, dedup suite (exact / n-gram Jaccard / MinHash+LSH /
@@ -882,13 +883,9 @@ object DataQueries {
     Tables.embeddings(spark, dir).filter(col("vec_id") % 25 === 0)
 
   def sAnnBrute(spark: SparkSession, dir: String): DataFrame =
-    Similarity.bruteTopK(
-      Tables.embeddings(spark, dir),
-      annQueries(spark, dir),
-      "vec_id",
-      "embedding",
-      k = 10
-    )
+    Similarity.topK(
+      Tables.embeddings(spark, dir), annQueries(spark, dir), "vec_id", "embedding",
+      Fence.All, Scorer.Cosine, k = 10)
 
   val sAnnBruteSql: String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -904,14 +901,9 @@ object DataQueries {
        |FROM ranked WHERE rank <= 10""".stripMargin
 
   def sAnnIvf(spark: SparkSession, dir: String): DataFrame =
-    Similarity.bucketedTopK(
-      Tables.embeddings(spark, dir),
-      annQueries(spark, dir),
-      "vec_id",
-      "embedding",
-      "label",
-      k = 10
-    )
+    Similarity.topK(
+      Tables.embeddings(spark, dir), annQueries(spark, dir), "vec_id", "embedding",
+      Fence.Column("label"), Scorer.Cosine, k = 10)
 
   val sAnnIvfSql: String =
     s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
@@ -1113,13 +1105,14 @@ object DataQueries {
         // assignment, √k·dim model (Similarity.imiAssign scaladoc).
         // Single-probe by the face's contract (parity with the flat
         // branch); a top-k campaign at auto-k should probe DEEP instead —
-        // the composed pqTopKPrunedImi at pSub≈8, where the fence reaches
+        // the composed Fence.Imi × Scorer.Adc face at pSub≈8, where the fence reaches
         // its scoring ceiling (ScaleMechanicsSpec gate, SCALE.md r12)
         val cbs = imiCodebooksFor(spark, dir, Similarity.imiKSub(k))
         e.withColumn("_bk", Similarity.imiAssign(col("embedding"), cbs))
       }
-    Similarity.bucketedTopK(
-      bucketed, bucketed.filter(col("vec_id") % 25 === 0), "vec_id", "embedding", "_bk", k = 10)
+    Similarity.topK(
+      bucketed, bucketed.filter(col("vec_id") % 25 === 0), "vec_id", "embedding",
+      Fence.Column("_bk"), Scorer.Cosine, k = 10)
   }
 
   val sAnnIvfSeededSql: String =
@@ -1219,7 +1212,8 @@ object DataQueries {
   def sAnnPq(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val cbs = codebooksFor(spark, dir, m = PqM, k = PqK)
-    Similarity.pqTopK(e, e.filter(col("vec_id") % 25 === 0), "vec_id", "embedding", cbs, k = 10)
+    Similarity.topK(
+      e, e.filter(col("vec_id") % 25 === 0), "vec_id", "embedding", Fence.All, Scorer.Adc(cbs), k = 10)
   }
 
   val sAnnPqSql: String = {
@@ -1274,9 +1268,9 @@ object DataQueries {
     val e = Tables.embeddings(spark, dir)
     val cents = seedsFor(spark, dir, k = 16)
     val cbs = codebooksFor(spark, dir, m = PqM, k = PqK)
-    Similarity.pqTopKPruned(
+    Similarity.topK(
       e, e.filter(col("vec_id") % 25 === 0), "vec_id", "embedding",
-      cents, cbs, k = 10, probes = 2)
+      Fence.Ivf(cents, probes = 2), Scorer.Adc(cbs), k = 10)
   }
 
   val sAnnPqIvfSql: String = {
@@ -1337,8 +1331,9 @@ object DataQueries {
     * hash-match exactly.
     */
   def sAnnInt8(spark: SparkSession, dir: String): DataFrame =
-    Similarity.int8TopK(
-      Tables.embeddings(spark, dir), annQueries(spark, dir), "vec_id", "embedding", k = 10)
+    Similarity.topK(
+      Tables.embeddings(spark, dir), annQueries(spark, dir), "vec_id", "embedding",
+      Fence.All, Scorer.Int8, k = 10)
 
   val sAnnInt8Sql: String =
     """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -1374,8 +1369,9 @@ object DataQueries {
   def sAnnInt8Ivf(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val cents = seedsFor(spark, dir, k = 16)
-    Similarity.int8TopKPruned(
-      e, annQueries(spark, dir), "vec_id", "embedding", cents, k = 10, probes = 2)
+    Similarity.topK(
+      e, annQueries(spark, dir), "vec_id", "embedding",
+      Fence.Ivf(cents, probes = 2), Scorer.Int8, k = 10)
   }
 
   val sAnnInt8IvfSql: String =
@@ -1560,8 +1556,9 @@ object DataQueries {
     val e = Tables.embeddings(spark, dir)
     val cbs = imiCodebooksFor(spark, dir, ImiKSub)
     val bucketed = e.withColumn("_bk", Similarity.imiAssign(col("embedding"), cbs))
-    Similarity.bucketedTopK(
-      bucketed, bucketed.filter(col("vec_id") % 25 === 0), "vec_id", "embedding", "_bk", k = 10)
+    Similarity.topK(
+      bucketed, bucketed.filter(col("vec_id") % 25 === 0), "vec_id", "embedding",
+      Fence.Column("_bk"), Scorer.Cosine, k = 10)
   }
 
   val sAnnImiSql: String =
@@ -1659,14 +1656,14 @@ object DataQueries {
     * pSub=2 here exercises the multi-probe plumbing at fixture scale
     * (kSub=4 caps pSub anyway); it is NOT the production probe depth —
     * top-k ANN probes deep (pSub≈8, where the fence reaches the scoring
-    * ceiling; [[Similarity.pqTopKPrunedImi]] scaladoc, SCALE.md r12).
+    * ceiling; [[Similarity.Fence.Imi]] scaladoc, SCALE.md r12).
     */
   def sAnnPqImi(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    Similarity.pqTopKPrunedImi(
+    Similarity.topK(
       e, e.filter(col("vec_id") % 25 === 0), "vec_id", "embedding",
-      imiCodebooksFor(spark, dir, ImiKSub), codebooksFor(spark, dir, m = PqM, k = PqK),
-      k = 10, pSub = 2)
+      Fence.Imi(imiCodebooksFor(spark, dir, ImiKSub), pSub = 2),
+      Scorer.Adc(codebooksFor(spark, dir, m = PqM, k = PqK)), k = 10)
   }
 
   /** The composed IMI-fence + seeded-PQ ADC chain through the `ranked` CTE
@@ -1718,8 +1715,8 @@ object DataQueries {
        |SELECT q_id, n_id, rank, CAST(floor(score * 1e6) AS BIGINT) AS score_e6
        |FROM ranked WHERE rank <= 10""".stripMargin
 
-  /** The persisted ANN INDEX: [[graft.data.Similarity.encodeImiPq]]'s
-    * (n_id, n_bk, n_codes) frame materialized ONCE per (corpus stamp) as
+  /** The persisted ANN INDEX: [[graft.data.Similarity.encode]]'s
+    * (n_id, n_bk, n_codes) frame under the IMI fence and ADC scorer, materialized ONCE per (corpus stamp) as
     * a table BUCKETED BY the cell id — the "build once, query many"
     * production shape. Inline composed faces re-pay the full
     * imiAssign+PqEncode corpus scan per query batch (at 100 TB: re-encode
@@ -1730,9 +1727,9 @@ object DataQueries {
     val slug = dir.replaceAll("[^A-Za-z0-9]", "_")
     graft.connectors.Bucketing.ensureBucketed(
       spark,
-      Similarity.encodeImiPq(
+      Similarity.encode(
         Tables.embeddings(spark, dir), "vec_id", "embedding",
-        imiCodebooksFor(spark, dir, ImiKSub), codebooksFor(spark, dir, m = PqM, k = PqK)),
+        Fence.Imi(imiCodebooksFor(spark, dir, ImiKSub)), Scorer.Adc(codebooksFor(spark, dir, m = PqM, k = PqK))),
       // 64 buckets: a bucketed scan parallelizes one task per bucket, so
       // the bucket count must exceed the executor-core count or the index
       // read caps below the inline face's split parallelism (measured:
@@ -1742,22 +1739,22 @@ object DataQueries {
   }
 
   /** [[sAnnPqImi]] served from the persisted index
-    * ([[graft.data.Similarity.pqTopKPrunedImiIndexed]]): identical output
+    * ([[graft.data.Similarity.topKIndexed]]): identical output
     * (the SAME oracle SQL gates it), but the corpus side is a bucketed
     * 3-column read with the probed cells pushed as bucket pruning.
     */
   def sAnnPqImiIdx(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    Similarity.pqTopKPrunedImiIndexed(
+    Similarity.topKIndexed(
       imiPqIndexFor(spark, dir), e.filter(col("vec_id") % 25 === 0), "vec_id", "embedding",
-      imiCodebooksFor(spark, dir, ImiKSub), codebooksFor(spark, dir, m = PqM, k = PqK),
-      k = 10, pSub = 2)
+      Fence.Imi(imiCodebooksFor(spark, dir, ImiKSub), pSub = 2),
+      Scorer.Adc(codebooksFor(spark, dir, m = PqM, k = PqK)), k = 10)
   }
 
   val sAnnPqImiIdxSql: String = sAnnPqImiSql
 
   /** IVFADC+R shortlist depth for the fixture face (production band
-    * R ≈ 10·k — [[graft.data.Similarity.pqTopKPrunedImiRerank]]).
+    * R ≈ 10·k — [[graft.data.Similarity.rerank]]).
     */
   private val AnnRerankR = 30
 
@@ -1770,10 +1767,10 @@ object DataQueries {
     */
   def sAnnPqImiRr(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    Similarity.pqTopKPrunedImiRerank(
+    Similarity.rerank(
       e, e.filter(col("vec_id") % 25 === 0), "vec_id", "embedding",
-      imiCodebooksFor(spark, dir, ImiKSub), codebooksFor(spark, dir, m = PqM, k = PqK),
-      k = 10, rerankR = AnnRerankR, pSub = 2)
+      Fence.Imi(imiCodebooksFor(spark, dir, ImiKSub), pSub = 2),
+      Scorer.Adc(codebooksFor(spark, dir, m = PqM, k = PqK)), k = 10, rerankR = AnnRerankR)
   }
 
   val sAnnPqImiRrSql: String =
@@ -1892,9 +1889,9 @@ object DataQueries {
     */
   def sAnnInt8Imi(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    Similarity.int8TopKPrunedImi(
+    Similarity.topK(
       e, e.filter(col("vec_id") % 25 === 0), "vec_id", "embedding",
-      imiCodebooksFor(spark, dir, ImiKSub), k = 10, pSub = 2)
+      Fence.Imi(imiCodebooksFor(spark, dir, ImiKSub), pSub = 2), Scorer.Int8, k = 10)
   }
 
   val sAnnInt8ImiSql: String =
@@ -1946,10 +1943,10 @@ object DataQueries {
     */
   def sAnnPqImiT(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    Similarity.pqTopKPrunedImi(
+    Similarity.topK(
       e, e.filter(col("vec_id") % 25 === 0), "vec_id", "embedding",
-      imiCodebooksFor(spark, dir, ImiKSub), pqTrainedFor(spark, dir, m = PqM, k = PqK),
-      k = 10, pSub = 2, nearestEncode = true)
+      Fence.Imi(imiCodebooksFor(spark, dir, ImiKSub), pSub = 2),
+      Scorer.Adc(pqTrainedFor(spark, dir, m = PqM, k = PqK), nearest = true), k = 10)
   }
 
   // sub-vector dot: components folded left-to-right over the slice —
@@ -2041,7 +2038,7 @@ object DataQueries {
   }
 
   /** RESIDUAL-encoded composed ANN — the full IVFADC construction
-    * ([[Similarity.pqTopKPrunedImiResidual]]): the corpus PQ-codes each
+    * ([[Similarity.Scorer.ResidualAdc]]): the corpus PQ-codes each
     * vector's residual against its own trained IMI cell center, and
     * scores decompose as ⟨q,center⟩ (two hits into the cell-codebook LUT
     * the probe machinery already pins) + the residual ADC fold. The
@@ -2058,10 +2055,10 @@ object DataQueries {
     */
   def sAnnPqImiR(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    Similarity.pqTopKPrunedImiResidual(
+    Similarity.topK(
       e, e.filter(col("vec_id") % 25 === 0), "vec_id", "embedding",
-      imiCodebooksFor(spark, dir, ImiKSub), rpqTrainedFor(spark, dir),
-      k = 10, pSub = 2)
+      Fence.Imi(imiCodebooksFor(spark, dir, ImiKSub), pSub = 2),
+      Scorer.ResidualAdc(rpqTrainedFor(spark, dir)), k = 10)
   }
 
   // residual-PQ scoring codebooks: trained on residuals against the
@@ -2178,7 +2175,9 @@ object DataQueries {
     val docs = Tables
       .embeddings(spark, dir)
       .withColumn("_bk", Similarity.lshBucket(col("embedding"), annPlanes))
-    Similarity.bucketedTopK(docs, docs.filter(col("vec_id") % 25 === 0), "vec_id", "embedding", "_bk", k = 10)
+    Similarity.topK(
+      docs, docs.filter(col("vec_id") % 25 === 0), "vec_id", "embedding",
+      Fence.Column("_bk"), Scorer.Cosine, k = 10)
   }
 
   lazy val sAnnLshSql: String = {
@@ -2226,7 +2225,8 @@ object DataQueries {
     val queries = base
       .filter(col("vec_id") % 25 === 0)
       .withColumn("_probes", Similarity.lshProbes(col("_dots"), AnnNbits, AnnFlips))
-    Similarity.multiProbeTopK(base, queries, "vec_id", "embedding", "_bk", "_probes", k = 10)
+    Similarity.topK(
+      base, queries, "vec_id", "embedding", Fence.Probes("_bk", "_probes"), Scorer.Cosine, k = 10)
   }
 
   lazy val sAnnLshMultiprobeSql: String = {
@@ -4153,8 +4153,8 @@ object DataQueries {
       val corpusEmb = emb.filter(pmod(col("vec_id"), lit(3)) =!= 0)
       val batchEmb = emb.join(
         acceptedIds.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
-      val icbs = imiCodebooksFor(spark, dir, ImiKSub)
-      val pcbs = codebooksFor(spark, dir, m = PqM, k = PqK)
+      val annFence = Fence.Imi(imiCodebooksFor(spark, dir, ImiKSub))
+      val annScorer = Scorer.Adc(codebooksFor(spark, dir, m = PqM, k = PqK))
       val annPath = s"${graft.connectors.Bucketing.indexRoot}/$slug/capstone_ann"
       val annTable = s"graft_capstone_ann$slug"
       val embStamp = Bucketing.cachedStamp(s"$dir/embeddings.parquet")
@@ -4162,14 +4162,14 @@ object DataQueries {
       val annPost = s"imipq($ImiKSub,$PqM,$PqK)|$embStamp|$gateCfg|ingested"
       if (!Bucketing.readStamp(annPath).contains(annPost))
         Bucketing.ensureBucketed(
-          spark, Similarity.encodeImiPq(corpusEmb, "vec_id", "embedding", icbs, pcbs),
+          spark, Similarity.encode(corpusEmb, "vec_id", "embedding", annFence, annScorer),
           annTable, annPath, "n_bk", 64, sourceStamp = annPre)
       Bucketing.appendBucketedExactlyOnce(
         spark,
-        delta = Similarity.encodeImiPq(batchEmb, "vec_id", "embedding", icbs, pcbs),
-        rebuildPre = Similarity.encodeImiPq(corpusEmb, "vec_id", "embedding", icbs, pcbs),
-        rebuildPost = Similarity.encodeImiPq(
-          corpusEmb.unionByName(batchEmb), "vec_id", "embedding", icbs, pcbs),
+        delta = Similarity.encode(batchEmb, "vec_id", "embedding", annFence, annScorer),
+        rebuildPre = Similarity.encode(corpusEmb, "vec_id", "embedding", annFence, annScorer),
+        rebuildPost = Similarity.encode(
+          corpusEmb.unionByName(batchEmb), "vec_id", "embedding", annFence, annScorer),
         annTable, annPath, "n_bk", 64, annPre, annPost)
       // 3) serve: the probe batch gated against the POST-APPEND band index;
       // corpusText advanced in lockstep (the coverage contract, held

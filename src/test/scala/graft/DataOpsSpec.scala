@@ -325,7 +325,9 @@ class DataOpsSpec extends SparkSpec {
       (1L, Seq(0.9f, 0.1f)),
       (2L, Seq(0f, 1f))
     ).toDF("vec_id", "embedding")
-    val out = Similarity.bruteTopK(df, df.filter($"vec_id" === 0), "vec_id", "embedding", 2)
+    val out = Similarity.topK(
+      df, df.filter($"vec_id" === 0), "vec_id", "embedding",
+      Similarity.Fence.All, Similarity.Scorer.Cosine, 2)
     val got = out.select("n_id", "rank").as[(Long, Int)].collect().toSet
     assert(got === Set((1L, 1), (2L, 2)))
   }

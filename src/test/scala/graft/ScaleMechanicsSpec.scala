@@ -317,9 +317,25 @@ class ScaleMechanicsSpec extends SparkSpec {
     // codebooks, so the measured loss is the cell fence's alone (ADC
     // quantization error cancels out of the comparison).
     import graft.data.Similarity
+    import graft.data.Similarity.{Fence, Scorer}
     val n = 200000L
     val emb = opCorpus
-    locally {
+    def timed[T](step: String)(body: => T): T = {
+      val t0 = System.nanoTime()
+      try body
+      finally println(f"[ScaleMechanicsSpec] composed step $step: ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    }
+    // one corpus encode per (cells, scoring codebooks, nearest), cached: the
+    // encode does not depend on the probe depth, so Spark's cache manager
+    // serves every sweep arm and rerank depth of that pair from the cached
+    // frame instead of re-encoding the 200k corpus per arm
+    val encodes = scala.collection.mutable.Buffer.empty[org.apache.spark.sql.DataFrame]
+    def cacheEncode(cells: Seq[Seq[Seq[Double]]], scorer: Scorer): Unit = timed("encode") {
+      val enc = Similarity.encode(emb, "vec_id", "embedding", Fence.Imi(cells), scorer).cache()
+      enc.count()
+      encodes += enc
+    }
+    try {
       val k = Similarity.autoK(emb.count())
       assert(k === 6250, s"operating point drifted: k=$k")
       val kSub = Similarity.imiKSub(k)
@@ -329,8 +345,10 @@ class ScaleMechanicsSpec extends SparkSpec {
       val q = emb.filter(pmod($"vec_id", lit(1601)) === 0)
       // ground truth: brute-force exact cosine top-10 — the answer a user
       // actually wants; every measured number below is recall against it
-      val brute = Similarity.bruteTopK(emb, q, "vec_id", "embedding", 10)
-        .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
+      val brute = timed("brute") {
+        Similarity.topK(emb, q, "vec_id", "embedding", Fence.All, Scorer.Cosine, 10)
+          .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
+      }
       assert(brute.size > 1000, s"ground-truth sample too thin: ${brute.size}")
       def recallOf(df: org.apache.spark.sql.DataFrame): Double = {
         val got = df.select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
@@ -340,8 +358,12 @@ class ScaleMechanicsSpec extends SparkSpec {
       // (k=16 — what the oracle replays) vs a production-sized codebook
       // (k=256 seeded) — separates score-model error from fence error
       val cbs256 = Similarity.pqCodebooks(emb, "vec_id", "embedding", m = 8, k = 256)
-      val adc16 = recallOf(Similarity.pqTopK(emb, q, "vec_id", "embedding", cbs, 10))
-      val adc256 = recallOf(Similarity.pqTopK(emb, q, "vec_id", "embedding", cbs256, 10))
+      val adc16 = timed("unpruned ADC k=16") {
+        recallOf(Similarity.topK(emb, q, "vec_id", "embedding", Fence.All, Scorer.Adc(cbs), 10))
+      }
+      val adc256 = timed("unpruned ADC k=256") {
+        recallOf(Similarity.topK(emb, q, "vec_id", "embedding", Fence.All, Scorer.Adc(cbs256), 10))
+      }
       println(f"[ScaleMechanicsSpec] ADC scoring ceiling vs brute: k=16 $adc16%.3f, k=256 $adc256%.3f")
       assert(adc256 > adc16 + 0.1,
         f"production codebook did not improve the scoring ceiling: $adc256%.3f vs $adc16%.3f")
@@ -350,11 +372,15 @@ class ScaleMechanicsSpec extends SparkSpec {
       // and Lloyd training as the next lever — here the lever is pulled
       // and measured): deterministic sample-based Lloyd + the matching
       // Euclidean-nearest encode, vs the seeded-k=256 ceiling above
-      val cbs256t = Similarity.pqCodebooksTrainedDet(
-        emb, "vec_id", "embedding", m = 8, k = 256, iters = 2,
-        sampleN = Similarity.imiTrainSampleN(256))
-      val adc256t = recallOf(
-        Similarity.pqTopK(emb, q, "vec_id", "embedding", cbs256t, 10, nearestEncode = true))
+      val cbs256t = timed("train PQ k=256") {
+        Similarity.pqCodebooksTrainedDet(
+          emb, "vec_id", "embedding", m = 8, k = 256, iters = 2,
+          sampleN = Similarity.imiTrainSampleN(256))
+      }
+      val adc256t = timed("unpruned ADC k=256 trained") {
+        recallOf(Similarity.topK(
+          emb, q, "vec_id", "embedding", Fence.All, Scorer.Adc(cbs256t, nearest = true), 10))
+      }
       println(f"[ScaleMechanicsSpec] ADC TRAINED ceiling vs brute: k=256 Lloyd $adc256t%.3f " +
         f"(seeded $adc256%.3f)")
       // measured: 0.405 trained vs 0.391 seeded — a real move of the
@@ -370,22 +396,31 @@ class ScaleMechanicsSpec extends SparkSpec {
       // fuller cells: top-k ANN needs all 10 neighbors co-probed, so fewer,
       // fuller cells at deeper probe depths win)
       val kSubAnn = 42
-      val icbsAnn = Similarity.imiCodebooksTrained(
-        emb, "vec_id", "embedding", kSubAnn, iters = 2,
-        sampleN = Similarity.imiTrainSampleN(kSubAnn))
-      def sweep(cells: Seq[Seq[Seq[Double]]]): Seq[(Int, Double)] =
+      val icbsAnn = timed("train IMI kSub=42") {
+        Similarity.imiCodebooksTrained(
+          emb, "vec_id", "embedding", kSubAnn, iters = 2,
+          sampleN = Similarity.imiTrainSampleN(kSubAnn))
+      }
+      def sweep(cells: Seq[Seq[Seq[Double]]]): Seq[(Int, Double)] = {
+        cacheEncode(cells, Scorer.Adc(cbs256))
         Seq(2, 4, 8).map { p =>
-          p -> recallOf(Similarity.pqTopKPrunedImi(
-            emb, q, "vec_id", "embedding", cells, cbs256, k = 10, pSub = p))
+          p -> timed(s"IMI-ADC kSub=${cells.head.length} pSub=$p") {
+            recallOf(Similarity.topK(
+              emb, q, "vec_id", "embedding", Fence.Imi(cells, pSub = p), Scorer.Adc(cbs256), k = 10))
+          }
         }
+      }
       val dedupGrid = sweep(icbs)
       val annGrid = sweep(icbsAnn)
       // the full production shape: trained cells + trained scoring +
       // nearest encode at the ANN-recommended depth — the s_ann_pq_imi_t
       // face's configuration at operating scale
-      val composedT = recallOf(Similarity.pqTopKPrunedImi(
-        emb, q, "vec_id", "embedding", icbsAnn, cbs256t, k = 10, pSub = 8,
-        nearestEncode = true))
+      val fenceAnn = Fence.Imi(icbsAnn, pSub = 8)
+      val scorerT = Scorer.Adc(cbs256t, nearest = true)
+      cacheEncode(icbsAnn, scorerT)
+      val composedT = timed("IMI-ADC trained pSub=8") {
+        recallOf(Similarity.topK(emb, q, "vec_id", "embedding", fenceAnn, scorerT, k = 10))
+      }
       // RESIDUAL coding (IVFADC, r13): the center term becomes exact
       // (projection scales x cell-codebook dots) and only the
       // smaller-norm projection residual is quantized — train residual
@@ -393,11 +428,15 @@ class ScaleMechanicsSpec extends SparkSpec {
       // composed residual face at the same depth
       val residAnn = emb.select(
         $"vec_id", Similarity.imiResidual($"embedding", icbsAnn).as("_rv"))
-      val rcbs256 = Similarity.pqCodebooksTrainedDet(
-        residAnn, "vec_id", "_rv", m = 8, k = 256, iters = 2,
-        sampleN = Similarity.imiTrainSampleN(256))
-      val composedR = recallOf(Similarity.pqTopKPrunedImiResidual(
-        emb, q, "vec_id", "embedding", icbsAnn, rcbs256, k = 10, pSub = 8))
+      val rcbs256 = timed("train residual PQ k=256") {
+        Similarity.pqCodebooksTrainedDet(
+          residAnn, "vec_id", "_rv", m = 8, k = 256, iters = 2,
+          sampleN = Similarity.imiTrainSampleN(256))
+      }
+      val composedR = timed("IMI-residual pSub=8") {
+        recallOf(Similarity.topK(
+          emb, q, "vec_id", "embedding", fenceAnn, Scorer.ResidualAdc(rcbs256), k = 10))
+      }
       def fmt(s: Seq[(Int, Double)]) = s.map { case (p, r) => f"pSub=$p: $r%.3f" }.mkString(" | ")
       println(s"[ScaleMechanicsSpec] composed IMI-ADC vs brute, dedup grid kSub=$kSub: ${fmt(dedupGrid)}")
       println(s"[ScaleMechanicsSpec] composed IMI-ADC vs brute, ANN grid kSub=$kSubAnn: ${fmt(annGrid)}")
@@ -452,9 +491,10 @@ class ScaleMechanicsSpec extends SparkSpec {
       // vectors by exact cosine; corpus-sized work is unchanged, the
       // refinement reads R vectors per query.
       val rrRecalls = Seq(30, 100, 1000).map { r =>
-        r -> recallOf(Similarity.pqTopKPrunedImiRerank(
-          emb, q, "vec_id", "embedding", icbsAnn, cbs256t, k = 10,
-          rerankR = r, pSub = 8, nearestEncode = true))
+        r -> timed(s"rerank R=$r") {
+          recallOf(Similarity.rerank(
+            emb, q, "vec_id", "embedding", fenceAnn, scorerT, k = 10, rerankR = r))
+        }
       }
       println(s"[ScaleMechanicsSpec] IVFADC+R (ANN grid, pSub=8, trained): " +
         rrRecalls.map { case (r, v) => f"R=$r: $v%.3f" }.mkString(" | "))
@@ -479,11 +519,14 @@ class ScaleMechanicsSpec extends SparkSpec {
       // (int8 approximates the raw dot, brute cosine would conflate the
       // metric difference with the fence) — the fence question is the
       // same: are the top-10-by-int8-score co-probed at depth 8?
-      val i8full = Similarity.int8TopK(emb, q, "vec_id", "embedding", 10)
-        .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
-      val i8pruned = Similarity.int8TopKPrunedImi(
-        emb, q, "vec_id", "embedding", icbsAnn, k = 10, pSub = 8)
-        .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
+      val i8full = timed("unpruned int8") {
+        Similarity.topK(emb, q, "vec_id", "embedding", Fence.All, Scorer.Int8, 10)
+          .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
+      }
+      val i8pruned = timed("IMI-int8 pSub=8") {
+        Similarity.topK(emb, q, "vec_id", "embedding", fenceAnn, Scorer.Int8, k = 10)
+          .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
+      }
       val i8FenceRecall = (i8pruned & i8full).size.toDouble / i8full.size
       println(f"[ScaleMechanicsSpec] composed IMI-int8, ANN grid pSub=8: " +
         f"fence recall vs unpruned=$i8FenceRecall%.3f")
@@ -493,7 +536,7 @@ class ScaleMechanicsSpec extends SparkSpec {
       // pinned with margin under measurement
       assert(i8FenceRecall >= 0.65,
         f"int8 fence recall $i8FenceRecall%.3f collapsed at depth 8")
-    }
+    } finally encodes.foreach(_.unpersist())
   }
 
   test("IVFADC residual face: measured WIN on a tight-cluster corpus (the pick-by-geometry case)") {
@@ -508,6 +551,7 @@ class ScaleMechanicsSpec extends SparkSpec {
     // codebook budget — else the "pick by corpus geometry" guidance gets
     // demoted, not defended.
     import graft.data.Similarity
+    import graft.data.Similarity.{Fence, Scorer}
     val n = 50000L
     val emb = spark.range(n).map { id =>
       val dim = 64
@@ -525,7 +569,7 @@ class ScaleMechanicsSpec extends SparkSpec {
         emb, "vec_id", "embedding", kSub, iters = 2,
         sampleN = Similarity.imiTrainSampleN(kSub))
       val q = emb.filter(pmod($"vec_id", lit(401)) === 0)
-      val brute = Similarity.bruteTopK(emb, q, "vec_id", "embedding", 10)
+      val brute = Similarity.topK(emb, q, "vec_id", "embedding", Fence.All, Scorer.Cosine, 10)
         .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
       assert(brute.size > 1000, s"ground-truth sample too thin: ${brute.size}")
       def recallOf(df: org.apache.spark.sql.DataFrame): Double = {
@@ -536,16 +580,17 @@ class ScaleMechanicsSpec extends SparkSpec {
       val cbs256t = Similarity.pqCodebooksTrainedDet(
         emb, "vec_id", "embedding", m = 8, k = 256, iters = 2,
         sampleN = Similarity.imiTrainSampleN(256))
-      val composedT = recallOf(Similarity.pqTopKPrunedImi(
-        emb, q, "vec_id", "embedding", icbs, cbs256t, k = 10, pSub = 8,
-        nearestEncode = true))
+      val composedT = recallOf(Similarity.topK(
+        emb, q, "vec_id", "embedding", Fence.Imi(icbs, pSub = 8),
+        Scorer.Adc(cbs256t, nearest = true), k = 10))
       val residDf = emb.select(
         $"vec_id", Similarity.imiResidual($"embedding", icbs).as("_rv"))
       val rcbs256 = Similarity.pqCodebooksTrainedDet(
         residDf, "vec_id", "_rv", m = 8, k = 256, iters = 2,
         sampleN = Similarity.imiTrainSampleN(256))
-      val composedR = recallOf(Similarity.pqTopKPrunedImiResidual(
-        emb, q, "vec_id", "embedding", icbs, rcbs256, k = 10, pSub = 8))
+      val composedR = recallOf(Similarity.topK(
+        emb, q, "vec_id", "embedding", Fence.Imi(icbs, pSub = 8),
+        Scorer.ResidualAdc(rcbs256), k = 10))
       println(f"[ScaleMechanicsSpec] tight-cluster corpus (σ=0.15): trained-raw $composedT%.3f, " +
         f"residual $composedR%.3f")
       info(f"tight-cluster: composedT=$composedT%.3f composedR=$composedR%.3f")
@@ -557,6 +602,7 @@ class ScaleMechanicsSpec extends SparkSpec {
 
   test("persisted ANN index: indexed face ≡ inline face row-for-row; probed cells become bucket pruning") {
     import graft.data.Similarity
+    import graft.data.Similarity.{Fence, Scorer}
     val corpus = opCorpus.limit(4000).cache()
     corpus.count()
     val icbs = Similarity.imiCodebooks(corpus, "vec_id", "embedding", 4)
@@ -564,41 +610,37 @@ class ScaleMechanicsSpec extends SparkSpec {
     val q = corpus.filter($"vec_id" % 401 === 0)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Int, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
-    val inline = rows(Similarity.pqTopKPrunedImi(
-      corpus, q, "vec_id", "embedding", icbs, pcbs, k = 5, pSub = 2))
+    val fence2 = Fence.Imi(icbs, pSub = 2)
+    val adc = Scorer.Adc(pcbs)
+    val inline = rows(Similarity.topK(corpus, q, "vec_id", "embedding", fence2, adc, k = 5))
     val dir = java.nio.file.Files.createTempDirectory("graft_ann_idx_spec").toString
     val idx = graft.connectors.Bucketing.ensureBucketed(
       spark,
-      Similarity.encodeImiPq(corpus, "vec_id", "embedding", icbs, pcbs),
+      Similarity.encode(corpus, "vec_id", "embedding", fence2, adc),
       "graft_ann_idx_spec", dir, "n_bk", 8, sourceStamp = "spec")
     // row-identical to the inline face — the index changes the read path,
-    // never the answer (with and without the pruning filter)
-    assert(rows(Similarity.pqTopKPrunedImiIndexed(
-      idx, q, "vec_id", "embedding", icbs, pcbs, k = 5, pSub = 2)) === inline)
-    assert(rows(Similarity.pqTopKPrunedImiIndexed(
-      idx, q, "vec_id", "embedding", icbs, pcbs, k = 5, pSub = 2,
-      pruneBuckets = false)) === inline)
+    // never the answer (the unpruned read is the maxPruneCells = 1 arm below)
+    assert(rows(Similarity.topKIndexed(idx, q, "vec_id", "embedding", fence2, adc, k = 5)) === inline)
     // the 100 TB contract: a single query at pSub=1 probes ONE cell, and
     // the index scan must read only that cell's bucket — not the corpus
     val someId = corpus.agg(min($"vec_id")).as[Long].head()
     val one = corpus.filter($"vec_id" === someId)
-    val plan = Similarity.pqTopKPrunedImiIndexed(
-      idx, one, "vec_id", "embedding", icbs, pcbs, k = 5, pSub = 1)
+    val plan = Similarity.topKIndexed(idx, one, "vec_id", "embedding", Fence.Imi(icbs), adc, k = 5)
       .queryExecution.executedPlan.toString
     val sel = "SelectedBucketsCount: (\\d+) out of 8".r.findFirstMatchIn(plan)
     assert(sel.isDefined, s"no bucket pruning in the indexed scan:\n${plan.take(2000)}")
     assert(sel.get.group(1).toInt === 1,
       s"single-cell probe read ${sel.get.group(1)} buckets, expected 1")
     // oversized probe sets skip the IN filter instead of bloating the plan
-    val unpruned = Similarity.pqTopKPrunedImiIndexed(
-      idx, q, "vec_id", "embedding", icbs, pcbs, k = 5, pSub = 2, maxPruneCells = 1)
+    val unpruned = Similarity.topKIndexed(
+      idx, q, "vec_id", "embedding", fence2, adc, k = 5, maxPruneCells = 1)
     assert(rows(unpruned) === inline)
     corpus.unpersist()
   }
 
   test("persisted ANN index: appending a delta's encodes ≡ re-encoding the union (build once, append per batch)") {
     // the near-dup band index's append-equivalence rule applied to the ANN
-    // index: encodeImiPq is a pure per-row function of (vector, codebooks),
+    // index: Similarity.encode is a pure per-row function of (vector, models),
     // so Bucketing.appendBucketed over a delta's encodes must equal a full
     // rebuild over corpus ∪ delta — the maintenance path a production index
     // runs per ingest batch instead of re-encoding 100 TB
@@ -608,20 +650,19 @@ class ScaleMechanicsSpec extends SparkSpec {
     val delta = opCorpus.filter($"vec_id" >= 3000L && $"vec_id" < 3300L)
     val icbs = Similarity.imiCodebooks(corpus, "vec_id", "embedding", 4)
     val pcbs = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 8, k = 16)
+    def encode(df: org.apache.spark.sql.DataFrame) = Similarity.encode(
+      df, "vec_id", "embedding", Similarity.Fence.Imi(icbs), Similarity.Scorer.Adc(pcbs))
     val dir = java.nio.file.Files.createTempDirectory("graft_ann_idx_append").toString
     val table = "graft_ann_idx_append_spec"
     graft.connectors.Bucketing.ensureBucketed(
-      spark, Similarity.encodeImiPq(corpus, "vec_id", "embedding", icbs, pcbs),
-      table, dir, "n_bk", 8, sourceStamp = "specA")
+      spark, encode(corpus), table, dir, "n_bk", 8, sourceStamp = "specA")
     graft.connectors.Bucketing.appendBucketed(
-      spark, Similarity.encodeImiPq(delta, "vec_id", "embedding", icbs, pcbs),
-      table, dir, "n_bk", 8, newSourceStamp = "specB")
+      spark, encode(delta), table, dir, "n_bk", 8, newSourceStamp = "specB")
     def rowSet(df: org.apache.spark.sql.DataFrame) =
       df.select($"n_id", $"n_bk", $"n_codes").as[(Long, Int, Seq[Int])]
         .collect().map(r => (r._1, r._2, r._3.toVector)).toSet
     val appended = rowSet(spark.table(table))
-    val rebuilt = rowSet(Similarity.encodeImiPq(
-      corpus.unionByName(delta), "vec_id", "embedding", icbs, pcbs))
+    val rebuilt = rowSet(encode(corpus.unionByName(delta)))
     assert(appended === rebuilt, "appended ANN index drifted from a full re-encode")
     // the post-append stamp re-registers; the by-name frame must not evaluate
     val reRead = graft.connectors.Bucketing.ensureBucketed(

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.data.Similarity
+import graft.data.Similarity.{Fence, Scorer}
 
 /** Sign-LSH ANN: native-expression parity, multi-probe semantics, and the
   * recall@k contract vs the exact brute-force baseline (VERDICT r2 #1/#7).
@@ -74,18 +75,19 @@ class SimilaritySpec extends SparkSpec {
     val cplanes = Similarity.hyperplanes(nbits, cdim)
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("q_id", "n_id").as[(Long, Long)].collect().toSet
-    val brute = pairs(Similarity.bruteTopK(corpus, queries, "vec_id", "embedding", 10))
+    val brute = pairs(Similarity.topK(corpus, queries, "vec_id", "embedding", Fence.All, Scorer.Cosine, 10))
     val base = corpus
       .withColumn("_dots", Similarity.lshDots($"embedding", cplanes))
       .withColumn("_bk", Similarity.lshBucketFromDots($"_dots", nbits))
-    val single = pairs(
-      Similarity.bucketedTopK(base, base.filter($"vec_id" % 16 === 0), "vec_id", "embedding", "_bk", 10))
+    val single = pairs(Similarity.topK(
+      base, base.filter($"vec_id" % 16 === 0), "vec_id", "embedding",
+      Fence.Column("_bk"), Scorer.Cosine, 10))
     val multi = pairs(
-      Similarity.multiProbeTopK(
+      Similarity.topK(
         base,
         base.filter($"vec_id" % 16 === 0)
           .withColumn("_probes", Similarity.lshProbes($"_dots", nbits, 4)),
-        "vec_id", "embedding", "_bk", "_probes", 10))
+        "vec_id", "embedding", Fence.Probes("_bk", "_probes"), Scorer.Cosine, 10))
     val rSingle = single.intersect(brute).size.toDouble / brute.size
     val rMulti = multi.intersect(brute).size.toDouble / brute.size
     info(f"clustered recall@10: single-probe=$rSingle%.3f  multiprobe(4 flips)=$rMulti%.3f")
@@ -123,12 +125,12 @@ class SimilaritySpec extends SparkSpec {
       .withColumn("dot", dot)
       .withColumn("rk", row_number().over(w)).filter($"rk" <= 10)
       .select($"q_id", $"vec_id".as("n_id")).as[(Long, Long)].collect().toSet
-    val pq = Similarity.pqTopK(corpus, queries, "vec_id", "embedding", cbs, 10)
+    val pq = Similarity.topK(corpus, queries, "vec_id", "embedding", Fence.All, Scorer.Adc(cbs), 10)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
     val recall = pq.intersect(exact).size.toDouble / exact.size
     // the production path: per-subspace Lloyd-trained codebooks
     val trained = Similarity.pqCodebooksTrained(corpus, "vec_id", "embedding", m = 4, k = 16, iters = 3)
-    val pqT = Similarity.pqTopK(corpus, queries, "vec_id", "embedding", trained, 10)
+    val pqT = Similarity.topK(corpus, queries, "vec_id", "embedding", Fence.All, Scorer.Adc(trained), 10)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
     val recallT = pqT.intersect(exact).size.toDouble / exact.size
     info(f"PQ recall@10 vs exact MIPS: seeded=$recall%.3f trained=$recallT%.3f")
@@ -164,7 +166,7 @@ class SimilaritySpec extends SparkSpec {
       .withColumn("dot", dot)
       .withColumn("rk", row_number().over(w)).filter($"rk" <= 10)
       .select($"q_id", $"vec_id".as("n_id")).as[(Long, Long)].collect().toSet
-    val got = Similarity.int8TopK(corpus, queries, "vec_id", "embedding", 10)
+    val got = Similarity.topK(corpus, queries, "vec_id", "embedding", Fence.All, Scorer.Int8, 10)
       .select($"q_id", $"n_id", $"idot").as[(Long, Long, Long)].collect()
     val recall = got.map(r => (r._1, r._2)).toSet.intersect(exact).size.toDouble / exact.size
     info(f"int8 recall@10 vs exact MIPS: $recall%.3f")
@@ -187,19 +189,19 @@ class SimilaritySpec extends SparkSpec {
     val corpus = emb.limit(200)
     val queries = corpus.filter($"vec_id" % 25 === 0)
     val cents = Similarity.seedCentroids(corpus, "vec_id", "embedding", 16)
-    val full = Similarity.int8TopK(corpus, queries, "vec_id", "embedding", 10)
+    val full = Similarity.topK(corpus, queries, "vec_id", "embedding", Fence.All, Scorer.Int8, 10)
       .select("q_id", "n_id", "rank", "idot", "approx_e6")
       .as[(Long, Long, Int, Long, Long)].collect().toSet
     // probing every bucket removes the prune — must reproduce the unpruned
     // face row for row (ranks, integer dots, rescaled scores, tiebreaks)
-    val all = Similarity.int8TopKPruned(
-      corpus, queries, "vec_id", "embedding", cents, 10, probes = cents.length)
+    val all = Similarity.topK(
+      corpus, queries, "vec_id", "embedding", Fence.Ivf(cents, probes = cents.length), Scorer.Int8, 10)
       .select("q_id", "n_id", "rank", "idot", "approx_e6")
       .as[(Long, Long, Int, Long, Long)].collect().toSet
-    assert(all === full, "probes=all must be bit-identical to unpruned int8TopK")
+    assert(all === full, "probes=all must be bit-identical to the unpruned int8 face")
     // probes=2: a pruned survivor's scores must equal the unpruned scores
-    val pruned = Similarity.int8TopKPruned(
-      corpus, queries, "vec_id", "embedding", cents, 10, probes = 2)
+    val pruned = Similarity.topK(
+      corpus, queries, "vec_id", "embedding", Fence.Ivf(cents, probes = 2), Scorer.Int8, 10)
       .select("q_id", "n_id", "idot", "approx_e6").as[(Long, Long, Long, Long)].collect()
     val fullScores = full.map { case (q, n, _, d, a) => (q, n) -> ((d, a)) }.toMap
     pruned.foreach { case (q, n, d, a) =>
@@ -210,6 +212,17 @@ class SimilaritySpec extends SparkSpec {
     info(f"IVF-pruned int8 recall@10 vs unpruned=$recall%.3f")
     println(f"[SimilaritySpec] IVF-pruned int8: recall@10 vs unpruned=$recall%.3f")
     assert(recall > 0.0, "pruned face returned nothing — bucketing degenerated")
+    // the same rule for the cosine scorer's precomputed-bucket fence: one
+    // bucket shared by every row removes the prune, so Fence.Column must
+    // reproduce Fence.All row for row
+    def cosRows(df: org.apache.spark.sql.DataFrame) =
+      df.select("q_id", "n_id", "rank", "cos_e6").as[(Long, Long, Int, Long)].collect().toSet
+    val oneBucket = corpus.withColumn("_one", lit(0))
+    assert(cosRows(Similarity.topK(
+      oneBucket, oneBucket.filter($"vec_id" % 25 === 0), "vec_id", "embedding",
+      Fence.Column("_one"), Scorer.Cosine, 10)) ===
+      cosRows(Similarity.topK(corpus, queries, "vec_id", "embedding", Fence.All, Scorer.Cosine, 10)),
+      "a single shared bucket must be bit-identical to the unfenced cosine face")
   }
 
   test("IVF-pruned PQ: probes=all ≡ unpruned ADC; probes=2 recall measured, candidates cut") {
@@ -227,21 +240,21 @@ class SimilaritySpec extends SparkSpec {
     val queries = corpus.filter($"vec_id" % 16 === 0)
     val cents = Similarity.seedCentroids(corpus, "vec_id", "embedding", 16)
     val cbs = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, k = 16)
-    val full = Similarity.pqTopK(corpus, queries, "vec_id", "embedding", cbs, 10)
+    val full = Similarity.topK(corpus, queries, "vec_id", "embedding", Fence.All, Scorer.Adc(cbs), 10)
       .select("q_id", "n_id", "rank", "score_e6")
       .as[(Long, Long, Int, Long)].collect().toSet
     // probing EVERY coarse bucket removes the pruning entirely — the
     // composed operator must then reproduce the unpruned ADC face row for
     // row (ranks, scores, tiebreaks), proving the prune is the ONLY delta
-    val all = Similarity.pqTopKPruned(
-      corpus, queries, "vec_id", "embedding", cents, cbs, 10, probes = cents.length)
+    val all = Similarity.topK(
+      corpus, queries, "vec_id", "embedding", Fence.Ivf(cents, probes = cents.length), Scorer.Adc(cbs), 10)
       .select("q_id", "n_id", "rank", "score_e6")
       .as[(Long, Long, Int, Long)].collect().toSet
-    assert(all === full, "probes=all must be bit-identical to unpruned pqTopK")
+    assert(all === full, "probes=all must be bit-identical to the unpruned ADC face")
     // probes=2: pruning can only DROP candidates, never invent them —
     // every surviving neighbor's score must match the unpruned score
-    val pruned = Similarity.pqTopKPruned(
-      corpus, queries, "vec_id", "embedding", cents, cbs, 10, probes = 2)
+    val pruned = Similarity.topK(
+      corpus, queries, "vec_id", "embedding", Fence.Ivf(cents, probes = 2), Scorer.Adc(cbs), 10)
       .select("q_id", "n_id", "score_e6").as[(Long, Long, Long)].collect()
     val fullScores = full.map { case (q, n, _, s) => (q, n) -> s }.toMap
     pruned.foreach { case (q, n, s) =>
@@ -265,25 +278,38 @@ class SimilaritySpec extends SparkSpec {
     // 2-probe pruning should retain most of the unpruned top-10
     assert(recall >= 0.7, f"IVF-pruned recall $recall%.3f collapsed")
     assert(bucketed.size > 1, "coarse quantizer degenerated to one bucket")
+    // the cosine scorer's multi-probe fence at full depth: a probe list of
+    // every bucket must reproduce Fence.All row for row
+    def cosRows(df: org.apache.spark.sql.DataFrame) =
+      df.select("q_id", "n_id", "rank", "cos_e6").as[(Long, Long, Int, Long)].collect().toSet
+    val probed = corpus
+      .withColumn("_bk", Similarity.assignNearest($"embedding".cast("array<double>"), cents))
+      .withColumn("_probes", sequence(lit(0), lit(cents.length - 1)))
+    assert(cosRows(Similarity.topK(
+      probed, probed.filter($"vec_id" % 16 === 0), "vec_id", "embedding",
+      Fence.Probes("_bk", "_probes"), Scorer.Cosine, 10)) ===
+      cosRows(Similarity.topK(corpus, queries, "vec_id", "embedding", Fence.All, Scorer.Cosine, 10)),
+      "probing every bucket must be bit-identical to the unfenced cosine face")
   }
 
   test("multi-probe recall@10 vs brute beats single-probe (measured, not assumed)") {
     val queries = emb.filter($"vec_id" % 25 === 0)
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("q_id", "n_id").as[(Long, Long)].collect().toSet
-    val brute = pairs(Similarity.bruteTopK(emb, queries, "vec_id", "embedding", 10))
+    val brute = pairs(Similarity.topK(emb, queries, "vec_id", "embedding", Fence.All, Scorer.Cosine, 10))
 
     val base = emb
       .withColumn("_dots", Similarity.lshDots($"embedding", planes))
       .withColumn("_bk", Similarity.lshBucketFromDots($"_dots", nbits))
-    val single = pairs(
-      Similarity.bucketedTopK(base, base.filter($"vec_id" % 25 === 0), "vec_id", "embedding", "_bk", 10))
+    val single = pairs(Similarity.topK(
+      base, base.filter($"vec_id" % 25 === 0), "vec_id", "embedding",
+      Fence.Column("_bk"), Scorer.Cosine, 10))
     def multi(flips: Int): Set[(Long, Long)] = pairs(
-      Similarity.multiProbeTopK(
+      Similarity.topK(
         base,
         base.filter($"vec_id" % 25 === 0)
           .withColumn("_probes", Similarity.lshProbes($"_dots", nbits, flips)),
-        "vec_id", "embedding", "_bk", "_probes", 10))
+        "vec_id", "embedding", Fence.Probes("_bk", "_probes"), Scorer.Cosine, 10))
 
     val rSingle = single.intersect(brute).size.toDouble / brute.size
     val r2 = multi(2).intersect(brute).size.toDouble / brute.size
@@ -528,23 +554,37 @@ class SimilaritySpec extends SparkSpec {
       // rank pairs (0,0), (0,1), (1,0)
       id -> Set(t0(0) * kSub + t1(0), t0(0) * kSub + t1(1), t0(1) * kSub + t1(0))
     }
+    // the deepest fence, pSub = kSub: every rank pair with r0 + r1 < kSub
+    // over the full per-half codeword order (ties → lowest index) —
+    // kSub(kSub+1)/2 of the kSub² cells, so full depth is not "no fence"
+    def ranked(hv: Seq[Double], cws: Seq[Seq[Double]]): Seq[Int] = {
+      val dots = cws.map(cw => hv.lazyZip(cw).map(_ * _).sum)
+      dots.indices.sortBy(j => (-dots(j), j))
+    }
+    val deepProbesOf: Map[Long, Set[Int]] = vecs.map { case (id, v) =>
+      val Seq(h0, h1) = halves(v)
+      val (r0, r1) = (ranked(h0, icbs(0)), ranked(h1, icbs(1)))
+      id -> (for (a <- 0 until kSub; b <- 0 until kSub if a + b < kSub) yield r0(a) * kSub + r1(b)).toSet
+    }
 
-    // ADC face: the proven unpruned pqTopK at k=n yields the FULL exact
+    // ADC face: the proven unpruned ADC face at k=n yields the FULL exact
     // ranking (its rank column orders by the exact doubles, not the floored
     // _e6) — fence it to the replayed probe cells and re-rank in the
     // driver; the composed operator must match exactly
-    val fullPq = Similarity.pqTopK(corpus, queries, "vec_id", "embedding", cbs, n)
+    val fullPq = Similarity.topK(corpus, queries, "vec_id", "embedding", Fence.All, Scorer.Adc(cbs), n)
       .select("q_id", "n_id", "rank", "score_e6").as[(Long, Long, Int, Long)].collect()
     val qIds = queries.select("vec_id").as[Long].collect().toSet
-    def expected(full: Seq[(Long, Long, Int, Long)]): Set[(Long, Long, Int, Long)] =
+    def expected(
+        full: Seq[(Long, Long, Int, Long)],
+        probes: Map[Long, Set[Int]] = probesOf): Set[(Long, Long, Int, Long)] =
       full.groupBy(_._1).flatMap { case (q, rows) =>
-        rows.filter { case (_, nid, _, _) => probesOf(q).contains(cellOf(nid)) }
+        rows.filter { case (_, nid, _, _) => probes(q).contains(cellOf(nid)) }
           .sortBy(_._3)
           .take(10).zipWithIndex
           .map { case ((_, nid, _, s), i) => (q, nid, i + 1, s) }
       }.toSet
-    val gotPq = Similarity.pqTopKPrunedImi(
-      corpus, queries, "vec_id", "embedding", icbs, cbs, k = 10, pSub = 2)
+    val gotPq = Similarity.topK(
+      corpus, queries, "vec_id", "embedding", Fence.Imi(icbs, pSub = 2), Scorer.Adc(cbs), k = 10)
       .select("q_id", "n_id", "rank", "score_e6")
       .as[(Long, Long, Int, Long)].collect().toSet
     assert(gotPq === expected(fullPq),
@@ -552,11 +592,11 @@ class SimilaritySpec extends SparkSpec {
     assert(gotPq.nonEmpty && qIds.forall(q => gotPq.exists(_._1 == q)),
       "every query must surface candidates through its probe cells")
 
-    // int8 face: same fence, exact ranking from the unpruned int8TopK
-    val fullI8 = Similarity.int8TopK(corpus, queries, "vec_id", "embedding", n)
+    // int8 face: same fence, exact ranking from the unpruned int8 face
+    val fullI8 = Similarity.topK(corpus, queries, "vec_id", "embedding", Fence.All, Scorer.Int8, n)
       .select("q_id", "n_id", "rank", "approx_e6").as[(Long, Long, Int, Long)].collect()
-    val gotI8 = Similarity.int8TopKPrunedImi(
-      corpus, queries, "vec_id", "embedding", icbs, k = 10, pSub = 2)
+    val gotI8 = Similarity.topK(
+      corpus, queries, "vec_id", "embedding", Fence.Imi(icbs, pSub = 2), Scorer.Int8, k = 10)
       .select("q_id", "n_id", "rank", "approx_e6")
       .as[(Long, Long, Int, Long)].collect().toSet
     assert(gotI8 === expected(fullI8),
@@ -571,24 +611,53 @@ class SimilaritySpec extends SparkSpec {
           .take(10).zipWithIndex
           .map { case ((_, nid, _, s), i) => (qid, nid, i + 1, s) }
       }.toSet
-    val gotPq1 = Similarity.pqTopKPrunedImi(
-      corpus, queries, "vec_id", "embedding", icbs, cbs, k = 10, pSub = 1)
+    val gotPq1 = Similarity.topK(
+      corpus, queries, "vec_id", "embedding", Fence.Imi(icbs), Scorer.Adc(cbs), k = 10)
       .select("q_id", "n_id", "rank", "score_e6")
       .as[(Long, Long, Int, Long)].collect().toSet
     assert(gotPq1 === expected1(fullPq),
       "pSub=1 ADC must equal the full ranking fenced to the single replayed cell")
-    val gotI81 = Similarity.int8TopKPrunedImi(
-      corpus, queries, "vec_id", "embedding", icbs, k = 10, pSub = 1)
+    val gotI81 = Similarity.topK(
+      corpus, queries, "vec_id", "embedding", Fence.Imi(icbs), Scorer.Int8, k = 10)
       .select("q_id", "n_id", "rank", "approx_e6")
       .as[(Long, Long, Int, Long)].collect().toSet
     assert(gotI81 === expected1(fullI8),
       "pSub=1 int8 must equal the full ranking fenced to the single replayed cell")
 
+    // full depth, pSub = kSub: the fence still changes only WHICH pairs are
+    // scored — both scorers equal their unfenced ranking restricted to the
+    // replayed deepest probe set
+    Seq((Scorer.Adc(cbs), "score_e6", fullPq), (Scorer.Int8, "approx_e6", fullI8)).foreach {
+      case (scorer, scoreCol, full) =>
+        val deep = Similarity.topK(
+          corpus, queries, "vec_id", "embedding", Fence.Imi(icbs, pSub = kSub), scorer, k = 10)
+          .select("q_id", "n_id", "rank", scoreCol)
+          .as[(Long, Long, Int, Long)].collect().toSet
+        assert(deep === expected(full, deepProbesOf),
+          s"pSub=kSub $scorer must equal the full ranking fenced to the deepest replayed probe set")
+    }
+    // residual ADC has no unfenced face (it codes against the cells): its
+    // deepest fence must score exactly the replayed candidates, with the
+    // SAME score as the pSub=2 fence on every pair both score
+    val rcbs = Similarity.pqCodebooks(
+      corpus.select($"vec_id", Similarity.imiResidual($"embedding", icbs).as("_rv")),
+      "vec_id", "_rv", m = 8, k = 16)
+    def residualScores(pSub: Int): Map[(Long, Long), Long] = Similarity.topK(
+      corpus, queries, "vec_id", "embedding", Fence.Imi(icbs, pSub), Scorer.ResidualAdc(rcbs), k = n)
+      .select("q_id", "n_id", "score_e6").as[(Long, Long, Long)].collect()
+      .map(r => (r._1, r._2) -> r._3).toMap
+    val (shallowR, deepR) = (residualScores(2), residualScores(kSub))
+    assert(deepR.keySet === qIds.flatMap(q =>
+      vecs.keySet.filter(nid => nid != q && deepProbesOf(q).contains(cellOf(nid))).map(q -> _)),
+      "pSub=kSub residual face must score exactly the replayed deepest-fence candidates")
+    assert(shallowR.nonEmpty && shallowR.forall { case (pair, sc) => deepR.get(pair).contains(sc) },
+      "residual scores must not depend on the fence depth")
+
     // 100 TB plan shape: the query side (probes + LUT) BROADCASTS into the
     // fence join — the corpus side is one scan, never a shuffle-side of a
     // sort-merge join
-    val composedPlan = Similarity.pqTopKPrunedImi(
-      corpus, queries, "vec_id", "embedding", icbs, cbs, k = 10, pSub = 2)
+    val composedPlan = Similarity.topK(
+      corpus, queries, "vec_id", "embedding", Fence.Imi(icbs, pSub = 2), Scorer.Adc(cbs), k = 10)
       .queryExecution.executedPlan.toString
     assert(composedPlan.contains("BroadcastHashJoin"), composedPlan.take(2000))
     assert(!composedPlan.contains("SortMergeJoin"), composedPlan.take(2000))
@@ -612,8 +681,8 @@ class SimilaritySpec extends SparkSpec {
     val n = corpus.count().toInt
 
     // exact ranking over the whole corpus (rank column = exact-double
-    // cosine order, like the pqTopK ranks above)
-    val brute = Similarity.bruteTopK(corpus, queries, "vec_id", "embedding", n)
+    // cosine order, like the unpruned ADC ranks above)
+    val brute = Similarity.topK(corpus, queries, "vec_id", "embedding", Fence.All, Scorer.Cosine, n)
       .select("q_id", "n_id", "rank", "cos_e6").as[(Long, Long, Int, Long)].collect()
 
     // the rerank contract: final rows == exact-cosine ranking RESTRICTED
@@ -626,14 +695,13 @@ class SimilaritySpec extends SparkSpec {
           .map { case ((_, nid, _, c), i) => (q, nid, i + 1, c) }
       }.toSet
 
+    val (fence2, adc) = (Fence.Imi(icbs, pSub = 2), Scorer.Adc(cbs))
     Seq(30, n).foreach { r =>
-      val shortSets = Similarity.pqTopKPrunedImi(
-        corpus, queries, "vec_id", "embedding", icbs, cbs, k = r, pSub = 2)
+      val shortSets = Similarity.topK(corpus, queries, "vec_id", "embedding", fence2, adc, k = r)
         .select("q_id", "n_id").as[(Long, Long)].collect()
         .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      val got = Similarity.pqTopKPrunedImiRerank(
-        corpus, queries, "vec_id", "embedding", icbs, cbs,
-        k = 10, rerankR = r, pSub = 2)
+      val got = Similarity.rerank(
+        corpus, queries, "vec_id", "embedding", fence2, adc, k = 10, rerankR = r)
         .select("q_id", "n_id", "rank", "cos_e6")
         .as[(Long, Long, Int, Long)].collect().toSet
       assert(got === expectedOn(shortSets),
@@ -643,11 +711,10 @@ class SimilaritySpec extends SparkSpec {
     // the lever, measured at fixture scale: rerank recall vs the ADC-only
     // composed face against the exact top-10
     val bruteTop = brute.filter(_._3 <= 10).map(x => (x._1, x._2)).toSet
-    val adcPairs = Similarity.pqTopKPrunedImi(
-      corpus, queries, "vec_id", "embedding", icbs, cbs, k = 10, pSub = 2)
+    val adcPairs = Similarity.topK(corpus, queries, "vec_id", "embedding", fence2, adc, k = 10)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
-    val rrPairs = Similarity.pqTopKPrunedImiRerank(
-      corpus, queries, "vec_id", "embedding", icbs, cbs, k = 10, rerankR = 30, pSub = 2)
+    val rrPairs = Similarity.rerank(
+      corpus, queries, "vec_id", "embedding", fence2, adc, k = 10, rerankR = 30)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
     val adcRecall = adcPairs.intersect(bruteTop).size.toDouble / bruteTop.size
     val rrRecall = rrPairs.intersect(bruteTop).size.toDouble / bruteTop.size
@@ -658,8 +725,8 @@ class SimilaritySpec extends SparkSpec {
     // 100 TB plan shape: the shortlist and the query vectors BROADCAST
     // back against the full-vector corpus scan — refinement adds no
     // corpus-sized shuffle
-    val plan = Similarity.pqTopKPrunedImiRerank(
-      corpus, queries, "vec_id", "embedding", icbs, cbs, k = 10, rerankR = 30, pSub = 2)
+    val plan = Similarity.rerank(
+      corpus, queries, "vec_id", "embedding", fence2, adc, k = 10, rerankR = 30)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
     assert(!plan.contains("SortMergeJoin"), plan.take(2000))
@@ -678,8 +745,8 @@ class SimilaritySpec extends SparkSpec {
     // realized: the composed face at k = n keeps EVERY fence survivor, so
     // its per-query row count IS the join's candidate volume
     Seq(1, 2).foreach { p =>
-      val realized = Similarity.pqTopKPrunedImi(
-        corpus, queries, "vec_id", "embedding", icbs, cbs, k = n, pSub = p)
+      val realized = Similarity.topK(
+        corpus, queries, "vec_id", "embedding", Fence.Imi(icbs, pSub = p), Scorer.Adc(cbs), k = n)
         .groupBy("q_id").count()
         .as[(Long, Long)].collect().toMap
       val est = Similarity.imiFenceCandidateCounts(
@@ -759,9 +826,9 @@ class SimilaritySpec extends SparkSpec {
     val cbs = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 8, k = 16)
 
     val eRr = intercept[IllegalStateException] {
-      Similarity.pqTopKPrunedImiRerank(
-        corpus, queries, "vec_id", "embedding", icbs, cbs,
-        k = 10, rerankR = 30, pSub = 2, maxBroadcastRows = 100L) // 8·30 = 240 > 100
+      Similarity.rerank(
+        corpus, queries, "vec_id", "embedding", Fence.Imi(icbs, pSub = 2), Scorer.Adc(cbs),
+        k = 10, rerankR = 30, maxBroadcastRows = 100L) // 8·30 = 240 > 100
     }
     assert(eRr.getMessage.contains("broadcast flood") &&
       eRr.getMessage.contains("maxBroadcastRows=100") &&
@@ -839,13 +906,17 @@ class SimilaritySpec extends SparkSpec {
       corpus, queries, "vec_id", "embedding", icbs, pSubs, budget)
       .filter($"chosen").as[(Int, Long, Long, Boolean, Boolean)].collect()
     assert(chosen.length === 1)
-    val auto = Similarity.pqTopKPrunedImiRerankAuto(
-      corpus, queries, "vec_id", "embedding", icbs, cbs,
-      k = 10, rerankR = 30, pSubs = pSubs, maxCandPerQuery = budget)
+    // the auto face: a fresh plan's chosen depth, then rerank
+    val autoDepth = Similarity.imiProbePlan(
+      corpus, queries, "vec_id", "embedding", icbs, pSubs, maxCandPerQuery = budget)
+      .filter($"chosen").select($"p_sub").as[Int].head()
+    val auto = Similarity.rerank(
+      corpus, queries, "vec_id", "embedding", Fence.Imi(icbs, pSub = autoDepth), Scorer.Adc(cbs),
+      k = 10, rerankR = 30)
       .as[(Long, Long, Int, Long)].collect().toSet
-    val manual = Similarity.pqTopKPrunedImiRerank(
-      corpus, queries, "vec_id", "embedding", icbs, cbs,
-      k = 10, rerankR = 30, pSub = chosen.head._1)
+    val manual = Similarity.rerank(
+      corpus, queries, "vec_id", "embedding", Fence.Imi(icbs, pSub = chosen.head._1), Scorer.Adc(cbs),
+      k = 10, rerankR = 30)
       .as[(Long, Long, Int, Long)].collect().toSet
     assert(auto === manual, "auto face must equal the manual face at the chosen depth")
   }
@@ -867,9 +938,9 @@ class SimilaritySpec extends SparkSpec {
     // the point of persistence: a reader JVM's model reproduces the writer's
     // scores row-for-row
     val queries = e.filter(org.apache.spark.sql.functions.col("vec_id") % 100 === 0)
-    val trained = Similarity.pqTopK(e, queries, "vec_id", "embedding", cbs, k = 5)
+    val trained = Similarity.topK(e, queries, "vec_id", "embedding", Fence.All, Scorer.Adc(cbs), k = 5)
       .collect().map(_.toString).sorted
-    val reloaded = Similarity.pqTopK(e, queries, "vec_id", "embedding", cbsBack, k = 5)
+    val reloaded = Similarity.topK(e, queries, "vec_id", "embedding", Fence.All, Scorer.Adc(cbsBack), k = 5)
       .collect().map(_.toString).sorted
     assert(reloaded === trained)
   }

@@ -556,6 +556,50 @@ class StreamingIngestSpec extends SparkSpec {
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
+  test("compaction bumps the marker generation: a bracketing marker read sees it; stamp, spec and the pinned base read still accept") {
+    // a foreign JVM's compaction finishing between the pinned tail read's
+    // two marker reads must change the marker: equal reads would let a
+    // listing taken mid-swap miss the swapped-in files silently
+    import graft.connectors.{Bucketing, MultiWriterIndex}
+    val root = java.nio.file.Files.createTempDirectory("marker_gen").toString
+    val (dir, table) = (s"$root/plain", "graft_marker_gen_spec")
+    val (idx, mwTable) = (s"$root/idx", "graft_mw_gen_spec")
+    def rows(ks: Range) = ks.map(k => (k.toLong, s"val$k")).toDF("k", "v")
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.as[(Long, String)].collect().toSeq.sorted
+    try {
+      Bucketing.ensureBucketed(spark, rows(0 until 16), table, dir, "k", 4, sourceStamp = "s0")
+      Bucketing.appendBucketed(spark, rows(16 until 32), table, dir, "k", 4, "s1")
+      val before = Bucketing.readMarkerContent(dir)
+      Bucketing.compactBucketed(spark, table, dir, "k", 4)
+      val after = Bucketing.readMarkerContent(dir)
+      assert(before.isDefined && after.isDefined && after != before,
+        "a compaction must change the marker content")
+      assert(Bucketing.readStamp(dir) === Some("s1"), "compaction must preserve the stamp")
+      // the build spec still matches: re-registration must not rebuild
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      val reReg = Bucketing.ensureBucketed(spark,
+        sys.error("a compacted marker must re-register, not rebuild"): org.apache.spark.sql.DataFrame,
+        table, dir, "k", 4, sourceStamp = "s1")
+      assert(sorted(reReg) === sorted(rows(0 until 32)))
+      // the multi-writer fold compacts its base; with an unfolded tail the
+      // read must still take the pinned base listing, not the log fallback
+      MultiWriterIndex.appendDelta(rows(0 until 16), idx, "w", 0L)
+      MultiWriterIndex.fold(spark, idx, mwTable, "k", 4).count()
+      MultiWriterIndex.appendDelta(rows(16 until 32), idx, "w", 1L)
+      MultiWriterIndex.fold(spark, idx, mwTable, "k", 4).count()
+      assert(Bucketing.readMarkerContent(s"$idx/base").exists(_.linesIterator.exists(_.startsWith("gen="))),
+        "the fold's compaction did not run")
+      MultiWriterIndex.appendDelta(rows(32 until 36), idx, "w", 2L)
+      val served = MultiWriterIndex.read(spark, idx, mwTable, "k", 4)
+      assert(sorted(served) === sorted(rows(0 until 36)))
+      assert(served.inputFiles.exists(_.contains(s"$idx/base/")),
+        s"the pinned base read refused a compacted marker: ${served.inputFiles.mkString(", ")}")
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      spark.sql(s"DROP TABLE IF EXISTS $mwTable")
+    }
+  }
+
   test("streaming compaction cadence: threshold compact INSIDE foreachBatch while the query runs — file counts bounded, fences and answers unchanged") {
     // VERDICT r18 #4: the maintenance-window arm above compacts while the
     // query is DOWN; production wants the unconditional per-batch call

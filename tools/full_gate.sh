@@ -15,7 +15,30 @@ if grep -rn --include='*.scala' 'SparkSession\.builder' src/main \
   echo "full_gate: SparkSession.builder outside core/GraftSession.scala" >&2
   exit 1
 fi
-sbt -batch "testOnly * -- -oD"
+# test-time budget: the full suite must finish inside a 2670 s timeout, so a run
+# over 90% of that (2400 s) fails here instead of silently on the timeout
+TEST_LOG=/tmp/graft_gate_tests.log
+TEST_START=$(date +%s)
+sbt -batch "testOnly * -- -oD" 2>&1 | tee "$TEST_LOG"
+TEST_SECS=$(( $(date +%s) - TEST_START ))
+echo "full_gate: testOnly took ${TEST_SECS}s; slowest tests:"
+python3 - "$TEST_LOG" <<'PY'
+import re, sys
+unit_ms = {"hour": 3600000, "minute": 60000, "second": 1000, "millisecond": 1}
+rows = []
+for line in open(sys.argv[1], errors="replace"):
+    m = re.match(r"\[info\] - (.*) \(([^()]*)\)\s*$", line)
+    if m:
+        parts = re.findall(r"(\d+) (hour|minute|second|millisecond)s?", m.group(2))
+        if parts:
+            rows.append((sum(int(n) * unit_ms[u] for n, u in parts), m.group(1)))
+for ms, name in sorted(rows, reverse=True)[:5]:
+    print(f"  {ms / 1000:8.1f} s  {name}")
+PY
+if [ "$TEST_SECS" -gt 2400 ]; then
+  echo "full_gate: testOnly took ${TEST_SECS}s, over the 2400 s budget (90% of the 2670 s test timeout)" >&2
+  exit 1
+fi
 SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Verify $SF001 $OUT"
 python3 tools/check.py "$SF001" "$OUT"
 # ProfileOne smoke: the per-job profiler still runs end to end
