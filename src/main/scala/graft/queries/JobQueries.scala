@@ -114,8 +114,9 @@ object JobQueries {
     * compose across the two applyBatch calls.
     */
   /** The first-pass table and DLQ are MATERIALIZED (localCheckpoint)
-    * before the replay runs, and the whole run is memoized per (session,
-    * dir): in the runbook the DLQ is a persisted dataset — replay reads it
+    * before the replay runs, and the whole run is held per (session,
+    * events generation) as a session frame in [[graft.data.ModelStore]]:
+    * in the runbook the DLQ is a persisted dataset — replay reads it
     * from storage, it does not recompute the originating pipeline — and
     * without the cut Spark re-evaluates the parse+enrich subtree once per
     * consuming branch (table, recovered, still-dead: the audit face paid
@@ -124,11 +125,9 @@ object JobQueries {
     * as the post-replay verification step of the guide reuses the replay's
     * outputs.
     */
-  private val replayRuns =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame, DataFrame)]()
-
   private def dlqReplayRun(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
-    replayRuns.computeIfAbsent(s"${spark.sparkContext.applicationId}#$dir", _ => {
+    graft.data.ModelStore.get(
+        graft.data.ModelStore.frame[(DataFrame, DataFrame, DataFrame)](spark), dir, "events", "dlq-replay") {
       val raw = JobFixtures.rawEnvelopesCached(spark, dir)
       val pk = get_json_object(col("value"), "$.primaryKey").cast("long")
       val poisoned = raw.select(
@@ -147,7 +146,7 @@ object JobQueries {
         .withColumn("rawEvent", regexp_replace(col("rawEvent"), "^CORRUPT\\|", ""))
       val (recovered, stillDead) = KafkaToMongoJob.replayDlq(fixed, refs, JobFixtures.fixedClock)
       (table1, recovered, stillDead)
-    })
+    }
 
   def jobDlqReplay(spark: SparkSession, dir: String): DataFrame = {
     val (table1, recovered, _) = dlqReplayRun(spark, dir)

@@ -273,28 +273,27 @@ object JoinQueries {
 
   private val streamQueryCounter = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Fixture staging for [[j4AsOfStream]] memoized per dir: the collect()s
-    * feed MemoryStream (driver-side by definition) and are harness work —
-    * Bench pre-warms them outside the timers, like every other fixture.
-    */
-  private val asofStreamFixture = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[graft.joins.StreamingAsOfJoiner.AsOfVersion], Seq[graft.joins.StreamingAsOfJoiner.AsOfEvent])]
-
   def warm(spark: SparkSession, dir: String): Unit = {
     asofStreamFixtureFor(spark, dir)
     ()
   }
 
-  private def asofStreamFixtureFor(spark: SparkSession, dir: String) =
-    asofStreamFixture.getOrElseUpdate(dir, {
+  /** Fixture staging for [[j4AsOfStream]], held per corpus generation as a
+    * JVM value in [[graft.data.ModelStore]]: the collect()s feed
+    * MemoryStream (driver-side by definition) and are harness work — Bench
+    * pre-warms them outside the timers, like every other fixture.
+    */
+  private def asofStreamFixtureFor(spark: SparkSession, dir: String) = {
+    import graft.joins.StreamingAsOfJoiner.{AsOfEvent, AsOfVersion}
+    graft.data.ModelStore.get(
+        graft.data.ModelStore.jvm[(Seq[AsOfVersion], Seq[AsOfEvent])], dir, "events", "asof-fixture") {
       import spark.implicits._
-      import graft.joins.StreamingAsOfJoiner.{AsOfEvent, AsOfVersion}
       val versions = cfgHistory(spark, dir, "user_id")
         .select(col("user_id").cast("string"), unix_micros(col("ts")), col("version").cast("string"))
         .as[(String, Long, String)].collect()
         .map { case (k, ts, v) => AsOfVersion(k, ts, v) }.toSeq
       // deterministic 1/10 slice: the fixture (and the memory-sink result
-      // table) is collect()ed to the driver and memoized per dir, so it must
+      // table) is collect()ed to the driver and held per generation, so it must
       // stay driver-sized as SF grows — the oracle applies the same
       // predicate (ADVICE r6). Versions stream in FULL: history size is the
       // operator's real state axis.
@@ -304,7 +303,8 @@ object JoinQueries {
         .as[(String, Long, String)].collect()
         .map { case (k, ts, p) => AsOfEvent(k, ts, p) }.toSeq
       (versions, events)
-    })
+    }
+  }
 
   /** The STREAMING face ([[graft.joins.StreamingAsOfJoiner]]) against the
     * same DuckDB ASOF oracle: the per-user config history streams in first

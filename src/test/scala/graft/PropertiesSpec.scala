@@ -320,6 +320,34 @@ class PropertiesSpec extends SparkSpec {
       val debris = new java.io.File(base).listFiles().map(_.getName).filter(_.contains(".stage-"))
       assert(debris.isEmpty, s"round=$round stage debris: ${debris.toSeq}")
     }
+    // bytes input: the same two racers, with a third thread evicting the
+    // model underneath them (another JVM's evictStale) — a model vanishing
+    // between the existence check and the read must retrain, never throw
+    (1 to 4).foreach { round =>
+      val path = s"${java.nio.file.Files.createTempDirectory(s"race-bytes-$round")}/model"
+      val mA = Array.fill[Byte](4096)(round.toByte)
+      val mB = Array.fill[Byte](4096)((round + 100).toByte)
+      ModelStore.saveBytes(path, mA)
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val torn = new java.util.concurrent.atomic.AtomicInteger()
+      val racers = Seq(mA, mB).map { m =>
+        new Thread(() =>
+          try (1 to 2000).foreach { _ =>
+            val got = ModelStore.bytesOrTrain(path)(m)
+            if (!(got.sameElements(mA) || got.sameElements(mB))) torn.incrementAndGet()
+          } catch { case t: Throwable => errs.add(t) })
+      }
+      val evictor = new Thread(() =>
+        while (!stop.get()) java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path)): Unit)
+      evictor.start()
+      racers.foreach(_.start())
+      racers.foreach(_.join(60000))
+      stop.set(true)
+      evictor.join(60000)
+      assert(errs.isEmpty, s"round=$round bytes racer threw under eviction: ${errs.peek()}")
+      assert(torn.get() === 0, s"round=$round bytes reader saw a torn model")
+    }
   }
 
   test("evict-under-reader: a model vanishing mid-read falls back to retrain, not a crash") {

@@ -1105,34 +1105,57 @@ class ScaleMechanicsSpec extends SparkSpec {
 
   test("corpus memos follow the source stamp: a corpus rewritten under the same dir serves the new generation after invalidateStamp") {
     import graft.connectors.Bucketing
+    import graft.data.ModelStore
     val base = java.nio.file.Files.createTempDirectory("graft_memo_regen").toFile
     val reused = new java.io.File(base, "reused").toString
     val fresh = new java.io.File(base, "fresh").toString
-    val faces = Seq("d_minhash_pairs", "s_ann_pq_ivf")
+    val faces = Seq("d_minhash_pairs", "s_ann_pq_ivf", "j4_asof_stream", "job_dlq_replay_audit",
+      "job_kafka_to_mongo", "s3_cdcv2_source", "k_txn_log")
+    val tables = Seq("documents", "embeddings", "events")
     // two generations of one corpus: disjoint-enough id slices, so the
-    // pair lists, quantizer seeds and codebooks all differ between them
+    // pair lists, quantizer seeds, codebooks and event fixtures all differ
     def writeCorpus(dir: String, mod: Int): Unit = {
       graft.core.Tables.documents(spark, sf).filter(col("doc_id") % mod === 0)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       graft.core.Tables.embeddings(spark, sf).filter(col("vec_id") % mod === 0)
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      graft.core.Tables.events(spark, sf).filter(col("event_id") % mod === 0)
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
     }
     def run(face: String, dir: String) = SparkEntry.queries(face)(spark, dir).localCheckpoint()
     def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Boolean =
       a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    def rootEntries = Option(new java.io.File(ModelStore.rootFor(reused)).list()).toSeq.flatten
     try {
       writeCorpus(reused, 2)
       val genA = faces.map(f => f -> run(f, reused)).toMap
+      val stampsA = tables.map(t => Bucketing.cachedStamp(s"$reused/$t.parquet")).toSet
+      def ofGenA(name: String) = stampsA.exists(s => name.endsWith(s"-$s"))
+      val heldA = ModelStore.held(reused)
+      val rddsA = heldA.flatMap(_._2)
+      assert(rootEntries.exists(ofGenA), "no generation-A entry on disk — the release check would be vacuous")
+      assert(heldA.exists(h => stampsA(h._1)), "no generation-A entry held — the release check would be vacuous")
+      assert(rddsA.nonEmpty && rddsA.forall(persisted), "no live generation-A memo frame — the release check would be vacuous")
       writeCorpus(reused, 3)
-      Seq("documents", "embeddings").foreach(t => Bucketing.invalidateStamp(s"$reused/$t.parquet"))
+      tables.foreach(t => Bucketing.invalidateStamp(s"$reused/$t.parquet"))
       writeCorpus(fresh, 3)
-      faces.foreach { f =>
+      faces.zipWithIndex.foreach { case (f, i) =>
         val want = run(f, fresh)
         assert(want.count() > 0, s"$f: empty on the second generation — the check would be vacuous")
         assert(!same(genA(f), want), s"$f: both generations give one answer — the check would be vacuous")
         assert(same(run(f, reused), want),
           s"$f on a corpus rewritten in place served the previous generation's memo")
+        if (i == 0) {
+          // the second generation's first read released the first generation
+          assert(!rootEntries.exists(ofGenA),
+            s"generation-A entries left on disk: ${rootEntries.filter(ofGenA)}")
+          assert(!ModelStore.held(reused).exists(h => stampsA(h._1)), "the store still holds a generation-A entry")
+          assert(!rddsA.exists(persisted), "generation-A memo frames are still persisted")
+        }
       }
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(base)
+    } finally
+      (Seq(base.toString) ++ Seq(reused, fresh).map(ModelStore.rootFor))
+        .foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
   }
 }

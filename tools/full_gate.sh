@@ -15,6 +15,16 @@ if grep -rn --include='*.scala' 'SparkSession\.builder' src/main \
   echo "full_gate: SparkSession.builder outside core/GraftSession.scala" >&2
   exit 1
 fi
+# one derived-artifact store (data/ModelStore.get): no line of code under
+# queries/ or jobs/ may hold its own memo map or set, or key a path on a
+# 32-bit hashCode (comments may mention them)
+if grep -rnE --include='*.scala' \
+    'ConcurrentHashMap|TrieMap|IdentityHashMap|newKeySet|math\.abs\([^)]*hashCode' \
+    src/main/scala/graft/queries src/main/scala/graft/jobs \
+    | grep -Ev '^[^:]+:[0-9]+:[[:space:]]*(\*|//|/\*)'; then
+  echo "full_gate: memo map/set or hashCode path key under queries/ or jobs/; use data/ModelStore.get" >&2
+  exit 1
+fi
 # test-time budget: the full suite must finish inside a 2670 s timeout, so a run
 # over 90% of that (2400 s) fails here instead of silently on the timeout
 TEST_LOG=/tmp/graft_gate_tests.log
