@@ -181,19 +181,14 @@ object StreamScaleProbe {
   /** documents staged into a multi-file directory: FileStreamSource needs a
     * directory (the raw sf0.1 table is a single parquet FILE), and 10 files
     * with maxFilesPerTrigger=8 gives at least two micro-batches so keyed
-    * state actually carries across batches. Written once per source dir.
+    * state actually carries across batches. Written once per documents
+    * generation in [[graft.data.ModelStore]].
     */
-  private def docsStage(spark: SparkSession, dir: String): String = {
-    val base = s"/tmp/graft-sprobe-docs-${math.abs(dir.hashCode)}"
-    if (!new java.io.File(s"$base/_DONE").exists()) {
+  private def docsStage(spark: SparkSession, dir: String): String =
+    graft.data.ModelStore.get(graft.data.ModelStore.files, dir, "documents", "sprobe-docs")(
       spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
-        .repartition(10).write.mode("overwrite").parquet(s"$base/data")
-      new java.io.File(s"$base/_DONE").createNewFile()
-      ()
-    }
-    s"$base/data"
-  }
+        .repartition(10).write.mode("overwrite").parquet(_))
 
   /** documents parquet → streaming near-dup candidate gate. */
   private def neardupGate(spark: SparkSession, dir: String): (Double, Long, Long) = {
@@ -223,19 +218,15 @@ object StreamScaleProbe {
     * maxFilesPerTrigger=3 gives several micro-batches, so the running
     * histograms genuinely carry across batches.
     */
-  private def qualityStage(spark: SparkSession, dir: String): String = {
-    val base = s"/tmp/graft-sprobe-qgate-${math.abs(dir.hashCode)}"
-    if (!new java.io.File(s"$base/_DONE").exists()) {
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-      graft.data.TextAnalysis.qualityModelScore(docs, "doc_id", "text", dims = 64)
-        .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-        .select(col("doc_id").as("sid"), col("source"), col("score_e6").as("score"))
-        .repartition(10).write.mode("overwrite").parquet(s"$base/data")
-      new java.io.File(s"$base/_DONE").createNewFile()
-      ()
+  private def qualityStage(spark: SparkSession, dir: String): String =
+    graft.data.ModelStore.get(graft.data.ModelStore.files, dir, "documents", "sprobe-qgate-d64") {
+      stage =>
+        val docs = spark.read.parquet(s"$dir/documents.parquet")
+        graft.data.TextAnalysis.qualityModelScore(docs, "doc_id", "text", dims = 64)
+          .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
+          .select(col("doc_id").as("sid"), col("source"), col("score_e6").as("score"))
+          .repartition(10).write.mode("overwrite").parquet(stage)
     }
-    s"$base/data"
-  }
 
   /** scored documents → streaming quality gate. The 100 TB claim under
     * measurement: state rows track the SOURCE count (one bounded histogram
@@ -264,30 +255,30 @@ object StreamScaleProbe {
 
   /** Version/event parquet stages for the as-of faces: every event is a
     * version row (history IS the state axis), a 1-in-10 slice probes.
-    * Written once per dir, several files each so both file sources
-    * interleave across micro-batches and compaction horizons advance.
+    * Written once per events generation in [[graft.data.ModelStore]],
+    * several files each so both file sources interleave across
+    * micro-batches and compaction horizons advance.
     */
   private def asofStage(spark: SparkSession, dir: String): (String, String) = {
-    val base = s"/tmp/graft-sprobe-asof-${math.abs(dir.hashCode)}"
-    val vDir = s"$base/versions"
-    val eDir = s"$base/events"
-    if (!new java.io.File(s"$base/_DONE").exists()) {
-      val e = graft.core.Tables.events(spark, dir)
-      e.select(
-        col("user_id").cast("string").as("key"),
-        unix_micros(col("ts")).as("tsUs"),
-        round(col("value") * 100).cast("long").cast("string").as("value"))
-        .repartition(10).write.mode("overwrite").parquet(vDir)
-      e.filter(col("event_id") % 10 === 0)
-        .select(
+    val base = graft.data.ModelStore.get(graft.data.ModelStore.files, dir, "events", "sprobe-asof") {
+      stage =>
+        val (vDir, eDir) = (s"$stage/versions", s"$stage/events")
+        val e = graft.core.Tables.events(spark, dir)
+        e.select(
           col("user_id").cast("string").as("key"),
           unix_micros(col("ts")).as("tsUs"),
-          col("event_id").cast("string").as("payload"))
-        .repartition(10).write.mode("overwrite").parquet(eDir)
-      new java.io.File(s"$base/_DONE").createNewFile()
-      ()
+          round(col("value") * 100).cast("long").cast("string").as("value"))
+          .repartition(10).write.mode("overwrite").parquet(vDir)
+        e.filter(col("event_id") % 10 === 0)
+          .select(
+            col("user_id").cast("string").as("key"),
+            unix_micros(col("ts")).as("tsUs"),
+            col("event_id").cast("string").as("payload"))
+          .repartition(10).write.mode("overwrite").parquet(eDir)
+        // the store's completion marker: two Spark writes leave theirs one level down
+        new java.io.File(s"$stage/_SUCCESS").createNewFile(): Unit
     }
-    (vDir, eDir)
+    (s"$base/versions", s"$base/events")
   }
 
   private def asof(spark: SparkSession, dir: String, compactLagUs: Long): (Double, Long, Long) = {

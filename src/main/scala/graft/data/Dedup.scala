@@ -158,6 +158,159 @@ object Dedup {
       .select(col("sid") +: (0 until k).map(i => element_at(col("_sig"), i + 1).as(s"h$i")): _*)
   }
 
+  /** The banded LSH bucket frame (sid, band, bucket) of the MinHash
+    * signatures of the token column `toks` — the MinHash half of the band
+    * core: [[minhashPairs]], [[SnapshotOps.incrementalNearDup]] and the
+    * first-seen gates ([[nearDupGateBatch]], [[streamingNearDupCandidates]])
+    * all band through it, and it is the ROW LAYOUT of a persisted near-dup
+    * band index. Its pHash twin is [[Multimodal.phashBandIndex]].
+    *
+    * NULL-text docs carry NULL signatures (tokens(null) is null, so every
+    * h-column is null) and concat_ws collapses their bucket to "" in
+    * EVERY band — one shared quadratic bucket of rows that can never
+    * verify (null jaccard is dropped by the filter) yet would trip the
+    * flood guard first on a NULL-heavy crawl feed. They cannot pair, so
+    * their "" buckets are dropped right after the explode; a non-NULL
+    * signature never yields "" (ShingleHash60 emits at least one shingle
+    * for any non-null tokens). The filter sits above the explode on
+    * purpose: a filter on `h0` below it is pushed into the scan with the
+    * whole signature expression inlined, computing every signature twice.
+    */
+  private[data] def bandedBuckets(
+      df: DataFrame,
+      idCol: String,
+      toks: Column,
+      n: Int,
+      k: Int,
+      rows: Int
+  ): DataFrame = {
+    require(k % rows == 0, "k must be divisible by band rows")
+    val sig = minhashSignaturesFromTokens(df, idCol, toks, n, k)
+    val nBands = k / rows
+    val bands = array((0 until nBands).map { b =>
+      struct(
+        lit(b).as("band"),
+        concat_ws("_", (0 until rows).map(r => col(s"h${b * rows + r}")): _*).as("bucket")
+      )
+    }: _*)
+    sig.select(col("sid"), explode(bands).as("bb"))
+      .filter(col("bb.bucket") =!= "")
+      .select(col("sid"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+  }
+
+  /** The keyed state of the first-seen gates, as `(sid: Long, bucket)`
+    * rows of a band frame: the key is `<prefix><band>_<bucket>` —
+    * `b_hX_hY` for MinHash bands (prefix ""), `p{b}_{v}` for pHash bands
+    * (prefix "p", so one state store can serve both gates without a
+    * cross-collision). The format is the state key and the oracle's
+    * bucket string; it must never change.
+    */
+  private def gateKeyed(banded: DataFrame, prefix: String): DataFrame =
+    banded.select(
+      col("sid").cast("long").as("sid"),
+      concat_ws("_", concat(lit(prefix), col("band").cast("string")), col("bucket")).as("bucket"))
+
+  /** The deterministic BATCH replay of a first-seen gate — one logical
+    * micro-batch over the whole band frame against empty state: per gate
+    * key the minimum sid owns it, and every other sid in it emits one
+    * `(sid, dup_of = owner)` hit per colliding key — the multiset the
+    * keyed band state ([[graft.stateful.Processors.nearDupBands]]) would
+    * emit (spec-pinned in StreamingDedupSpec).
+    *
+    * Scale shape: the only shuffle is the key-partitioned band rows (a
+    * long and a short string per row); the min-owner aggregate is
+    * map-side combined and the owner list joins back on the same
+    * partitioning (no second exchange of the band rows).
+    */
+  private[data] def firstSeenReplay(banded: DataFrame, prefix: String): DataFrame = {
+    val keyed = gateKeyed(banded, prefix)
+    val owners = keyed.groupBy(col("bucket")).agg(min(col("sid")).as("dup_of"))
+    keyed
+      .join(owners, Seq("bucket"))
+      .filter(col("sid") =!= col("dup_of"))
+      .select(col("sid"), col("dup_of"))
+  }
+
+  /** A first-seen gate over a STREAMING band frame: the gate keys run
+    * through the keyed owner state of
+    * [[graft.stateful.Processors.nearDupBands]]. `docs(idCol)` must be
+    * integral — hits carry `Long` ids through the keyed state — and a
+    * non-integral id is rejected up front with a clear error instead of
+    * an opaque encoder cast failure at analysis time.
+    */
+  private[data] def firstSeenStream(
+      docs: DataFrame,
+      idCol: String,
+      face: String,
+      banded: DataFrame,
+      prefix: String,
+      ttlMs: Long
+  ): Dataset[graft.model.NearDupHit] = {
+    docs.schema(idCol).dataType match {
+      case _: org.apache.spark.sql.types.ByteType | _: org.apache.spark.sql.types.ShortType |
+          _: org.apache.spark.sql.types.IntegerType | _: org.apache.spark.sql.types.LongType => ()
+      case other =>
+        throw new IllegalArgumentException(
+          s"$face: id column '$idCol' must be integral (hits carry Long ids through the keyed " +
+            s"state), got $other — pre-map string ids to a dense long, e.g. xxhash64(id)")
+    }
+    import docs.sparkSession.implicits._
+    graft.stateful.Processors.nearDupBands(gateKeyed(banded, prefix).as[graft.model.BandRow], ttlMs)
+  }
+
+  /** One count pass over the `keys` groups of each side before a
+    * quadratic within-group join — the flood guard of every banded or
+    * bucketed self-join here (MinHash bands, pHash bands, semdedup cells):
+    * fail with the top offender sizes instead of an executor OOM or a job
+    * that never finishes mid-join. EAGER (runs a job). `flood` names the
+    * failure ("duplicate", "perceptual-dup", "cell"); `remedy` closes the
+    * message.
+    *
+    * Several tagged sides are guarded in ONE job (guide §1.2/§2.4 — the
+    * serve faces guard both join sides per call, and two eager count
+    * passes per batch is one more driver round-trip than the check
+    * needs): each side aggregates on its OWN scan and only the tiny
+    * post-filter offender frames union before one limit-collect. Unioning
+    * the RAW inputs instead was measured 2.5-3.5× slower when a side is a
+    * bucketed table — the union blocks the unnecessary-bucketed-scan
+    * rewrite, leaving one open-cost task per bucket file — while the
+    * aggregated-result union keeps every side's scan shape intact.
+    * Per-side counts are unchanged; the error names the flooded side(s).
+    */
+  private[data] def assertNoBucketFloodAll(
+      sides: Seq[(String, DataFrame)],
+      keys: Seq[String],
+      maxRows: Int,
+      face: String,
+      flood: String,
+      remedy: String): Unit = {
+    require(sides.nonEmpty,
+      s"assertNoBucketFloodAll($face): no sides to guard — caller bug")
+    val oversized = sides
+      .map { case (t, df) =>
+        df.groupBy(keys.map(col): _*)
+          .agg(count(lit(1)).as("_bc"))
+          .filter(col("_bc") > maxRows)
+          .select(lit(t).as("_side") +: keys.map(col) :+ col("_bc"): _*)
+      }
+      .reduce(_ unionByName _)
+      .orderBy(col("_bc").desc)
+      .limit(3)
+      .collect()
+    if (oversized.nonEmpty) {
+      val tops = oversized
+        .map { r =>
+          val side = Option(r.getString(0)).filter(_.nonEmpty).map(s => s"side=$s ").getOrElse("")
+          val at = keys.indices.map(i => s"${keys(i)}=${r.get(i + 1)}").mkString(" ")
+          s"$side$at rows=${r.get(keys.length + 1)}"
+        }
+        .mkString(", ")
+      throw new IllegalStateException(
+        s"$face: $flood flood — ${keys.mkString("(", ", ", ")")} group(s) above " +
+          s"$maxRows rows ($tops). $remedy")
+    }
+  }
+
   /** LSH candidate pairs: signatures banded (bands of `rows` hashes), docs
     * sharing any band bucket become candidates; candidates are verified with
     * true n-gram Jaccard >= threshold (two-phase, like production LSH).
@@ -182,87 +335,6 @@ object Dedup {
     * DataOpsSpec pins the guard firing under a crafted flood and the
     * clustering face sailing through the same corpus.
     */
-  /** The banded LSH bucket frame (sid, band, bucket) — the shared front
-    * half of [[minhashPairs]] and [[graft.data.SnapshotOps.incrementalNearDup]],
-    * and the ROW LAYOUT of a persisted near-dup band index.
-    *
-    * NULL-text docs carry NULL signatures (tokens(null) is null, so every
-    * h-column is null) and concat_ws collapses their bucket to "" in
-    * EVERY band — one shared quadratic bucket of rows that can never
-    * verify (null jaccard is dropped by the filter) yet would trip the
-    * flood guard first on a NULL-heavy crawl feed. They cannot pair, so
-    * they never enter banding; h0 is null iff the whole signature is
-    * (ShingleHash60 emits at least one shingle for any non-null tokens).
-    */
-  private[data] def bandedBuckets(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      k: Int,
-      rows: Int
-  ): DataFrame = {
-    val sig = minhashSignatures(df, idCol, textCol, n, k)
-      .filter(col("h0").isNotNull)
-    val nBands = k / rows
-    val bands = array((0 until nBands).map { b =>
-      struct(
-        lit(b).as("band"),
-        concat_ws("_", (0 until rows).map(r => col(s"h${b * rows + r}")): _*).as("bucket")
-      )
-    }: _*)
-    sig.select(col("sid"), explode(bands).as("bb"))
-      .select(col("sid"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-  }
-
-  /** One (band,bucket)-count pass before a quadratic bucket join — the
-    * flood guard shared by the pair faces: fail with the top offender
-    * sizes instead of an executor OOM mid-join. EAGER (runs a job).
-    */
-  private[data] def assertNoBucketFlood(
-      banded: DataFrame, maxBucketRows: Int, face: String, remedy: String): Unit =
-    assertNoBucketFloodAll(Seq("" -> banded), maxBucketRows, face, remedy)
-
-  /** [[assertNoBucketFlood]] over SEVERAL tagged frames in ONE job (guide
-    * §1.2/§2.4 — the serve faces guard both join sides per call, and two
-    * eager count passes per batch is one more driver round-trip than the
-    * check needs): each side aggregates on its OWN scan and only the tiny
-    * post-filter offender frames union before one limit-collect. Unioning
-    * the RAW inputs instead was measured 2.5-3.5× slower when a side is a
-    * bucketed table — the union blocks the unnecessary-bucketed-scan
-    * rewrite, leaving one open-cost task per bucket file — while the
-    * aggregated-result union keeps every side's scan shape intact.
-    * Per-side counts are unchanged; the error names the flooded side(s).
-    */
-  private[data] def assertNoBucketFloodAll(
-      sides: Seq[(String, DataFrame)],
-      maxBucketRows: Int, face: String, remedy: String): Unit = {
-    require(sides.nonEmpty,
-      s"assertNoBucketFloodAll($face): no sides to guard — caller bug")
-    val oversized = sides
-      .map { case (t, df) =>
-        df.groupBy(col("band"), col("bucket"))
-          .agg(count(lit(1)).as("_bc"))
-          .filter(col("_bc") > maxBucketRows)
-          .select(lit(t).as("_side"), col("band"), col("bucket"), col("_bc"))
-      }
-      .reduce(_ unionByName _)
-      .orderBy(col("_bc").desc)
-      .limit(3)
-      .collect()
-    if (oversized.nonEmpty) {
-      val tops = oversized
-        .map { r =>
-          val side = Option(r.getString(0)).filter(_.nonEmpty).map(s => s"side=$s ").getOrElse("")
-          s"${side}band=${r.get(1)} bucket=${r.get(2)} rows=${r.get(3)}"
-        }
-        .mkString(", ")
-      throw new IllegalStateException(
-        s"$face: duplicate flood — band bucket(s) above maxBucketRows=$maxBucketRows ($tops). " +
-          remedy)
-    }
-  }
-
   def minhashPairs(
       df: DataFrame,
       idCol: String,
@@ -273,14 +345,13 @@ object Dedup {
       threshold: Double = 0.8,
       maxBucketRows: Int = 10000
   ): DataFrame = {
-    require(k % rows == 0, "k must be divisible by band rows")
     require(maxBucketRows > 0, "maxBucketRows must be positive")
     // the (sid, band, bucket) frame feeds THREE consumers (flood guard,
     // both sides of the candidate self-join) — localCheckpoint pays the
     // tokenize+shingle+k-hash signature scan once instead of three lineage
     // re-derivations (ids + hash strings only, never text: executor-local
     // disk stays corpus-metadata-sized). Same pattern as `candidates`.
-    val banded = bandedBuckets(df, idCol, textCol, n, k, rows)
+    val banded = bandedBuckets(df, idCol, TextAnalysis.tokens(col(textCol)), n, k, rows)
       .localCheckpoint()
     // the flood guard: one (band,bucket)-count pass before the quadratic
     // join — a cheap aggregation over the checkpointed frame buys the
@@ -288,7 +359,8 @@ object Dedup {
     // "executor OOM mid-join". NOTE this makes construction EAGER (it
     // runs a job and can throw before any action) — the documented
     // contract of the pair face.
-    assertNoBucketFlood(banded, maxBucketRows, "minhashPairs",
+    assertNoBucketFloodAll(Seq("" -> banded), Seq("band", "bucket"), maxBucketRows,
+      "minhashPairs", "duplicate",
       "The within-bucket pair join is duplicity²-quadratic and the pairs it " +
         "would emit are quadratic OUTPUT, not just work. If the flood is VERBATIM copies, " +
         "use minhashPairsForClustering for cluster-grain consumers, or collapse " +
@@ -432,13 +504,9 @@ object Dedup {
     * bucket with TTL — at 100 TB the dedup horizon is the TTL window, and
     * the text itself never enters the state store.
     *
-    * `idCol` must be integral (hits carry `Long` ids through the keyed
-    * state — unlike the batch minhash path, which accepts any id type);
-    * a non-integral id is rejected up front with a clear error instead of
-    * an opaque encoder cast failure at analysis time.
-    *
-    * Needs the RocksDB state store provider, which
-    * [[graft.core.GraftSession]] sessions carry.
+    * `idCol` must be integral (unlike the batch minhash path, which accepts
+    * any id type — see [[firstSeenStream]]). Needs the RocksDB state store
+    * provider, which [[graft.core.GraftSession]] sessions carry.
     */
   def streamingNearDupCandidates(
       docs: DataFrame,
@@ -448,49 +516,13 @@ object Dedup {
       k: Int = 16,
       rows: Int = 2,
       ttlMs: Long = 0L
-  ): Dataset[graft.model.NearDupHit] = {
-    require(k % rows == 0, "k must be divisible by band rows")
-    docs.schema(idCol).dataType match {
-      case _: org.apache.spark.sql.types.ByteType | _: org.apache.spark.sql.types.ShortType |
-          _: org.apache.spark.sql.types.IntegerType | _: org.apache.spark.sql.types.LongType => ()
-      case other =>
-        throw new IllegalArgumentException(
-          s"streamingNearDupCandidates: id column '$idCol' must be integral (hits carry Long " +
-            s"ids through the keyed state), got $other — pre-map string ids to a dense long, " +
-            "e.g. xxhash64(id)")
-    }
-    import docs.sparkSession.implicits._
-    // tokenize ONCE (ComputeOnce barrier): the array feeds both the
-    // min-length gate and the shingler — this is the per-event hot path of
-    // an ingest gate, a second regex split per doc would double its cost
-    val toked = docs
-      .withColumn("_t", graft.functions.ComputeOnce(TextAnalysis.tokens(col(textCol))))
-      .filter(size(col("_t")) >= n)
-    val sig = minhashSignaturesFromTokens(toked, idCol, col("_t"), n, k)
-    val nBands = k / rows
-    val bands = array((0 until nBands).map { b =>
-      concat_ws("_",
-        lit(b) +: (0 until rows).map(r => col(s"h${b * rows + r}")): _*)
-    }: _*)
-    val banded = sig
-      .select(col("sid"), explode(bands).as("bucket"))
-      .as[graft.model.BandRow]
-    graft.stateful.Processors.nearDupBands(banded, ttlMs)
-  }
+  ): Dataset[graft.model.NearDupHit] =
+    firstSeenStream(docs, idCol, "streamingNearDupCandidates",
+      gateBands(docs, idCol, textCol, n, k, rows), "", ttlMs)
 
-  /** The deterministic BATCH replay of [[streamingNearDupCandidates]] —
-    * one logical micro-batch over the whole frame, empty prior state
-    * (spec-pinned equality in StreamingDedupSpec): per band bucket the
-    * first-seen (minimum) sid is the owner, and every other sid in the
-    * bucket emits one `(sid, dup_of = owner)` hit per colliding bucket —
-    * the same multiset the keyed band state would produce, which is what
-    * gives the streaming-only gate a three-check oracle row.
-    *
-    * Scale shape: identical to the batch LSH pair face minus the
-    * verification join — the only shuffle is (bucket)-keyed band rows
-    * (two longs + a short string per row), the min-owner aggregate is
-    * map-side combined, and the owner list joins back on the same
-    * bucket partitioning (no second exchange of the band rows).
+  /** The deterministic BATCH replay of [[streamingNearDupCandidates]]
+    * ([[firstSeenReplay]] over the same gate bands) — what gives the
+    * streaming-only gate a three-check oracle row.
     */
   def nearDupGateBatch(
       docs: DataFrame,
@@ -499,23 +531,22 @@ object Dedup {
       n: Int = 3,
       k: Int = 16,
       rows: Int = 2
-  ): DataFrame = {
-    require(k % rows == 0, "k must be divisible by band rows")
+  ): DataFrame =
+    firstSeenReplay(gateBands(docs, idCol, textCol, n, k, rows), "")
+
+  /** The MinHash gates' band frame: [[bandedBuckets]] behind the gates'
+    * pre-filter — docs with fewer than `n` tokens carry no shingles and
+    * pass unflagged. The token array is computed ONCE (ComputeOnce
+    * barrier) and feeds both the length filter and the shingler: this is
+    * the per-event hot path of an ingest gate, and a second regex split
+    * per doc would double its cost.
+    */
+  private def gateBands(
+      docs: DataFrame, idCol: String, textCol: String, n: Int, k: Int, rows: Int): DataFrame = {
     val toked = docs
       .withColumn("_t", graft.functions.ComputeOnce(TextAnalysis.tokens(col(textCol))))
       .filter(size(col("_t")) >= n)
-    val sig = minhashSignaturesFromTokens(toked, idCol, col("_t"), n, k)
-    val nBands = k / rows
-    val bands = array((0 until nBands).map { b =>
-      concat_ws("_",
-        lit(b) +: (0 until rows).map(r => col(s"h${b * rows + r}")): _*)
-    }: _*)
-    val banded = sig.select(col("sid").cast("long").as("sid"), explode(bands).as("bucket"))
-    val owners = banded.groupBy(col("bucket")).agg(min(col("sid")).as("dup_of"))
-    banded
-      .join(owners, Seq("bucket"))
-      .filter(col("sid") =!= col("dup_of"))
-      .select(col("sid"), col("dup_of"))
+    bandedBuckets(toked, idCol, col("_t"), n, k, rows)
   }
 
   /** 60-bit SimHash of the token multiset: token hashes materialized once,
@@ -1029,12 +1060,12 @@ object Dedup {
     * (multi-probe) collapses in the min() aggregate.
     *
     * ==Cell-flood guard==
-    * Same stance as [[minhashPairs]]' `maxBucketRows` and
-    * `Multimodal.perceptualPairs`' guard — the third face of the same
-    * banded/bucketed self-join shape. A degenerate embedding corpus (a
-    * broken encoder emitting one constant vector, a zeroed column, a
-    * template embedding repeated at crawl scale) collapses to ONE cell
-    * and silently drives population²/2 cosine evaluations into the join
+    * The same guard as the MinHash and pHash pair faces
+    * ([[assertNoBucketFloodAll]], keyed on the cell here). A degenerate
+    * embedding corpus (a broken encoder emitting one constant vector, a
+    * zeroed column, a template embedding repeated at crawl scale)
+    * collapses to ONE cell and silently drives population²/2 cosine
+    * evaluations into the join
     * — here the flood is quadratic WORK (output stays one verdict row
     * per member), i.e. wall-clock death rather than output blow-up, so
     * the guard buys "clear error with offender sizes" instead of a job
@@ -1061,7 +1092,15 @@ object Dedup {
       maxCellRows: Int
   ): DataFrame = {
     require(maxCellRows > 0, "maxCellRows must be positive")
-    if (base.count() > maxCellRows) floodGuard(candidates, maxCellRows)
+    if (base.count() > maxCellRows)
+      assertNoBucketFloodAll(Seq("" -> candidates.select(col("_bk").as("cell"))), Seq("cell"),
+        maxCellRows, "semanticDedup", "cell",
+        "The within-cell pair join is population²-quadratic work. If the flood is " +
+          "EXACT-identical embeddings (duplicated docs, a constant encoder output), collapse " +
+          "them first — run exact dedup on the embedding bytes and semdedup the reps. If the " +
+          "cells are genuinely this populated, the quantizer is undersized for the corpus: " +
+          "raise k / kSub (auto-k targets ~32 rows per cell) or retrain on a fresher sample. " +
+          "Raise maxCellRows only if the quadratic is truly intended.")
     val a = candidates.select(col("_bk"), col(idCol).as("_i"), col("_v").as("_va"))
     val b = candidates.select(col("_bk"), col(idCol).as("_j"), col("_v").as("_vb"))
     val dups = a.join(b, Seq("_bk"))
@@ -1073,28 +1112,6 @@ object Dedup {
     labeled
       .join(dups, Seq(idCol), "left")
       .withColumn("keep", col("dup_of").isNull)
-  }
-
-  private def floodGuard(candidates: DataFrame, maxCellRows: Int): Unit = {
-    val oversized = candidates.groupBy(col("_bk"))
-      .agg(count(lit(1)).as("_bc"))
-      .filter(col("_bc") > maxCellRows)
-      .orderBy(col("_bc").desc)
-      .limit(3)
-      .collect()
-    if (oversized.nonEmpty) {
-      val tops = oversized
-        .map(r => s"cell=${r.get(0)} rows=${r.get(1)}")
-        .mkString(", ")
-      throw new IllegalStateException(
-        s"semanticDedup: cell flood — cluster cell(s) above maxCellRows=$maxCellRows ($tops). " +
-          "The within-cell pair join is population²-quadratic work. If the flood is " +
-          "EXACT-identical embeddings (duplicated docs, a constant encoder output), collapse " +
-          "them first — run exact dedup on the embedding bytes and semdedup the reps. If the " +
-          "cells are genuinely this populated, the quantizer is undersized for the corpus: " +
-          "raise k / kSub (auto-k targets ~32 rows per cell) or retrain on a fresher sample. " +
-          "Raise maxCellRows only if the quadratic is truly intended.")
-    }
   }
 
   /** [[semanticDedup]] on the two-level product (IMI) quantizer — the

@@ -43,7 +43,10 @@ object ModelStore {
     * change unpersists the checkpoints it held.
     */
   def frame[V](spark: SparkSession): Kind[V, V] = new Kind[V, V](Some(spark), (_, b) => b())
-  /** A driver value held for the JVM's lifetime (counts, fixture rows). */
+  /** A driver value held for the JVM's lifetime (counts, fixture rows). A
+    * `java.nio.file.Path` value is a scratch directory the store owns: it
+    * is deleted when its generation is released, and at JVM exit.
+    */
   def jvm[V]: Kind[V, V] = new Kind[V, V](None, (_, b) => b())
   // Persisted kinds: saved at `<rootFor(dir)>/<name>-<stamp>` and held in
   // the JVM over it — loaded if a completed save exists, else built and saved
@@ -124,7 +127,17 @@ object ModelStore {
     case _ => Nil
   }
 
-  private def release(k: Key, v: Any): Unit = frames(k, v).foreach(graft.core.Checkpoints.release(_))
+  private def release(k: Key, v: Any): Unit = {
+    dropDir(v)
+    frames(k, v).foreach(graft.core.Checkpoints.release(_))
+  }
+
+  private def dropDir(v: Any): Unit = v match {
+    case p: java.nio.file.Path => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile): Unit
+    case _ => ()
+  }
+  // the scratch directories still held when the JVM exits
+  sys.addShutdownHook(entries.values.forEach(v => dropDir(v)))
 
   /** The held entries of `dir` as (stamp, ids of the checkpointed RDDs the
     * entry holds) — what a generation change must release.

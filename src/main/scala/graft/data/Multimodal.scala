@@ -199,16 +199,19 @@ object Multimodal {
     * scale run bandBits=16, probeRadius=1 (hamming ≤ 7 exact, 65536-value
     * buckets). Candidates shuffle on the (band, value) key only — never
     * all-pairs; a pair matching several bands/probes is emitted once
-    * (distinct at pair grain, after the hamming filter).
+    * (distinct at pair grain, after the hamming filter). The join is
+    * [[perceptualPairsIndexed]]'s, run over this corpus's
+    * [[phashBandIndex]] frame checkpointed: the inline and persisted
+    * faces share one MIH probe and one flood guard.
     *
     * ==Duplicate-flood stance==
     * A degenerate image corpus — solid-color frames, watermark/template
     * images, repeated thumbnails, all common at crawl scale — collapses
     * to one fingerprint, so every band lands its whole population in ONE
-    * (band, value) bucket and the banded self-join emits n²/2 candidate
+    * (band, bucket) and the banded self-join emits n²/2 candidate
     * pairs: quadratic OUTPUT, not just work, exactly the
     * [[Dedup.minhashPairs]] failure shape. Same stance as there: one
-    * cheap stored-side (band, value) count pass runs BEFORE the
+    * cheap stored-side (band, bucket) count pass runs BEFORE the
     * quadratic join, and any bucket holding more than `maxBucketRows`
     * fingerprints fails the job LOUDLY with the top offender sizes —
     * "clear error naming the flood" instead of "executor OOM mid-join".
@@ -226,120 +229,21 @@ object Multimodal {
       probeRadius: Int = 0,
       maxBucketRows: Int = 10000
   ): DataFrame = {
-    require(64 % bandBits == 0 && bandBits <= 32,
-      s"perceptualPairs: bandBits=$bandBits must divide 64 and be <= 32 (a 64-bit band is the whole fingerprint)")
-    require(maxHamming >= 0, s"perceptualPairs: maxHamming=$maxHamming")
-    require(maxBucketRows > 0, s"perceptualPairs: maxBucketRows must be positive")
-    require(probeRadius == 0 || probeRadius == 1,
-      s"perceptualPairs: probeRadius=$probeRadius not in {0, 1}")
-    val nBands = 64 / bandBits
-    require(maxHamming < nBands * (probeRadius + 1),
-      s"perceptualPairs: maxHamming=$maxHamming beyond the pigeonhole guarantee " +
-        s"(${nBands * (probeRadius + 1) - 1} at $nBands bands, radius $probeRadius) — " +
-        s"the banded join would MISS qualifying pairs; narrow bandBits, raise " +
-        s"probeRadius, or lower maxHamming")
-    val mask = (1L << bandBits) - 1
-    // ComputeOnce barrier is load-bearing: the band array references _fp
-    // nBands+ times, and CollapseProject would otherwise inline the full
-    // fingerprint subtree into every reference. localCheckpoint because
-    // the fingerprint frame now feeds THREE consumers (flood guard, probe
-    // side, stored side) — pay the 64-sample fingerprint scan once, and
-    // the checkpointed payload is (id, 8-byte long) only, never media
-    // bytes, so executor-local disk stays corpus-metadata-sized (the
-    // minhashPairs `banded` pattern).
-    val fp = df.select(
-      col(idCol).as("_id"),
-      graft.functions.ComputeOnce(perceptualHash(col(binCol))).as("_fp"))
-      .localCheckpoint()
-    // per-band value as a column (the explode arrays below reference it
-    // probeValues× — same barrier argument)
-    def withBands(base: DataFrame, mkVals: Column => Seq[Column]): DataFrame =
-      base
-        .select(col("_id"), col("_fp"), explode(array((0 until nBands).flatMap { b =>
-          val bv = shiftright(col("_fp"), b * bandBits).bitwiseAND(lit(mask))
-          mkVals(bv).map(v => struct(lit(b).as("bi"), v.as("bv")))
-        }: _*)).as("_band"))
-        // suppressed (null) probe values die here, before the shuffle —
-        // they could only fall out of the equi-join anyway
-        .filter(col("_band.bv").isNotNull)
-        .select(col("_id"), col("_fp"), col("_band.bi").as("bi"), col("_band.bv").as("bv"))
-        // repartition on the JOIN key with an EXPLICIT partition count:
-        // per-probe work is bucketRows, not 1, so probe-side parallelism
-        // decides the wall clock (a one-split input ran the whole
-        // candidate pass at sf0.1 on one core), and the row payload is
-        // bytes-tiny — AQE would coalesce an advisory-sized shuffle right
-        // back to one partition (the work is pair-count-shaped, not
-        // byte-shaped). This is the distribution a shuffled join requires
-        // anyway, so the exchange is reused, never redundant
-        .repartition(
-          df.sparkSession.sessionState.conf.numShufflePartitions,
-          col("bi"), col("bv"))
-    // probe side: exact value + the UPWARD single-bit flips within the band
-    // (set a 0-bit only). For a band at hamming 1 exactly one endpoint holds
-    // the 0-bit, so its upward flip lands on the other's stored value — every
-    // qualifying pair is still found (the pigeonhole guarantee is intact),
-    // but via ONE join orientation instead of two: the downward flips only
-    // ever rediscovered the same pair from the other side, and dropping them
-    // halves probe rows (avg bandBits/2 + 1 values instead of bandBits + 1)
-    // and candidate volume (guide §2.3 — shuffle fewer bytes; output pairs
-    // are canonicalized to (min id, max id) below, so answers are identical).
-    // PRECONDITION (do not reuse asymmetrically): upward-only is sound
-    // ONLY because this is a symmetric SELF-join — every row appears on
-    // both the probe and stored sides, so each hamming-1 pair's 0-bit
-    // endpoint is guaranteed to be probing. An asymmetric reuse (a delta
-    // probing a stored index that does not probe back) would silently
-    // MISS every pair whose probing side holds the 1-bit — re-add the
-    // downward flips (or probe both orientations) there.
-    val probed = withBands(fp, bv =>
-      bv +: (if (probeRadius == 0) Seq.empty
-             else (0 until bandBits).map(i =>
-               when(bv.bitwiseAND(lit(1L << i)) === 0, bv.bitwiseXOR(lit(1L << i))))))
-    val stored = withBands(fp, bv => Seq(bv))
-    // the flood guard: stored-side (band, value) counts before the
-    // quadratic join. Stored counts (not probe-expanded) are the right
-    // grain — join output per bucket = matching probe rows × stored rows,
-    // so capping stored rows bounds the output linearly in n.
-    val oversized = stored.groupBy(col("bi"), col("bv"))
-      .agg(count(lit(1)).as("_bc"))
-      .filter(col("_bc") > maxBucketRows)
-      .orderBy(col("_bc").desc)
-      .limit(3)
-      .collect()
-    if (oversized.nonEmpty) {
-      val tops = oversized
-        .map(r => s"band=${r.get(0)} value=${r.get(1)} rows=${r.get(2)}")
-        .mkString(", ")
-      throw new IllegalStateException(
-        s"perceptualPairs: perceptual-dup flood — (band, value) bucket(s) above " +
-          s"maxBucketRows=$maxBucketRows ($tops). The within-bucket candidate join is " +
-          "duplicity²-quadratic and the pairs it would emit are quadratic OUTPUT, not just " +
-          "work — a degenerate corpus (solid-color frames, watermark templates, repeated " +
-          "thumbnails) collapses to one fingerprint per template. If the flood is " +
-          "BYTE-IDENTICAL media, collapse exact duplicates (md5 fingerprint from " +
-          "Multimodal.metadata) to min-id representatives first and expand rep pairs to " +
-          "member pairs lazily; if it is DISTINCT media sharing a fingerprint, the " +
-          "quadratic is inherent to the pair grain — pre-shard the corpus or raise " +
-          "maxBucketRows only if that output volume is truly intended.")
+    // the band frame feeds THREE consumers (flood guard, probe side, stored
+    // side): pay the 64-sample fingerprint scan once. The checkpointed
+    // payload is (sid, band, bucket, fp), never media bytes, so
+    // executor-local disk stays corpus-metadata-sized
+    val index = phashBandIndex(df, idCol, binCol, bandBits).localCheckpoint()
+    CorpusOps.releaseOnFailure(index) {
+      perceptualPairsIndexed(index, maxHamming, bandBits, probeRadius, maxBucketRows)
     }
-    val lhs = probed.select(col("_id").as("a_id"), col("_fp").as("_fpa"), col("bi"), col("bv"))
-    val rhs = stored.select(col("_id").as("b_id"), col("_fp").as("_fpb"), col("bi"), col("bv"))
-    // upward-only probing finds a hamming-1 band pair in ONE orientation
-    // (the 0-bit holder probes the 1-bit holder), so pairs are canonicalized
-    // to (min id, max id) instead of filtered on probe-side < stored-side;
-    // the distinct pair set — and the oracle — are unchanged
-    lhs.join(rhs, Seq("bi", "bv"))
-      .filter(col("a_id") =!= col("b_id"))
-      .select(
-        least(col("a_id"), col("b_id")).as("a_id"),
-        greatest(col("a_id"), col("b_id")).as("b_id"),
-        bit_count(col("_fpa").bitwiseXOR(col("_fpb"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
   }
 
-  /** The persisted MIH BAND INDEX layout for a media corpus: one
-    * `(sid, band, bucket, fp)` row per (image, band) — the stored side of
-    * [[perceptualPairs]] made a first-class frame so a pipeline can
+  /** The MIH BAND frame of a media corpus: one `(sid, band, bucket, fp)`
+    * row per (image, band), `bucket` the band's value as a decimal string
+    * — the pHash half of the band core (its MinHash twin is
+    * [[Dedup.bandedBuckets]]): [[perceptualPairs]], the first-seen gates
+    * and the persisted index all band through it. A pipeline can
     * materialize it ONCE per corpus stamp (bucketed by `bucket` via
     * [[graft.connectors.Bucketing.ensureBucketed]]), append each ingested
     * delta's bands ([[graft.connectors.Bucketing.appendBucketed]]), and
@@ -367,9 +271,9 @@ object Multimodal {
       s"phashBandIndex: bandBits=$bandBits must divide 64 and be <= 32 (a 64-bit band is the whole fingerprint)")
     val nBands = 64 / bandBits
     val mask = (1L << bandBits) - 1
-    // ComputeOnce barrier: the band array references _fp nBands times and
+    // ComputeOnce barrier: the band array references fp nBands times and
     // CollapseProject would otherwise inline the 64-sample fingerprint
-    // subtree into every reference (the perceptualPairs lesson)
+    // subtree into every reference
     df.select(
       col(idCol).cast("long").as("sid"),
       graft.functions.ComputeOnce(perceptualHash(col(binCol))).as("fp"))
@@ -387,8 +291,10 @@ object Multimodal {
     */
   def phashStamp(bandBits: Int): String = s"phash(bandBits=$bandBits)"
 
-  /** [[perceptualPairs]] served from a PERSISTED [[phashBandIndex]] — the
-    * production shape: BOTH join sides derive from the skinny index (the
+  /** [[perceptualPairs]] served from a [[phashBandIndex]] frame — the one
+    * MIH probe: the inline face runs it over a checkpointed band frame,
+    * the production shape over a PERSISTED index. BOTH join sides derive
+    * from the skinny index (the
     * probe side re-derives each row's band value from the stored `fp` and
     * expands its radius-`probeRadius` Hamming ball; the stored side is the
     * index as-is), so the pairs/clusters family never re-reads the binary
@@ -401,11 +307,12 @@ object Multimodal {
     * against the layout without scanning it; probing a differently-banded
     * index would silently emit garbage candidates — fail loudly instead.
     *
-    * The flood guard aggregates the index's (band, bucket) counts — one
-    * pass over skinny persisted rows (never media bytes), the price of
-    * the loud-error contract on a quadratic-output join. The guard makes
-    * construction EAGER (it runs a count job and can throw before any
-    * action) — the documented [[perceptualPairs]] contract.
+    * The flood guard ([[Dedup.assertNoBucketFloodAll]]) aggregates the
+    * index's (band, bucket) counts — one pass over skinny rows (never
+    * media bytes), the price of the loud-error contract on a
+    * quadratic-output join. The guard makes construction EAGER (it runs
+    * a count job and can throw before any action) — the documented
+    * [[perceptualPairs]] contract.
     */
   def perceptualPairsIndexed(
       index: DataFrame,
@@ -438,25 +345,20 @@ object Multimodal {
           "in the ensureBucketed sourceStamp"))
     val mask = (1L << bandBits) - 1
     val stored = index.select(col("sid"), col("band"), col("bucket"), col("fp"))
-    // flood guard on the stored index's (band, bucket) grain — identical
-    // stance to the inline face, but over persisted skinny rows
-    val oversized = stored.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("_bc"))
-      .filter(col("_bc") > maxBucketRows)
-      .orderBy(col("_bc").desc)
-      .limit(3)
-      .collect()
-    if (oversized.nonEmpty) {
-      val tops = oversized
-        .map(r => s"band=${r.get(0)} bucket=${r.get(1)} rows=${r.get(2)}")
-        .mkString(", ")
-      throw new IllegalStateException(
-        s"perceptualPairsIndexed: perceptual-dup flood — (band, bucket) bucket(s) above " +
-          s"maxBucketRows=$maxBucketRows ($tops). Collapse byte-identical media to min-id " +
-          "representatives before indexing, or raise maxBucketRows only if the " +
-          "duplicity²-quadratic pair output is truly intended (the perceptualPairs " +
-          "scaladoc discusses both contracts).")
-    }
+    // the flood guard: stored-side (band, bucket) counts before the
+    // quadratic join. Stored counts (not probe-expanded) are the right
+    // grain — join output per bucket = matching probe rows × stored rows,
+    // so capping stored rows bounds the output linearly in n
+    Dedup.assertNoBucketFloodAll(Seq("" -> stored), Seq("band", "bucket"), maxBucketRows,
+      "perceptualPairsIndexed", "perceptual-dup",
+      "The within-bucket candidate join is duplicity²-quadratic and the pairs it would emit " +
+        "are quadratic OUTPUT, not just work — a degenerate corpus (solid-color frames, " +
+        "watermark templates, repeated thumbnails) collapses to one fingerprint per template. " +
+        "If the flood is BYTE-IDENTICAL media, collapse exact duplicates (md5 fingerprint from " +
+        "Multimodal.metadata) to min-id representatives before indexing and expand rep pairs to " +
+        "member pairs lazily; if it is DISTINCT media sharing a fingerprint, the quadratic is " +
+        "inherent to the pair grain — pre-shard the corpus or raise maxBucketRows only if " +
+        "that output volume is truly intended.")
     // probe side: each index row (one per band) re-derives its numeric band
     // value from fp — shiftright by the band COLUMN, so one expression
     // serves all bands — and explodes the exact value plus its radius-1
@@ -466,6 +368,11 @@ object Multimodal {
     // the downward flips only rediscovered the same pair from the other
     // side (guide §2.3: half the probe rows and candidate volume for the
     // same exact pair set; output is canonicalized to (min id, max id)).
+    // PRECONDITION (do not reuse asymmetrically): upward-only is sound ONLY
+    // because this is a symmetric SELF-join — every row probes AND is
+    // stored, so each hamming-1 band's 0-bit endpoint is guaranteed to
+    // probe. A delta probing an index that does not probe back would miss
+    // every pair whose probing side holds the 1-bit.
     // SQL form: the Scala DSL's shiftright only takes a literal bit count,
     // and here the shift is the band COLUMN (one expression serves all bands)
     val bv = expr(s"shiftright(fp, band * $bandBits)").bitwiseAND(lit(mask))
@@ -548,10 +455,9 @@ object Multimodal {
   }
 
   /** Streaming perceptual near-dup gate — the IMAGE analogue of
-    * [[Dedup.streamingNearDupCandidates]]: band the 64-bit fingerprint
-    * into `64/bandBits` (band, value) buckets and run them through the
-    * same keyed first-seen band state
-    * ([[graft.stateful.Processors.nearDupBands]]). A new image landing in
+    * [[Dedup.streamingNearDupCandidates]]: the [[phashBandIndex]] bands
+    * run through the same keyed first-seen band state
+    * ([[Dedup.firstSeenStream]]). A new image landing in
     * a bucket an earlier image claimed is emitted as a
     * [[graft.model.NearDupHit]] (dupOf = the first-seen image) — by
     * pigeonhole an arrival within hamming < nBands of ANY prior image is
@@ -569,68 +475,20 @@ object Multimodal {
       binCol: String,
       bandBits: Int = 8,
       ttlMs: Long = 0L
-  ): Dataset[graft.model.NearDupHit] = {
-    require(64 % bandBits == 0, s"streamingPerceptualDupCandidates: bandBits=$bandBits must divide 64")
-    docs.schema(idCol).dataType match {
-      case _: org.apache.spark.sql.types.ByteType | _: org.apache.spark.sql.types.ShortType |
-          _: org.apache.spark.sql.types.IntegerType | _: org.apache.spark.sql.types.LongType => ()
-      case other =>
-        throw new IllegalArgumentException(
-          s"streamingPerceptualDupCandidates: id column '$idCol' must be integral (hits carry " +
-            s"Long ids through the keyed state), got $other — pre-map string ids to a dense long")
-    }
-    import docs.sparkSession.implicits._
-    val nBands = 64 / bandBits
-    val mask = (1L << bandBits) - 1
-    val bands = array((0 until nBands).map { b =>
-      concat_ws("_",
-        lit(s"p$b"),
-        shiftright(col("_fp"), b * bandBits).bitwiseAND(lit(mask)).cast("string"))
-    }: _*)
-    val banded = docs
-      .select(
-        col(idCol).cast("long").as("sid"),
-        graft.functions.ComputeOnce(perceptualHash(col(binCol))).as("_fp"))
-      .select(col("sid"), explode(bands).as("bucket"))
-      .as[graft.model.BandRow]
-    graft.stateful.Processors.nearDupBands(banded, ttlMs)
-  }
+  ): Dataset[graft.model.NearDupHit] =
+    Dedup.firstSeenStream(docs, idCol, "streamingPerceptualDupCandidates",
+      phashBandIndex(docs, idCol, binCol, bandBits), "p", ttlMs)
 
   /** The deterministic BATCH replay of [[streamingPerceptualDupCandidates]]
-    * — one logical micro-batch over the whole frame, empty prior state
-    * (spec-pinned equality in StreamingDedupSpec): per (band, value)
-    * bucket the first-seen (minimum) sid owns it, every other sid emits
-    * one `(sid, dup_of = owner)` hit per colliding bucket — the exact
-    * multiset the keyed band state would produce. Composed under
-    * [[ingest]]'s accept filter it gives the media-ingest hit stream a
-    * three-check oracle row. Scale shape matches
-    * [[graft.data.Dedup.nearDupGateBatch]]: one (bucket)-keyed shuffle of
-    * (sid, bucket) rows, map-side-combined min, owner join on the same
-    * partitioning.
+    * ([[Dedup.firstSeenReplay]] over the same `p`-keyed bands). Composed
+    * under [[ingest]]'s accept filter it gives the media-ingest hit stream
+    * a three-check oracle row.
     */
   def perceptualGateBatch(
       docs: DataFrame,
       idCol: String,
       binCol: String,
       bandBits: Int = 8
-  ): DataFrame = {
-    require(64 % bandBits == 0, s"perceptualGateBatch: bandBits=$bandBits must divide 64")
-    val nBands = 64 / bandBits
-    val mask = (1L << bandBits) - 1
-    val bands = array((0 until nBands).map { b =>
-      concat_ws("_",
-        lit(s"p$b"),
-        shiftright(col("_fp"), b * bandBits).bitwiseAND(lit(mask)).cast("string"))
-    }: _*)
-    val banded = docs
-      .select(
-        col(idCol).cast("long").as("sid"),
-        graft.functions.ComputeOnce(perceptualHash(col(binCol))).as("_fp"))
-      .select(col("sid"), explode(bands).as("bucket"))
-    val owners = banded.groupBy(col("bucket")).agg(min(col("sid")).as("dup_of"))
-    banded
-      .join(owners, Seq("bucket"))
-      .filter(col("sid") =!= col("dup_of"))
-      .select(col("sid"), col("dup_of"))
-  }
+  ): DataFrame =
+    Dedup.firstSeenReplay(phashBandIndex(docs, idCol, binCol, bandBits), "p")
 }

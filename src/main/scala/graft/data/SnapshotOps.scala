@@ -119,19 +119,16 @@ object SnapshotOps {
     *   - `new` — everything else. `dup_corpus` wins when both hold.
     *
     * Scale shape: the corpus side participates ONLY through its banded
-    * bucket frame (sid, band, bucket — [[Dedup.bandedBuckets]], ids +
-    * hash strings, never text), which is exactly the layout a production
-    * pipeline PERSISTS as its near-dup index and appends per delta; the
-    * candidate joins are bucket-equi-joins guarded by the shared flood
-    * guard, and only collided candidates pay the shingle-set verify
-    * (two-phase LSH, delta-sized). Nothing here rereads or reshuffles
-    * ingested text beyond one signature scan to build/refresh the index.
+    * bucket frame (sid, band, bucket — [[nearDupBandIndex]], ids + hash
+    * strings, never text), which is exactly the layout a production
+    * pipeline PERSISTS as its near-dup index and appends per delta. So
+    * this face IS [[incrementalNearDupIndexed]] over that frame,
+    * checkpointed once per call: the candidate joins are bucket-equi-joins
+    * guarded by the shared flood guard, and only collided candidates pay
+    * the shingle-set verify (two-phase LSH, delta-sized). The stamp is the
+    * frame's own (no max-band scan), and nothing is pruned (the frame is
+    * not a bucketed table).
     */
-  private val nearDupFloodRemedy =
-    "A single band bucket would drive a quadratic candidate join; collapse exact " +
-      "duplicates first or raise maxBucketRows only if the distinct-grain quadratic " +
-      "is truly intended (the minhashPairs scaladoc discusses both contracts)."
-
   def incrementalNearDup(
       corpusIndex: DataFrame,
       delta: DataFrame,
@@ -143,23 +140,11 @@ object SnapshotOps {
       threshold: Double = 0.8,
       maxBucketRows: Int = 10000
   ): DataFrame = {
-    require(k % rows == 0, "incrementalNearDup: k must be divisible by band rows")
-    val dB = Dedup.bandedBuckets(delta, idCol, textCol, n, k, rows).localCheckpoint()
-    val cB = CorpusOps.releaseOnFailure(dB) {
-      Dedup.bandedBuckets(corpusIndex, idCol, textCol, n, k, rows).localCheckpoint()
+    val cB = nearDupBandIndex(corpusIndex, idCol, textCol, n, k, rows).localCheckpoint()
+    val out = CorpusOps.releaseOnFailure(cB) {
+      incrementalNearDupIndexed(cB, corpusIndex, delta, idCol, textCol, n, k, rows, threshold,
+        maxBucketRows, pruneBuckets = false, indexStamp = Some(bandStamp(n, k, rows)))
     }
-    // guards + verdict build inside a release-on-failure boundary: a flood
-    // throw must not strand the two checkpoints in a catch-and-retry loop.
-    // Both sides' guards run as ONE tagged count job (guide §1.2 — two
-    // eager passes per call was one driver round-trip more than the check
-    // needs); the error still names the flooded side.
-    val out = CorpusOps.releaseOnFailure(dB, cB) {
-      Dedup.assertNoBucketFloodAll(
-        Seq("delta" -> dB, "corpus" -> cB), maxBucketRows,
-        "incrementalNearDup", nearDupFloodRemedy)
-      nearDupVerdicts(dB, cB, corpusIndex, delta, idCol, textCol, n, threshold)
-    }
-    graft.core.Checkpoints.release(dB)
     graft.core.Checkpoints.release(cB)
     out
   }
@@ -183,7 +168,7 @@ object SnapshotOps {
       rows: Int = 2
   ): DataFrame = {
     require(k % rows == 0, "nearDupBandIndex: k must be divisible by band rows")
-    Dedup.bandedBuckets(corpus, idCol, textCol, n, k, rows)
+    Dedup.bandedBuckets(corpus, idCol, TextAnalysis.tokens(col(textCol)), n, k, rows)
   }
 
   /** Canonical encoding of the banding triple for a persisted index's build
@@ -287,15 +272,18 @@ object SnapshotOps {
               "DIFFERENT banding parameters; rebuild it with nearDupBandIndex under this " +
               "(n, k, rows) and stamp the triple into the build")
     }
-    val dB = Dedup.bandedBuckets(delta, idCol, textCol, n, k, rows).localCheckpoint()
+    val dB = nearDupBandIndex(delta, idCol, textCol, n, k, rows).localCheckpoint()
     val out = CorpusOps.releaseOnFailure(dB) {
       val cB = if (pruneBuckets) pruneIndexToDelta(bandIndex, dB, maxPruneBuckets) else bandIndex
       // ONE tagged count job guards both join sides (delta bands + the
       // pruned index slice — the actual join inputs); the error names the
       // flooded side (guide §1.2 — one driver round-trip, not two)
       Dedup.assertNoBucketFloodAll(
-        Seq("delta" -> dB, "index" -> cB), maxBucketRows,
-        "incrementalNearDupIndexed", nearDupFloodRemedy)
+        Seq("delta" -> dB, "index" -> cB), Seq("band", "bucket"), maxBucketRows,
+        "incrementalNearDupIndexed", "duplicate",
+        "A single band bucket would drive a quadratic candidate join; collapse exact " +
+          "duplicates first or raise maxBucketRows only if the distinct-grain quadratic " +
+          "is truly intended (the minhashPairs scaladoc discusses both contracts).")
       nearDupVerdicts(dB, cB, corpusText, delta, idCol, textCol, n, threshold, checkCoverage)
     }
     graft.core.Checkpoints.release(dB)
@@ -328,8 +316,8 @@ object SnapshotOps {
     } else bandIndex.where(col("bucket").isin(buckets.toSeq: _*))
   }
 
-  /** Shared verdict tail of [[incrementalNearDup]] and
-    * [[incrementalNearDupIndexed]]: candidate equi-joins off the two band
+  /** Verdict tail of [[incrementalNearDupIndexed]] (and so of
+    * [[incrementalNearDup]]): candidate equi-joins off the two band
     * frames, candidate-only shingle verify, per-doc verdict. Owns (and
     * releases) the candidate/verify checkpoints; the CALLERS own `dB`/`cB`.
     *

@@ -70,17 +70,20 @@ object SourceQueries {
     * must contain each epoch exactly once, in commit order, with the zombie
     * replay fenced out.
     *
-    * The topic is a fresh temp dir per (JVM, events generation), held as a
-    * JVM value in [[graft.data.ModelStore]]: a repeated run re-commits the
-    * same epochs into it, which the sink skips as already committed, so
-    * the answer is a pure function of the fixture; a rewritten corpus gets
-    * a new topic. No shared path, so two concurrent evaluations (bench +
-    * oracle gate, parallel suites) never touch each other's log.
+    * The topic lives in a fresh temp dir per (JVM, events generation),
+    * held as a JVM value in [[graft.data.ModelStore]]: a repeated run
+    * re-commits the same epochs into it, which the sink skips as already
+    * committed, so the answer is a pure function of the fixture; a
+    * rewritten corpus gets a new topic, and the store deletes the old one
+    * (and the live one at JVM exit). No shared path, so two concurrent
+    * evaluations (bench + oracle gate, parallel suites) never touch each
+    * other's log.
     */
   def kTxnLog(spark: SparkSession, dir: String): DataFrame = {
-    val topic = graft.data.ModelStore.get(graft.data.ModelStore.jvm[String], dir, "events", "txnlog")(
-      s"${java.nio.file.Files.createTempDirectory("graft-txnlog")}/topic")
-    val sink = graft.connectors.TxnLogSink(topic)
+    val topicDir = graft.data.ModelStore.get(
+        graft.data.ModelStore.jvm[java.nio.file.Path], dir, "events", "txnlog")(
+      java.nio.file.Files.createTempDirectory("graft-txnlog"))
+    val sink = graft.connectors.TxnLogSink(s"$topicDir/topic")
     val env = graft.core.Tables.eventsAsEnvelopes(spark, dir)
       .select(col("primaryKey"), col("traceId"), col("event_id"))
     (0L to 2L).foreach(b => sink.writer("vq")(env.filter(col("event_id") % 3 === b), b))

@@ -33,7 +33,7 @@ class BucketingSpec extends SparkSpec with Eventually {
   }
 
   test("64-bucket ensure -> append -> compact: one file per bucket per write from writeWidth tasks, same rows, exchange- and sort-free self-join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bkt_width").toString
+    val dir = tmpDir("graft_bkt_width").toString
     val table = "graft_bkt_width_spec"
     val nBuckets = 64
     val width = Bucketing.writeWidth(nBuckets, spark.sparkContext.defaultParallelism)

@@ -15,7 +15,7 @@ class CdcV2Spec extends SparkSpec {
     s"""{"op":"$op","db":"d","collection":"c","documentKey":"{\\"_id\\": $id}","fullDocument":"{\\"_id\\": $id, \\"v\\": $v}","updatedFields":null,"eventTime":"$ts"}"""
 
   test("graft-cdc batch read: all splits union to the full log, split filter partitions") {
-    val dir = Files.createTempDirectory("cdcv2").toString
+    val dir = tmpDir("cdcv2").toString
     writeLog(dir, "000001.json", (1 to 10).map(i => ev("insert", i, i, "2024-01-01T00:00:00Z")))
     val df = spark.read.format("graft-cdc").option("path", dir).option("numSplits", "3").load()
     assert(df.count() === 10)
@@ -24,9 +24,9 @@ class CdcV2Spec extends SparkSpec {
   }
 
   test("graft-cdc micro-batch: resume-token offsets deliver each event exactly once across batches") {
-    val dir = Files.createTempDirectory("cdcv2s").toString
-    val ckpt = Files.createTempDirectory("cdcv2ck").toString
-    val out = Files.createTempDirectory("cdcv2out").toString + "/sink"
+    val dir = tmpDir("cdcv2s").toString
+    val ckpt = tmpDir("cdcv2ck").toString
+    val out = tmpDir("cdcv2out").toString + "/sink"
     writeLog(dir, "000001.json", Seq(ev("insert", 1, 10, "2024-01-01T00:00:00Z")))
     val stream = spark.readStream.format("graft-cdc")
       .option("path", dir).option("numSplits", "2").load()
@@ -80,9 +80,9 @@ class CdcV2Spec extends SparkSpec {
     // parquet sink's transactional batch commit + the resume-token offset
     // must yield EXACTLY one copy of every event, and no change-log
     // descriptor may remain open once readers finish.
-    val dir = Files.createTempDirectory("cdcv2e").toString
-    val ckpt = Files.createTempDirectory("cdcv2eck").toString
-    val out = Files.createTempDirectory("cdcv2eout").toString + "/sink"
+    val dir = tmpDir("cdcv2e").toString
+    val ckpt = tmpDir("cdcv2eck").toString
+    val out = tmpDir("cdcv2eout").toString + "/sink"
     val segments = 60
     val rowsPer = 100
     def seg(s: Int): Seq[String] =
@@ -125,7 +125,7 @@ class CdcV2Spec extends SparkSpec {
   }
 
   test("graft-cdc feeds the CDC parser end-to-end") {
-    val dir = Files.createTempDirectory("cdcv2p").toString
+    val dir = tmpDir("cdcv2p").toString
     writeLog(dir, "000001.json", Seq(ev("u", 7, 70, "2024-01-01T00:00:00Z")))
     val df = spark.read.format("graft-cdc").option("path", dir).load()
     val parsed = graft.parsers.CdcParser.parse(df, clock = lit("2024-07-01").cast("timestamp"))

@@ -8,7 +8,7 @@ class CorpusWriterSpec extends SparkSpec {
   import spark.implicits._
 
   test("time-partitioned write: partition pruning reaches the scan") {
-    val out = java.nio.file.Files.createTempDirectory("corpus").toString + "/events"
+    val out = tmpDir("corpus").toString + "/events"
     CorpusWriter.writeTimePartitioned(
       graft.core.Tables.events(spark, sf), out, tsCol = "ts", keyCol = "user_id", filesPerDay = 4)
     val back = spark.read.parquet(out)
@@ -38,7 +38,7 @@ class CorpusWriterSpec extends SparkSpec {
   }
 
   test("compact: many small files become few target-sized files, content preserved") {
-    val base = java.nio.file.Files.createTempDirectory("compact").toString
+    val base = tmpDir("compact").toString
     val src = s"$base/src"
     val dst = s"$base/dst"
     // simulate a micro-batch-fragmented table: 40 files for a small table
@@ -59,7 +59,7 @@ class CorpusWriterSpec extends SparkSpec {
   }
 
   test("compact with partitionCols: partitioned layout survives the rewrite") {
-    val base = java.nio.file.Files.createTempDirectory("compact_part").toString
+    val base = tmpDir("compact_part").toString
     val src = s"$base/src"
     val dst = s"$base/dst"
     CorpusWriter.writeTimePartitioned(
@@ -78,7 +78,7 @@ class CorpusWriterSpec extends SparkSpec {
     // low-cardinality order columns alone cannot form nFiles distinct
     // ranges — the row-id tiebreaker in the range distribution must split
     // WITHIN the constant key so file sizing holds
-    val base = java.nio.file.Files.createTempDirectory("compact_const").toString
+    val base = tmpDir("compact_const").toString
     val src = s"$base/src"
     val dst = s"$base/dst"
     graft.core.Tables.events(spark, sf)
@@ -98,7 +98,7 @@ class CorpusWriterSpec extends SparkSpec {
     // xxhash64 rejects MapType — the tiebreaker must restrict itself to the
     // hashable columns instead of failing the whole compaction (ADVICE r10;
     // the r10 switch from monotonically_increasing_id was schema-independent)
-    val base = java.nio.file.Files.createTempDirectory("compact_map").toString
+    val base = tmpDir("compact_map").toString
     val src = s"$base/src"
     val dst = s"$base/dst"
     graft.core.Tables.events(spark, sf)
@@ -119,7 +119,7 @@ class CorpusWriterSpec extends SparkSpec {
   }
 
   test("compact with keyCols: re-sorted layout restores row-group skipping stats") {
-    val base = java.nio.file.Files.createTempDirectory("compact_sorted").toString
+    val base = tmpDir("compact_sorted").toString
     val src = s"$base/src"
     val dst = s"$base/dst"
     graft.core.Tables.events(spark, sf).repartition(20).write.parquet(src)

@@ -484,7 +484,7 @@ class DataOpsSpec extends SparkSpec {
   }
 
   test("clean corpus best: cluster keeps the LONGEST member (ties min id); min-id face contrasts") {
-    val dir = java.nio.file.Files.createTempDirectory("cleanbest").toString
+    val dir = tmpDir("cleanbest").toString
     val base = "the quick brown fox jumps over the lazy dog today and more padding words"
     Seq(
       (1L, base), // near-dup cluster {1,2}; 2 is longer -> best keeps 2
@@ -884,6 +884,20 @@ class DataOpsSpec extends SparkSpec {
     val inline7r0 = pairsOf(Multimodal
       .perceptualPairs(df, "doc_id", "bin", maxHamming = 7, bandBits = 8, probeRadius = 0))
     assert(inline15.nonEmpty && inline7r0.nonEmpty)
+    // the inline face is itself served by the indexed probe, so pin both
+    // against brute force over the independent reference fingerprints
+    def refFp(bs: Array[Byte]): Long = {
+      def s(g: Int) = bs((g * bs.length) / 72) & 0xff
+      (for { r <- 0 until 8; c <- 0 until 8 } yield
+        if (s(r * 9 + c) < s(r * 9 + c + 1)) 1L << (r * 8 + c) else 0L).foldLeft(0L)(_ | _)
+    }
+    val fpById = imgs.map { case (id, bs) => id -> refFp(bs) }.toMap
+    def brute(maxHamming: Int) = (for {
+      (a, fa) <- fpById.toSeq; (b, fb) <- fpById.toSeq if a < b
+      h = java.lang.Long.bitCount(fa ^ fb) if h <= maxHamming
+    } yield (a, b, h.toLong)).toSet
+    assert(inline15 === brute(15))
+    assert(inline7r0 === brute(7))
     // raw index frame ≡ inline, at both probe configurations
     val rawIdx = Multimodal.phashBandIndex(df, "doc_id", "bin", bandBits = 8)
     assert(pairsOf(Multimodal.perceptualPairsIndexed(
@@ -891,7 +905,7 @@ class DataOpsSpec extends SparkSpec {
     assert(pairsOf(Multimodal.perceptualPairsIndexed(
       rawIdx, maxHamming = 7, bandBits = 8, probeRadius = 0)) === inline7r0)
     // persisted: build over a corpus slice, append the delta, equal a rebuild
-    val dir = java.nio.file.Files.createTempDirectory("graft_phash_idx_spec").toString
+    val dir = tmpDir("graft_phash_idx_spec").toString
     val table = "graft_phash_idx_spec"
     val corpusSlice = df.filter($"doc_id" <= 6L)
     val deltaSlice = df.filter($"doc_id" > 6L)

@@ -8,7 +8,7 @@ import graft.jobs._
 class JobsSpec extends SparkSpec {
   import spark.implicits._
 
-  private val outDir = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+  private val outDir = tmpDir("graft-jobs").toString
 
   test("all 7 registered jobs run end-to-end on the sf0.001 fixtures") {
     // the registry is ServiceLoader-discovered (META-INF/services), not a
@@ -69,6 +69,7 @@ class JobsSpec extends SparkSpec {
 
   test("ScopedConfig resolves sysprop > env > json[job] > json[common]") {
     val json = java.nio.file.Files.createTempFile("graft", ".json")
+    json.toFile.deleteOnExit()
     java.nio.file.Files.writeString(
       json,
       """{"common": {"A": "common-a", "B": "common-b"}, "JobX": {"A": "jobx-a"}}""")

@@ -435,7 +435,7 @@ class ProcessorsSpec extends SparkSpec {
         keepPpm = 300000L, binLo = 0L, binWidth = 5L, nBins = 20)
       .collect().toVector.sortBy(_.sid)
 
-    val base = java.nio.file.Files.createTempDirectory("qgate_endure").toString
+    val base = tmpDir("qgate_endure").toString
     def run(tag: String, kill: Boolean): Vector[graft.model.QualityVerdict] = {
       val out = s"$base/$tag/out"; val ckpt = s"$base/$tag/ckpt"
       val mem = MemoryStream[graft.model.ScoredDoc]

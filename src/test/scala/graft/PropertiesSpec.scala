@@ -295,7 +295,7 @@ class PropertiesSpec extends SparkSpec {
   test("property: two racing ModelStore writers — one winner, reader never torn") {
     import graft.data.ModelStore
     (1 to 4).foreach { round =>
-      val base = java.nio.file.Files.createTempDirectory(s"race-$round").toString
+      val base = tmpDir(s"race-$round").toString
       val path = s"$base/model"
       val mA = Seq(Seq(1.0 + round, 2.0), Seq(3.0, 4.0))
       val mB = Seq(Seq(9.0 + round, 8.0), Seq(7.0, 6.0))
@@ -324,7 +324,7 @@ class PropertiesSpec extends SparkSpec {
     // model underneath them (another JVM's evictStale) — a model vanishing
     // between the existence check and the read must retrain, never throw
     (1 to 4).foreach { round =>
-      val path = s"${java.nio.file.Files.createTempDirectory(s"race-bytes-$round")}/model"
+      val path = s"${tmpDir(s"race-bytes-$round")}/model"
       val mA = Array.fill[Byte](4096)(round.toByte)
       val mB = Array.fill[Byte](4096)((round + 100).toByte)
       ModelStore.saveBytes(path, mA)
@@ -358,7 +358,7 @@ class PropertiesSpec extends SparkSpec {
     // still present (deleteQuietly removes children in listing order, so a
     // concurrent reader can observe exactly this). done() passes, the read
     // fails on missing data, and the contract is retrain-and-persist.
-    val base1 = java.nio.file.Files.createTempDirectory("evict-read-1").toString
+    val base1 = tmpDir("evict-read-1").toString
     val p1 = s"$base1/model"
     ModelStore.saveCentroids(spark, p1, m)
     new java.io.File(p1).listFiles().filter(_.getName != "_SUCCESS").foreach(_.delete())
@@ -370,7 +370,7 @@ class PropertiesSpec extends SparkSpec {
     // shape 2: same race for codebooks, directory fully gone after done()
     // is indistinguishable from first-run (covered by the !done branch) —
     // here pin the mid-delete shape for the codebook loader too
-    val base2 = java.nio.file.Files.createTempDirectory("evict-read-2").toString
+    val base2 = tmpDir("evict-read-2").toString
     val p2 = s"$base2/model"
     val cb = Seq(Seq(Seq(1.0, 2.0)), Seq(Seq(3.0, 4.0)))
     val cb2 = Seq(Seq(Seq(9.0, 9.0)), Seq(Seq(8.0, 8.0)))
@@ -378,7 +378,7 @@ class PropertiesSpec extends SparkSpec {
     new java.io.File(p2).listFiles().filter(_.getName != "_SUCCESS").foreach(_.delete())
     assert(ModelStore.codebooksOrTrain(spark, p2)(cb2) === cb2)
     // a corrupt-but-present model must STILL rethrow (not silently retrain)
-    val base3 = java.nio.file.Files.createTempDirectory("evict-read-3").toString
+    val base3 = tmpDir("evict-read-3").toString
     val p3 = s"$base3/model"
     ModelStore.saveCentroids(spark, p3, m)
     new java.io.File(p3).listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
@@ -398,7 +398,7 @@ class PropertiesSpec extends SparkSpec {
     import graft.connectors.CorpusWriter
     Seq(5L, 29L).foreach { seed =>
       val rnd = new scala.util.Random(seed)
-      val base = java.nio.file.Files.createTempDirectory(s"compact-dup-$seed").toString
+      val base = tmpDir(s"compact-dup-$seed").toString
       val src = s"$base/src"
       val dst = s"$base/dst"
       // 4000 rows over 15 distinct values -> ~266 copies of each row

@@ -184,7 +184,7 @@ class RelationalSpec extends SparkSpec {
     // a constant-value group has sd = 0 — it must DROP (exact n·s2 = s1²
     // guard), not surface NaN/inf rows, while the varying group still
     // reports its genuine outlier (values 9×0 + 100: mean 10, sd 30, z = 3)
-    val dir1 = java.nio.file.Files.createTempDirectory("qoutliers_var").toString
+    val dir1 = tmpDir("qoutliers_var").toString
     writeEvents(dir1,
       (1L to 5L).map(i => (i, "const", 7.0)) ++
         (10L until 19L).map(i => (i, "var", 0.0)) :+ ((19L, "var", 100.0)))
@@ -195,7 +195,7 @@ class RelationalSpec extends SparkSpec {
     // sum(cents²) beyond DECIMAL(38): two rows of value 9e16 (cents 9e18,
     // cents² 8.1e37 each) overflow the accumulator — the job must FAIL, not
     // return a silently-wrapped variance
-    val dir2 = java.nio.file.Files.createTempDirectory("qoutliers_ovf").toString
+    val dir2 = tmpDir("qoutliers_ovf").toString
     writeEvents(dir2, Seq((1L, "huge", 9.0e16), (2L, "huge", 9.0e16), (3L, "huge", 1.0)))
     val loud = intercept[Exception] {
       Relational.qOutliers(spark, dir2).collect()

@@ -117,7 +117,7 @@ class ScaleMechanicsSpec extends SparkSpec {
 
   test("ensureBucketed: write-once marker, catalog re-registration, exchange+sort-free join") {
     import graft.connectors.Bucketing
-    val base = java.nio.file.Files.createTempDirectory("graft_bkt_spec").toString
+    val base = tmpDir("graft_bkt_spec").toString
     val li0 = graft.core.Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
     val ord0 = graft.core.Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")
     try {
@@ -175,7 +175,7 @@ class ScaleMechanicsSpec extends SparkSpec {
 
   test("ensureBucketed: a catalog name reused for a DIFFERENT path re-registers, never returns the old table") {
     import graft.connectors.Bucketing
-    val base = java.nio.file.Files.createTempDirectory("graft_bkt_reuse").toString
+    val base = tmpDir("graft_bkt_reuse").toString
     val li0 = graft.core.Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
     val ord0 = graft.core.Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")
     try {
@@ -202,7 +202,7 @@ class ScaleMechanicsSpec extends SparkSpec {
 
   test("stampDir: sees nested files and distinguishes same-aggregate layouts") {
     import graft.connectors.Bucketing
-    val base = java.nio.file.Files.createTempDirectory("graft_stamp").toFile
+    val base = tmpDir("graft_stamp").toFile
     try {
       val f1 = new java.io.File(base, "part-0.parquet")
       val f2 = new java.io.File(base, "part-1.parquet")
@@ -613,7 +613,7 @@ class ScaleMechanicsSpec extends SparkSpec {
     val fence2 = Fence.Imi(icbs, pSub = 2)
     val adc = Scorer.Adc(pcbs)
     val inline = rows(Similarity.topK(corpus, q, "vec_id", "embedding", fence2, adc, k = 5))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_idx_spec").toString
+    val dir = tmpDir("graft_ann_idx_spec").toString
     val idx = graft.connectors.Bucketing.ensureBucketed(
       spark,
       Similarity.encode(corpus, "vec_id", "embedding", fence2, adc),
@@ -652,7 +652,7 @@ class ScaleMechanicsSpec extends SparkSpec {
     val pcbs = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 8, k = 16)
     def encode(df: org.apache.spark.sql.DataFrame) = Similarity.encode(
       df, "vec_id", "embedding", Similarity.Fence.Imi(icbs), Similarity.Scorer.Adc(pcbs))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_idx_append").toString
+    val dir = tmpDir("graft_ann_idx_append").toString
     val table = "graft_ann_idx_append_spec"
     graft.connectors.Bucketing.ensureBucketed(
       spark, encode(corpus), table, dir, "n_bk", 8, sourceStamp = "specA")
@@ -682,7 +682,7 @@ class ScaleMechanicsSpec extends SparkSpec {
     def rowSet(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, String)].collect().toSet
     val expected = rowSet(union)
-    val dir = java.nio.file.Files.createTempDirectory("graft_append_once").toString
+    val dir = tmpDir("graft_append_once").toString
     val table = "graft_append_once_spec"
     def boom = sys.error("this frame must not evaluate"): org.apache.spark.sql.DataFrame
     try {
@@ -729,7 +729,7 @@ class ScaleMechanicsSpec extends SparkSpec {
 
   test("compactBucketed: appends-grown table collapses to ≤1 file/bucket — same rows, same stamp, same spec; torn compact rebuilds") {
     import graft.connectors.Bucketing
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val dir = tmpDir("graft_compact").toString
     val table = "graft_compact_spec"
     def slice(lo: Long, hi: Long) =
       (lo until hi).map(i => (i, s"b${i % 8}")).toDF("sid", "bucket")
@@ -796,7 +796,7 @@ class ScaleMechanicsSpec extends SparkSpec {
 
   test("compactBucketed is bucket-incremental: only fragmented buckets rewritten, untouched buckets' files untouched; per-bucket no-op decision") {
     import graft.connectors.Bucketing
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_incr").toString
+    val dir = tmpDir("graft_compact_incr").toString
     val table = "graft_compact_incr_spec"
     def rows(lo: Long, hi: Long, v: String) = (lo until hi).map(i => (i, v)).toDF("sid", "bucket")
     def rowSet(df: org.apache.spark.sql.DataFrame) = df.as[(Long, String)].collect().toSet
@@ -883,7 +883,7 @@ class ScaleMechanicsSpec extends SparkSpec {
       // count sits at nBuckets while ONE bucket holds all the fragments —
       // the old total-count skip (<= nBuckets) never compacted this; the
       // per-bucket decision must
-      val dir2 = java.nio.file.Files.createTempDirectory("graft_compact_skew").toString
+      val dir2 = tmpDir("graft_compact_skew").toString
       val table2 = "graft_compact_skew_spec"
       try {
         Bucketing.ensureBucketed(spark, rows(0, 10, "x"), table2, dir2, "bucket", 4, "k0")
@@ -911,7 +911,7 @@ class ScaleMechanicsSpec extends SparkSpec {
     // suffix), marker IO, catalog location matching (scheme-qualified on
     // both sides), stampDir, and the fences.
     import graft.connectors.Bucketing
-    val local = java.nio.file.Files.createTempDirectory("graft_scheme").toString
+    val local = tmpDir("graft_scheme").toString
     val dir = "file:" + local // explicit scheme, same files underneath
     val table = "graft_scheme_spec"
     def rows(lo: Long, hi: Long) = (lo until hi).map(i => (i, s"b${i % 8}")).toDF("sid", "bucket")
@@ -1016,8 +1016,8 @@ class ScaleMechanicsSpec extends SparkSpec {
     val epochs = 4
     def slice(lo: Long, n: Long) = (lo until lo + n).map(i => (i, s"b${i % 4}")).toDF("sid", "bucket")
     val dirs = Seq(
-      java.nio.file.Files.createTempDirectory("graft_stripe_a").toString,
-      java.nio.file.Files.createTempDirectory("graft_stripe_b").toString)
+      tmpDir("graft_stripe_a").toString,
+      tmpDir("graft_stripe_b").toString)
     val tables = Seq("graft_stripe_spec_a", "graft_stripe_spec_b")
     val boomMsg = "this frame must not evaluate"
     def boom = sys.error(boomMsg): org.apache.spark.sql.DataFrame
@@ -1058,7 +1058,7 @@ class ScaleMechanicsSpec extends SparkSpec {
 
   test("cachedStamp: walk-free per-batch stamps — one stampDir walk per source per JVM; invalidateStamp re-walks; value identical to the exact walk (VERDICT r19 #1)") {
     import graft.connectors.Bucketing
-    val base = java.nio.file.Files.createTempDirectory("graft_memo_stamp").toFile
+    val base = tmpDir("graft_memo_stamp").toFile
     try {
       java.nio.file.Files.write(new java.io.File(base, "part-0.parquet").toPath, "ab".getBytes)
       val w0 = Bucketing.stampWalkCount.get()
@@ -1106,7 +1106,7 @@ class ScaleMechanicsSpec extends SparkSpec {
   test("corpus memos follow the source stamp: a corpus rewritten under the same dir serves the new generation after invalidateStamp") {
     import graft.connectors.Bucketing
     import graft.data.ModelStore
-    val base = java.nio.file.Files.createTempDirectory("graft_memo_regen").toFile
+    val base = tmpDir("graft_memo_regen").toFile
     val reused = new java.io.File(base, "reused").toString
     val fresh = new java.io.File(base, "fresh").toString
     val faces = Seq("d_minhash_pairs", "s_ann_pq_ivf", "j4_asof_stream", "job_dlq_replay_audit",

@@ -923,7 +923,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("ModelStore: centroids and codebooks round-trip IEEE-exact; reloaded model reproduces ANN results") {
     import graft.data.{ModelStore, Similarity}
-    val base = java.nio.file.Files.createTempDirectory("modelstore").toString
+    val base = tmpDir("modelstore").toString
     val e = graft.core.Tables.embeddings(spark, sf)
     val cents = Similarity.seedCentroids(e, "vec_id", "embedding", k = 8)
     ModelStore.saveCentroids(spark, s"$base/cents", cents)
@@ -947,7 +947,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("ModelStore: orTrain trains once then loads; a torn destination is replaced, not left blocking") {
     import graft.data.{ModelStore, Similarity}
-    val base = java.nio.file.Files.createTempDirectory("modelstore_ot").toString
+    val base = tmpDir("modelstore_ot").toString
     val e = graft.core.Tables.embeddings(spark, sf)
     var trainings = 0
     def train() = { trainings += 1; Similarity.seedCentroids(e, "vec_id", "embedding", k = 4) }
@@ -997,7 +997,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("ModelStore.evictStale: stale stamps go, live stamps and in-flight writes stay") {
     import graft.data.ModelStore
-    val corpus = java.nio.file.Files.createTempDirectory("evict-corpus").toString
+    val corpus = tmpDir("evict-corpus").toString
     val root = new java.io.File(ModelStore.rootFor(corpus))
     root.mkdirs()
     val names = Seq(

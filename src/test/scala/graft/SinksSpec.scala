@@ -15,7 +15,7 @@ class SinksSpec extends SparkSpec {
 
   test("UpsertSink.writer maintains the keyed table across micro-batches (foreachBatch)") {
     implicit val sc = spark.sqlContext
-    val path = Files.createTempDirectory("upsert").toString + "/table"
+    val path = tmpDir("upsert").toString + "/table"
     val mem = MemoryStream[StreamEnvelop]
     val q = mem.toDS().toDF().writeStream
       .foreachBatch(UpsertSink.writer(path) _)
@@ -38,7 +38,7 @@ class SinksSpec extends SparkSpec {
 
   test("UpsertSink.writer rewrites ONLY the buckets a batch touches") {
     import org.apache.spark.sql.functions._
-    val path = Files.createTempDirectory("upsert-bkt").toString + "/table"
+    val path = tmpDir("upsert-bkt").toString + "/table"
     val batch1 = Seq(
       mkEnv("insert", "k1", """{"v":1}""", 1), mkEnv("insert", "k2", """{"v":2}""", 1),
       mkEnv("insert", "k3", """{"v":3}""", 1), mkEnv("insert", "k4", """{"v":4}""", 1),
@@ -71,7 +71,7 @@ class SinksSpec extends SparkSpec {
     // and the next merge deletes `.old-N` — permanent data loss (ADVICE r2,
     // medium).
     import org.apache.spark.sql.functions._
-    val path = Files.createTempDirectory("upsert-crash").toString + "/table"
+    val path = tmpDir("upsert-crash").toString + "/table"
     val keys = Seq("k1", "k2", "k3", "k4", "k5", "k6")
     UpsertSink.writer(path)(keys.map(k => mkEnv("insert", k, s"""{"k":"$k"}""", 1)).toDF(), 0L)
     // crash simulation: k1's bucket was renamed aside but never replaced
@@ -119,7 +119,7 @@ class SinksSpec extends SparkSpec {
       mkEnv("DELETE", "c", null, 3))
     val rdd = spark.sparkContext.parallelize(envs, 2).map { e => acc.add(1); e }
     val df = spark.createDataFrame(rdd)
-    val path = Files.createTempDirectory("upsert-once").toString + "/table"
+    val path = tmpDir("upsert-once").toString + "/table"
     UpsertSink.writer(path)(df, 0L)
     assert(UpsertSink.readTable(spark, path).count() === 2)
     assert(acc.value <= 2L * envs.size,
@@ -141,7 +141,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("EsSink.writer: a replayed micro-batch converges to identical index state") {
-    val path = Files.createTempDirectory("es-idx").toString + "/index"
+    val path = tmpDir("es-idx").toString + "/index"
     val batch = Seq(
       mkEnv("insert", "a", """{"v":1}""", 1).copy(traceId = "t1"),
       mkEnv("insert", "b", """{"v":2}""", 2).copy(traceId = "t2")
@@ -188,7 +188,7 @@ class SinksSpec extends SparkSpec {
 
   test("TxnLogSink: replayed epoch commits once, uncommitted data invisible, zombie fenced") {
     import org.apache.spark.sql.functions._
-    val topic = Files.createTempDirectory("txnlog").toString + "/topic"
+    val topic = tmpDir("txnlog").toString + "/topic"
     val sink = graft.connectors.TxnLogSink(topic)
     val b0 = Seq(mkEnv("insert", "a", """{"v":1}""", 1), mkEnv("insert", "b", """{"v":2}""", 2)).toDF()
     val b1 = Seq(mkEnv("update", "a", """{"v":9}""", 3)).toDF()
@@ -240,7 +240,7 @@ class SinksSpec extends SparkSpec {
     // as occupied and throws, and the verify read-back fails too — the
     // Unconfirmed path. The writer must throw and must NOT delete the
     // attempt's data directory.
-    val topic = Files.createTempDirectory("txnlogfail").toString + "/topic"
+    val topic = tmpDir("txnlogfail").toString + "/topic"
     val sink = graft.connectors.TxnLogSink(topic)
     sink.writer("q1")(Seq(mkEnv("insert", "a", """{"v":1}""", 1)).toDF(), 0L)
     Files.createSymbolicLink(
@@ -263,7 +263,7 @@ class SinksSpec extends SparkSpec {
   test("TxnLogSink: commit order is numeric batch order, not file-name lexicography") {
     // batch 10's manifest name 'q-10.json' sorts lexicographically BEFORE
     // 'q-2.json' — the committed view must still order it after
-    val topic = Files.createTempDirectory("txnlog-ord").toString + "/topic"
+    val topic = tmpDir("txnlog-ord").toString + "/topic"
     val sink = graft.connectors.TxnLogSink(topic)
     (0L to 11L).foreach { b =>
       sink.writer("q")(Seq(mkEnv("insert", s"k$b", s"""{"b":$b}""", b + 1)).toDF(), b)
@@ -275,7 +275,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("TxnLogSink: checkpoint compaction keeps the committed view identical") {
-    val topic = Files.createTempDirectory("txnlog-ckpt").toString + "/topic"
+    val topic = tmpDir("txnlog-ckpt").toString + "/topic"
     // auto-checkpoint every 8 commits; 20 batches → 2 auto checkpoints + tail
     val sink = graft.connectors.TxnLogSink(topic, checkpointEvery = 8)
     (0L until 20L).foreach { b =>
@@ -306,7 +306,7 @@ class SinksSpec extends SparkSpec {
     // is excluded by upTo, never half-absorbed), so their edge semantics
     // get direct pins: above is EXCLUSIVE, upTo INCLUSIVE, a writer absent
     // from upTo contributes nothing, and empty ranges are None
-    val topic = Files.createTempDirectory("txnlog-slice").toString + "/topic"
+    val topic = tmpDir("txnlog-slice").toString + "/topic"
     val sink = graft.connectors.TxnLogSink(topic)
     for ((w, e) <- Seq(("a", 0L), ("b", 0L), ("a", 1L), ("b", 1L), ("a", 2L)))
       sink.writer(w)(Seq(mkEnv("insert", s"$w$e", s"""{"w":"$w"}""", e + 1)).toDF(), e)
@@ -334,7 +334,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("TxnLogSink: concurrent committers racing one epoch — exactly one wins, no orphans visible") {
-    val topic = Files.createTempDirectory("txnlog-race").toString + "/topic"
+    val topic = tmpDir("txnlog-race").toString + "/topic"
     val sink = graft.connectors.TxnLogSink(topic)
     // 8 threads replay the SAME epoch with DIFFERENT payloads (zombie +
     // replacements): the no-overwrite commit must let exactly one attempt
@@ -361,8 +361,8 @@ class SinksSpec extends SparkSpec {
 
   test("TxnLogSink streaming: kill-and-resume yields exactly-once appends end-to-end") {
     implicit val sc = spark.sqlContext
-    val topic = Files.createTempDirectory("txnlog-s").toString + "/topic"
-    val ckpt = Files.createTempDirectory("txnlog-ck").toString
+    val topic = tmpDir("txnlog-s").toString + "/topic"
+    val ckpt = tmpDir("txnlog-ck").toString
     val sink = graft.connectors.TxnLogSink(topic)
     val mem = MemoryStream[StreamEnvelop]
     def start() = mem.toDS().toDF().writeStream
@@ -422,7 +422,7 @@ class SinksSpec extends SparkSpec {
     // (key, value) records. Producer side = keyedProjection; consumer side =
     // the value-only string contract of KafkaConnectors.source, fed through
     // EnvelopeParser. Every field must survive, nothing may land in the DLQ.
-    val topic = Files.createTempDirectory("file-broker").toString + "/topic"
+    val topic = tmpDir("file-broker").toString + "/topic"
     val envs = Seq(
       mkEnv("insert", "k1", """{"v": 1}""", 1).copy(metadata = Map("m" -> "x")),
       mkEnv("update", "k2", """{"v": 2}""", 2),

@@ -154,7 +154,7 @@ class SnapshotOpsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val inline = SnapshotOps.incrementalNearDup(corpus, delta, "doc_id", "text")
       .as[(Long, String)].collect().toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft_neardup_idx_spec").toString
+    val dir = tmpDir("graft_neardup_idx_spec").toString
     val table = "graft_neardup_idx_spec"
     val idx = Bucketing.ensureBucketed(
       spark, SnapshotOps.nearDupBandIndex(corpus, "doc_id", "text"),
@@ -233,7 +233,7 @@ class SnapshotOpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val inline = SnapshotOps.incrementalNearDup(corpus, delta, "doc_id", "text")
       .as[(Long, String)].collect().toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft_neardup_stamp_spec").toString
+    val dir = tmpDir("graft_neardup_stamp_spec").toString
     val table = "graft_neardup_stamp_spec"
     val idx = Bucketing.ensureBucketed(
       spark, SnapshotOps.nearDupBandIndex(corpus, "doc_id", "text"),
@@ -271,8 +271,8 @@ class SnapshotOpsSpec extends SparkSpec {
   test("appendBucketed: a catalog name registered for a DIFFERENT path/spec refuses the append loudly") {
     import graft.connectors.Bucketing
     val rows = (0L until 20L).map(i => (i, s"t$i")).toDF("sid", "bucket")
-    val dirA = java.nio.file.Files.createTempDirectory("graft_append_guard_a").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft_append_guard_b").toString
+    val dirA = tmpDir("graft_append_guard_a").toString
+    val dirB = tmpDir("graft_append_guard_b").toString
     val table = "graft_append_guard_spec"
     Bucketing.ensureBucketed(spark, rows, table, dirA, "bucket", 4, sourceStamp = "a")
     // simulate the drift: the same NAME re-registered for another location

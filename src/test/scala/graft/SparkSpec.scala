@@ -30,6 +30,30 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       spark.streams.active.foreach(_.stop())
       org.apache.spark.sql.execution.streaming.state.GraftStateStoreAccess.unloadAll()
-    } finally super.afterAll()
+    } finally try deleteTmpDirs() finally super.afterAll()
+  }
+
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A fresh temp dir that this suite's afterAll deletes, together with
+    * the [[graft.data.ModelStore.rootFor]] root of every directory under
+    * it: a temp corpus leaves its derived models in a root keyed on its
+    * path, outside the dir itself.
+    */
+  def tmpDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tmpDirs.add(d)
+    d
+  }
+
+  private def deleteTmpDirs(): Unit = tmpDirs.forEach { d =>
+    if (java.nio.file.Files.isDirectory(d)) {
+      val walk = java.nio.file.Files.walk(d)
+      try walk.filter(java.nio.file.Files.isDirectory(_)).forEach(sub =>
+        org.apache.commons.io.FileUtils.deleteQuietly(
+          new java.io.File(graft.data.ModelStore.rootFor(sub.toString))): Unit)
+      finally walk.close()
+    }
+    org.apache.commons.io.FileUtils.deleteQuietly(d.toFile): Unit
   }
 }

@@ -198,7 +198,7 @@ class StreamingAsOfSpec extends SparkSpec {
     // RESTORED ListState history (and the maxProbe ValueState), and the
     // total output must equal an uninterrupted run row for row.
     implicit val sc = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("sasof_endure").toString
+    val base = tmpDir("sasof_endure").toString
     val v1 = Seq(AsOfVersion("k1", 100L, "v1"), AsOfVersion("k2", 200L, "v2"))
     val e1 = Seq(AsOfEvent("k1", 150L, "a"), AsOfEvent("k2", 150L, "b"))
     val v2 = Seq(AsOfVersion("k1", 300L, "v3"))

@@ -102,4 +102,18 @@ class StreamingDedupSpec extends SparkSpec {
     assert(batchM.nonEmpty, "media fixture must produce hits")
     assert(batchM === streamedM, s"perceptual batch replay diverged: batch=$batchM streamed=$streamedM")
   }
+
+  test("perceptual gates: bandBits = 64 refused by the batch replay and the streaming gate") {
+    // a 64-bit band is the whole fingerprint, and its mask (1L << 64) - 1
+    // is 0 on the JVM: every image would band to p0_0 and every accepted
+    // image after the first would report as a near-dup of the first
+    implicit val sc = spark.sqlContext
+    val media = Seq((1L, "pixel soup".getBytes("UTF-8")), (2L, "other pixels".getBytes("UTF-8")))
+    intercept[IllegalArgumentException](
+      graft.data.Multimodal.perceptualGateBatch(media.toDF("doc_id", "bin"), "doc_id", "bin", bandBits = 64))
+    val mem = MemoryStream[(Long, Array[Byte])]
+    intercept[IllegalArgumentException](
+      graft.data.Multimodal.streamingPerceptualDupCandidates(
+        mem.toDS().toDF("doc_id", "bin"), "doc_id", "bin", bandBits = 64))
+  }
 }

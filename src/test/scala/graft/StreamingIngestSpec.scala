@@ -294,6 +294,17 @@ class StreamingIngestSpec extends SparkSpec {
     } finally { qa.stop(); qh.stop() }
   }
 
+  test("media ingest: bandBits = 64 refused before the stream starts") {
+    // 64 divides 64, but a 64-bit band's mask is 0 on the JVM, so the gate
+    // would band every accepted image to p0_0
+    implicit val sc = spark.sqlContext
+    val mem = MemoryStream[(Long, Array[Byte], String)]
+    intercept[IllegalArgumentException](
+      graft.data.Multimodal.ingest(
+        mem.toDS().toDF("doc_id", "bin", "mime"), "doc_id", "bin", "mime",
+        Seq("image/png"), minBytes = 64, maxBytes = 1024L, bandBits = 64))
+  }
+
   test("streaming perceptual gate: near image hits its first-seen original, far image passes clean") {
     import graft.data.Multimodal
     def mk(f: Int => Int, n: Int = 144): Array[Byte] = Array.tabulate(n)(i => f(i).toByte)
@@ -347,7 +358,7 @@ class StreamingIngestSpec extends SparkSpec {
     import graft.connectors.Bucketing
     import graft.data.SnapshotOps
     import org.apache.spark.sql.functions.length
-    val base = java.nio.file.Files.createTempDirectory("ingest_idx_stream").toString
+    val base = tmpDir("ingest_idx_stream").toString
     val dir = s"$base/bands"
     val ckpt = s"$base/ckpt"
     val table = "graft_stream_idx_spec"
@@ -435,7 +446,7 @@ class StreamingIngestSpec extends SparkSpec {
     implicit val sc = spark.sqlContext
     import graft.connectors.{Bucketing, MultiWriterIndex}
     import graft.data.SnapshotOps
-    val root = java.nio.file.Files.createTempDirectory("mw_index").toString
+    val root = tmpDir("mw_index").toString
     val idx = s"$root/idx"
     val table = "graft_mw_index_spec"
     def bands(df: org.apache.spark.sql.DataFrame) =
@@ -533,7 +544,7 @@ class StreamingIngestSpec extends SparkSpec {
     // falls back to the log and answers every per-key lookup exactly
     import graft.connectors.{MultiWriterIndex, TxnLogSink}
     import org.apache.spark.sql.functions.col
-    val idx = java.nio.file.Files.createTempDirectory("mw_spec").toString + "/idx"
+    val idx = tmpDir("mw_spec").toString + "/idx"
     val table = "graft_mw_spec_mismatch"
     def rows(ks: Range) = ks.map(k => (k.toLong, s"val$k")).toDF("k", "v")
     try {
@@ -561,7 +572,7 @@ class StreamingIngestSpec extends SparkSpec {
     // two marker reads must change the marker: equal reads would let a
     // listing taken mid-swap miss the swapped-in files silently
     import graft.connectors.{Bucketing, MultiWriterIndex}
-    val root = java.nio.file.Files.createTempDirectory("marker_gen").toString
+    val root = tmpDir("marker_gen").toString
     val (dir, table) = (s"$root/plain", "graft_marker_gen_spec")
     val (idx, mwTable) = (s"$root/idx", "graft_mw_gen_spec")
     def rows(ks: Range) = ks.map(k => (k.toLong, s"val$k")).toDF("k", "v")
@@ -612,7 +623,7 @@ class StreamingIngestSpec extends SparkSpec {
     implicit val sc = spark.sqlContext
     import graft.connectors.Bucketing
     import graft.data.SnapshotOps
-    val base = java.nio.file.Files.createTempDirectory("ingest_idx_cadence").toString
+    val base = tmpDir("ingest_idx_cadence").toString
     val dir = s"$base/bands"
     val ckpt = s"$base/ckpt"
     val table = "graft_stream_cadence_spec"

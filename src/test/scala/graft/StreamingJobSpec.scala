@@ -15,7 +15,7 @@ class StreamingJobSpec extends SparkSpec {
   import spark.implicits._
 
   test("MongoToKafka streaming: CDC files flow through the fused pipeline") {
-    val dir = Files.createTempDirectory("cdc-stream").toString
+    val dir = tmpDir("cdc-stream").toString
     // change-log fixture: insert, duplicate insert (same key+ts), update
     // with same payload (op changed → emitted: __op joins the hash
     // composite like the reference), second update with the same op and
@@ -33,7 +33,7 @@ class StreamingJobSpec extends SparkSpec {
         // it, not drop it (r3 discarded the streaming DLQ)
         """{"op":"insert","db":"d","collection":"c","documentKey":"{\"_id\": 3}","fullDocument":"{\"v\": 99}","updatedFields":null,"eventTime":"2024-01-01T00:04:00.000Z"}"""
       ).mkString("\n"))
-    val out = Files.createTempDirectory("cdc-stream-out").toString
+    val out = tmpDir("cdc-stream-out").toString
     val q = MongoToKafkaJob.startStreaming(
       CdcSource.multi(spark, dir),
       outPath = s"$out/good", dlqPath = s"$out/dlq",
@@ -66,7 +66,7 @@ class StreamingJobSpec extends SparkSpec {
   }
 
   test("MongoToKafka single-pass streaming: one pipeline fans out to good + DLQ paths") {
-    val dir = Files.createTempDirectory("cdc-single").toString
+    val dir = tmpDir("cdc-single").toString
     val lines = Seq(
       """{"op":"insert","db":"d","collection":"c","documentKey":"{\"_id\": 1}","fullDocument":"{\"_id\": 1, \"v\": 10}","updatedFields":null,"eventTime":"2024-01-01T00:00:00.000Z"}""",
       """{"op":"insert","db":"d","collection":"c","documentKey":"{\"_id\": 1}","fullDocument":"{\"_id\": 1, \"v\": 10}","updatedFields":null,"eventTime":"2024-01-01T00:00:00.000Z"}""",
@@ -79,7 +79,7 @@ class StreamingJobSpec extends SparkSpec {
       """{"op":"insert","db":"d","collection":"c","documentKey":"{\"_id\": 4}","fullDocument":"{\"v\": 97}","updatedFields":null,"eventTime":"2024-01-01T00:05:00.000Z"}""",
       """{"op":"insert","db":"d","collection":"c","documentKey":"{\"_id\": 5}","fullDocument":"{\"v\": 98}","updatedFields":null,"eventTime":"2024-01-01T00:05:00.000Z"}""")
     Files.writeString(java.nio.file.Paths.get(s"$dir/batch1.json"), lines.mkString("\n"))
-    val out = Files.createTempDirectory("cdc-single-out").toString
+    val out = tmpDir("cdc-single-out").toString
     // read amplification: N readers or a self-union of the source count
     // each line more than once in numInputRows. A second execution of the
     // batch plan re-reads nothing (the scan sits behind the state pass's

@@ -76,7 +76,7 @@ class StreamingJobsSpec extends SparkSpec {
 
   test("KafkaToMongo streaming: foreachBatch upsert maintains the keyed table") {
     implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("k2m").toString
+    val dir = tmpDir("k2m").toString
     val mem = MemoryStream[String]
     def rawJson(op: String, pk: String, k: Int) =
       s"""{"operation":"$op","source":"s","payloadJson":"{\\"_id\\": \\"$pk\\", \\"k\\": $k}","primaryKey":"$pk","traceId":"t-$pk-$k"}"""
@@ -120,7 +120,7 @@ class StreamingJobsSpec extends SparkSpec {
 
   test("EventRouter streaming: one read per batch fans out to per-route sinks") {
     implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("router").toString
+    val dir = tmpDir("router").toString
     val mem = MemoryStream[StreamEnvelop]
     val q = graft.jobs.EventRouterJob.startStreaming(
       mem.toDS().toDF(), outDir = s"$dir/routes", checkpoint = s"$dir/ckpt")
