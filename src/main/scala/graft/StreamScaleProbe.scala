@@ -57,11 +57,14 @@ object StreamScaleProbe {
     * fixture row is through — wall then measures data processing, not the
     * TTL-eviction idle loop. Unloads the JVM-global state store providers
     * afterwards so faces don't tax each other (the r7 dirty-pass lesson).
+    * `start` gets a fresh (checkpoint, output) dir pair, both deleted when
+    * the drive ends.
     */
   private def drive(spark: SparkSession, expectedRows: Long = -1L)(
-      start: String => StreamingQuery): (Double, Long, Long) = {
+      start: (String, String) => StreamingQuery): (Double, Long, Long) = {
     import org.apache.spark.sql.streaming.StreamingQueryListener
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sprobe-ckpt").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-sprobe-ckpt")
+    val out = java.nio.file.Files.createTempDirectory("graft-sprobe-out")
     val seenByQuery = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, java.lang.Long]()
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -74,7 +77,9 @@ object StreamScaleProbe {
     }
     if (expectedRows >= 0) spark.streams.addListener(listener)
     val t0 = System.nanoTime()
-    val q = start(ckpt)
+    val q =
+      try start(ckpt.toString, out.toString)
+      catch { case e: Throwable => deleteDirs(ckpt, out); throw e }
     try {
       if (expectedRows < 0) q.awaitTermination()
       else
@@ -88,11 +93,12 @@ object StreamScaleProbe {
       q.stop()
       if (spark.streams.active.isEmpty)
         org.apache.spark.sql.execution.streaming.state.GraftStateStoreAccess.unloadAll()
+      deleteDirs(ckpt, out)
     }
   }
 
-  private def outTmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-sprobe-$tag").toString
+  private def deleteDirs(dirs: java.nio.file.Path*): Unit =
+    dirs.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile): Unit)
 
   /** TTL-eviction steady-state probe (VERDICT r8 #5): drive the full cdc
     * fixture through the pipeline with a SHORT processing-time TTL, then —
@@ -108,8 +114,8 @@ object StreamScaleProbe {
     val path = graft.jobs.JobFixtures.cdcFixturePath(spark, dir)
     val fixture = spark.read.parquet(path)
     val expected = fixture.count()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sprobe-evict-ckpt").toString
-    val out = outTmp("cdc-evict")
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-sprobe-evict-ckpt")
+    val out = java.nio.file.Files.createTempDirectory("graft-sprobe-evict-out")
     val seenByQuery = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, java.lang.Long]()
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -121,10 +127,13 @@ object StreamScaleProbe {
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
     spark.streams.addListener(listener)
-    val q = graft.jobs.MongoToKafkaJob.startStreaming(
-      spark.readStream.schema(fixture.schema).option("maxFilesPerTrigger", "8").parquet(path),
-      s"$out/data", s"$out/dlq", ckpt, ttlMs = ttlMs,
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    val q =
+      try graft.jobs.MongoToKafkaJob.startStreaming(
+        spark.readStream.schema(fixture.schema).option("maxFilesPerTrigger", "8").parquet(path),
+        s"$out/data", s"$out/dlq", ckpt.toString, ttlMs = ttlMs,
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      catch { case e: Throwable =>
+        spark.streams.removeListener(listener); deleteDirs(ckpt, out); throw e }
     try {
       while (!q.awaitTermination(200) &&
         seenByQuery.getOrDefault(q.id, java.lang.Long.valueOf(0L)).longValue() < expected) ()
@@ -154,6 +163,7 @@ object StreamScaleProbe {
       q.stop()
       if (spark.streams.active.isEmpty)
         org.apache.spark.sql.execution.streaming.state.GraftStateStoreAccess.unloadAll()
+      deleteDirs(ckpt, out)
     }
   }
 
@@ -166,8 +176,7 @@ object StreamScaleProbe {
     val fixture = spark.read.parquet(path)
     val schema = fixture.schema
     val expected = fixture.count()
-    val out = outTmp("cdc-out")
-    drive(spark, expectedRows = expected) { ckpt =>
+    drive(spark, expectedRows = expected) { (ckpt, out) =>
       val stream = spark.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", "8")
@@ -194,8 +203,7 @@ object StreamScaleProbe {
   private def neardupGate(spark: SparkSession, dir: String): (Double, Long, Long) = {
     val path = docsStage(spark, dir)
     val schema = spark.read.parquet(path).schema
-    val out = outTmp("neardup-out")
-    drive(spark) { ckpt =>
+    drive(spark) { (ckpt, out) =>
       val stream = spark.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", "8")
@@ -237,8 +245,7 @@ object StreamScaleProbe {
     import spark.implicits._
     val path = qualityStage(spark, dir)
     val schema = spark.read.parquet(path).schema
-    val out = outTmp("qgate-out")
-    drive(spark) { ckpt =>
+    drive(spark) { (ckpt, out) =>
       graft.stateful.Processors.qualityGate(
           spark.readStream.schema(schema).option("maxFilesPerTrigger", "3").parquet(path)
             .as[graft.model.ScoredDoc],
@@ -285,8 +292,7 @@ object StreamScaleProbe {
     import spark.implicits._
     import graft.joins.StreamingAsOfJoiner.{AsOfEvent, AsOfVersion}
     val (vDir, eDir) = asofStage(spark, dir)
-    val out = outTmp("asof-out")
-    drive(spark) { ckpt =>
+    drive(spark) { (ckpt, out) =>
       def src(path: String) = spark.readStream
         .schema(spark.read.parquet(path).schema)
         .option("maxFilesPerTrigger", "2")

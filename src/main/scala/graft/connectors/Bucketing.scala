@@ -2,10 +2,10 @@ package graft.connectors
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.GraftBucketedParquet
 import org.apache.spark.sql.functions.col
-
-import scala.util.control.NonFatal
+import org.apache.spark.sql.types.StructType
 
 /** Bucketed-table management — the pre-partitioned co-located join layout.
   *
@@ -20,15 +20,20 @@ import scala.util.control.NonFatal
   * pre-sorted task-sized file that pass is linear and spill-free). The
   * same layout also drops the exchange from `groupBy(key)` aggregates.
   *
-  * `ensureBucketed` is write-once: the first call materializes the bucketed
-  * copy and drops a completion marker; later calls (including fresh JVMs —
-  * the in-memory catalog is empty at startup) re-register the existing
-  * files with `CREATE TABLE ... CLUSTERED BY ... LOCATION` and never
-  * rewrite. The marker records the FULL build spec (schema, key, bucket
-  * count, caller's source stamp), and any mismatch rebuilds instead of
-  * re-registering: trusting a stale or differently-bucketed layout would
-  * plan exchange-free joins over wrongly-hashed files — silent wrong
-  * results, the one failure mode a layout cache must never have.
+  * An index IS its directory plus its marker: no catalog table describes
+  * it. `ensureBucketed` is write-once: the first call materializes the
+  * bucketed copy and drops a completion marker (`_GRAFT_BUCKETED_DDL`)
+  * recording the FULL build spec (key, bucket count, caller's source stamp,
+  * schema DDL); later calls — in this JVM or a fresh one — read the
+  * existing files back and never rewrite. Every entry point returns the
+  * frame the marker's `key=`/`buckets=`/`schema=` lines describe over a
+  * listing of the directory taken at that call
+  * ([[GraftBucketedParquet.read]]), so no cached listing can go stale
+  * behind an append or a compaction, and a frame taken before one keeps
+  * the files it listed. Any spec mismatch rebuilds instead of reading:
+  * trusting a stale or differently-bucketed layout would plan
+  * exchange-free joins over wrongly-hashed files — silent wrong results,
+  * the one failure mode a layout cache must never have.
   * Bucket-count rule at scale: pick size/buckets ≈ one task's comfortable
   * input (~1 GB), and keep the count IDENTICAL across tables that join —
   * mismatched counts shuffle one side.
@@ -128,57 +133,6 @@ object Bucketing {
     finally out.close()
   }
 
-  /** The registered catalog entry must actually BE the layout at `path`
-    * with the requested clustering — a name reused for a different path
-    * (or registered elsewhere in this JVM) would otherwise return the
-    * wrong table's data and plan exchange-free joins over it. Shared by
-    * [[ensureBucketed]] (re-register on mismatch) and the maintenance
-    * paths (fail loudly on mismatch — ADVICE r17: an append routed to a
-    * same-named table at a DIFFERENT path would land the delta in the
-    * wrong table while rewriting this path's marker with the post-append
-    * stamp, the silent wrong-layout acceptance the marker exists to
-    * prevent).
-    *
-    * Path-form contract (ADVICE r19): both sides are compared after
-    * `makeQualified` — scheme/authority/default-fs normalization, NOT
-    * symlink or `..` resolution (the Hadoop API has no portable realpath
-    * across HDFS/S3/local). Create and maintenance calls must therefore
-    * name the table by the SAME physical path form; a symlinked alias of
-    * the create-time path fails the match, which maintenance reports
-    * loudly (and ensureBucketed resolves by re-registering the canonical
-    * form) — never silently accepts.
-    */
-  private def catalogMatches(
-      spark: SparkSession,
-      tableName: String,
-      path: String,
-      keyCol: String,
-      nBuckets: Int,
-      conf: Configuration
-  ): Boolean =
-    try {
-      val detail = spark.sql(s"DESCRIBE TABLE EXTENDED $tableName").collect()
-        .map(r => r.getString(0) -> Option(r.getString(1)).getOrElse(""))
-        .toMap
-      // scheme-qualify both sides through the filesystem so `file:/x` from
-      // the catalog equals a caller's bare `/x` (and `hdfs://nn/x` its
-      // default-fs-relative form)
-      val locOk = detail.get("Location").exists { loc =>
-        val want = new Path(path)
-        val got = new Path(loc)
-        fsOf(want, conf).makeQualified(want) == fsOf(got, conf).makeQualified(got)
-      }
-      // exact column-list equality, not substring containment: a table
-      // clustered on `userkey2` must NOT satisfy a request for `key`
-      val bucketColsOk = detail.get("Bucket Columns").exists { raw =>
-        raw.stripPrefix("[").stripSuffix("]")
-          .split(",").map(_.trim.stripPrefix("`").stripSuffix("`")).toSeq == Seq(keyCol)
-      }
-      locOk &&
-        detail.get("Num Buckets").exists(_.trim == nBuckets.toString) &&
-        bucketColsOk
-    } catch { case NonFatal(_) => false } // an OOM or interrupt is not a catalog mismatch
-
   /** The `stamp=` line of the build marker at `path`, if one exists — the
     * sourceStamp the table was built (or last appended) under. Callers
     * that encode operator parameters into the stamp (the near-dup band
@@ -223,23 +177,36 @@ object Bucketing {
     s"${withoutGen(spec)}\ngen=${gen + 1}"
   }
 
+  /** The `<name>=` line of a marker CONTENT string, if present and non-empty. */
+  private def lineOf(markerContent: String, name: String): Option[String] =
+    markerContent.linesIterator.find(_.startsWith(s"$name="))
+      .map(_.stripPrefix(s"$name=")).filter(_.nonEmpty)
+
   /** The `schema=` DDL line of a marker CONTENT string. */
   private[connectors] def schemaDdlOf(markerContent: String): Option[String] =
-    markerContent.linesIterator.find(_.startsWith("schema="))
-      .map(_.stripPrefix("schema=")).filter(_.nonEmpty)
+    lineOf(markerContent, "schema")
 
-  /** Current data-file listing (absolute path strings) of a managed table
-    * directory — marker and hidden files excluded, same filter as the
-    * compaction manifest check.
+  /** The bucketed frame a marker CONTENT describes: its `schema=`, `key=`
+    * and `buckets=` lines over a listing of the directory at `path` taken
+    * now — the one way every entry point here, and [[MultiWriterIndex]],
+    * turns an index into a DataFrame.
     */
-  private[connectors] def listDataFiles(path: String): Seq[String] = {
-    val root = new Path(path)
-    dataFiles(fsOf(root, hadoopConf()), root).map(_.getPath.toString)
+  private[connectors] def frameOf(spark: SparkSession, path: String, spec: String): DataFrame = {
+    def line(name: String): String = lineOf(spec, name).getOrElse(throw new IllegalStateException(
+      s"Bucketing: the build marker at $path has no $name= line — rebuild via ensureBucketed"))
+    GraftBucketedParquet.read(spark, path, line("schema"), line("key"), line("buckets").toInt)
   }
 
-  /** Run `f` holding the same per-qualified-path monitor every mutating
-    * maintenance entry point serializes on — lets a reader exclude in-JVM
-    * folds/compactions around a capture window.
+  /** The index at `path` as its build marker describes it, read now; fails
+    * when there is no marker (no index, or one torn mid-mutation).
+    */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame =
+    frameOf(spark, path, readMarkerContent(path).getOrElse(
+      throw new IllegalStateException(s"Bucketing.read: no build marker at $path")))
+
+  /** Run `f` holding the per-qualified-path monitor every mutating
+    * maintenance entry point serializes on — also what lets a reader
+    * exclude in-JVM folds/compactions around a capture window.
     */
   private[connectors] def withPathLock[T](path: String)(f: => T): T = {
     val conf = hadoopConf()
@@ -263,18 +230,23 @@ object Bucketing {
       .minBy(d => ((d + s - 1) / s * (nBuckets / d), d))
   }
 
-  /** `df` hash-partitioned on `keyCol` into [[writeWidth]] tasks — the one
-    * shuffle ahead of every bucketed write. Without it every write task
-    * emits a file into every bucket it has rows for (tasks × buckets small
-    * files at scale); with it each task holds whole buckets.
+  /** Write `df` into `path` bucketed and sorted by `keyCol`, behind the one
+    * shuffle every bucketed write takes: a hash repartition on `keyCol`
+    * into [[writeWidth]] tasks. Without it every write task emits a file
+    * into every bucket it has rows for (tasks × buckets small files at
+    * scale); with it each task holds whole buckets.
     */
-  private def clusterForWrite(
-      spark: SparkSession, df: DataFrame, keyCol: String, nBuckets: Int): DataFrame =
-    df.repartition(writeWidth(nBuckets, spark.sparkContext.defaultParallelism), col(keyCol))
+  private def writeBucketed(
+      spark: SparkSession, df: DataFrame, path: String, keyCol: String, nBuckets: Int,
+      mode: SaveMode): Unit =
+    GraftBucketedParquet.write(
+      df.repartition(writeWidth(nBuckets, spark.sparkContext.defaultParallelism), col(keyCol)),
+      path, keyCol, nBuckets, mode)
 
-  /** Register (materializing if needed) a bucketed copy of `df` as
-    * `tableName` at `path`, clustered and sorted by `keyCol` into
-    * `nBuckets`. Returns the bucketed table as a DataFrame.
+  /** Materialize (once) a bucketed copy of `df` at `path`, clustered and
+    * sorted by `keyCol` into `nBuckets`, and return it read back from the
+    * directory. `df` evaluates only when the marker is missing or
+    * describes another build.
     *
     * `sourceStamp` identifies the source data version (e.g. a digest of
     * the source files' names/sizes/mtimes — see [[stampDir]]); pass it so
@@ -284,60 +256,40 @@ object Bucketing {
   def ensureBucketed(
       spark: SparkSession,
       df: => DataFrame,
-      tableName: String,
       path: String,
       keyCol: String,
       nBuckets: Int,
       sourceStamp: String = ""
-  ): DataFrame = { val conf = hadoopConf(); lockFor(path, conf).synchronized {
-    val marker = markerPath(path)
-    val fs = markerFs(marker, conf)
+  ): DataFrame = withPathLock(path) {
+    frameOf(spark, path, ensureSpec(spark, df, path, keyCol, nBuckets, sourceStamp))
+  }
 
+  /** [[ensureBucketed]] up to the read: builds when needed and returns the
+    * marker content the index now carries. Callers hold the path monitor.
+    */
+  private def ensureSpec(
+      spark: SparkSession,
+      df: => DataFrame,
+      path: String,
+      keyCol: String,
+      nBuckets: Int,
+      sourceStamp: String
+  ): String = {
+    val marker = markerPath(path)
+    val fs = markerFs(marker, hadoopConf())
     def specOf(schemaDdl: String): String =
       s"key=$keyCol\nbuckets=$nBuckets\nstamp=$sourceStamp\nschema=$schemaDdl"
-
-    def readMarker(): Option[String] =
-      if (fs.exists(marker)) Some(readFully(fs, marker)) else None
-
-    def schemaFrom(spec: String): String =
-      spec.linesIterator.find(_.startsWith("schema=")).map(_.stripPrefix("schema=")).getOrElse("")
-
-    def specMatches(spec: String): Boolean =
-      withoutGen(spec) == specOf(schemaFrom(spec)) && schemaFrom(spec).nonEmpty
-
-    if (spark.catalog.tableExists(tableName)) {
-      // in-catalog table: still validate the on-disk spec AND that the
-      // catalog entry points at this path with this bucket spec — a prior
-      // run in this JVM may have registered it before the source was
-      // regenerated, or under the same name for a different layout
-      readMarker() match {
-        case Some(spec) if specMatches(spec) && catalogMatches(spark, tableName, path, keyCol, nBuckets, conf) =>
-          return spark.table(tableName)
-        case _ => spark.sql(s"DROP TABLE IF EXISTS $tableName")
-      }
-    }
-
-    readMarker() match {
-      case Some(spec) if specMatches(spec) =>
-        spark.sql(
-          s"""CREATE TABLE $tableName (${schemaFrom(spec)}) USING PARQUET
-             |CLUSTERED BY ($keyCol) SORTED BY ($keyCol) INTO $nBuckets BUCKETS
-             |LOCATION '$path'""".stripMargin)
+    (if (fs.exists(marker)) Some(readFully(fs, marker)) else None) match {
+      case Some(spec) if schemaDdlOf(spec).exists(ddl => withoutGen(spec) == specOf(ddl)) => spec
       case stale =>
         if (stale.isDefined) fs.delete(marker, false): Unit // spec drift: rebuild, never trust
         val src = df
-        clusterForWrite(spark, src, keyCol, nBuckets)
-          .write
-          .mode("overwrite")
-          .format("parquet")
-          .option("path", path)
-          .bucketBy(nBuckets, keyCol)
-          .sortBy(keyCol)
-          .saveAsTable(tableName)
-        writeFully(fs, marker, specOf(src.schema.toDDL))
+        writeBucketed(spark, src, path, keyCol, nBuckets, SaveMode.Overwrite)
+        val spec = specOf(src.schema.toDDL)
+        writeFully(fs, marker, spec)
+        spec
     }
-    spark.table(tableName)
-  } }
+  }
 
   /** Read and validate the build marker at `path` against the requested
     * (key, buckets) spec, returning the full marker content — the ONE
@@ -364,8 +316,7 @@ object Bucketing {
     // write, so a crash inside a marker rewrite can land key=/buckets= but
     // truncate the stamp=/schema= tail (ADVICE r19) — a torn marker is
     // rebuild-never-trust, exactly like no marker at all
-    require(specLines.exists(_.startsWith("stamp=")) &&
-        specLines.exists(l => l.startsWith("schema=") && l.length > "schema=".length),
+    require(specLines.exists(_.startsWith("stamp=")) && schemaDdlOf(spec).isDefined,
       s"$what: the build marker at $path is torn (stamp=/schema= lines missing — a crash " +
         "inside the marker write window); rebuild via ensureBucketed")
     spec
@@ -374,40 +325,36 @@ object Bucketing {
   /** APPEND rows to a bucketed table built by [[ensureBucketed]] — the
     * per-delta index maintenance path (a near-dup band index ingesting a
     * gated batch, an ANN index absorbing new embeddings): the appended rows
-    * are hashed into the SAME bucket layout (`bucketBy` must match the
-    * existing spec or Spark rejects the write), so co-located joins and
-    * bucket pruning keep holding over old + new rows with no rebuild.
+    * are hashed into the SAME bucket layout, so co-located joins and bucket
+    * pruning keep holding over old + new rows with no rebuild. Returns the
+    * index read back after the append.
     *
     * `newSourceStamp` is the stamp of the corpus AS OF AFTER this append
     * (e.g. [[stampDir]] over source + delta): the on-disk marker is
     * rewritten with it, so a later `ensureBucketed(..., newSourceStamp)`
-    * re-registers the appended table instead of rebuilding — and any OTHER
-    * stamp (including the pre-append one) correctly invalidates. The table
-    * must already exist in this session's catalog (call ensureBucketed
-    * first); key/bucket-count must match the marker spec — fail loudly,
-    * appending under a different spec would silently break co-location.
+    * reads the appended table instead of rebuilding — and any OTHER stamp
+    * (including the pre-append one) correctly invalidates. The marker must
+    * exist (call ensureBucketed first), its key/bucket-count must match,
+    * and `df` must carry the marker's columns — fail loudly: appending
+    * under a different spec would silently break co-location, and rows of
+    * another shape would sit under a `schema=` line that misdescribes them.
     */
   def appendBucketed(
       spark: SparkSession,
       df: DataFrame,
-      tableName: String,
       path: String,
       keyCol: String,
       nBuckets: Int,
       newSourceStamp: String
   ): DataFrame = { val conf = hadoopConf(); lockFor(path, conf).synchronized {
-    require(spark.catalog.tableExists(tableName),
-      s"appendBucketed: table $tableName not registered — call ensureBucketed first")
-    require(catalogMatches(spark, tableName, path, keyCol, nBuckets, conf),
-      s"appendBucketed: catalog entry $tableName does not match (path=$path, key=$keyCol, " +
-        s"buckets=$nBuckets) — the name is registered for a DIFFERENT location or bucket " +
-        "spec in this session; appending would land the delta in that other table while " +
-        "rewriting this path's marker. Re-register via ensureBucketed first")
     val marker = markerPath(path)
     val fs = markerFs(marker, conf)
     val spec = requireMarkerSpec(fs, path, "appendBucketed", keyCol, nBuckets)
-    val schemaDdl = spec.linesIterator.find(_.startsWith("schema="))
-      .map(_.stripPrefix("schema=")).getOrElse("")
+    val schemaDdl = schemaDdlOf(spec).get
+    def columns(t: StructType) = t.fields.toSeq.map(f => f.name -> f.dataType.catalogString)
+    require(columns(df.schema) == columns(StructType.fromDDL(schemaDdl)),
+      s"appendBucketed: the delta's columns (${df.schema.toDDL}) are not the index's at " +
+        s"$path ($schemaDdl)")
     // crash-safety ordering (code-review r17): the data append and the
     // marker rewrite cannot be atomic, so the marker is DELETED first —
     // a crash anywhere in the window leaves no marker, which the build
@@ -420,22 +367,10 @@ object Bucketing {
       throw new IllegalStateException(
         s"appendBucketed: could not remove the build marker at $path before appending — " +
           "refusing to append under a stamp that would misdescribe the result")
-    clusterForWrite(spark, df, keyCol, nBuckets)
-      .write
-      .mode("append")
-      .format("parquet")
-      .bucketBy(nBuckets, keyCol)
-      .sortBy(keyCol)
-      .saveAsTable(tableName)
-    writeFully(fs, marker,
-      s"key=$keyCol\nbuckets=$nBuckets\nstamp=$newSourceStamp\nschema=$schemaDdl")
-    // the write ran through df.sparkSession — under foreachBatch that is
-    // the micro-batch session CLONE, whose post-write refresh touches only
-    // its own cached relation; THIS session's cache would keep serving the
-    // pre-append file list (measured: a streaming append read back as 0
-    // rows). Refresh explicitly so the returned frame sees the new files.
-    spark.sql(s"REFRESH TABLE $tableName")
-    spark.table(tableName)
+    writeBucketed(spark, df, path, keyCol, nBuckets, SaveMode.Append)
+    val post = s"key=$keyCol\nbuckets=$nBuckets\nstamp=$newSourceStamp\nschema=$schemaDdl"
+    writeFully(fs, marker, post)
+    frameOf(spark, path, post)
   } }
 
   /** EXACTLY-ONCE [[appendBucketed]] under kill-and-resume — the
@@ -447,7 +382,7 @@ object Bucketing {
     * `postStamp` the state after it.
     *
     *  - marker == `postStamp`: this batch already committed (a REPLAYED
-    *    epoch after restart, or a repeat call) → re-register only, zero
+    *    epoch after restart, or a repeat call) → read back only, zero
     *    data motion — the skip fence that makes a replayed append
     *    exactly-once.
     *  - marker == `preStamp`: the expected base state → append the delta
@@ -469,30 +404,25 @@ object Bucketing {
       delta: => DataFrame,
       rebuildPre: => DataFrame,
       rebuildPost: => DataFrame,
-      tableName: String,
       path: String,
       keyCol: String,
       nBuckets: Int,
       preStamp: String,
       postStamp: String
-  ): DataFrame = lockFor(path, hadoopConf()).synchronized {
+  ): DataFrame = withPathLock(path) {
     require(preStamp != postStamp,
       "appendBucketedExactlyOnce: preStamp == postStamp — the fence cannot distinguish " +
         "applied from unapplied; derive postStamp from the batch identity")
     require(postStamp.nonEmpty, "appendBucketedExactlyOnce: postStamp must be non-empty")
-    readStamp(path) match {
-      case Some(s) if s == postStamp =>
-        // already committed: re-register from the marker (rebuildPost never
-        // evaluates when the on-disk spec matches)
-        ensureBucketed(spark, rebuildPost, tableName, path, keyCol, nBuckets, postStamp)
-      case Some(s) if s == preStamp =>
-        // expected base: make sure THIS session has the registration, then append
-        ensureBucketed(spark, rebuildPre, tableName, path, keyCol, nBuckets, preStamp)
-        appendBucketed(spark, delta, tableName, path, keyCol, nBuckets, postStamp)
-      case _ =>
-        // torn append (marker deleted, data possibly partial) or unknown
-        // lineage: rebuild the post state from scratch
-        ensureBucketed(spark, rebuildPost, tableName, path, keyCol, nBuckets, postStamp)
+    if (readStamp(path).contains(preStamp)) {
+      // expected base: validate its full spec (a drifted one rebuilds the
+      // pre state), then append
+      ensureSpec(spark, rebuildPre, path, keyCol, nBuckets, preStamp)
+      appendBucketed(spark, delta, path, keyCol, nBuckets, postStamp)
+    } else {
+      // already committed (rebuildPost never evaluates when the on-disk spec
+      // matches), or a torn append / unknown lineage: rebuild the post state
+      ensureBucketed(spark, rebuildPost, path, keyCol, nBuckets, postStamp)
     }
   }
 
@@ -574,7 +504,6 @@ object Bucketing {
     */
   def compactBucketed(
       spark: SparkSession,
-      tableName: String,
       path: String,
       keyCol: String,
       nBuckets: Int,
@@ -582,13 +511,6 @@ object Bucketing {
   ): DataFrame = { val conf = hadoopConf(); lockFor(path, conf).synchronized {
     require(maxFilesPerBucket >= 1,
       s"compactBucketed: maxFilesPerBucket=$maxFilesPerBucket must be >= 1")
-    require(spark.catalog.tableExists(tableName),
-      s"compactBucketed: table $tableName not registered — call ensureBucketed first")
-    require(catalogMatches(spark, tableName, path, keyCol, nBuckets, conf),
-      s"compactBucketed: catalog entry $tableName does not match (path=$path, key=$keyCol, " +
-        s"buckets=$nBuckets) — the name is registered for a DIFFERENT location or bucket " +
-        "spec in this session; compacting would rewrite the wrong table. Re-register via " +
-        "ensureBucketed first")
     val root = new Path(path)
     val fs = fsOf(root, conf) // data files: checksummed default, sidecars follow
     val marker = markerPath(path)
@@ -602,11 +524,7 @@ object Bucketing {
     // fragmented buckets would otherwise sit on storage indefinitely
     val stagingPath = path + "__compacting"
     val staging = new Path(stagingPath)
-    val stagingTable = tableName + "_compact_staging"
-    if (fs.exists(staging)) {
-      spark.sql(s"DROP TABLE IF EXISTS $stagingTable")
-      fs.delete(staging, true): Unit
-    }
+    if (fs.exists(staging)) fs.delete(staging, true): Unit
 
     // group the current files by the bucket id in their NAME; an
     // unparseable name in an ensureBucketed-managed directory means the
@@ -620,13 +538,13 @@ object Bucketing {
       id -> p
     }.groupBy(_._1)
     val fragmented = byBucket.filter(_._2.length > maxFilesPerBucket)
-    if (fragmented.isEmpty) return spark.table(tableName)
+    if (fragmented.isEmpty) return frameOf(spark, path, spec)
     val fragFiles = fragmented.values.flatten.map(_._2).toSeq
 
     // 1) STAGE: materialize the compacted replacement for the fragmented
     // buckets fully before touching the table — the read and the write (to
     // staging) never overlap a mutation. Read the fragmented FILES plainly,
-    // not the catalog table: a bucketed-table scan already satisfies
+    // not as the bucketed index: a bucketed scan already satisfies
     // HashPartitioning(key, nBuckets), so Catalyst elides the repartition
     // below whenever its width is nBuckets — and then
     // DisableUnnecessaryBucketedScan, seeing no operator that needs the
@@ -637,15 +555,8 @@ object Bucketing {
     // the exchange stays and each task holds whole buckets → one file per
     // bucket. Rows in bucket b re-hash to bucket b (same key, same modulus),
     // so the staged output covers exactly the fragmented buckets.
-    spark.sql(s"DROP TABLE IF EXISTS $stagingTable")
-    clusterForWrite(spark, spark.read.parquet(fragFiles.map(_.toString): _*), keyCol, nBuckets)
-      .write
-      .mode("overwrite")
-      .format("parquet")
-      .option("path", stagingPath)
-      .bucketBy(nBuckets, keyCol)
-      .sortBy(keyCol)
-      .saveAsTable(stagingTable)
+    writeBucketed(spark, spark.read.parquet(fragFiles.map(_.toString): _*), stagingPath,
+      keyCol, nBuckets, SaveMode.Overwrite)
     val staged = dataFiles(fs, staging).map(_.getPath)
     staged.foreach { p =>
       val id = bucketIdOf(p.getName)
@@ -720,12 +631,10 @@ object Bucketing {
     // to every stamp-validated reader, and a bumped gen= line: a reader
     // bracketing a file listing with two marker reads sees the swap even
     // when it finished between them
-    writeFully(mfs, marker, bumpGen(spec))
-    spark.sql(s"DROP TABLE IF EXISTS $stagingTable")
+    val post = bumpGen(spec)
+    writeFully(mfs, marker, post)
     fs.delete(staging, true): Unit
-    // the session's FileStatusCache still lists the pre-swap files
-    spark.sql(s"REFRESH TABLE $tableName")
-    spark.table(tableName)
+    frameOf(spark, path, post)
   } }
 
   /** Cheap driver-side content stamp for a source file or directory tree:
@@ -821,4 +730,11 @@ object Bucketing {
     * pin), and ScopedConfig's file layers are read once per JVM anyway.
     */
   def indexRoot: String = scopedConf.getGlobalOrDefault("GRAFT_BUCKETED_ROOT", "/tmp/graft_bucketed")
+
+  /** The directory under [[indexRoot]] holding the indexes of the corpus at
+    * `dir`, keyed like [[graft.data.ModelStore.rootFor]]: the corpus's
+    * basename plus a digest of its normalized absolute path, so `dir` and
+    * `dir/` share one set of indexes while `sf-1` and `sf_1` never do.
+    */
+  def indexDirFor(dir: String): String = s"$indexRoot/${graft.data.ModelStore.corpusKey(dir)}"
 }

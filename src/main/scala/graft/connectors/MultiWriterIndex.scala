@@ -35,11 +35,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    mark describes exactly the absorbed prefix.
   *  - '''read''' (any reader): folded bucketed base ∪ committed-but-
   *    unfolded tail (`epoch > absorbed(writer)`) — the tail is the small
-  *    recent window, the LSM memtable analogue. With no unfolded tail the
-  *    bucketed base serves directly (pruning and exchange-free joins
-  *    intact); with a tail, the base serves from a marker-validated
-  *    PINNED listing of the same bucketed layout (falling back to the
-  *    log's immutable files on any disturbance) so the union is one
+  *    recent window, the LSM memtable analogue. The base serves from a
+  *    marker-validated listing of the bucketed layout taken at read time
+  *    (pruning and exchange-free joins intact), falling back to the log's
+  *    immutable files on any disturbance, so base ∪ tail is one
   *    consistent snapshot (see [[read]]).
   *
   * Exactly-once end to end: a delta row lives in EITHER the base (its
@@ -56,20 +55,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * hand (the table-format snapshot-expiry trade, out of scope here).
   *
   * Read-vs-fold isolation (ADVICE r20): [[read]] is snapshot-consistent —
-  * whenever an unfolded tail exists, the tail comes from the log's
-  * immutable manifest-pinned files and the base from a marker-validated
-  * pinned listing of the bucketed layout (log files as the fallback), so
-  * a fold committing between plan construction and the frame's action can
-  * neither duplicate nor drop rows; a tail-less read serves the bucketed
-  * base live, where a racing fold can only add NEWER epochs (each row
-  * still exactly once). The one
-  * residual caveat is physical: a foreign JVM's COMPACTION swaps base
-  * files in place, so a tail-less base read captured mid-swap can fail
-  * on vanished files (never silently double); a tail read's pinned
-  * listing taken mid-swap is caught by the compaction generation the
-  * marker carries and falls back to the log. The documented
-  * single-maintainer model keeps compaction in the serving JVM, where
-  * the path monitor serializes it with plan capture.
+  * the tail comes from the log's immutable manifest-pinned files and the
+  * base from a listing of the bucketed layout taken once, at read time,
+  * between two equal marker reads (log files as the fallback), so a fold
+  * committing between plan construction and the frame's action can
+  * neither duplicate nor drop rows: it adds files the base listing never
+  * saw and epochs the tail filter never covered. The one residual caveat
+  * is physical: a COMPACTION swaps base files in place, so a frame held
+  * across one fails its scan on vanished files (loud, never a silent
+  * under-read); a listing taken mid-swap is caught by the compaction
+  * generation the marker carries and falls back to the log. The
+  * documented single-maintainer model keeps compaction in the serving
+  * JVM, where the path monitor serializes it with the listing.
   */
 object MultiWriterIndex {
 
@@ -150,8 +147,8 @@ object MultiWriterIndex {
   }
 
   /** MAINTAINER side: absorb every committed delta into the bucketed base
-    * at `<indexDir>/base`, registered as `tableName`, clustered by
-    * `keyCol` into `nBuckets`. Returns the folded base. Single maintainer
+    * at `<indexDir>/base`, clustered by `keyCol` into `nBuckets`. Returns
+    * the folded base. Single maintainer
     * per index (the [[Bucketing]] single-writer-per-path contract — the
     * fence detects and refuses cross-JVM interleaves); any cadence,
     * including unconditionally per batch: an already-absorbed state is a
@@ -169,7 +166,6 @@ object MultiWriterIndex {
   def fold(
       spark: SparkSession,
       indexDir: String,
-      tableName: String,
       keyCol: String,
       nBuckets: Int,
       stampSuffix: String = "",
@@ -197,10 +193,9 @@ object MultiWriterIndex {
     val markerStamp = Bucketing.readStamp(bd)
     (markerStamp, markerStamp.flatMap(parseFoldStamp)) match {
       case (Some(s), _) if s == post =>
-        // replayed/duplicate fold: re-register only (the frame never
+        // replayed/duplicate fold: read back only (the frame never
         // evaluates when the on-disk spec matches the stamp)
-        Bucketing.ensureBucketed(
-          spark, sliceUpTo(hwNow), tableName, bd, keyCol, nBuckets, sourceStamp = post)
+        Bucketing.ensureBucketed(spark, sliceUpTo(hwNow), bd, keyCol, nBuckets, sourceStamp = post)
       case (Some(s), Some((absorbed, storedSuffix))) =>
         requireSuffix("fold", indexDir, storedSuffix, stampSuffix)
         require(absorbed.forall { case (w, e) => hwNow.getOrElse(w, -1L) >= e },
@@ -218,16 +213,15 @@ object MultiWriterIndex {
                 s"$hwNow but the log slice is empty — commit listing and slice disagree")),
           rebuildPre = sliceUpTo(absorbed),
           rebuildPost = sliceUpTo(hwNow),
-          tableName, bd, keyCol, nBuckets, preStamp = s, postStamp = post)
+          bd, keyCol, nBuckets, preStamp = s, postStamp = post)
         // the append landed ≤ one file per bucket: fold it back before the
         // next cadence tick (physical-only; per-bucket no-op when within
         // budget, so this is safe to run unconditionally)
-        Bucketing.compactBucketed(spark, tableName, bd, keyCol, nBuckets, maxFilesPerBucket)
+        Bucketing.compactBucketed(spark, bd, keyCol, nBuckets, maxFilesPerBucket)
       case _ =>
         // no marker (torn fold) or a foreign/unparseable stamp: rebuild the
         // full folded state from the log — never trust
-        Bucketing.ensureBucketed(
-          spark, sliceUpTo(hwNow), tableName, bd, keyCol, nBuckets, sourceStamp = post)
+        Bucketing.ensureBucketed(spark, sliceUpTo(hwNow), bd, keyCol, nBuckets, sourceStamp = post)
     }
   }
 
@@ -235,32 +229,29 @@ object MultiWriterIndex {
     * every committed-but-unfolded delta — each row exactly once. Before
     * any fold has run this is the pure committed log view.
     *
-    * Snapshot stance (ADVICE r20, hardened + re-bucketed r22): when an
-    * UNFOLDED tail exists, the base half is served from the bucketed
-    * layout with its file listing PINNED at read() time — the live
-    * catalog table resolves its listing at ACTION time, so a fold
-    * committing in between would swell it with newly-folded epochs the
-    * tail filter (computed from the pre-fold absorbed vector) still
-    * covers, duplicating those rows in base ∪ tail. The pin is validated
-    * by a marker double-read bracketing the listing (every maintainer
-    * mutation removes/rewrites the marker first, and the stamp must equal
-    * the absorbed vector the tail was derived from); any disturbance
-    * degrades to the delta log's manifest-pinned attempt files — the r20
-    * always-log shape. A foreign JVM's compaction completing between the
-    * two marker reads is seen too: every compaction bumps the marker's
-    * `gen=` line (the residual note in the body covers the loud case that
-    * remains). Bucket
-    * pruning (`SelectedBucketsCount`) and the co-located layout therefore
-    * survive tail-reads on a quiet index, the steady state of a hot index
-    * between fold ticks. When the log shows NOTHING unfolded, the bucketed
-    * base is served as-is: a fold racing that read can only APPEND epochs
-    * this read never claimed to cover — newer rows, each exactly once,
-    * never a duplicate.
+    * Snapshot stance (ADVICE r20, re-bucketed r22): the base half is the
+    * bucketed layout listed ONCE, here, so a fold committing before the
+    * frame's action cannot swell it with newly-folded epochs the tail
+    * filter (computed from the pre-fold absorbed vector) still covers. The
+    * listing is validated by a marker double-read bracketing it (every
+    * maintainer mutation removes/rewrites the marker first, and the stamp
+    * must equal the absorbed vector the tail was derived from), and the
+    * marker must carry the caller's (key, buckets) spec, as
+    * Bucketing.requireMarkerSpec demands: the read declares that spec to
+    * the planner, so a base folded under another one would be pruned and
+    * co-located by the wrong hash. Any disturbance or mismatch degrades to
+    * the delta log's manifest-pinned attempt files — the r20 always-log
+    * shape, never a guess. A FOREIGN JVM's compaction (in-JVM maintainers
+    * serialize on the same path lock) finishing between the two marker
+    * reads bumps the marker's `gen=` line, so the reads disagree and the
+    * read falls back; one that deletes listed files AFTER the second read
+    * fails the scan on a vanished file — loud, never a silent under-read.
+    * Bucket pruning (`SelectedBucketsCount`) and the co-located layout
+    * therefore survive on a quiet index, tail or no tail.
     */
   def read(
       spark: SparkSession,
       indexDir: String,
-      tableName: String,
       keyCol: String,
       nBuckets: Int,
       stampSuffix: String = ""
@@ -270,55 +261,23 @@ object MultiWriterIndex {
     Bucketing.readStamp(bd).flatMap(parseFoldStamp) match {
       case Some((absorbed, storedSuffix)) =>
         requireSuffix("read", indexDir, storedSuffix, stampSuffix)
-        def baseSlice = log.readSlice(spark, upTo = Some(absorbed)).getOrElse(
+        val bucketedBase = Bucketing.withPathLock(bd) {
+          for {
+            before <- Bucketing.readMarkerContent(bd)
+            lines = before.linesIterator.toSet
+            if lines(s"stamp=${foldStamp(absorbed, storedSuffix)}") &&
+              lines(s"key=$keyCol") && lines(s"buckets=$nBuckets") &&
+              Bucketing.schemaDdlOf(before).isDefined
+            frame = Bucketing.frameOf(spark, bd, before)
+            after <- Bucketing.readMarkerContent(bd)
+            if after == before
+          } yield frame
+        }
+        val base = bucketedBase.getOrElse(log.readSlice(spark, upTo = Some(absorbed)).getOrElse(
           throw new IllegalStateException(
             s"MultiWriterIndex.read: base at $bd names absorbed epochs ($absorbed) the " +
-              "log holds no rows for — log truncated; rebuild the index"))
-        log.readSlice(spark, above = absorbed) match {
-          case Some(tail) =>
-            // Unfolded tail: one consistent snapshot, but keep the BASE
-            // half bucketed (VERDICT r21 #3 — the r21 shape served it from
-            // raw log attempt files, paying an unpruned many-small-file
-            // scan on every tail-read). Pin the bucketed base's file
-            // listing point-in-time under the path monitor: the marker
-            // must (a) still carry the exact absorbed vector the tail
-            // filter was derived from and (b) be byte-identical before and
-            // after the listing — every maintainer mutation removes or
-            // rewrites the marker first, so an equal marker brackets one
-            // coherent fold generation. The marker must also carry the
-            // caller's (key, buckets) spec, as Bucketing.requireMarkerSpec
-            // demands: the pinned read declares that spec to the planner,
-            // so a base folded under another one would be pruned and
-            // co-located by the wrong hash. Any disturbance or mismatch
-            // falls back to the immutable log files (the r21 behavior),
-            // never to a guess. A FOREIGN JVM's compaction (in-JVM
-            // maintainers serialize on the same path lock) that finishes
-            // inside the window between the two marker reads bumps the
-            // marker's gen= line, so the reads disagree and the read falls
-            // back. Residual: one that deletes pinned files AFTER the
-            // second read fails the scan on a vanished file — loud, never
-            // a silent under-read.
-            val pinnedBase = Bucketing.withPathLock(bd) {
-              for {
-                before <- Bucketing.readMarkerContent(bd)
-                lines = before.linesIterator.toSet
-                if lines(s"stamp=${foldStamp(absorbed, storedSuffix)}") &&
-                  lines(s"key=$keyCol") && lines(s"buckets=$nBuckets")
-                files = Bucketing.listDataFiles(bd)
-                if files.nonEmpty
-                after <- Bucketing.readMarkerContent(bd)
-                if after == before
-                ddl <- Bucketing.schemaDdlOf(before)
-              } yield org.apache.spark.sql.execution.datasources.GraftPinnedBucketedRead
-                .parquet(spark, files, ddl, keyCol, nBuckets)
-            }
-            pinnedBase.getOrElse(baseSlice).unionByName(tail)
-          case None =>
-            Bucketing.ensureBucketed(
-              spark, baseSlice,
-              tableName, bd, keyCol, nBuckets,
-              sourceStamp = foldStamp(absorbed, storedSuffix))
-        }
+              "log holds no rows for — log truncated; rebuild the index")))
+        log.readSlice(spark, above = absorbed).fold(base)(base.unionByName(_))
       case None =>
         // no folded base yet (or a foreign marker, which fold will rebuild):
         // serve the committed log directly

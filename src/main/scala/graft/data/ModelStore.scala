@@ -188,7 +188,13 @@ object ModelStore {
     * version-skewing bucket assignments — the exact hazard this keying
     * exists to prevent.
     */
-  def rootFor(dir: String): String = {
+  def rootFor(dir: String): String = s"/tmp/graft-models-${corpusKey(dir)}"
+
+  /** `<basename>-<md5>` of the normalized absolute path of `dir` — the
+    * per-corpus key under [[rootFor]] and
+    * [[graft.connectors.Bucketing.indexDirFor]].
+    */
+  private[graft] def corpusKey(dir: String): String = {
     // un-normalizable spellings (e.g. an embedded NUL) fall back to the raw
     // string — they can't name a real corpus dir, so the only contract that
     // matters for them is stability + non-collision, which the digest keeps
@@ -199,7 +205,7 @@ object ModelStore {
     val md5 = java.security.MessageDigest.getInstance("MD5")
       .digest(norm.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .take(8).map(b => f"$b%02x").mkString
-    s"/tmp/graft-models-$base-$md5"
+    s"$base-$md5"
   }
 
   private def done(path: String): Boolean =

@@ -1650,7 +1650,6 @@ object DataQueries {
     * and bucket pruning cuts the read to the probed cells only.
     */
   private def imiPqIndexFor(spark: SparkSession, dir: String): DataFrame = {
-    val slug = dir.replaceAll("[^A-Za-z0-9]", "_")
     graft.connectors.Bucketing.ensureBucketed(
       spark,
       Similarity.encode(
@@ -1660,7 +1659,7 @@ object DataQueries {
       // the bucket count must exceed the executor-core count or the index
       // read caps below the inline face's split parallelism (measured:
       // 8 buckets scaled 1.9× at 10× rows vs the inline face's 1.4×)
-      s"graft_ann_imipq$slug", s"${graft.connectors.Bucketing.indexRoot}/$slug/ann_imipq", "n_bk", 64,
+      s"${graft.connectors.Bucketing.indexDirFor(dir)}/ann_imipq", "n_bk", 64,
       sourceStamp = graft.connectors.Bucketing.cachedStamp(s"$dir/embeddings.parquet"))
   }
 
@@ -3266,14 +3265,13 @@ object DataQueries {
       dir: String
   ): (DataFrame, Option[String], Multimodal.PhashGeometry) = {
     val g = phashGeo(spark, dir)
-    val slug = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"${graft.connectors.Bucketing.indexRoot}/$slug/phash_bands"
+    val path = s"${graft.connectors.Bucketing.indexDirFor(dir)}/phash_bands"
     val idx = graft.connectors.Bucketing.ensureBucketed(
       spark,
       Multimodal.phashBandIndex(
         Tables.documents(spark, dir).withColumn("bin", col("text").cast("binary")),
         "doc_id", "bin", bandBits = g.bandBits),
-      s"graft_phash_bands$slug", path, "bucket", 64,
+      path, "bucket", 64,
       // bandBits is the index identity (the phashBandIndex scaladoc): the
       // stamp rebuilds on a parameter change — INCLUDING a scale-derived
       // escalation as the corpus grows past the 8-bit geometry — and the
@@ -3411,26 +3409,24 @@ object DataQueries {
     val out = CorpusOps.releaseOnFailure(gated) {
       val acceptedIds = gated.filter(col("reject_reason").isNull).select(col("doc_id"))
       val acceptedDocs = batch.join(acceptedIds, Seq("doc_id"), "left_semi")
-      val slug = dir.replaceAll("[^A-Za-z0-9]", "_")
       val docsStamp = Bucketing.cachedStamp(s"$dir/documents.parquet")
       val gateCfg = s"mediagate(allowed=${gateAllowed.mkString("+")}," +
         s"min=$gateMinBytes,max=$gateMaxBytes,mimeMod=$mimeMod)"
-      val path = s"${graft.connectors.Bucketing.indexRoot}/$slug/capstone_phash"
-      val table = s"graft_capstone_phash$slug"
+      val path = s"${Bucketing.indexDirFor(dir)}/capstone_phash"
       val pre = s"${Multimodal.phashStamp(bandBits)}|$docsStamp|$gateCfg|pre"
       val post = s"${Multimodal.phashStamp(bandBits)}|$docsStamp|$gateCfg|ingested"
       def bandsOf(df: DataFrame) =
         Multimodal.phashBandIndex(df, "doc_id", "bin", bandBits = bandBits)
       if (!Bucketing.readStamp(path).contains(post))
         Bucketing.ensureBucketed(
-          spark, bandsOf(corpus), table, path, "bucket", 64, sourceStamp = pre)
+          spark, bandsOf(corpus), path, "bucket", 64, sourceStamp = pre)
       // 2) the fenced append: replayed batch skips, torn append rebuilds
       val postIdx = Bucketing.appendBucketedExactlyOnce(
         spark,
         delta = bandsOf(acceptedDocs),
         rebuildPre = bandsOf(corpus),
         rebuildPost = bandsOf(corpus.unionByName(acceptedDocs.drop("mime"))),
-        table, path, "bucket", 64, pre, post)
+        path, "bucket", 64, pre, post)
       // 3) serve from the post-append index — same parameters as the
       // m_phash_indexed face; the stamp validates bandBits per query
       val pairs = Multimodal.perceptualPairsIndexed(
@@ -3784,14 +3780,13 @@ object DataQueries {
     * exceed executor cores or the index read caps scan parallelism.
     */
   private def nearDupIndexFor(spark: SparkSession, dir: String): (DataFrame, Option[String]) = {
-    val slug = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"${graft.connectors.Bucketing.indexRoot}/$slug/neardup_bands"
+    val path = s"${graft.connectors.Bucketing.indexDirFor(dir)}/neardup_bands"
     val idx = graft.connectors.Bucketing.ensureBucketed(
       spark,
       SnapshotOps.nearDupBandIndex(
         Tables.documents(spark, dir).filter(pmod(col("doc_id"), lit(3)) =!= 0),
         "doc_id", "text"),
-      s"graft_neardup_bands$slug", path, "bucket", 64,
+      path, "bucket", 64,
       // the banding triple is part of the index identity (the
       // incrementalNearDupIndexed scaladoc): carrying it in the stamp makes
       // a parameter change REBUILD instead of silently probing a
@@ -3849,9 +3844,7 @@ object DataQueries {
     val recrawl = docs
       .filter(pmod(col("doc_id"), lit(5)) === 1)
       .withColumn("doc_id", col("doc_id") + lit(1000000L))
-    val slug = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"${graft.connectors.Bucketing.indexRoot}/$slug/neardup_bands_compact"
-    val table = s"graft_neardup_bands_compact$slug"
+    val path = s"${Bucketing.indexDirFor(dir)}/neardup_bands_compact"
     val docsStamp = Bucketing.cachedStamp(s"$dir/documents.parquet")
     val pre = s"${SnapshotOps.bandStamp(3, 16, 2)}|$docsStamp|half"
     val post = s"${SnapshotOps.bandStamp(3, 16, 2)}|$docsStamp|full"
@@ -3860,17 +3853,17 @@ object DataQueries {
     if (!Bucketing.readStamp(path).contains(post))
       Bucketing.ensureBucketed(
         spark, SnapshotOps.nearDupBandIndex(even, "doc_id", "text"),
-        table, path, "bucket", 64, sourceStamp = pre)
+        path, "bucket", 64, sourceStamp = pre)
     Bucketing.appendBucketedExactlyOnce(
       spark,
       delta = SnapshotOps.nearDupBandIndex(odd, "doc_id", "text"),
       rebuildPre = SnapshotOps.nearDupBandIndex(even, "doc_id", "text"),
       rebuildPost = SnapshotOps.nearDupBandIndex(corpus, "doc_id", "text"),
-      table, path, "bucket", 64, pre, post)
+      path, "bucket", 64, pre, post)
     // idempotent maintenance call: folds the append's files on first run,
     // skips (≤1 file/bucket already) on every later one — marker/stamp
     // byte-identical either way, so the fences above keep skipping too
-    val idx = Bucketing.compactBucketed(spark, table, path, "bucket", 64)
+    val idx = Bucketing.compactBucketed(spark, path, "bucket", 64)
     SnapshotOps.incrementalNearDupIndexed(
       bandIndex = idx,
       corpusText = corpus,
@@ -3908,11 +3901,9 @@ object DataQueries {
     val recrawl = docs
       .filter(pmod(col("doc_id"), lit(5)) === 1)
       .withColumn("doc_id", col("doc_id") + lit(1000000L))
-    val slug = dir.replaceAll("[^A-Za-z0-9]", "_")
     val docsStamp = Bucketing.cachedStamp(s"$dir/documents.parquet")
     val identity = s"${SnapshotOps.bandStamp(3, 16, 2)}|$docsStamp"
-    val idxDir = s"${Bucketing.indexRoot}/$slug/neardup_mw/$docsStamp"
-    val table = s"graft_neardup_mw$slug"
+    val idxDir = s"${Bucketing.indexDirFor(dir)}/neardup_mw/$docsStamp"
     def bands(df: DataFrame) = SnapshotOps.nearDupBandIndex(df, "doc_id", "text")
     val even = corpus.filter(pmod(col("doc_id"), lit(2)) === 0)
     val odd = corpus.filter(pmod(col("doc_id"), lit(2)) === 1)
@@ -3921,8 +3912,7 @@ object DataQueries {
     MultiWriterIndex.appendDelta(
       bands(even.filter(pmod(col("doc_id"), lit(4)) === 2)), idxDir, "even", 1L)
     MultiWriterIndex.appendDelta(bands(odd), idxDir, "odd", 0L)
-    val idx = MultiWriterIndex.fold(
-      spark, idxDir, table, "bucket", 64, stampSuffix = identity)
+    val idx = MultiWriterIndex.fold(spark, idxDir, "bucket", 64, stampSuffix = identity)
     SnapshotOps.incrementalNearDupIndexed(
       bandIndex = idx,
       corpusText = corpus,
@@ -3990,7 +3980,7 @@ object DataQueries {
     *     appended to this face's persisted indexes via
     *     [[graft.connectors.Bucketing.appendBucketedExactlyOnce]] — the
     *     marker-stamp fence (TxnLogSink's committed-manifest skip): a
-    *     replayed batch re-registers and moves no data, a torn append
+    *     replayed batch reads back and moves no data, a torn append
     *     rebuilds, spec-pinned under simulated kill-and-resume
     *     (ScaleMechanicsSpec). Both indexes advance WITH the corpus text
     *     in the same pass — the structural form of the index ⊆ corpusText
@@ -4031,7 +4021,6 @@ object DataQueries {
     val out = CorpusOps.releaseOnFailure(gated) {
       val acceptedIds = gated.filter(col("reject_reason").isNull).select(col("doc_id"))
       val acceptedDocs = batch.join(acceptedIds, Seq("doc_id"), "left_semi")
-      val slug = dir.replaceAll("[^A-Za-z0-9]", "_")
       val docsStamp = Bucketing.cachedStamp(s"$dir/documents.parquet")
       // the GATE configuration is part of the index identity too: the
       // appended rows are the gate's ACCEPTED set, so a gate change (langs,
@@ -4045,21 +4034,20 @@ object DataQueries {
         s"gate(langs=${gateLangs.mkString("+")},min=$gateMinTokens,bench=$gateBenchMod,ngram=$gateNgram)"
       // 2a) near-dup band index: bootstrap the PRE state once per corpus
       // stamp, then the fenced append per batch
-      val bandPath = s"${graft.connectors.Bucketing.indexRoot}/$slug/capstone_bands"
-      val bandTable = s"graft_capstone_bands$slug"
+      val bandPath = s"${Bucketing.indexDirFor(dir)}/capstone_bands"
       val bandPre = s"${SnapshotOps.bandStamp(3, 16, 2)}|$docsStamp|$gateCfg|pre"
       val bandPost = s"${SnapshotOps.bandStamp(3, 16, 2)}|$docsStamp|$gateCfg|ingested"
       if (!Bucketing.readStamp(bandPath).contains(bandPost))
         Bucketing.ensureBucketed(
           spark, SnapshotOps.nearDupBandIndex(corpus, "doc_id", "text"),
-          bandTable, bandPath, "bucket", 64, sourceStamp = bandPre)
+          bandPath, "bucket", 64, sourceStamp = bandPre)
       val postIdx = Bucketing.appendBucketedExactlyOnce(
         spark,
         delta = SnapshotOps.nearDupBandIndex(acceptedDocs, "doc_id", "text"),
         rebuildPre = SnapshotOps.nearDupBandIndex(corpus, "doc_id", "text"),
         rebuildPost = SnapshotOps.nearDupBandIndex(
           corpus.unionByName(acceptedDocs), "doc_id", "text"),
-        bandTable, bandPath, "bucket", 64, bandPre, bandPost)
+        bandPath, "bucket", 64, bandPre, bandPost)
       // 2b) IMI-PQ ANN index: the accepted rows that HAVE embeddings (the
       // recrawl ids are text-only) get their codes appended under the same
       // fence — one gated batch updates BOTH heavy index families
@@ -4069,22 +4057,21 @@ object DataQueries {
         acceptedIds.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
       val annFence = Fence.Imi(imiCodebooksFor(spark, dir, ImiKSub))
       val annScorer = Scorer.Adc(codebooksFor(spark, dir, m = PqM, k = PqK))
-      val annPath = s"${graft.connectors.Bucketing.indexRoot}/$slug/capstone_ann"
-      val annTable = s"graft_capstone_ann$slug"
+      val annPath = s"${Bucketing.indexDirFor(dir)}/capstone_ann"
       val embStamp = Bucketing.cachedStamp(s"$dir/embeddings.parquet")
       val annPre = s"imipq($ImiKSub,$PqM,$PqK)|$embStamp|$gateCfg|pre"
       val annPost = s"imipq($ImiKSub,$PqM,$PqK)|$embStamp|$gateCfg|ingested"
       if (!Bucketing.readStamp(annPath).contains(annPost))
         Bucketing.ensureBucketed(
           spark, Similarity.encode(corpusEmb, "vec_id", "embedding", annFence, annScorer),
-          annTable, annPath, "n_bk", 64, sourceStamp = annPre)
+          annPath, "n_bk", 64, sourceStamp = annPre)
       Bucketing.appendBucketedExactlyOnce(
         spark,
         delta = Similarity.encode(batchEmb, "vec_id", "embedding", annFence, annScorer),
         rebuildPre = Similarity.encode(corpusEmb, "vec_id", "embedding", annFence, annScorer),
         rebuildPost = Similarity.encode(
           corpusEmb.unionByName(batchEmb), "vec_id", "embedding", annFence, annScorer),
-        annTable, annPath, "n_bk", 64, annPre, annPost)
+        annPath, "n_bk", 64, annPre, annPost)
       // 3) serve: the probe batch gated against the POST-APPEND band index;
       // corpusText advanced in lockstep (the coverage contract, held
       // structurally — both sides grew by the same accepted rows)

@@ -1399,17 +1399,14 @@ object Relational {
     */
   def qBucketedJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val slug = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"${graft.connectors.Bucketing.indexRoot}/$slug"
+    val base = graft.connectors.Bucketing.indexDirFor(dir)
     // source stamps invalidate the cached layout when the fixture data at
     // `dir` is regenerated (e.g. a ScaleProbe rebuild at a new factor)
     val li = graft.connectors.Bucketing.ensureBucketed(
-      spark, Tables.lineitem(spark, dir),
-      s"graft_bkt_lineitem$slug", s"$base/lineitem", "l_orderkey", 16,
+      spark, Tables.lineitem(spark, dir), s"$base/lineitem", "l_orderkey", 16,
       sourceStamp = graft.connectors.Bucketing.cachedStamp(s"$dir/lineitem.parquet"))
     val ord = graft.connectors.Bucketing.ensureBucketed(
-      spark, Tables.orders(spark, dir),
-      s"graft_bkt_orders$slug", s"$base/orders", "o_orderkey", 16,
+      spark, Tables.orders(spark, dir), s"$base/orders", "o_orderkey", 16,
       sourceStamp = graft.connectors.Bucketing.cachedStamp(s"$dir/orders.parquet"))
     li.hint("merge")
       .join(ord, li("l_orderkey") === ord("o_orderkey"))

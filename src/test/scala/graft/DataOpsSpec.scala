@@ -906,18 +906,17 @@ class DataOpsSpec extends SparkSpec {
       rawIdx, maxHamming = 7, bandBits = 8, probeRadius = 0)) === inline7r0)
     // persisted: build over a corpus slice, append the delta, equal a rebuild
     val dir = tmpDir("graft_phash_idx_spec").toString
-    val table = "graft_phash_idx_spec"
     val corpusSlice = df.filter($"doc_id" <= 6L)
     val deltaSlice = df.filter($"doc_id" > 6L)
     Bucketing.ensureBucketed(
       spark, Multimodal.phashBandIndex(corpusSlice, "doc_id", "bin"),
-      table, dir, "bucket", 8,
+      dir, "bucket", 8,
       sourceStamp = s"${Multimodal.phashStamp(8)}|specA")
-    Bucketing.appendBucketed(
+    val appendedIdx = Bucketing.appendBucketed(
       spark, Multimodal.phashBandIndex(deltaSlice, "doc_id", "bin"),
-      table, dir, "bucket", 8,
+      dir, "bucket", 8,
       newSourceStamp = s"${Multimodal.phashStamp(8)}|specB")
-    val appended = spark.table(table).as[(Long, Int, String, Long)].collect().toSet
+    val appended = appendedIdx.as[(Long, Int, String, Long)].collect().toSet
     val rebuilt = Multimodal.phashBandIndex(df, "doc_id", "bin")
       .as[(Long, Int, String, Long)].collect().toSet
     assert(appended === rebuilt, "appended pHash index drifted from a full rebuild")
@@ -926,13 +925,13 @@ class DataOpsSpec extends SparkSpec {
     val stamp = Bucketing.readStamp(dir)
     assert(stamp.exists(_.contains(Multimodal.phashStamp(8))), s"stamp: $stamp")
     assert(pairsOf(Multimodal.perceptualPairsIndexed(
-      spark.table(table), maxHamming = 15, bandBits = 8, probeRadius = 1,
+      appendedIdx, maxHamming = 15, bandBits = 8, probeRadius = 1,
       indexStamp = stamp)) === inline15)
     // band-width drift is loud: probing an 8-bit index as 16-bit would emit
     // garbage candidates silently
     val errDrift = intercept[IllegalArgumentException] {
       Multimodal.perceptualPairsIndexed(
-        spark.table(table), maxHamming = 7, bandBits = 16, probeRadius = 1,
+        appendedIdx, maxHamming = 7, bandBits = 16, probeRadius = 1,
         indexStamp = stamp)
     }
     assert(errDrift.getMessage.contains("DIFFERENT band width"), errDrift.getMessage)
@@ -944,7 +943,6 @@ class DataOpsSpec extends SparkSpec {
         Multimodal.phashBandIndex(flood, "doc_id", "bin"), maxBucketRows = 20)
     }
     assert(errFlood.getMessage.contains("perceptual-dup flood"), errFlood.getMessage)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("semDedupPlan: auto-k IMI branch escalates probe depth in the weak-threshold regime") {

@@ -115,16 +115,14 @@ class ScaleMechanicsSpec extends SparkSpec {
     }
   }
 
-  test("ensureBucketed: write-once marker, catalog re-registration, exchange+sort-free join") {
+  test("ensureBucketed: write-once marker, re-read from the marker, exchange+sort-free join") {
     import graft.connectors.Bucketing
     val base = tmpDir("graft_bkt_spec").toString
     val li0 = graft.core.Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
     val ord0 = graft.core.Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")
     try {
-      val li = Bucketing.ensureBucketed(
-        spark, li0, "bkt_spec_li", s"$base/li", "l_orderkey", 8)
-      val ord = Bucketing.ensureBucketed(
-        spark, ord0, "bkt_spec_ord", s"$base/ord", "o_orderkey", 8)
+      val li = Bucketing.ensureBucketed(spark, li0, s"$base/li", "l_orderkey", 8)
+      val ord = Bucketing.ensureBucketed(spark, ord0, s"$base/ord", "o_orderkey", 8)
       // one file per bucket → the reader trusts the sort order
       val dataFiles = new java.io.File(s"$base/li").listFiles()
         .count(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
@@ -142,62 +140,29 @@ class ScaleMechanicsSpec extends SparkSpec {
         .agg(org.apache.spark.sql.functions.sum($"l_quantity"))
         .queryExecution.executedPlan.toString
       assert(!aggPlan.contains("Exchange"), s"bucketed agg still shuffles:\n${aggPlan.take(1200)}")
-      // drop from the catalog (fresh-JVM simulation): re-registers from the
+      // a later call (this JVM or a fresh one) reads the files back from the
       // marker DDL without rewriting the data
       val mtimes = new java.io.File(s"$base/li").listFiles().map(f => f.getName -> f.lastModified).toMap
-      spark.sql("DROP TABLE bkt_spec_li")
-      val reRegistered = Bucketing.ensureBucketed(
+      val reRead = Bucketing.ensureBucketed(
         spark, sys.error("must not re-read the source"): org.apache.spark.sql.DataFrame,
-        "bkt_spec_li", s"$base/li", "l_orderkey", 8)
-      assert(reRegistered.count() === li0.count())
+        s"$base/li", "l_orderkey", 8)
+      assert(reRead.count() === li0.count())
       val mtimesAfter = new java.io.File(s"$base/li").listFiles().map(f => f.getName -> f.lastModified).toMap
-      assert(mtimesAfter === mtimes, "re-registration rewrote the bucketed files")
-      // and the re-registered table still joins exchange-free
-      val plan2 = reRegistered.hint("merge")
-        .join(ord, reRegistered("l_orderkey") === ord("o_orderkey"))
+      assert(mtimesAfter === mtimes, "the re-read rewrote the bucketed files")
+      // and the re-read index still joins exchange-free
+      val plan2 = reRead.hint("merge")
+        .join(ord, reRead("l_orderkey") === ord("o_orderkey"))
         .queryExecution.executedPlan.toString
-      assert(!plan2.contains("Exchange"), s"re-registered join shuffles:\n${plan2.take(1200)}")
+      assert(!plan2.contains("Exchange"), s"re-read join shuffles:\n${plan2.take(1200)}")
       // spec drift must REBUILD, never trust: asking for a different bucket
       // count over the same path rewrites the files instead of registering
       // wrong bucket metadata over 8-bucket data
-      val rebuilt = Bucketing.ensureBucketed(
-        spark, li0, "bkt_spec_li", s"$base/li", "l_orderkey", 4)
+      val rebuilt = Bucketing.ensureBucketed(spark, li0, s"$base/li", "l_orderkey", 4)
       val filesAfter = new java.io.File(s"$base/li").listFiles()
         .count(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
       assert(filesAfter === 4, s"bucket-count change did not rebuild: $filesAfter files")
       assert(rebuilt.count() === li0.count())
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS bkt_spec_li")
-      spark.sql("DROP TABLE IF EXISTS bkt_spec_ord")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    }
-  }
-
-  test("ensureBucketed: a catalog name reused for a DIFFERENT path re-registers, never returns the old table") {
-    import graft.connectors.Bucketing
-    val base = tmpDir("graft_bkt_reuse").toString
-    val li0 = graft.core.Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
-    val ord0 = graft.core.Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")
-    try {
-      // register the name against path A, and independently build path B
-      // (valid marker on disk) under another name, then drop that name
-      Bucketing.ensureBucketed(spark, li0, "bkt_reuse", s"$base/a", "l_orderkey", 4)
-      Bucketing.ensureBucketed(spark, ord0, "bkt_reuse_other", s"$base/b", "o_orderkey", 4)
-      spark.sql("DROP TABLE bkt_reuse_other")
-      // same NAME now asked for path B: the in-catalog entry points at A,
-      // so trusting it would silently return lineitem rows for an orders
-      // request — it must re-register B's layout instead (from B's marker,
-      // without evaluating the source)
-      val b = Bucketing.ensureBucketed(
-        spark, sys.error("must not re-read the source"): org.apache.spark.sql.DataFrame,
-        "bkt_reuse", s"$base/b", "o_orderkey", 4)
-      assert(b.columns.contains("o_orderkey"), s"wrong table returned: ${b.columns.mkString(",")}")
-      assert(b.count() === ord0.count())
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS bkt_reuse")
-      spark.sql("DROP TABLE IF EXISTS bkt_reuse_other")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 
   test("stampDir: sees nested files and distinguishes same-aggregate layouts") {
@@ -617,7 +582,7 @@ class ScaleMechanicsSpec extends SparkSpec {
     val idx = graft.connectors.Bucketing.ensureBucketed(
       spark,
       Similarity.encode(corpus, "vec_id", "embedding", fence2, adc),
-      "graft_ann_idx_spec", dir, "n_bk", 8, sourceStamp = "spec")
+      dir, "n_bk", 8, sourceStamp = "spec")
     // row-identical to the inline face — the index changes the read path,
     // never the answer (the unpruned read is the maxPruneCells = 1 arm below)
     assert(rows(Similarity.topKIndexed(idx, q, "vec_id", "embedding", fence2, adc, k = 5)) === inline)
@@ -653,24 +618,22 @@ class ScaleMechanicsSpec extends SparkSpec {
     def encode(df: org.apache.spark.sql.DataFrame) = Similarity.encode(
       df, "vec_id", "embedding", Similarity.Fence.Imi(icbs), Similarity.Scorer.Adc(pcbs))
     val dir = tmpDir("graft_ann_idx_append").toString
-    val table = "graft_ann_idx_append_spec"
     graft.connectors.Bucketing.ensureBucketed(
-      spark, encode(corpus), table, dir, "n_bk", 8, sourceStamp = "specA")
-    graft.connectors.Bucketing.appendBucketed(
-      spark, encode(delta), table, dir, "n_bk", 8, newSourceStamp = "specB")
+      spark, encode(corpus), dir, "n_bk", 8, sourceStamp = "specA")
+    val appendedIdx = graft.connectors.Bucketing.appendBucketed(
+      spark, encode(delta), dir, "n_bk", 8, newSourceStamp = "specB")
     def rowSet(df: org.apache.spark.sql.DataFrame) =
       df.select($"n_id", $"n_bk", $"n_codes").as[(Long, Int, Seq[Int])]
         .collect().map(r => (r._1, r._2, r._3.toVector)).toSet
-    val appended = rowSet(spark.table(table))
+    val appended = rowSet(appendedIdx)
     val rebuilt = rowSet(encode(corpus.unionByName(delta)))
     assert(appended === rebuilt, "appended ANN index drifted from a full re-encode")
-    // the post-append stamp re-registers; the by-name frame must not evaluate
+    // the post-append stamp reads back; the by-name frame must not evaluate
     val reRead = graft.connectors.Bucketing.ensureBucketed(
       spark,
-      sys.error("appended stamp must re-register, not rebuild"): org.apache.spark.sql.DataFrame,
-      table, dir, "n_bk", 8, sourceStamp = "specB")
+      sys.error("appended stamp must read back, not rebuild"): org.apache.spark.sql.DataFrame,
+      dir, "n_bk", 8, sourceStamp = "specB")
     assert(reRead.count() === 3300L)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
     corpus.unpersist()
   }
 
@@ -683,54 +646,44 @@ class ScaleMechanicsSpec extends SparkSpec {
       df.as[(Long, String)].collect().toSet
     val expected = rowSet(union)
     val dir = tmpDir("graft_append_once").toString
-    val table = "graft_append_once_spec"
     def boom = sys.error("this frame must not evaluate"): org.apache.spark.sql.DataFrame
-    try {
-      // bootstrap PRE, then the happy-path fenced append
-      Bucketing.ensureBucketed(spark, corpus, table, dir, "bucket", 4, sourceStamp = "pre")
-      val r1 = Bucketing.appendBucketedExactlyOnce(
-        spark, delta, boom, boom, table, dir, "bucket", 4, "pre", "post")
-      assert(rowSet(r1) === expected)
-      assert(Bucketing.readStamp(dir) === Some("post"))
-      // REPLAYED epoch (kill after commit, resume re-runs the batch): the
-      // fence skips — no frame evaluates, no data moves
-      val r2 = Bucketing.appendBucketedExactlyOnce(
-        spark, boom, boom, boom, table, dir, "bucket", 4, "pre", "post")
-      assert(rowSet(r2) === expected)
-      // fresh-JVM replay shape: catalog entry dropped, only marker + files
-      // remain — the fence re-registers without data motion
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      val r3 = Bucketing.appendBucketedExactlyOnce(
-        spark, boom, boom, boom, table, dir, "bucket", 4, "pre", "post")
-      assert(rowSet(r3) === expected)
-      // TORN append (killed between the marker delete and the data write,
-      // possibly with partial files): no marker on disk + junk rows — the
-      // fence rebuilds the post state from scratch, never trusts
-      assert(new java.io.File(dir, "_GRAFT_BUCKETED_DDL").delete())
-      (900L until 903L).map(i => (i, "junk")).toDF("sid", "bucket")
-        .write.mode("append").parquet(dir)
-      val r4 = Bucketing.appendBucketedExactlyOnce(
-        spark, boom, boom, union, table, dir, "bucket", 4, "pre", "post")
-      assert(rowSet(r4) === expected, "torn-append rebuild kept partial rows")
-      assert(Bucketing.readStamp(dir) === Some("post"))
-      // FOREIGN stamp (another pipeline's layout at this path): rebuild
-      val marker = new java.io.File(dir, "_GRAFT_BUCKETED_DDL").toPath
-      val spec = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-      java.nio.file.Files.write(marker, spec.replace("stamp=post", "stamp=stranger").getBytes("UTF-8"))
-      val r5 = Bucketing.appendBucketedExactlyOnce(
-        spark, boom, boom, union, table, dir, "bucket", 4, "pre", "post")
-      assert(rowSet(r5) === expected)
-      assert(Bucketing.readStamp(dir) === Some("post"))
-      // an indistinguishable fence is refused
-      intercept[IllegalArgumentException](Bucketing.appendBucketedExactlyOnce(
-        spark, boom, boom, boom, table, dir, "bucket", 4, "same", "same"))
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+    // bootstrap PRE, then the happy-path fenced append
+    Bucketing.ensureBucketed(spark, corpus, dir, "bucket", 4, sourceStamp = "pre")
+    val r1 = Bucketing.appendBucketedExactlyOnce(
+      spark, delta, boom, boom, dir, "bucket", 4, "pre", "post")
+    assert(rowSet(r1) === expected)
+    assert(Bucketing.readStamp(dir) === Some("post"))
+    // REPLAYED epoch (kill after commit, resume re-runs the batch): the
+    // fence skips — no frame evaluates, no data moves
+    val r2 = Bucketing.appendBucketedExactlyOnce(
+      spark, boom, boom, boom, dir, "bucket", 4, "pre", "post")
+    assert(rowSet(r2) === expected)
+    // TORN append (killed between the marker delete and the data write,
+    // possibly with partial files): no marker on disk + junk rows — the
+    // fence rebuilds the post state from scratch, never trusts
+    assert(new java.io.File(dir, "_GRAFT_BUCKETED_DDL").delete())
+    (900L until 903L).map(i => (i, "junk")).toDF("sid", "bucket")
+      .write.mode("append").parquet(dir)
+    val r4 = Bucketing.appendBucketedExactlyOnce(
+      spark, boom, boom, union, dir, "bucket", 4, "pre", "post")
+    assert(rowSet(r4) === expected, "torn-append rebuild kept partial rows")
+    assert(Bucketing.readStamp(dir) === Some("post"))
+    // FOREIGN stamp (another pipeline's layout at this path): rebuild
+    val marker = new java.io.File(dir, "_GRAFT_BUCKETED_DDL").toPath
+    val spec = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
+    java.nio.file.Files.write(marker, spec.replace("stamp=post", "stamp=stranger").getBytes("UTF-8"))
+    val r5 = Bucketing.appendBucketedExactlyOnce(
+      spark, boom, boom, union, dir, "bucket", 4, "pre", "post")
+    assert(rowSet(r5) === expected)
+    assert(Bucketing.readStamp(dir) === Some("post"))
+    // an indistinguishable fence is refused
+    intercept[IllegalArgumentException](Bucketing.appendBucketedExactlyOnce(
+      spark, boom, boom, boom, dir, "bucket", 4, "same", "same"))
   }
 
   test("compactBucketed: appends-grown table collapses to ≤1 file/bucket — same rows, same stamp, same spec; torn compact rebuilds") {
     import graft.connectors.Bucketing
     val dir = tmpDir("graft_compact").toString
-    val table = "graft_compact_spec"
     def slice(lo: Long, hi: Long) =
       (lo until hi).map(i => (i, s"b${i % 8}")).toDF("sid", "bucket")
     def rowSet(df: org.apache.spark.sql.DataFrame) = df.as[(Long, String)].collect().toSet
@@ -739,65 +692,60 @@ class ScaleMechanicsSpec extends SparkSpec {
         .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
         .map(_.getName)
     def boom = sys.error("this frame must not evaluate"): org.apache.spark.sql.DataFrame
-    try {
-      // build + 3 appends: each append repartitions into the bucket layout,
-      // so the file count grows by ~nBuckets per batch — the small-files
-      // accumulation every per-batch index maintainer hits
-      Bucketing.ensureBucketed(spark, slice(0, 40), table, dir, "bucket", 4, sourceStamp = "s0")
-      Bucketing.appendBucketed(spark, slice(40, 80), table, dir, "bucket", 4, "s1")
-      Bucketing.appendBucketed(spark, slice(80, 120), table, dir, "bucket", 4, "s2")
-      Bucketing.appendBucketed(spark, slice(120, 160), table, dir, "bucket", 4, "s3")
-      val expected = rowSet(slice(0, 160))
-      assert(rowSet(spark.table(table)) === expected)
-      val filesBefore = dataFiles
-      // one file per (batch, non-empty bucket): well above the bucket count
-      assert(filesBefore.length > 4, s"fixture did not accumulate files: $filesBefore")
+    // build + 3 appends: each append repartitions into the bucket layout,
+    // so the file count grows by ~nBuckets per batch — the small-files
+    // accumulation every per-batch index maintainer hits
+    Bucketing.ensureBucketed(spark, slice(0, 40), dir, "bucket", 4, sourceStamp = "s0")
+    Bucketing.appendBucketed(spark, slice(40, 80), dir, "bucket", 4, "s1")
+    Bucketing.appendBucketed(spark, slice(80, 120), dir, "bucket", 4, "s2")
+    Bucketing.appendBucketed(spark, slice(120, 160), dir, "bucket", 4, "s3")
+    val expected = rowSet(slice(0, 160))
+    assert(rowSet(Bucketing.read(spark, dir)) === expected)
+    val filesBefore = dataFiles
+    // one file per (batch, non-empty bucket): well above the bucket count
+    assert(filesBefore.length > 4, s"fixture did not accumulate files: $filesBefore")
 
-      val compacted = Bucketing.compactBucketed(spark, table, dir, "bucket", 4)
-      // physical change only: rows, stamp, and spec are untouched
-      assert(rowSet(compacted) === expected, "compaction changed the answer")
-      assert(dataFiles.length <= 4, s"expected <=1 file/bucket after compact, got $dataFiles")
-      assert(Bucketing.readStamp(dir) === Some("s3"), "compaction must preserve the stamp")
-      // the swap preserved bucket hashing: a fresh session-shape re-register
-      // (by-name frame must not evaluate) still answers identically
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      val reReg = Bucketing.ensureBucketed(spark, boom, table, dir, "bucket", 4, sourceStamp = "s3")
-      assert(rowSet(reReg) === expected)
-      // and the appendBucketedExactlyOnce fence sees no state change: a
-      // replayed epoch whose postStamp == the (preserved) stamp still skips
-      val replay = Bucketing.appendBucketedExactlyOnce(
-        spark, boom, boom, boom, table, dir, "bucket", 4, "s2", "s3")
-      assert(rowSet(replay) === expected)
+    val compacted = Bucketing.compactBucketed(spark, dir, "bucket", 4)
+    // physical change only: rows, stamp, and spec are untouched
+    assert(rowSet(compacted) === expected, "compaction changed the answer")
+    assert(dataFiles.length <= 4, s"expected <=1 file/bucket after compact, got $dataFiles")
+    assert(Bucketing.readStamp(dir) === Some("s3"), "compaction must preserve the stamp")
+    // the swap preserved bucket hashing: a re-read by stamp (by-name
+    // frame must not evaluate) still answers identically
+    val reReg = Bucketing.ensureBucketed(spark, boom, dir, "bucket", 4, sourceStamp = "s3")
+    assert(rowSet(reReg) === expected)
+    // and the appendBucketedExactlyOnce fence sees no state change: a
+    // replayed epoch whose postStamp == the (preserved) stamp still skips
+    val replay = Bucketing.appendBucketedExactlyOnce(
+      spark, boom, boom, boom, dir, "bucket", 4, "s2", "s3")
+    assert(rowSet(replay) === expected)
 
-      // already-compact skip: calling again moves nothing (same file NAMES)
-      val namesBefore = dataFiles.sorted
-      Bucketing.compactBucketed(spark, table, dir, "bucket", 4)
-      assert(dataFiles.sorted === namesBefore, "no-op compact must not rewrite files")
+    // already-compact skip: calling again moves nothing (same file NAMES)
+    val namesBefore = dataFiles.sorted
+    Bucketing.compactBucketed(spark, dir, "bucket", 4)
+    assert(dataFiles.sorted === namesBefore, "no-op compact must not rewrite files")
 
-      // append AFTER compact keeps working and matching a logical rebuild
-      Bucketing.appendBucketed(spark, slice(160, 200), table, dir, "bucket", 4, "s4")
-      assert(rowSet(spark.table(table)) === rowSet(slice(0, 200)))
+    // append AFTER compact keeps working and matching a logical rebuild
+    Bucketing.appendBucketed(spark, slice(160, 200), dir, "bucket", 4, "s4")
+    assert(rowSet(Bucketing.read(spark, dir)) === rowSet(slice(0, 200)))
 
-      // TORN compact (killed inside the swap window): marker gone, files
-      // partial — the build path rebuilds from source, never trusts
-      assert(new java.io.File(dir, "_GRAFT_BUCKETED_DDL").delete())
-      dataFiles.take(2).foreach(n => assert(new java.io.File(dir, n).delete()))
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      val rebuilt = Bucketing.ensureBucketed(spark, slice(0, 200), table, dir, "bucket", 4, "s4")
-      assert(rowSet(rebuilt) === rowSet(slice(0, 200)), "torn-compact rebuild kept partial state")
+    // TORN compact (killed inside the swap window): marker gone, files
+    // partial — the build path rebuilds from source, never trusts
+    assert(new java.io.File(dir, "_GRAFT_BUCKETED_DDL").delete())
+    dataFiles.take(2).foreach(n => assert(new java.io.File(dir, n).delete()))
+    val rebuilt = Bucketing.ensureBucketed(spark, slice(0, 200), dir, "bucket", 4, "s4")
+    assert(rowSet(rebuilt) === rowSet(slice(0, 200)), "torn-compact rebuild kept partial state")
 
-      // compaction refuses foreign shapes loudly
-      intercept[IllegalArgumentException](
-        Bucketing.compactBucketed(spark, table, dir, "bucket", 8))
-      intercept[IllegalArgumentException](
-        Bucketing.compactBucketed(spark, "graft_compact_spec_missing", dir, "bucket", 4))
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+    // compaction refuses foreign shapes loudly
+    intercept[IllegalArgumentException](
+      Bucketing.compactBucketed(spark, dir, "bucket", 8))
+    intercept[IllegalArgumentException](
+      Bucketing.compactBucketed(spark, dir + "_missing", "bucket", 4))
   }
 
   test("compactBucketed is bucket-incremental: only fragmented buckets rewritten, untouched buckets' files untouched; per-bucket no-op decision") {
     import graft.connectors.Bucketing
     val dir = tmpDir("graft_compact_incr").toString
-    val table = "graft_compact_incr_spec"
     def rows(lo: Long, hi: Long, v: String) = (lo until hi).map(i => (i, v)).toDF("sid", "bucket")
     def rowSet(df: org.apache.spark.sql.DataFrame) = df.as[(Long, String)].collect().toSet
     def fileMeta: Map[String, Long] =
@@ -809,97 +757,92 @@ class ScaleMechanicsSpec extends SparkSpec {
       name match { case m(id) => id.toInt }
     }
     def boom = sys.error("this frame must not evaluate"): org.apache.spark.sql.DataFrame
-    try {
-      // 8 distinct bucket values over 4 physical buckets, then compact to
-      // the 1-file/bucket baseline
-      val base = (0L until 40L).map(i => (i, s"b${i % 8}")).toDF("sid", "bucket")
-      Bucketing.ensureBucketed(spark, base, table, dir, "bucket", 4, sourceStamp = "s0")
-      Bucketing.appendBucketed(spark, rows(40, 60, "b1"), table, dir, "bucket", 4, "s1")
-      Bucketing.compactBucketed(spark, table, dir, "bucket", 4)
-      val baseline = fileMeta
-      assert(baseline.size <= 4)
+    // 8 distinct bucket values over 4 physical buckets, then compact to
+    // the 1-file/bucket baseline
+    val base = (0L until 40L).map(i => (i, s"b${i % 8}")).toDF("sid", "bucket")
+    Bucketing.ensureBucketed(spark, base, dir, "bucket", 4, sourceStamp = "s0")
+    Bucketing.appendBucketed(spark, rows(40, 60, "b1"), dir, "bucket", 4, "s1")
+    Bucketing.compactBucketed(spark, dir, "bucket", 4)
+    val baseline = fileMeta
+    assert(baseline.size <= 4)
 
-      // skewed ingest: two appends whose rows ALL share one bucket value —
-      // one physical bucket accumulates 3 files while the others stay at 1.
-      // TOTAL file count stays <= baseline + 2; with 4 physical buckets
-      // occupied that can sit at/below nBuckets + 2 — the shape the old
-      // TOTAL-count skip (<= nBuckets) could defer indefinitely (ADVICE r18)
-      Bucketing.appendBucketed(spark, rows(100, 120, "b3"), table, dir, "bucket", 4, "s2")
-      Bucketing.appendBucketed(spark, rows(120, 140, "b3"), table, dir, "bucket", 4, "s3")
-      val grown = fileMeta
-      val hotFiles = grown.keySet -- baseline.keySet
-      assert(hotFiles.size === 2, s"each single-value append must land exactly one file: $hotFiles")
-      val hotBucket = hotFiles.map(bucketIdOf)
-      assert(hotBucket.size === 1, s"single-value appends must share one physical bucket: $hotFiles")
-      val expected = rowSet(base) ++ rowSet(rows(40, 60, "b1")) ++
-        rowSet(rows(100, 140, "b3"))
-      assert(rowSet(spark.table(table)) === expected)
+    // skewed ingest: two appends whose rows ALL share one bucket value —
+    // one physical bucket accumulates 3 files while the others stay at 1.
+    // TOTAL file count stays <= baseline + 2; with 4 physical buckets
+    // occupied that can sit at/below nBuckets + 2 — the shape the old
+    // TOTAL-count skip (<= nBuckets) could defer indefinitely (ADVICE r18)
+    Bucketing.appendBucketed(spark, rows(100, 120, "b3"), dir, "bucket", 4, "s2")
+    Bucketing.appendBucketed(spark, rows(120, 140, "b3"), dir, "bucket", 4, "s3")
+    val grown = fileMeta
+    val hotFiles = grown.keySet -- baseline.keySet
+    assert(hotFiles.size === 2, s"each single-value append must land exactly one file: $hotFiles")
+    val hotBucket = hotFiles.map(bucketIdOf)
+    assert(hotBucket.size === 1, s"single-value appends must share one physical bucket: $hotFiles")
+    val expected = rowSet(base) ++ rowSet(rows(40, 60, "b1")) ++
+      rowSet(rows(100, 140, "b3"))
+    assert(rowSet(Bucketing.read(spark, dir)) === expected)
 
-      val compacted = Bucketing.compactBucketed(spark, table, dir, "bucket", 4)
-      val after = fileMeta
-      // the hot bucket folded back to one file...
-      assert(after.keys.count(n => hotBucket.contains(bucketIdOf(n))) === 1,
-        s"fragmented bucket not folded: ${after.keys.toSeq.sorted}")
-      // ...and every file NOT in the hot bucket is the same file — same
-      // name, same mtime: not read, not rewritten, not moved (the
-      // O(fragmented buckets) contract, VERDICT r18 #2)
-      val untouchedBefore = grown.filter { case (n, _) => !hotBucket.contains(bucketIdOf(n)) }
-      val untouchedAfter = after.filter { case (n, _) => !hotBucket.contains(bucketIdOf(n)) }
-      assert(untouchedAfter === untouchedBefore,
-        "partial compaction touched files outside the fragmented bucket")
-      // logical state is invisible to readers and fences, as for full compact
-      assert(rowSet(compacted) === expected, "partial compaction changed the answer")
-      assert(Bucketing.readStamp(dir) === Some("s3"), "partial compaction must preserve the stamp")
-      val replay = Bucketing.appendBucketedExactlyOnce(
-        spark, boom, boom, boom, table, dir, "bucket", 4, "s2", "s3")
-      assert(rowSet(replay) === expected)
-      // per-bucket no-op: everything at <=1 file now — second call moves nothing
-      Bucketing.compactBucketed(spark, table, dir, "bucket", 4)
-      assert(fileMeta === after, "no-op compact must not rewrite files")
+    val compacted = Bucketing.compactBucketed(spark, dir, "bucket", 4)
+    val after = fileMeta
+    // the hot bucket folded back to one file...
+    assert(after.keys.count(n => hotBucket.contains(bucketIdOf(n))) === 1,
+      s"fragmented bucket not folded: ${after.keys.toSeq.sorted}")
+    // ...and every file NOT in the hot bucket is the same file — same
+    // name, same mtime: not read, not rewritten, not moved (the
+    // O(fragmented buckets) contract, VERDICT r18 #2)
+    val untouchedBefore = grown.filter { case (n, _) => !hotBucket.contains(bucketIdOf(n)) }
+    val untouchedAfter = after.filter { case (n, _) => !hotBucket.contains(bucketIdOf(n)) }
+    assert(untouchedAfter === untouchedBefore,
+      "partial compaction touched files outside the fragmented bucket")
+    // logical state is invisible to readers and fences, as for full compact
+    assert(rowSet(compacted) === expected, "partial compaction changed the answer")
+    assert(Bucketing.readStamp(dir) === Some("s3"), "partial compaction must preserve the stamp")
+    val replay = Bucketing.appendBucketedExactlyOnce(
+      spark, boom, boom, boom, dir, "bucket", 4, "s2", "s3")
+    assert(rowSet(replay) === expected)
+    // per-bucket no-op: everything at <=1 file now — second call moves nothing
+    Bucketing.compactBucketed(spark, dir, "bucket", 4)
+    assert(fileMeta === after, "no-op compact must not rewrite files")
 
-      // orphan staging cleanup runs BEFORE the no-op early return
-      // (code-review r19): a mid-swap crash leaves a staged copy next to a
-      // table that the subsequent rebuild makes fully compact — every
-      // later compact call no-ops, so a cleanup placed after the no-op
-      // check would never run and the orphan would sit on storage forever
-      val orphan = new java.io.File(dir + "__compacting")
-      assert(orphan.mkdirs())
-      java.nio.file.Files.write(
-        new java.io.File(orphan, "part-00000-orphan_00000.c000.snappy.parquet").toPath,
-        "junk".getBytes("UTF-8"))
-      Bucketing.compactBucketed(spark, table, dir, "bucket", 4) // no-op: all <=1 file
-      assert(!orphan.exists(), "no-op compact must still clean a prior crash's staging dir")
-      assert(fileMeta === after, "orphan cleanup must not touch the table itself")
+    // orphan staging cleanup runs BEFORE the no-op early return
+    // (code-review r19): a mid-swap crash leaves a staged copy next to a
+    // table that the subsequent rebuild makes fully compact — every
+    // later compact call no-ops, so a cleanup placed after the no-op
+    // check would never run and the orphan would sit on storage forever
+    val orphan = new java.io.File(dir + "__compacting")
+    assert(orphan.mkdirs())
+    java.nio.file.Files.write(
+      new java.io.File(orphan, "part-00000-orphan_00000.c000.snappy.parquet").toPath,
+      "junk".getBytes("UTF-8"))
+    Bucketing.compactBucketed(spark, dir, "bucket", 4) // no-op: all <=1 file
+    assert(!orphan.exists(), "no-op compact must still clean a prior crash's staging dir")
+    assert(fileMeta === after, "orphan cleanup must not touch the table itself")
 
-      // marker sidecar discipline (code-review r19 / the ChecksumException
-      // mid-port): maintenance writes the marker through the RAW fs — a
-      // checksummed write would plant a .crc sidecar that goes stale the
-      // moment an external writer (or the delete-first fence itself)
-      // replaces the marker, turning legitimate spec drift into corruption
-      assert(!new java.io.File(dir, "._GRAFT_BUCKETED_DDL.crc").exists(),
-        "the build marker must never carry a checksum sidecar")
+    // marker sidecar discipline (code-review r19 / the ChecksumException
+    // mid-port): maintenance writes the marker through the RAW fs — a
+    // checksummed write would plant a .crc sidecar that goes stale the
+    // moment an external writer (or the delete-first fence itself)
+    // replaces the marker, turning legitimate spec drift into corruption
+    assert(!new java.io.File(dir, "._GRAFT_BUCKETED_DDL.crc").exists(),
+      "the build marker must never carry a checksum sidecar")
 
-      // the deferral shape itself (ADVICE r18): a table whose TOTAL file
-      // count sits at nBuckets while ONE bucket holds all the fragments —
-      // the old total-count skip (<= nBuckets) never compacted this; the
-      // per-bucket decision must
-      val dir2 = tmpDir("graft_compact_skew").toString
-      val table2 = "graft_compact_skew_spec"
-      try {
-        Bucketing.ensureBucketed(spark, rows(0, 10, "x"), table2, dir2, "bucket", 4, "k0")
-        Bucketing.appendBucketed(spark, rows(10, 20, "x"), table2, dir2, "bucket", 4, "k1")
-        Bucketing.appendBucketed(spark, rows(20, 30, "x"), table2, dir2, "bucket", 4, "k2")
-        Bucketing.appendBucketed(spark, rows(30, 40, "x"), table2, dir2, "bucket", 4, "k3")
-        def files2 = Option(new java.io.File(dir2).listFiles()).getOrElse(Array.empty).toSeq
-          .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        assert(files2.length === 4, "fixture: one bucket must hold exactly nBuckets files")
-        val c2 = Bucketing.compactBucketed(spark, table2, dir2, "bucket", 4)
-        assert(files2.length === 1,
-          s"skewed single-bucket fragmentation deferred: ${files2.map(_.getName)}")
-        assert(rowSet(c2) === rowSet(rows(0, 40, "x")))
-        assert(Bucketing.readStamp(dir2) === Some("k3"))
-      } finally spark.sql(s"DROP TABLE IF EXISTS $table2")
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+    // the deferral shape itself (ADVICE r18): a table whose TOTAL file
+    // count sits at nBuckets while ONE bucket holds all the fragments —
+    // the old total-count skip (<= nBuckets) never compacted this; the
+    // per-bucket decision must
+    val dir2 = tmpDir("graft_compact_skew").toString
+    Bucketing.ensureBucketed(spark, rows(0, 10, "x"), dir2, "bucket", 4, "k0")
+    Bucketing.appendBucketed(spark, rows(10, 20, "x"), dir2, "bucket", 4, "k1")
+    Bucketing.appendBucketed(spark, rows(20, 30, "x"), dir2, "bucket", 4, "k2")
+    Bucketing.appendBucketed(spark, rows(30, 40, "x"), dir2, "bucket", 4, "k3")
+    def files2 = Option(new java.io.File(dir2).listFiles()).getOrElse(Array.empty).toSeq
+      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    assert(files2.length === 4, "fixture: one bucket must hold exactly nBuckets files")
+    val c2 = Bucketing.compactBucketed(spark, dir2, "bucket", 4)
+    assert(files2.length === 1,
+      s"skewed single-bucket fragmentation deferred: ${files2.map(_.getName)}")
+    assert(rowSet(c2) === rowSet(rows(0, 40, "x")))
+    assert(Bucketing.readStamp(dir2) === Some("k3"))
   }
 
   test("bucketed maintenance chain runs on an explicit URI scheme: ensure -> exactly-once append -> compact -> re-register all through file:/ paths") {
@@ -908,49 +851,43 @@ class ScaleMechanicsSpec extends SparkSpec {
     // claim is an EXPLICIT file:/ URI (bare local paths exercise the same
     // code only via the default-scheme fallback). Every maintenance step
     // must compose on the scheme'd string — path arithmetic (staging
-    // suffix), marker IO, catalog location matching (scheme-qualified on
-    // both sides), stampDir, and the fences.
+    // suffix), marker IO, the directory read, stampDir, and the fences.
     import graft.connectors.Bucketing
     val local = tmpDir("graft_scheme").toString
     val dir = "file:" + local // explicit scheme, same files underneath
-    val table = "graft_scheme_spec"
     def rows(lo: Long, hi: Long) = (lo until hi).map(i => (i, s"b${i % 8}")).toDF("sid", "bucket")
     def rowSet(df: org.apache.spark.sql.DataFrame) = df.as[(Long, String)].collect().toSet
     def localFiles: Int =
       Option(new java.io.File(local).listFiles()).getOrElse(Array.empty).count(f =>
         f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
     def boom = sys.error("this frame must not evaluate"): org.apache.spark.sql.DataFrame
-    try {
-      Bucketing.ensureBucketed(spark, rows(0, 40), table, dir, "bucket", 4, sourceStamp = "pre")
-      assert(Bucketing.readStamp(dir) === Some("pre"), "marker IO must resolve the scheme")
-      val r1 = Bucketing.appendBucketedExactlyOnce(
-        spark, rows(40, 60), boom, boom, table, dir, "bucket", 4, "pre", "post")
-      assert(rowSet(r1) === rowSet(rows(0, 60)))
-      assert(Bucketing.readStamp(dir) === Some("post"))
-      // replay skips with zero data motion, same as on bare paths
-      val r2 = Bucketing.appendBucketedExactlyOnce(
-        spark, boom, boom, boom, table, dir, "bucket", 4, "pre", "post")
-      assert(rowSet(r2) === rowSet(rows(0, 60)))
-      // compaction stages at <scheme'd path>__compacting and swaps back
-      val before = localFiles
-      assert(before > 4, s"fixture did not fragment: $before files")
-      val compacted = Bucketing.compactBucketed(spark, table, dir, "bucket", 4)
-      assert(localFiles <= 4, "compact through the scheme'd path must fold the files")
-      assert(rowSet(compacted) === rowSet(rows(0, 60)))
-      assert(Bucketing.readStamp(dir) === Some("post"), "compact must preserve the stamp")
-      // fresh-session re-register: the catalog's qualified location must
-      // match the scheme'd request (and the bare-path form of the SAME
-      // directory must too — qualification, not string equality)
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      val reReg = Bucketing.ensureBucketed(spark, boom, table, dir, "bucket", 4, sourceStamp = "post")
-      assert(rowSet(reReg) === rowSet(rows(0, 60)))
-      val viaBare = Bucketing.ensureBucketed(spark, boom, table, local, "bucket", 4, sourceStamp = "post")
-      assert(rowSet(viaBare) === rowSet(rows(0, 60)),
-        "bare path and scheme'd URI of one directory must qualify to the same table")
-      // stampDir digests are scheme-independent (relative manifest)
-      assert(Bucketing.stampDir(dir) === Bucketing.stampDir(local),
-        "stampDir must digest identical content identically across path forms")
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+    Bucketing.ensureBucketed(spark, rows(0, 40), dir, "bucket", 4, sourceStamp = "pre")
+    assert(Bucketing.readStamp(dir) === Some("pre"), "marker IO must resolve the scheme")
+    val r1 = Bucketing.appendBucketedExactlyOnce(
+      spark, rows(40, 60), boom, boom, dir, "bucket", 4, "pre", "post")
+    assert(rowSet(r1) === rowSet(rows(0, 60)))
+    assert(Bucketing.readStamp(dir) === Some("post"))
+    // replay skips with zero data motion, same as on bare paths
+    val r2 = Bucketing.appendBucketedExactlyOnce(
+      spark, boom, boom, boom, dir, "bucket", 4, "pre", "post")
+    assert(rowSet(r2) === rowSet(rows(0, 60)))
+    // compaction stages at <scheme'd path>__compacting and swaps back
+    val before = localFiles
+    assert(before > 4, s"fixture did not fragment: $before files")
+    val compacted = Bucketing.compactBucketed(spark, dir, "bucket", 4)
+    assert(localFiles <= 4, "compact through the scheme'd path must fold the files")
+    assert(rowSet(compacted) === rowSet(rows(0, 60)))
+    assert(Bucketing.readStamp(dir) === Some("post"), "compact must preserve the stamp")
+    // re-read by stamp through the scheme'd request, and through the
+    // bare-path form of the SAME directory — one marker, one layout
+    val reReg = Bucketing.ensureBucketed(spark, boom, dir, "bucket", 4, sourceStamp = "post")
+    assert(rowSet(reReg) === rowSet(rows(0, 60)))
+    val viaBare = Bucketing.ensureBucketed(spark, boom, local, "bucket", 4, sourceStamp = "post")
+    assert(rowSet(viaBare) === rowSet(rows(0, 60)),
+      "bare path and scheme'd URI of one directory must read the same index")
+    // stampDir digests are scheme-independent (relative manifest)
+    assert(Bucketing.stampDir(dir) === Bucketing.stampDir(local),
+      "stampDir must digest identical content identically across path forms")
   }
 
   test("checkpoint blocks release: Dataset.unpersist no-ops on localCheckpoint frames; loops go through Checkpoints.release and strand nothing") {
@@ -1018,42 +955,39 @@ class ScaleMechanicsSpec extends SparkSpec {
     val dirs = Seq(
       tmpDir("graft_stripe_a").toString,
       tmpDir("graft_stripe_b").toString)
-    val tables = Seq("graft_stripe_spec_a", "graft_stripe_spec_b")
     val boomMsg = "this frame must not evaluate"
     def boom = sys.error(boomMsg): org.apache.spark.sql.DataFrame
-    try {
-      tables.zip(dirs).foreach { case (t, d) =>
-        Bucketing.ensureBucketed(spark, slice(0, 40), t, d, "bucket", 4, sourceStamp = "e0")
-      }
-      val start = new java.util.concurrent.CountDownLatch(1)
-      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val threads = tables.zip(dirs).zipWithIndex.map { case ((t, d), fam) =>
-        new Thread(() => {
-          try {
-            start.await()
-            (1 to epochs).foreach { e =>
-              Bucketing.appendBucketedExactlyOnce(
-                spark, slice(1000L * fam + 100L * e, 10), boom, boom,
-                t, d, "bucket", 4, s"e${e - 1}", s"e$e")
-            }
-          } catch { case th: Throwable => failures.add(th) }
-        })
-      }
-      threads.foreach(_.start()); start.countDown(); threads.foreach(_.join(120000))
-      assert(failures.isEmpty, s"interleaved appends failed: ${failures.peek()}")
-      tables.zip(dirs).zipWithIndex.foreach { case ((t, d), fam) =>
-        assert(Bucketing.readStamp(d) === Some(s"e$epochs"), s"family $fam fence drifted")
-        val got = spark.table(t).as[(Long, String)].collect().toSet
-        val want = ((0L until 40L) ++
-          (1 to epochs).flatMap(e => 1000L * fam + 100L * e until 1000L * fam + 100L * e + 10))
-          .map(i => (i, s"b${i % 4}")).toSet
-        assert(got === want, s"family $fam rows drifted under interleaving")
-        // replayed epoch on the settled table still skips (fence intact)
-        val replay = Bucketing.appendBucketedExactlyOnce(
-          spark, boom, boom, boom, t, d, "bucket", 4, s"e${epochs - 1}", s"e$epochs")
-        assert(replay.count() === want.size.toLong)
-      }
-    } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    dirs.foreach { d =>
+      Bucketing.ensureBucketed(spark, slice(0, 40), d, "bucket", 4, sourceStamp = "e0")
+    }
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = dirs.zipWithIndex.map { case (d, fam) =>
+      new Thread(() => {
+        try {
+          start.await()
+          (1 to epochs).foreach { e =>
+            Bucketing.appendBucketedExactlyOnce(
+              spark, slice(1000L * fam + 100L * e, 10), boom, boom,
+              d, "bucket", 4, s"e${e - 1}", s"e$e")
+          }
+        } catch { case th: Throwable => failures.add(th) }
+      })
+    }
+    threads.foreach(_.start()); start.countDown(); threads.foreach(_.join(120000))
+    assert(failures.isEmpty, s"interleaved appends failed: ${failures.peek()}")
+    dirs.zipWithIndex.foreach { case (d, fam) =>
+      assert(Bucketing.readStamp(d) === Some(s"e$epochs"), s"family $fam fence drifted")
+      val got = Bucketing.read(spark, d).as[(Long, String)].collect().toSet
+      val want = ((0L until 40L) ++
+        (1 to epochs).flatMap(e => 1000L * fam + 100L * e until 1000L * fam + 100L * e + 10))
+        .map(i => (i, s"b${i % 4}")).toSet
+      assert(got === want, s"family $fam rows drifted under interleaving")
+      // replayed epoch on the settled table still skips (fence intact)
+      val replay = Bucketing.appendBucketedExactlyOnce(
+        spark, boom, boom, boom, d, "bucket", 4, s"e${epochs - 1}", s"e$epochs")
+      assert(replay.count() === want.size.toLong)
+    }
   }
 
   test("cachedStamp: walk-free per-batch stamps — one stampDir walk per source per JVM; invalidateStamp re-walks; value identical to the exact walk (VERDICT r19 #1)") {

@@ -155,10 +155,9 @@ class SnapshotOpsSpec extends SparkSpec {
     val inline = SnapshotOps.incrementalNearDup(corpus, delta, "doc_id", "text")
       .as[(Long, String)].collect().toMap
     val dir = tmpDir("graft_neardup_idx_spec").toString
-    val table = "graft_neardup_idx_spec"
     val idx = Bucketing.ensureBucketed(
       spark, SnapshotOps.nearDupBandIndex(corpus, "doc_id", "text"),
-      table, dir, "bucket", 8, sourceStamp = "specA")
+      dir, "bucket", 8, sourceStamp = "specA")
     // the index changes the read path, never the answer — pruned and unpruned
     assert(SnapshotOps.incrementalNearDupIndexed(idx, corpus, delta, "doc_id", "text")
       .as[(Long, String)].collect().toMap === inline)
@@ -190,20 +189,19 @@ class SnapshotOpsSpec extends SparkSpec {
     // append ≡ rebuild: ingest the gated batch's bands, compare to a
     // from-scratch index over corpus ∪ delta (bands are a pure function of
     // each doc's own text, so the union IS the rebuild)
-    Bucketing.appendBucketed(
+    val appended = Bucketing.appendBucketed(
       spark, SnapshotOps.nearDupBandIndex(delta, "doc_id", "text"),
-      table, dir, "bucket", 8, newSourceStamp = "specB")
-    val appended = spark.table(table)
+      dir, "bucket", 8, newSourceStamp = "specB")
       .as[(Long, Int, String)].collect().toSet
     val rebuilt = SnapshotOps.nearDupBandIndex(
       corpus.unionByName(delta), "doc_id", "text")
       .as[(Long, Int, String)].collect().toSet
     assert(appended === rebuilt, "appended index drifted from a full rebuild")
-    // the post-append stamp re-REGISTERS (by-name df must never evaluate);
+    // the post-append stamp reads back (by-name df must never evaluate);
     // any other stamp would rebuild
     val reRead = Bucketing.ensureBucketed(
-      spark, sys.error("appended stamp must re-register, not rebuild"): org.apache.spark.sql.DataFrame,
-      table, dir, "bucket", 8, sourceStamp = "specB")
+      spark, sys.error("appended stamp must read back, not rebuild"): org.apache.spark.sql.DataFrame,
+      dir, "bucket", 8, sourceStamp = "specB")
     assert(reRead.count() === appended.size.toLong)
     // banding-parameter drift fails LOUDLY: an index built at (k=16,rows=2)
     // probed at rows=4 would otherwise produce zero collisions and verdict
@@ -219,7 +217,6 @@ class SnapshotOpsSpec extends SparkSpec {
       emptyIdx, corpus.filter(lit(false)), delta, "doc_id", "text")
       .as[(Long, String)].collect()
     assert(firstBatch.nonEmpty && firstBatch.forall(_._2 != "dup_corpus"))
-    spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("incrementalNearDupIndexed: stamp-validated parameters skip the scan; drift and coverage holes fail loudly") {
@@ -234,10 +231,9 @@ class SnapshotOpsSpec extends SparkSpec {
     val inline = SnapshotOps.incrementalNearDup(corpus, delta, "doc_id", "text")
       .as[(Long, String)].collect().toMap
     val dir = tmpDir("graft_neardup_stamp_spec").toString
-    val table = "graft_neardup_stamp_spec"
     val idx = Bucketing.ensureBucketed(
       spark, SnapshotOps.nearDupBandIndex(corpus, "doc_id", "text"),
-      table, dir, "bucket", 8,
+      dir, "bucket", 8,
       sourceStamp = s"${SnapshotOps.bandStamp(3, 16, 2)}|specA")
     val stamp = Bucketing.readStamp(dir)
     assert(stamp.exists(_.contains(SnapshotOps.bandStamp(3, 16, 2))), s"stamp: $stamp")
@@ -265,33 +261,5 @@ class SnapshotOpsSpec extends SparkSpec {
     assert(SnapshotOps.incrementalNearDupIndexed(
       idx, corpus, delta, "doc_id", "text", indexStamp = stamp, checkCoverage = true)
       .as[(Long, String)].collect().toMap === inline)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-  }
-
-  test("appendBucketed: a catalog name registered for a DIFFERENT path/spec refuses the append loudly") {
-    import graft.connectors.Bucketing
-    val rows = (0L until 20L).map(i => (i, s"t$i")).toDF("sid", "bucket")
-    val dirA = tmpDir("graft_append_guard_a").toString
-    val dirB = tmpDir("graft_append_guard_b").toString
-    val table = "graft_append_guard_spec"
-    Bucketing.ensureBucketed(spark, rows, table, dirA, "bucket", 4, sourceStamp = "a")
-    // simulate the drift: the same NAME re-registered for another location
-    // (a second pipeline in this JVM reusing the table name)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    Bucketing.ensureBucketed(spark, rows, table, dirB, "bucket", 4, sourceStamp = "b")
-    // appending "at dirA" now targets a catalog entry that points at dirB:
-    // without the catalog check the delta would land in dirB while dirA's
-    // marker got rewritten (ADVICE r17) — must refuse instead
-    val err = intercept[IllegalArgumentException] {
-      Bucketing.appendBucketed(spark, rows, table, dirA, "bucket", 4, newSourceStamp = "a2")
-    }
-    assert(err.getMessage.contains("DIFFERENT location or bucket spec"), err.getMessage)
-    // dirA's marker survives the refused append (nothing was deleted)
-    assert(Bucketing.readStamp(dirA) === Some("a"))
-    // and the append against the CURRENT registration still works
-    Bucketing.appendBucketed(spark, rows, table, dirB, "bucket", 4, newSourceStamp = "b2")
-    assert(spark.table(table).count() === 40L)
-    assert(Bucketing.readStamp(dirB) === Some("b2"))
-    spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 }

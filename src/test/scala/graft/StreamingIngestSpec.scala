@@ -361,7 +361,6 @@ class StreamingIngestSpec extends SparkSpec {
     val base = tmpDir("ingest_idx_stream").toString
     val dir = s"$base/bands"
     val ckpt = s"$base/ckpt"
-    val table = "graft_stream_idx_spec"
     def bands(df: org.apache.spark.sql.DataFrame) =
       SnapshotOps.nearDupBandIndex(df, "doc_id", "text")
     def boom = sys.error("fence must not evaluate this frame"): org.apache.spark.sql.DataFrame
@@ -372,12 +371,12 @@ class StreamingIngestSpec extends SparkSpec {
     // bootstrap: the empty pre-state of epoch 0, stamped as epoch -1
     Bucketing.ensureBucketed(
       spark, bands(Seq.empty[(Long, String)].toDF("doc_id", "text")),
-      table, dir, "bucket", 4, sourceStamp = "epoch=-1")
+      dir, "bucket", 4, sourceStamp = "epoch=-1")
     def appendEpoch(df: org.apache.spark.sql.DataFrame, id: Long): Unit = {
       val accepted = df.filter(length(df("text")) >= 20)
       Bucketing.appendBucketedExactlyOnce(
         spark, bands(accepted), boom, boom,
-        table, dir, "bucket", 4, s"epoch=${id - 1}", s"epoch=$id")
+        dir, "bucket", 4, s"epoch=${id - 1}", s"epoch=$id")
       (): Unit
     }
     val mem = MemoryStream[(Long, String)]
@@ -385,53 +384,51 @@ class StreamingIngestSpec extends SparkSpec {
       .option("checkpointLocation", ckpt)
       .foreachBatch(appendEpoch _)
       .start()
-    def indexSet = spark.table(table)
+    def indexSet = Bucketing.read(spark, dir)
       .as[(Long, Int, String)].collect().toSet
     def expect(docs: Seq[(Long, String)]) =
       bands(acceptedOf(docs).toDF("doc_id", "text")).as[(Long, Int, String)].collect().toSet
+    val q1 = start()
     try {
-      val q1 = start()
-      try {
-        mem.addData(batchA: _*); q1.processAllAvailable()
-        assert(indexSet === expect(batchA), "epoch-0 append drifted from the accepted rows")
-        assert(!indexSet.exists(_._1 == 2L), "a rejected doc's bands reached the index")
-        mem.addData(batchB: _*); q1.processAllAvailable()
-        assert(indexSet === expect(batchA ++ batchB))
-      } finally q1.stop() // KILL; batch C arrives while the query is down
-      // maintenance window: compact the appends-grown index while the query
-      // is down — physical-only, so the epoch fence must not see it (stamp
-      // byte-identical) and the resumed stream must keep appending as if
-      // nothing happened
-      val filesBefore = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-        .count(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      // the maintenance window must actually run: ≤ nBuckets files would hit
-      // compactBucketed's no-op skip and the asserts below would pass over
-      // an untouched table (code-review r18)
-      assert(filesBefore > 4, s"fixture left only $filesBefore files — compaction would no-op")
-      Bucketing.compactBucketed(spark, table, dir, "bucket", 4)
-      val filesAfter = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-        .count(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      assert(filesAfter <= math.min(filesBefore, 4),
-        s"mid-stream compact: $filesBefore -> $filesAfter files")
-      assert(Bucketing.readStamp(dir) === Some("epoch=1"),
-        "compaction must preserve the epoch fence stamp")
-      assert(indexSet === expect(batchA ++ batchB), "compaction changed the indexed rows")
-      mem.addData(batchC: _*)
-      val q2 = start()
-      try {
-        q2.processAllAvailable()
-        assert(indexSet === expect(batchA ++ batchB ++ batchC),
-          "resume on the same checkpoint must append exactly the missed batch")
-      } finally q2.stop()
-      // the at-least-once boundary: the engine re-runs the last foreachBatch
-      // when killed between the append and the batch commit — the postStamp
-      // fence must skip with zero data motion (all frames by-name boom)
-      val lastEpoch = Bucketing.readStamp(dir).get.stripPrefix("epoch=").toLong
-      Bucketing.appendBucketedExactlyOnce(
-        spark, boom, boom, boom,
-        table, dir, "bucket", 4, s"epoch=${lastEpoch - 1}", s"epoch=$lastEpoch")
-      assert(indexSet === expect(batchA ++ batchB ++ batchC), "replayed epoch moved data")
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+      mem.addData(batchA: _*); q1.processAllAvailable()
+      assert(indexSet === expect(batchA), "epoch-0 append drifted from the accepted rows")
+      assert(!indexSet.exists(_._1 == 2L), "a rejected doc's bands reached the index")
+      mem.addData(batchB: _*); q1.processAllAvailable()
+      assert(indexSet === expect(batchA ++ batchB))
+    } finally q1.stop() // KILL; batch C arrives while the query is down
+    // maintenance window: compact the appends-grown index while the query
+    // is down — physical-only, so the epoch fence must not see it (stamp
+    // byte-identical) and the resumed stream must keep appending as if
+    // nothing happened
+    val filesBefore = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .count(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    // the maintenance window must actually run: ≤ nBuckets files would hit
+    // compactBucketed's no-op skip and the asserts below would pass over
+    // an untouched table (code-review r18)
+    assert(filesBefore > 4, s"fixture left only $filesBefore files — compaction would no-op")
+    Bucketing.compactBucketed(spark, dir, "bucket", 4)
+    val filesAfter = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .count(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    assert(filesAfter <= math.min(filesBefore, 4),
+      s"mid-stream compact: $filesBefore -> $filesAfter files")
+    assert(Bucketing.readStamp(dir) === Some("epoch=1"),
+      "compaction must preserve the epoch fence stamp")
+    assert(indexSet === expect(batchA ++ batchB), "compaction changed the indexed rows")
+    mem.addData(batchC: _*)
+    val q2 = start()
+    try {
+      q2.processAllAvailable()
+      assert(indexSet === expect(batchA ++ batchB ++ batchC),
+        "resume on the same checkpoint must append exactly the missed batch")
+    } finally q2.stop()
+    // the at-least-once boundary: the engine re-runs the last foreachBatch
+    // when killed between the append and the batch commit — the postStamp
+    // fence must skip with zero data motion (all frames by-name boom)
+    val lastEpoch = Bucketing.readStamp(dir).get.stripPrefix("epoch=").toLong
+    Bucketing.appendBucketedExactlyOnce(
+      spark, boom, boom, boom,
+      dir, "bucket", 4, s"epoch=${lastEpoch - 1}", s"epoch=$lastEpoch")
+    assert(indexSet === expect(batchA ++ batchB ++ batchC), "replayed epoch moved data")
   }
 
   test("multi-writer index: two concurrent ingest streams append ONE index exactly-once — replays fenced, fold absorbs the committed prefix, serve = exact union (VERDICT r19 #6)") {
@@ -448,7 +445,6 @@ class StreamingIngestSpec extends SparkSpec {
     import graft.data.SnapshotOps
     val root = tmpDir("mw_index").toString
     val idx = s"$root/idx"
-    val table = "graft_mw_index_spec"
     def bands(df: org.apache.spark.sql.DataFrame) =
       SnapshotOps.nearDupBandIndex(df, "doc_id", "text")
     def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, String)] =
@@ -464,77 +460,75 @@ class StreamingIngestSpec extends SparkSpec {
         .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
           MultiWriterIndex.appendDelta(bands(df), idx, writer, id))
         .start()
-    def served = rowsOf(MultiWriterIndex.read(spark, idx, table, "bucket", 4))
+    def served = rowsOf(MultiWriterIndex.read(spark, idx, "bucket", 4))
+    // pre-flight edges: a fold before any commit is an explicit nothing
+    // (the unconditional-cadence first tick), and a writerId that would
+    // corrupt the fold-stamp grammar is refused upfront
+    assert(MultiWriterIndex.fold(spark, idx, "bucket", 4).isEmpty)
+    intercept[IllegalArgumentException](MultiWriterIndex.appendDelta(
+      bands(Seq((1L, en)).toDF("doc_id", "text")), idx, "w=bad,id", 0L))
+    val qA = start(memA, "wa", s"$root/ckptA")
+    val qB = start(memB, "wb", s"$root/ckptB")
     try {
-      // pre-flight edges: a fold before any commit is an explicit nothing
-      // (the unconditional-cadence first tick), and a writerId that would
-      // corrupt the fold-stamp grammar is refused upfront
-      assert(MultiWriterIndex.fold(spark, idx, table, "bucket", 4).isEmpty)
-      intercept[IllegalArgumentException](MultiWriterIndex.appendDelta(
-        bands(Seq((1L, en)).toDF("doc_id", "text")), idx, "w=bad,id", 0L))
-      val qA = start(memA, "wa", s"$root/ckptA")
-      val qB = start(memB, "wb", s"$root/ckptB")
-      try {
-        // interleaved epochs from two LIVE queries against one index
-        memA.addData((0 until 3).map(docA(0, _)): _*)
-        memB.addData((0 until 2).map(docB(0, _)): _*)
-        qA.processAllAvailable(); qB.processAllAvailable()
-        memB.addData((0 until 2).map(docB(1, _)): _*)
-        memA.addData((0 until 3).map(docA(1, _)): _*)
-        qB.processAllAvailable(); qA.processAllAvailable()
-        val all1 = ((0 until 3).map(docA(0, _)) ++ (0 until 3).map(docA(1, _)) ++
-          (0 until 2).map(docB(0, _)) ++ (0 until 2).map(docB(1, _)))
-        val want1 = rowsOf(bands(all1.toDF("doc_id", "text")))
-        assert(served === want1, "pre-fold log view lost or duplicated a delta")
-        // REPLAYED epoch (the at-least-once window): the manifest fence
-        // skips — even a different frame for the same (writer, epoch)
-        // moves nothing
-        MultiWriterIndex.appendDelta(
-          bands(Seq((9999L, s"$en poison replay row")).toDF("doc_id", "text")), idx, "wa", 0L)
-        assert(served === want1, "replayed writer epoch moved data")
-        // FOLD while both queries are live: absorbs exactly the committed
-        // prefix, fence records the per-writer high-water vector
-        val folded = MultiWriterIndex.fold(spark, idx, table, "bucket", 4)
-        assert(rowsOf(folded) === want1, "fold lost or duplicated rows")
-        assert(Bucketing.readStamp(s"$idx/base")
-          .flatMap(MultiWriterIndex.parseFoldStamp) === Some((Map("wa" -> 1L, "wb" -> 1L), "")))
-        assert(served === want1, "post-fold serve drifted (base ∪ empty tail)")
-        // duplicate fold is a marker-read no-op
-        assert(rowsOf(MultiWriterIndex.fold(spark, idx, table, "bucket", 4)) === want1)
-        // more deltas AFTER the fold: served from the tail until re-folded
-        memA.addData((0 until 2).map(docA(2, _)): _*)
-        qA.processAllAvailable()
-        val all2 = all1 ++ (0 until 2).map(docA(2, _))
-        val want2 = rowsOf(bands(all2.toDF("doc_id", "text")))
-        assert(served === want2, "post-fold tail lost or duplicated the new delta")
-        // replay of an ALREADY-FOLDED epoch still skips (manifests retained)
-        MultiWriterIndex.appendDelta(
-          bands(Seq((9998L, s"$en second poison")).toDF("doc_id", "text")), idx, "wb", 1L)
-        assert(served === want2, "replay of a folded epoch moved data")
-        // re-fold absorbs only the unfolded slice; serve unchanged
-        assert(rowsOf(MultiWriterIndex.fold(spark, idx, table, "bucket", 4)) === want2)
-        assert(Bucketing.readStamp(s"$idx/base")
-          .flatMap(MultiWriterIndex.parseFoldStamp) === Some((Map("wa" -> 2L, "wb" -> 1L), "")))
-        assert(served === want2)
-        // fold cadence keeps the base compact: two data-moving folds would
-        // otherwise leave ~2 files in every touched bucket — the in-fold
-        // compaction pass bounds it at one, with the fold fence unmoved
-        val perBucket = {
-          val re = """.*_(\d+)(?:\..*)?$""".r
-          Option(new java.io.File(s"$idx/base").listFiles()).getOrElse(Array.empty).toSeq
-            .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-            .flatMap(f => f.getName match { case re(id) => Some(id.toInt); case _ => None })
-            .groupBy(identity).view.mapValues(_.size)
-        }
-        assert(perBucket.nonEmpty && perBucket.values.max <= 1,
-          s"fold cadence left fragmented buckets: ${perBucket.toMap}")
-        // TORN fold (marker gone mid-swap): rebuild-never-trust from the log
-        assert(new java.io.File(s"$idx/base", "_GRAFT_BUCKETED_DDL").delete())
-        assert(rowsOf(MultiWriterIndex.fold(spark, idx, table, "bucket", 4)) === want2,
-          "torn-fold rebuild drifted from the committed log")
-        assert(served === want2)
-      } finally { qA.stop(); qB.stop() }
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+      // interleaved epochs from two LIVE queries against one index
+      memA.addData((0 until 3).map(docA(0, _)): _*)
+      memB.addData((0 until 2).map(docB(0, _)): _*)
+      qA.processAllAvailable(); qB.processAllAvailable()
+      memB.addData((0 until 2).map(docB(1, _)): _*)
+      memA.addData((0 until 3).map(docA(1, _)): _*)
+      qB.processAllAvailable(); qA.processAllAvailable()
+      val all1 = ((0 until 3).map(docA(0, _)) ++ (0 until 3).map(docA(1, _)) ++
+        (0 until 2).map(docB(0, _)) ++ (0 until 2).map(docB(1, _)))
+      val want1 = rowsOf(bands(all1.toDF("doc_id", "text")))
+      assert(served === want1, "pre-fold log view lost or duplicated a delta")
+      // REPLAYED epoch (the at-least-once window): the manifest fence
+      // skips — even a different frame for the same (writer, epoch)
+      // moves nothing
+      MultiWriterIndex.appendDelta(
+        bands(Seq((9999L, s"$en poison replay row")).toDF("doc_id", "text")), idx, "wa", 0L)
+      assert(served === want1, "replayed writer epoch moved data")
+      // FOLD while both queries are live: absorbs exactly the committed
+      // prefix, fence records the per-writer high-water vector
+      val folded = MultiWriterIndex.fold(spark, idx, "bucket", 4)
+      assert(rowsOf(folded) === want1, "fold lost or duplicated rows")
+      assert(Bucketing.readStamp(s"$idx/base")
+        .flatMap(MultiWriterIndex.parseFoldStamp) === Some((Map("wa" -> 1L, "wb" -> 1L), "")))
+      assert(served === want1, "post-fold serve drifted (base ∪ empty tail)")
+      // duplicate fold is a marker-read no-op
+      assert(rowsOf(MultiWriterIndex.fold(spark, idx, "bucket", 4)) === want1)
+      // more deltas AFTER the fold: served from the tail until re-folded
+      memA.addData((0 until 2).map(docA(2, _)): _*)
+      qA.processAllAvailable()
+      val all2 = all1 ++ (0 until 2).map(docA(2, _))
+      val want2 = rowsOf(bands(all2.toDF("doc_id", "text")))
+      assert(served === want2, "post-fold tail lost or duplicated the new delta")
+      // replay of an ALREADY-FOLDED epoch still skips (manifests retained)
+      MultiWriterIndex.appendDelta(
+        bands(Seq((9998L, s"$en second poison")).toDF("doc_id", "text")), idx, "wb", 1L)
+      assert(served === want2, "replay of a folded epoch moved data")
+      // re-fold absorbs only the unfolded slice; serve unchanged
+      assert(rowsOf(MultiWriterIndex.fold(spark, idx, "bucket", 4)) === want2)
+      assert(Bucketing.readStamp(s"$idx/base")
+        .flatMap(MultiWriterIndex.parseFoldStamp) === Some((Map("wa" -> 2L, "wb" -> 1L), "")))
+      assert(served === want2)
+      // fold cadence keeps the base compact: two data-moving folds would
+      // otherwise leave ~2 files in every touched bucket — the in-fold
+      // compaction pass bounds it at one, with the fold fence unmoved
+      val perBucket = {
+        val re = """.*_(\d+)(?:\..*)?$""".r
+        Option(new java.io.File(s"$idx/base").listFiles()).getOrElse(Array.empty).toSeq
+          .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+          .flatMap(f => f.getName match { case re(id) => Some(id.toInt); case _ => None })
+          .groupBy(identity).view.mapValues(_.size)
+      }
+      assert(perBucket.nonEmpty && perBucket.values.max <= 1,
+        s"fold cadence left fragmented buckets: ${perBucket.toMap}")
+      // TORN fold (marker gone mid-swap): rebuild-never-trust from the log
+      assert(new java.io.File(s"$idx/base", "_GRAFT_BUCKETED_DDL").delete())
+      assert(rowsOf(MultiWriterIndex.fold(spark, idx, "bucket", 4)) === want2,
+        "torn-fold rebuild drifted from the committed log")
+      assert(served === want2)
+    } finally { qA.stop(); qB.stop() }
   }
 
   test("multi-writer index: a tail read under another key/bucket spec than the fold's serves the log's rows") {
@@ -545,26 +539,23 @@ class StreamingIngestSpec extends SparkSpec {
     import graft.connectors.{MultiWriterIndex, TxnLogSink}
     import org.apache.spark.sql.functions.col
     val idx = tmpDir("mw_spec").toString + "/idx"
-    val table = "graft_mw_spec_mismatch"
     def rows(ks: Range) = ks.map(k => (k.toLong, s"val$k")).toDF("k", "v")
-    try {
-      MultiWriterIndex.appendDelta(rows(0 until 16), idx, "w", 0L)
-      MultiWriterIndex.fold(spark, idx, table, "k", 4).count()
-      // an unfolded tail, so reads take the pinned-base path
-      MultiWriterIndex.appendDelta(rows(16 until 20), idx, "w", 1L)
-      val logView = TxnLogSink(s"$idx/deltalog").readSlice(spark).get
-      def sorted(df: org.apache.spark.sql.DataFrame) = df.as[(Long, String)].collect().toSeq.sorted
-      assert(sorted(logView) === sorted(rows(0 until 20)))
-      for ((key, buckets) <- Seq(("k", 8), ("v", 4), ("k", 4))) {
-        val served = MultiWriterIndex.read(spark, idx, table, key, buckets)
-        assert(sorted(served) === sorted(logView), s"read under ($key, $buckets)")
-        (0 until 20).foreach { k =>
-          val probe = col(key) === (if (key == "k") k.toLong else s"val$k")
-          assert(sorted(served.filter(probe)) === Seq((k.toLong, s"val$k")),
-            s"lookup of $k under ($key, $buckets)")
-        }
+    MultiWriterIndex.appendDelta(rows(0 until 16), idx, "w", 0L)
+    MultiWriterIndex.fold(spark, idx, "k", 4).count()
+    // an unfolded tail, so reads take the pinned-base path
+    MultiWriterIndex.appendDelta(rows(16 until 20), idx, "w", 1L)
+    val logView = TxnLogSink(s"$idx/deltalog").readSlice(spark).get
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.as[(Long, String)].collect().toSeq.sorted
+    assert(sorted(logView) === sorted(rows(0 until 20)))
+    for ((key, buckets) <- Seq(("k", 8), ("v", 4), ("k", 4))) {
+      val served = MultiWriterIndex.read(spark, idx, key, buckets)
+      assert(sorted(served) === sorted(logView), s"read under ($key, $buckets)")
+      (0 until 20).foreach { k =>
+        val probe = col(key) === (if (key == "k") k.toLong else s"val$k")
+        assert(sorted(served.filter(probe)) === Seq((k.toLong, s"val$k")),
+          s"lookup of $k under ($key, $buckets)")
       }
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+    }
   }
 
   test("compaction bumps the marker generation: a bracketing marker read sees it; stamp, spec and the pinned base read still accept") {
@@ -573,42 +564,35 @@ class StreamingIngestSpec extends SparkSpec {
     // listing taken mid-swap miss the swapped-in files silently
     import graft.connectors.{Bucketing, MultiWriterIndex}
     val root = tmpDir("marker_gen").toString
-    val (dir, table) = (s"$root/plain", "graft_marker_gen_spec")
-    val (idx, mwTable) = (s"$root/idx", "graft_mw_gen_spec")
+    val (dir, idx) = (s"$root/plain", s"$root/idx")
     def rows(ks: Range) = ks.map(k => (k.toLong, s"val$k")).toDF("k", "v")
     def sorted(df: org.apache.spark.sql.DataFrame) = df.as[(Long, String)].collect().toSeq.sorted
-    try {
-      Bucketing.ensureBucketed(spark, rows(0 until 16), table, dir, "k", 4, sourceStamp = "s0")
-      Bucketing.appendBucketed(spark, rows(16 until 32), table, dir, "k", 4, "s1")
-      val before = Bucketing.readMarkerContent(dir)
-      Bucketing.compactBucketed(spark, table, dir, "k", 4)
-      val after = Bucketing.readMarkerContent(dir)
-      assert(before.isDefined && after.isDefined && after != before,
-        "a compaction must change the marker content")
-      assert(Bucketing.readStamp(dir) === Some("s1"), "compaction must preserve the stamp")
-      // the build spec still matches: re-registration must not rebuild
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      val reReg = Bucketing.ensureBucketed(spark,
-        sys.error("a compacted marker must re-register, not rebuild"): org.apache.spark.sql.DataFrame,
-        table, dir, "k", 4, sourceStamp = "s1")
-      assert(sorted(reReg) === sorted(rows(0 until 32)))
-      // the multi-writer fold compacts its base; with an unfolded tail the
-      // read must still take the pinned base listing, not the log fallback
-      MultiWriterIndex.appendDelta(rows(0 until 16), idx, "w", 0L)
-      MultiWriterIndex.fold(spark, idx, mwTable, "k", 4).count()
-      MultiWriterIndex.appendDelta(rows(16 until 32), idx, "w", 1L)
-      MultiWriterIndex.fold(spark, idx, mwTable, "k", 4).count()
-      assert(Bucketing.readMarkerContent(s"$idx/base").exists(_.linesIterator.exists(_.startsWith("gen="))),
-        "the fold's compaction did not run")
-      MultiWriterIndex.appendDelta(rows(32 until 36), idx, "w", 2L)
-      val served = MultiWriterIndex.read(spark, idx, mwTable, "k", 4)
-      assert(sorted(served) === sorted(rows(0 until 36)))
-      assert(served.inputFiles.exists(_.contains(s"$idx/base/")),
-        s"the pinned base read refused a compacted marker: ${served.inputFiles.mkString(", ")}")
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"DROP TABLE IF EXISTS $mwTable")
-    }
+    Bucketing.ensureBucketed(spark, rows(0 until 16), dir, "k", 4, sourceStamp = "s0")
+    Bucketing.appendBucketed(spark, rows(16 until 32), dir, "k", 4, "s1")
+    val before = Bucketing.readMarkerContent(dir)
+    Bucketing.compactBucketed(spark, dir, "k", 4)
+    val after = Bucketing.readMarkerContent(dir)
+    assert(before.isDefined && after.isDefined && after != before,
+      "a compaction must change the marker content")
+    assert(Bucketing.readStamp(dir) === Some("s1"), "compaction must preserve the stamp")
+    // the build spec still matches: a re-read must not rebuild
+    val reReg = Bucketing.ensureBucketed(spark,
+      sys.error("a compacted marker must read back, not rebuild"): org.apache.spark.sql.DataFrame,
+      dir, "k", 4, sourceStamp = "s1")
+    assert(sorted(reReg) === sorted(rows(0 until 32)))
+    // the multi-writer fold compacts its base; with an unfolded tail the
+    // read must still take the pinned base listing, not the log fallback
+    MultiWriterIndex.appendDelta(rows(0 until 16), idx, "w", 0L)
+    MultiWriterIndex.fold(spark, idx, "k", 4).count()
+    MultiWriterIndex.appendDelta(rows(16 until 32), idx, "w", 1L)
+    MultiWriterIndex.fold(spark, idx, "k", 4).count()
+    assert(Bucketing.readMarkerContent(s"$idx/base").exists(_.linesIterator.exists(_.startsWith("gen="))),
+      "the fold's compaction did not run")
+    MultiWriterIndex.appendDelta(rows(32 until 36), idx, "w", 2L)
+    val served = MultiWriterIndex.read(spark, idx, "k", 4)
+    assert(sorted(served) === sorted(rows(0 until 36)))
+    assert(served.inputFiles.exists(_.contains(s"$idx/base/")),
+      s"the pinned base read refused a compacted marker: ${served.inputFiles.mkString(", ")}")
   }
 
   test("streaming compaction cadence: threshold compact INSIDE foreachBatch while the query runs — file counts bounded, fences and answers unchanged") {
@@ -626,7 +610,6 @@ class StreamingIngestSpec extends SparkSpec {
     val base = tmpDir("ingest_idx_cadence").toString
     val dir = s"$base/bands"
     val ckpt = s"$base/ckpt"
-    val table = "graft_stream_cadence_spec"
     val threshold = 2
     def bands(df: org.apache.spark.sql.DataFrame) =
       SnapshotOps.nearDupBandIndex(df, "doc_id", "text")
@@ -645,16 +628,16 @@ class StreamingIngestSpec extends SparkSpec {
     }
     Bucketing.ensureBucketed(
       spark, bands(Seq.empty[(Long, String)].toDF("doc_id", "text")),
-      table, dir, "bucket", 4, sourceStamp = "epoch=-1")
+      dir, "bucket", 4, sourceStamp = "epoch=-1")
     @volatile var compactedMidStream = false
     def appendEpoch(df: org.apache.spark.sql.DataFrame, id: Long): Unit = {
       Bucketing.appendBucketedExactlyOnce(
         spark, bands(df), boom, boom,
-        table, dir, "bucket", 4, s"epoch=${id - 1}", s"epoch=$id")
+        dir, "bucket", 4, s"epoch=${id - 1}", s"epoch=$id")
       // production cadence: unconditional maintenance call after the fenced
       // append — the per-bucket threshold decides whether anything moves
       if (perBucketCounts.values.exists(_ > threshold)) compactedMidStream = true
-      Bucketing.compactBucketed(spark, table, dir, "bucket", 4, maxFilesPerBucket = threshold)
+      Bucketing.compactBucketed(spark, dir, "bucket", 4, maxFilesPerBucket = threshold)
       (): Unit
     }
     val mem = MemoryStream[(Long, String)]
@@ -672,17 +655,14 @@ class StreamingIngestSpec extends SparkSpec {
         s"per-batch compaction failed to bound the file counts: $counts")
       assert(Bucketing.readStamp(dir) === Some("epoch=4"),
         "compaction inside the loop must preserve the advancing epoch stamps")
-      val indexSet = spark.table(table).as[(Long, Int, String)].collect().toSet
+      val indexSet = Bucketing.read(spark, dir).as[(Long, Int, String)].collect().toSet
       val expected = bands(all.flatten.toDF("doc_id", "text")).as[(Long, Int, String)].collect().toSet
       assert(indexSet === expected, "mid-stream compaction changed the indexed rows")
       // the at-least-once replay window: the fence still skips cleanly
       Bucketing.appendBucketedExactlyOnce(
-        spark, boom, boom, boom, table, dir, "bucket", 4, "epoch=3", "epoch=4")
-      assert(spark.table(table).as[(Long, Int, String)].collect().toSet === expected,
+        spark, boom, boom, boom, dir, "bucket", 4, "epoch=3", "epoch=4")
+      assert(Bucketing.read(spark, dir).as[(Long, Int, String)].collect().toSet === expected,
         "replayed epoch moved data")
-    } finally {
-      q.stop()
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-    }
+    } finally q.stop()
   }
 }

@@ -30,6 +30,15 @@ if grep -rnE --include='*.scala' 'math\.abs\([^)]*hashCode' src/main \
   echo "full_gate: hashCode-keyed path in src/main; use data/ModelStore.get" >&2
   exit 1
 fi
+# an index is its directory and its marker: no line of code under connectors/
+# may register, describe, refresh or look up a catalog table
+if grep -rnE --include='*.scala' \
+    'saveAsTable|REFRESH TABLE|DESCRIBE TABLE|CREATE TABLE|tableExists' \
+    src/main/scala/graft/connectors \
+    | grep -Ev '^[^:]+:[0-9]+:[[:space:]]*(\*|//|/\*)'; then
+  echo "full_gate: catalog statement under connectors/; Bucketing's marker describes an index" >&2
+  exit 1
+fi
 # test-time budget: the full suite must finish inside a 2670 s timeout, so a run
 # over 90% of that (2400 s) fails here instead of silently on the timeout
 TEST_LOG=/tmp/graft_gate_tests.log
