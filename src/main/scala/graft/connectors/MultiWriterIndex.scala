@@ -148,8 +148,8 @@ object MultiWriterIndex {
 
   /** MAINTAINER side: absorb every committed delta into the bucketed base
     * at `<indexDir>/base`, clustered by `keyCol` into `nBuckets`. Returns
-    * the folded base. Single maintainer
-    * per index (the [[Bucketing]] single-writer-per-path contract — the
+    * the folded base. Single maintainer per index (the [[Bucketing]]
+    * single-writer-per-path contract — the
     * fence detects and refuses cross-JVM interleaves); any cadence,
     * including unconditionally per batch: an already-absorbed state is a
     * marker-read no-op.

@@ -712,8 +712,8 @@ class ScaleMechanicsSpec extends SparkSpec {
     assert(Bucketing.readStamp(dir) === Some("s3"), "compaction must preserve the stamp")
     // the swap preserved bucket hashing: a re-read by stamp (by-name
     // frame must not evaluate) still answers identically
-    val reReg = Bucketing.ensureBucketed(spark, boom, dir, "bucket", 4, sourceStamp = "s3")
-    assert(rowSet(reReg) === expected)
+    val reRead = Bucketing.ensureBucketed(spark, boom, dir, "bucket", 4, sourceStamp = "s3")
+    assert(rowSet(reRead) === expected)
     // and the appendBucketedExactlyOnce fence sees no state change: a
     // replayed epoch whose postStamp == the (preserved) stamp still skips
     val replay = Bucketing.appendBucketedExactlyOnce(
@@ -880,8 +880,8 @@ class ScaleMechanicsSpec extends SparkSpec {
     assert(Bucketing.readStamp(dir) === Some("post"), "compact must preserve the stamp")
     // re-read by stamp through the scheme'd request, and through the
     // bare-path form of the SAME directory — one marker, one layout
-    val reReg = Bucketing.ensureBucketed(spark, boom, dir, "bucket", 4, sourceStamp = "post")
-    assert(rowSet(reReg) === rowSet(rows(0, 60)))
+    val reRead = Bucketing.ensureBucketed(spark, boom, dir, "bucket", 4, sourceStamp = "post")
+    assert(rowSet(reRead) === rowSet(rows(0, 60)))
     val viaBare = Bucketing.ensureBucketed(spark, boom, local, "bucket", 4, sourceStamp = "post")
     assert(rowSet(viaBare) === rowSet(rows(0, 60)),
       "bare path and scheme'd URI of one directory must read the same index")

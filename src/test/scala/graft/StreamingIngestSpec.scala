@@ -576,10 +576,10 @@ class StreamingIngestSpec extends SparkSpec {
       "a compaction must change the marker content")
     assert(Bucketing.readStamp(dir) === Some("s1"), "compaction must preserve the stamp")
     // the build spec still matches: a re-read must not rebuild
-    val reReg = Bucketing.ensureBucketed(spark,
+    val reRead = Bucketing.ensureBucketed(spark,
       sys.error("a compacted marker must read back, not rebuild"): org.apache.spark.sql.DataFrame,
       dir, "k", 4, sourceStamp = "s1")
-    assert(sorted(reReg) === sorted(rows(0 until 32)))
+    assert(sorted(reRead) === sorted(rows(0 until 32)))
     // the multi-writer fold compacts its base; with an unfolded tail the
     // read must still take the pinned base listing, not the log fallback
     MultiWriterIndex.appendDelta(rows(0 until 16), idx, "w", 0L)
