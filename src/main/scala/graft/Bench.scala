@@ -34,10 +34,7 @@ object Bench {
     // Prebuild every /tmp fixture OUTSIDE the timers — fixture construction
     // (JSON string building, change-log staging) is harness work, not engine
     // work, and must not be absorbed into the first query that touches it.
-    graft.jobs.JobFixtures.warm(spark, sfDir)
-    graft.queries.SourceQueries.warm(spark, sfDir)
-    graft.queries.JoinQueries.warm(spark, sfDir)
-    graft.queries.Relational.warm(spark, sfDir)
+    SparkEntry.warm(spark, sfDir)
     // Ground-truth-only queries: deliberately quadratic oracle verifiers,
     // excluded from the timed loop (a scoped/pruned variant IS benched).
     // Listed in the output line so the exclusion is visible, never silent.

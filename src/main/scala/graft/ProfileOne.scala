@@ -23,12 +23,9 @@ object ProfileOne {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
     val spark = graft.core.GraftSession.getOrCreate("graft-profile")
-    // the same fixtures Bench warms, built outside the timers, so rep
-    // times compare with Bench's per-face times
-    graft.jobs.JobFixtures.warm(spark, sfDir)
-    graft.queries.SourceQueries.warm(spark, sfDir)
-    graft.queries.JoinQueries.warm(spark, sfDir)
-    graft.queries.Relational.warm(spark, sfDir)
+    // the fixtures Bench warms, built outside the timers, so rep times
+    // compare with Bench's per-face times
+    SparkEntry.warm(spark, sfDir)
     val jobs = mutable.ArrayBuffer[J]()
     // @volatile: written by the main thread, read on the listener-bus
     // thread — without it the last-rep recording can miss early jobs to

@@ -152,15 +152,8 @@ object ScaleProbe {
     val spark = graft.core.GraftSession.getOrCreate("graft-scaleprobe")
     buildScaled(spark, srcDir, outDir, factor)
     // fixtures for both scales built outside the timers, as Bench does
-    graft.jobs.JobFixtures.warm(spark, srcDir)
-    graft.jobs.JobFixtures.warm(spark, outDir)
-    graft.queries.SourceQueries.warm(spark, srcDir)
-    graft.queries.SourceQueries.warm(spark, outDir)
-    graft.queries.JoinQueries.warm(spark, srcDir)
-    graft.queries.JoinQueries.warm(spark, outDir)
-    // bucketed-layout builds are write-once fixture work, not engine work
-    graft.queries.Relational.warm(spark, srcDir)
-    graft.queries.Relational.warm(spark, outDir)
+    SparkEntry.warm(spark, srcDir)
+    SparkEntry.warm(spark, outDir)
 
     // a failing probe records NaN and the sweep CONTINUES — one broken
     // query must not abort the measurement of everything after it, and a

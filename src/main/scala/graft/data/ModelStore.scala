@@ -171,7 +171,10 @@ object ModelStore {
     stale.length
   }
 
-  /** Per-corpus store root. One directory per corpus dir; callers append a
+  /** Per-corpus store root, under the JVM's `java.io.tmpdir` (where its
+    * `Files.createTempDirectory` roots live too, so a run that points
+    * tmpdir at its own work dir keeps and deletes its store with it). One
+    * directory per corpus dir; callers append a
     * model name that embeds the training params AND a source-content stamp
     * ([[graft.connectors.Bucketing.stampDir]]) so a regenerated corpus can
     * never silently reuse a stale model — the same invalidation contract
@@ -188,7 +191,8 @@ object ModelStore {
     * version-skewing bucket assignments — the exact hazard this keying
     * exists to prevent.
     */
-  def rootFor(dir: String): String = s"/tmp/graft-models-${corpusKey(dir)}"
+  def rootFor(dir: String): String =
+    new java.io.File(System.getProperty("java.io.tmpdir"), s"graft-models-${corpusKey(dir)}").getPath
 
   /** `<basename>-<md5>` of the normalized absolute path of `dir` — the
     * per-corpus key under [[rootFor]] and

@@ -34,12 +34,24 @@ trait GraftJob {
 class MongoToKafkaJob extends GraftJob {
   val name = "MongoToKafka"
 
+  /** The schema gate of both faces: `_id` required. */
+  private val enforcer = SchemaEnforcer(
+    "payloadJson",
+    Seq(SchemaVersion(1, Seq(FieldSpec("_id", FieldType.ANY)))))
+
+  /** The sink-side stamp of both faces: pre-sink metadata, a traceId for
+    * rows that carry none, and processedTime — all on `clock` and
+    * `subtask`.
+    */
+  private def stamp(df: DataFrame, clock: Column, subtask: Column): DataFrame =
+    df.transform(MetadataDecorator("pre-sink", name, clock = clock, subtask = subtask))
+      .withColumn(
+        "traceId",
+        coalesce(col("traceId"), concat(lit("trace-"), col("primaryKey"), lit("-"), unix_micros(col("eventTime")))))
+      .withColumn("processedTime", clock.cast("timestamp"))
+
   def build(cdc: DataFrame, clock: Column): (DataFrame, Option[DataFrame]) = {
     val parsed = CdcParser.parse(cdc, clock)
-    val enforcer = SchemaEnforcer(
-      "payloadJson",
-      Seq(SchemaVersion(1, Seq(FieldSpec("_id", FieldType.ANY))))
-    )
     val pb = PipelineBuilder
       .from(parsed)
       .apply(FilterInterceptor("known-ops", col("operation") =!= "unknown"))
@@ -66,19 +78,9 @@ class MongoToKafkaJob extends GraftJob {
         QualityCheck("null_payloads", col("payloadJson").isNull),
         QualityCheck("null_keys", col("primaryKey").isNull)
       )))
-      .apply(MetadataDecorator("pre-sink", name, clock = clock, subtask = lit(0)))
-      .process(df =>
-        df.withColumn(
-          "traceId",
-          coalesce(col("traceId"), concat(lit("trace-"), col("primaryKey"), lit("-"), unix_micros(col("eventTime"))))
-        ).withColumn("processedTime", clock.cast("timestamp")))
+      .process(stamp(_, clock, lit(0)))
     (pb.df, pb.deadLetters)
   }
-
-  /** The streaming face's schema gate: `_id` required, as in [[build]]. */
-  private def streamingEnforcer = SchemaEnforcer(
-    "payloadJson",
-    Seq(SchemaVersion(1, Seq(FieldSpec("_id", FieldType.ANY)))))
 
   /** Parse → fused dedup+suppression. Builds a FRESH
     * StatefulProcessor per call: a processor instance must belong to
@@ -98,15 +100,6 @@ class MongoToKafkaJob extends GraftJob {
       .cdcPipeline(parsed.as[graft.model.StreamEnvelop], ttlMs, Set("updatedAt", "modifiedAt"))
       .toDF()
   }
-
-  private def finishGood(good: DataFrame): DataFrame =
-    good
-      .drop("matched_version")
-      .transform(MetadataDecorator("pre-sink", name))
-      .withColumn(
-        "traceId",
-        coalesce(col("traceId"), concat(lit("trace-"), col("primaryKey"), lit("-"), unix_micros(col("eventTime")))))
-      .withColumn("processedTime", current_timestamp())
 
   /** Streaming face: parse → fused dedup+change-suppression (ONE
     * transformWithState pass — see CdcPipelineProcessor) → schema gate →
@@ -129,8 +122,10 @@ class MongoToKafkaJob extends GraftJob {
       // A processing-time TTL keeps TransformWithStateExec.shouldRunAnotherBatch
       // true, so the default trigger runs no-data batches back-to-back forever
       // (correct for a long-lived service — TTL eviction needs them) and
-      // processAllAvailable() never unblocks. Bounded drives (probes, backfills)
-      // must pass Trigger.AvailableNow() and awaitTermination() instead.
+      // processAllAvailable() never unblocks. Trigger.AvailableNow() does not
+      // end such a query either: a bounded drive (probe, backfill) counts its
+      // input rows through and stops the query itself, as
+      // StreamScaleProbe.drive does.
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)
   ): org.apache.spark.sql.streaming.StreamingQuery =
@@ -138,8 +133,9 @@ class MongoToKafkaJob extends GraftJob {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
         Persist.once(batch) { b =>
-          val (good, bad) = streamingEnforcer.enforce(b)
-          finishGood(good).write.mode("overwrite").parquet(s"$outPath/epoch=$epoch")
+          val (good, bad) = enforcer.enforce(b)
+          stamp(good.drop("matched_version"), current_timestamp(), spark_partition_id())
+            .write.mode("overwrite").parquet(s"$outPath/epoch=$epoch")
           Dlq
             .toDlq(bad, graft.model.ErrorCodes.SchemaViolation, col("violations"), name,
               col("payloadJson"), current_timestamp())
@@ -291,25 +287,8 @@ class KafkaToMongoJob extends GraftJob {
 class OrderPaymentJoinJob extends GraftJob {
   val name = "OrderPaymentJoin"
 
-  def build(orders: DataFrame, payments: DataFrame, ttlMs: Long): DataFrame = {
-    val l = orders.select(
-      col("operation"), col("source"), col("payloadJson"), col("eventTime"),
-      col("processedTime"), col("traceId"), col("primaryKey"), col("metadata"))
-    val r = payments.select(
-      col("primaryKey").as("p_key"), col("payloadJson").as("p_payload"),
-      col("source").as("p_source"), col("eventTime").as("p_ts"))
-    DynamicJoiner("primaryKey", "p_key", "eventTime", "p_ts", ttlMs, "left_outer")
-      .batch(l, r)
-      .withColumn(
-        "metadata",
-        when(col("p_payload").isNotNull,
-          map_concat(
-            coalesce(col("metadata"), map()),
-            map(lit("paymentPayload"), col("p_payload"), lit("paymentSource"), col("p_source"))))
-          .otherwise(col("metadata"))
-      )
-      .drop("p_key", "p_payload", "p_source", "p_ts")
-  }
+  def build(orders: DataFrame, payments: DataFrame, ttlMs: Long): DataFrame =
+    compose(orders, payments, ttlMs)(_.batch(_, _))
 
   /** Streaming face: watermarked stream-stream join + the same metadata
     * merge. `delay` bounds both sides' state (>= TTL + out-of-orderness).
@@ -319,22 +298,30 @@ class OrderPaymentJoinJob extends GraftJob {
       payments: DataFrame,
       ttlMs: Long,
       delay: String
-  ): DataFrame = {
+  ): DataFrame =
+    compose(orders, payments, ttlMs)(_.streaming(_, _, delay))
+
+  /** Both faces' composition: project the two sides, join them with `join`
+    * (the batch or the streaming face of one [[DynamicJoiner]]), and merge
+    * the payment into the order's metadata.
+    */
+  private def compose(orders: DataFrame, payments: DataFrame, ttlMs: Long)(
+      join: (DynamicJoiner, DataFrame, DataFrame) => DataFrame): DataFrame = {
     val l = orders.select(
       col("operation"), col("source"), col("payloadJson"), col("eventTime"),
       col("processedTime"), col("traceId"), col("primaryKey"), col("metadata"))
     val r = payments.select(
       col("primaryKey").as("p_key"), col("payloadJson").as("p_payload"),
       col("source").as("p_source"), col("eventTime").as("p_ts"))
-    DynamicJoiner("primaryKey", "p_key", "eventTime", "p_ts", ttlMs, "left_outer")
-      .streaming(l, r, delay)
+    join(DynamicJoiner("primaryKey", "p_key", "eventTime", "p_ts", ttlMs, "left_outer"), l, r)
       .withColumn(
         "metadata",
         when(col("p_payload").isNotNull,
           map_concat(
             coalesce(col("metadata"), map()),
             map(lit("paymentPayload"), col("p_payload"), lit("paymentSource"), col("p_source"))))
-          .otherwise(col("metadata")))
+          .otherwise(col("metadata"))
+      )
       .drop("p_key", "p_payload", "p_source", "p_ts")
   }
 

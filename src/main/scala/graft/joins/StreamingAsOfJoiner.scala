@@ -80,14 +80,12 @@ object StreamingAsOfJoiner {
     *                      older version — the same contract as a watermark.
     *                      Negative = unbounded (compact upstream).
     */
-  class AsOfProcessor(ttlMs: Long, compactLagUs: Long = -1L)
+  class AsOfProcessor(ttl: TTLConfig, compactLagUs: Long = -1L)
       extends StatefulProcessor[String, AsOfInput, AsOfEnriched] {
     @transient private var hist: ListState[VersionRow] = _
     @transient private var maxProbe: ValueState[Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      val ttl =
-        if (ttlMs > 0) TTLConfig(java.time.Duration.ofMillis(ttlMs)) else TTLConfig.NONE
       hist = getHandle.getListState[VersionRow]("hist", Encoders.product[VersionRow], ttl)
       if (compactLagUs >= 0)
         maxProbe = getHandle.getValueState[Long]("maxProbe", Encoders.scalaLong, ttl)
@@ -178,8 +176,9 @@ object StreamingAsOfJoiner {
     }
   }
 
-  /** Wire the two streams through one keyed state pass. Needs the RocksDB
-    * state store provider (as all transformWithState operators do), which
+  /** Wire the two streams through one keyed state pass
+    * ([[graft.stateful.Processors.keyed]]). Needs the RocksDB state store
+    * provider (as all transformWithState operators do), which
     * [[graft.core.GraftSession]] sessions carry.
     *
     * @param ttlMs state TTL for version history; 0 = keep forever
@@ -197,11 +196,6 @@ object StreamingAsOfJoiner {
     val unioned = events
       .map(e => AsOfInput(e.key, e.tsUs, isVersion = false, e.payload))
       .unionByName(versions.map(v => AsOfInput(v.key, v.tsUs, isVersion = true, v.value)))
-    unioned
-      .groupByKey(_.key)
-      .transformWithState(
-        new AsOfProcessor(ttlMs, compactLagUs),
-        if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Append())
+    graft.stateful.Processors.keyed(unioned, ttlMs)(_.key)(new AsOfProcessor(_, compactLagUs))
   }
 }

@@ -10,8 +10,11 @@ import graft.model.{ChangelogEvent, StreamEnvelop}
   * (`StatefulProcessor` + per-key state with built-in TTL + timers) — the
   * direct replacement for Flink's `KeyedProcessFunction` + `StateTtlConfig`
   * the reference uses (SURVEY §4.2). These are the only streaming faces of
-  * the dedup, materialize and flow-disruption operators; Deduplicator,
-  * Materializer and FlowDisruptionDetector hold their batch faces.
+  * the dedup, change-suppression, materialize and flow-disruption
+  * operators; Deduplicator, StatefulMerger, Materializer and
+  * FlowDisruptionDetector hold their batch faces. Every keyed streaming
+  * operator in the codebase, [[graft.joins.StreamingAsOfJoiner]]'s
+  * included, runs through the one wiring [[keyed]].
   *
   * transformWithState needs the RocksDB state store provider, which every
   * [[graft.core.GraftSession]] session carries.
@@ -25,8 +28,26 @@ object Processors {
   private def micros(t: java.sql.Timestamp): Long =
     t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
 
-  private def ttlConfig(ttlMs: Long): TTLConfig =
-    if (ttlMs > 0) TTLConfig(java.time.Duration.ofMillis(ttlMs)) else TTLConfig.NONE
+  /** The one keyed-state wiring: group `ds` by `key` and run the processor
+    * `processor` builds from the state TTL, in append mode. The clock is
+    * event time when the processor's timers are (`eventTime`), processing
+    * time when it has a state TTL (`ttlMs > 0`) or a processing-time timer
+    * (`timeoutMs > 0`), and none otherwise: a processing-time query keeps
+    * running no-data batches, which is waste when nothing can expire.
+    */
+  private[graft] def keyed[I, K: Encoder, O: Encoder](
+      ds: Dataset[I],
+      ttlMs: Long = 0L,
+      timeoutMs: Long = 0L,
+      eventTime: Boolean = false
+  )(key: I => K)(processor: TTLConfig => StatefulProcessor[K, I, O]): Dataset[O] = {
+    val ttl = if (ttlMs > 0) TTLConfig(java.time.Duration.ofMillis(ttlMs)) else TTLConfig.NONE
+    val timeMode =
+      if (eventTime) TimeMode.EventTime()
+      else if (ttlMs > 0 || timeoutMs > 0) TimeMode.ProcessingTime()
+      else TimeMode.None()
+    ds.groupByKey(key).transformWithState(processor(ttl), timeMode, OutputMode.Append())
+  }
 
   /** Streaming near-dup candidate detection, keyed by LSH band bucket:
     * the first doc to claim a bucket owns it (ValueState[Long]); every
@@ -36,12 +57,12 @@ object Processors {
     * owner itself is silent (idempotent replay). State is one long per
     * live bucket, TTL-bounded.
     */
-  class NearDupProcessor(ttlMs: Long)
+  class NearDupProcessor(ttl: TTLConfig)
       extends StatefulProcessor[String, graft.model.BandRow, graft.model.NearDupHit] {
     @transient private var owner: ValueState[Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      owner = getHandle.getValueState[Long]("owner", Encoders.scalaLong, ttlConfig(ttlMs))
+      owner = getHandle.getValueState[Long]("owner", Encoders.scalaLong, ttl)
 
     override def handleInputRows(
         key: String,
@@ -69,11 +90,7 @@ object Processors {
       ttlMs: Long
   ): Dataset[graft.model.NearDupHit] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.bucket)
-      .transformWithState(
-        new NearDupProcessor(ttlMs),
-        if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Append())
+    keyed(ds, ttlMs)(_.bucket)(new NearDupProcessor(_))
   }
 
   /** Streaming heavy hitters per group (Misra-Gries summary in MapState):
@@ -88,10 +105,12 @@ object Processors {
     * monitoring reads the rows with the highest `groupTotal` per group).
     * Within a batch, rows fold in item order so replays are deterministic
     * under any partitioning (MG estimates are order-sensitive; pinning the
-    * fold order pins the output). The decrement step costs O(k) — the
-    * classic MG trade for bounded memory.
+    * fold order pins the output): the batch's runs of equal items fold
+    * through [[mgFoldRuns]], seeded with the restored summary — the one
+    * fold [[heavyHittersBatch]] runs too. The decrement step costs O(k) —
+    * the classic MG trade for bounded memory.
     */
-  class HeavyHittersProcessor(k: Int, ttlMs: Long)
+  class HeavyHittersProcessor(k: Int, ttl: TTLConfig)
       extends StatefulProcessor[String, graft.model.ItemObservation, graft.model.HeavyHitter] {
     require(k >= 1, s"heavyHitters: k must be >= 1, got $k")
     @transient private var counters: MapState[String, Long] = _
@@ -124,14 +143,14 @@ object Processors {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       counters = getHandle.getMapState[String, Long](
-        "mg", Encoders.STRING, Encoders.scalaLong, ttlConfig(ttlMs))
+        "mg", Encoders.STRING, Encoders.scalaLong, ttl)
 
     override def handleInputRows(
         key: String,
         rows: Iterator[graft.model.ItemObservation],
         timerValues: TimerValues
     ): Iterator[graft.model.HeavyHitter] = {
-      val m = scala.collection.mutable.HashMap.empty[String, Long]
+      val prior = Vector.newBuilder[(String, Long)]
       var n = 0L
       var sawVersion = false
       var sawAny = false
@@ -146,7 +165,7 @@ object Processors {
                   "layout; restart the query from a fresh checkpoint location")
             sawVersion = true
           case (TotalKey, c) => n = c
-          case (ki, c) if ki.startsWith("i") => m(ki.drop(1)) = c
+          case (ki, c) if ki.startsWith("i") => prior += ki.drop(1) -> c
           case (ki, _) =>
             // Shape guard: the pre-r9 layout stored item keys UNPREFIXED
             // (total in a sibling "total" ValueState). Restoring such a
@@ -168,26 +187,13 @@ object Processors {
           "heavyHitters: restored state lacks the layout-version marker — " +
             "this checkpoint was written by an older, incompatible state " +
             "layout; restart the query from a fresh checkpoint location")
-      rows.toVector.sortBy(_.item).foreach { r =>
-        n += 1
-        m.get(r.item) match {
-          case Some(c) => m(r.item) = c + 1
-          case None if m.size < k => m(r.item) = 1L
-          case None =>
-            m.keysIterator.toVector.foreach { ki =>
-              val c = m(ki) - 1
-              if (c == 0) m.remove(ki) else m(ki) = c
-            }
-        }
-      }
+      val runs = rows.toVector.groupMapReduce(_.item)(_ => 1L)(_ + _).toVector.sortBy(_._1)
+      val (summary, total) = mgFoldRuns(runs.iterator, k, prior.result(), n)
       counters.clear()
       counters.updateValue(VersionKey, LayoutVersion)
-      counters.updateValue(TotalKey, n)
-      m.foreach { case (i, c) => counters.updateValue("i" + i, c) }
-      m.toVector
-        .sortBy { case (i, c) => (-c, i) }
-        .map { case (i, c) => graft.model.HeavyHitter(key, i, c, n) }
-        .iterator
+      counters.updateValue(TotalKey, total)
+      summary.foreach { case (i, c) => counters.updateValue("i" + i, c) }
+      summary.iterator.map { case (i, c) => graft.model.HeavyHitter(key, i, c, total) }
     }
   }
 
@@ -198,11 +204,7 @@ object Processors {
       ttlMs: Long = 0L
   ): Dataset[graft.model.HeavyHitter] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.group)
-      .transformWithState(
-        new HeavyHittersProcessor(k, ttlMs),
-        if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Append())
+    keyed(ds, ttlMs)(_.group)(new HeavyHittersProcessor(k, _))
   }
 
   /** The deterministic BATCH replay of [[heavyHitters]] — one logical
@@ -212,14 +214,8 @@ object Processors {
     * recursive-CTE MG fold in DuckDB). This is what gives the
     * streaming-only gate a three-check oracle row.
     *
-    * The fold is the processor's — rows sorted ascending by item string —
-    * with one algebraic collapse that changes nothing: a sorted batch
-    * arrives as RUNS of identical items, and a run of c arrivals folds in
-    * closed form (present: +c; absent with a free slot: insert c; absent
-    * and full with min counter m: if c ≤ m every counter drops by c,
-    * zeros evicted; if c > m the m-th arrival frees the min slots, the
-    * next inserts, the rest increment → counters drop by m, item enters
-    * at c − m).
+    * The fold is the processor's, [[mgFoldRuns]] over the item-sorted
+    * runs, from an empty summary.
     *
     * Scale shape: one (group,item) count aggregation (map-side combined),
     * then a secondary-sorted per-group fold (`flatMapSortedGroups`) that
@@ -247,37 +243,41 @@ object Processors {
       }
   }
 
-  /** The run-length-collapsed MG fold of [[heavyHittersBatch]], exposed so
-    * PropertiesSpec can pin the closed form against the arrival-by-arrival
-    * reference across random feeds. `runs` must arrive item-ASCENDING
-    * (the batch-sorted order the streaming processor folds in). Returns
+  /** The one Misra-Gries fold, behind both heavy-hitters faces: fold
+    * `runs` of (item, arrivals), item-ASCENDING, into the `prior` summary
+    * of `priorTotal` arrivals. A run of c arrivals folds in closed form,
+    * exactly as c single arrivals would (PropertiesSpec pins it against the
+    * arrival-by-arrival fold over random priors and feeds). Returns
     * (summary sorted by (-estimate, item), total arrivals).
     */
   private[graft] def mgFoldRuns(
       runs: Iterator[(String, Long)],
-      k: Int
+      k: Int,
+      prior: Iterable[(String, Long)] = Nil,
+      priorTotal: Long = 0L
   ): (Vector[(String, Long)], Long) = {
-    val m = scala.collection.mutable.HashMap.empty[String, Long]
-    var n = 0L
+    val m = scala.collection.mutable.HashMap.from(prior)
+    var n = priorTotal
     runs.foreach { case (item, c) =>
       n += c
       m.get(item) match {
         case Some(cur) => m(item) = cur + c
-        case None if m.size < k => m(item) = c
         case None =>
-          // a run of c arrivals of an absent item against a full summary:
-          // the first min(c, mmin) arrivals each decrement every counter;
-          // at the mmin-th the minimum entries evict and free a slot, the
-          // next arrival inserts, the remaining increment — so counters
-          // drop by min(c, mmin) and the item enters at c − mmin iff
-          // c > mmin (exactly the arrival-by-arrival fold, collapsed)
-          val mmin = m.valuesIterator.min
-          val drop = math.min(c, mmin)
-          m.keysIterator.toVector.foreach { ki =>
-            val nc = m(ki) - drop
-            if (nc == 0) m.remove(ki) else m(ki) = nc
+          // an absent item against a full summary: each arrival decrements
+          // every counter, so the first min(left, mmin) arrivals drop every
+          // counter by that much and evict the zeros; once a slot is free
+          // the next arrival inserts and the rest increment, so the item
+          // enters at whatever is left
+          var left = c
+          while (left > 0 && m.size >= k) {
+            val drop = math.min(left, m.valuesIterator.min)
+            m.keysIterator.toVector.foreach { ki =>
+              val nc = m(ki) - drop
+              if (nc == 0) m.remove(ki) else m(ki) = nc
+            }
+            left -= drop
           }
-          if (c > mmin) m(item) = c - mmin
+          if (left > 0) m(item) = left
       }
     }
     (m.toVector.sortBy { case (i, c) => (-c, i) }, n)
@@ -308,13 +308,13 @@ object Processors {
     * one fold over the concatenated arrivals (spec-pinned).
     */
   class QualityGateProcessor(
-      keepPpm: Long, binLo: Long, binWidth: Long, nBins: Int, ttlMs: Long)
+      keepPpm: Long, binLo: Long, binWidth: Long, nBins: Int, ttl: TTLConfig)
       extends StatefulProcessor[String, graft.model.ScoredDoc, graft.model.QualityVerdict] {
     @transient private var st: ValueState[graft.model.QualityGateState] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getValueState[graft.model.QualityGateState](
-        "hist", Encoders.product[graft.model.QualityGateState], ttlConfig(ttlMs))
+        "hist", Encoders.product[graft.model.QualityGateState], ttl)
 
     override def handleInputRows(
         key: String,
@@ -347,11 +347,7 @@ object Processors {
     require(keepPpm >= 0 && keepPpm <= 1000000L, s"qualityGate: keepPpm=$keepPpm outside [0, 1e6]")
     require(binWidth > 0 && nBins > 0, s"qualityGate: need positive binWidth/nBins")
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.source)
-      .transformWithState(
-        new QualityGateProcessor(keepPpm, binLo, binWidth, nBins, ttlMs),
-        if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Append())
+    keyed(ds, ttlMs)(_.source)(new QualityGateProcessor(keepPpm, binLo, binWidth, nBins, _))
   }
 
   /** The deterministic BATCH replay of [[qualityGate]] — one logical
@@ -430,12 +426,12 @@ object Processors {
   /** First-seen-wins dedup: ValueState[Boolean] "seen" with native state TTL
     * (reference pattern/dedup/Deduplicator.java:18-72).
     */
-  class DedupProcessor(ttlMs: Long)
+  class DedupProcessor(ttl: TTLConfig)
       extends StatefulProcessor[String, StreamEnvelop, StreamEnvelop] {
     @transient private var seen: ValueState[Boolean] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getValueState[Boolean]("seen", Encoders.scalaBoolean, ttlConfig(ttlMs))
+      seen = getHandle.getValueState[Boolean]("seen", Encoders.scalaBoolean, ttl)
 
     override def handleInputRows(
         key: String,
@@ -456,24 +452,19 @@ object Processors {
       ttlMs: Long
   ): Dataset[StreamEnvelop] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(key)
-      .transformWithState(
-        new DedupProcessor(ttlMs),
-        if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Append()
-      )
+    keyed(ds, ttlMs)(key)(new DedupProcessor(_))
   }
 
   /** Latest-value-per-key changelog materialization: ValueState[String]
     * payload with native TTL (reference pattern/materialization/
     * Materializer.java:19-166). LWW merge; delete clears state.
     */
-  class MaterializeProcessor(ttlMs: Long, isDelete: StreamEnvelop => Boolean)
+  class MaterializeProcessor(ttl: TTLConfig, isDelete: StreamEnvelop => Boolean)
       extends StatefulProcessor[String, StreamEnvelop, ChangelogEvent] {
     @transient private var current: ValueState[String] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      current = getHandle.getValueState[String]("current", Encoders.STRING, ttlConfig(ttlMs))
+      current = getHandle.getValueState[String]("current", Encoders.STRING, ttl)
 
     override def handleInputRows(
         key: String,
@@ -501,12 +492,7 @@ object Processors {
       ttlMs: Long
   ): Dataset[ChangelogEvent] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.primaryKey)
-      .transformWithState(
-        new MaterializeProcessor(ttlMs, isDelete),
-        if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Append()
-      )
+    keyed(ds, ttlMs)(_.primaryKey)(new MaterializeProcessor(_, isDelete))
   }
 
   /** Fused CDC pipeline state: dedup-by-(key,eventTime) AND payload
@@ -524,15 +510,15 @@ object Processors {
     * group key — [[cdcPipeline]] groups null keys under a placeholder that
     * a real key can equal, and those real rows are deduped as usual.
     */
-  class CdcPipelineProcessor(ttlMs: Long, excludedFields: Set[String])
+  class CdcPipelineProcessor(ttl: TTLConfig, excludedFields: Set[String])
       extends StatefulProcessor[String, StreamEnvelop, StreamEnvelop] {
     @transient private var seenTs: MapState[Long, Boolean] = _
     @transient private var lastHash: ValueState[Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       seenTs = getHandle.getMapState[Long, Boolean](
-        "seenTs", Encoders.scalaLong, Encoders.scalaBoolean, ttlConfig(ttlMs))
-      lastHash = getHandle.getValueState[Long]("lastHash", Encoders.scalaLong, ttlConfig(ttlMs))
+        "seenTs", Encoders.scalaLong, Encoders.scalaBoolean, ttl)
+      lastHash = getHandle.getValueState[Long]("lastHash", Encoders.scalaLong, ttl)
     }
 
     override def handleInputRows(
@@ -549,15 +535,31 @@ object Processors {
           // __op joins the composite (reference MongoToKafkaJob buildChain):
           // a DELETE whose payload canonicalizes equal to the prior event's
           // payload must still reach the sink.
-          val h = StatefulMerger.hashPayload(e.payloadJson, excludedFields, Some(e.operation))
-          val changed = !lastHash.exists() || lastHash.get() != h
-          if (changed) lastHash.update(h)
-          changed
+          changed(lastHash, e, excludedFields, Some(e.operation))
         }
       }.toVector.iterator
   }
 
-  /** Group key for null-primaryKey rows: a null grouping key crashes
+  /** The change-suppression step of a keyed row, shared by
+    * [[CdcPipelineProcessor]] and [[SuppressProcessor]]: true iff the
+    * row's payload hash (`op` joining the composite) differs from the last
+    * one its key emitted. Only an accepted row writes the hash, so a
+    * suppressed row never postpones the state's TTL and an accepted one
+    * re-anchors it (the reference's `OnCreateAndWrite`).
+    */
+  private def changed(
+      lastHash: ValueState[Long],
+      e: StreamEnvelop,
+      excludedFields: Set[String],
+      op: Option[String]
+  ): Boolean = {
+    val h = StatefulMerger.hashPayload(e.payloadJson, excludedFields, op)
+    val changed = !lastHash.exists() || lastHash.get() != h
+    if (changed) lastHash.update(h)
+    changed
+  }
+
+  /** Group key for null-key rows: a null grouping key crashes
     * transformWithState (INTERNAL_ERROR_TWS "implicit key not found").
     */
   private val NullKeyGroup = ""
@@ -568,12 +570,53 @@ object Processors {
       excludedFields: Set[String]
   ): Dataset[StreamEnvelop] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(e => if (e.primaryKey == null) NullKeyGroup else e.primaryKey)
-      .transformWithState(
-        new CdcPipelineProcessor(ttlMs, excludedFields),
-        if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Append()
-      )
+    keyed(ds, ttlMs)(e => if (e.primaryKey == null) NullKeyGroup else e.primaryKey)(
+      new CdcPipelineProcessor(_, excludedFields))
+  }
+
+  /** Change suppression on its own — the streaming face of
+    * [[StatefulMerger]] (reference pattern/merge/StatefulMerger.java:25-122):
+    * a row passes iff its canonical payload, minus `excludedFields` and
+    * with the operation in the composite when `withOp`, differs from the
+    * last one its key emitted. State is that hash per key, with native TTL
+    * re-anchored by accepted rows only (see [[changed]]).
+    *
+    * A row whose key is null has nothing to suppress against: it groups
+    * under the [[cdcPipeline]] placeholder, passes through untouched and
+    * never reads or writes state.
+    */
+  class SuppressProcessor(
+      ttl: TTLConfig,
+      rowKey: StreamEnvelop => String,
+      excludedFields: Set[String],
+      withOp: Boolean)
+      extends StatefulProcessor[String, StreamEnvelop, StreamEnvelop] {
+    @transient private var lastHash: ValueState[Long] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      lastHash = getHandle.getValueState[Long]("lastHash", Encoders.scalaLong, ttl)
+
+    override def handleInputRows(
+        key: String,
+        rows: Iterator[StreamEnvelop],
+        timerValues: TimerValues
+    ): Iterator[StreamEnvelop] =
+      rows.filter { e =>
+        rowKey(e) == null ||
+        changed(lastHash, e, excludedFields, if (withOp) Some(e.operation) else None)
+      }.toVector.iterator
+  }
+
+  def suppress(
+      ds: Dataset[StreamEnvelop],
+      key: StreamEnvelop => String,
+      ttlMs: Long,
+      excludedFields: Set[String],
+      withOp: Boolean = false
+  ): Dataset[StreamEnvelop] = {
+    import ds.sparkSession.implicits._
+    keyed(ds, ttlMs)(e => Option(key(e)).getOrElse(NullKeyGroup))(
+      new SuppressProcessor(_, key, excludedFields, withOp))
   }
 
   /** One update of one session window (a changelog of session results):
@@ -743,13 +786,10 @@ object Processors {
     // delay = ooo + lateness + GAP: the gap term admits the band of
     // very-late rows Flink would still absorb into a session within
     // lateness (ts + gap + lateness > flinkWm) — see the processor scaladoc
-    ds.withWatermark("eventTime", s"${outOfOrdernessMs + latenessMs + gapMs} milliseconds")
-      .groupByKey(_.primaryKey)
-      .transformWithState(
-        new SessionLatenessProcessor(gapMs, latenessMs),
-        TimeMode.EventTime(),
-        OutputMode.Append()
-      )
+    val watermarked =
+      ds.withWatermark("eventTime", s"${outOfOrdernessMs + latenessMs + gapMs} milliseconds")
+    keyed(watermarked, eventTime = true)(_.primaryKey)(_ =>
+      new SessionLatenessProcessor(gapMs, latenessMs))
   }
 
   /** Per-key silence detector with REAL timers: every event re-arms a
@@ -811,13 +851,6 @@ object Processors {
       timeoutMs: Long
   ): Dataset[FlowSignal] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(key)
-      .transformWithState(
-        new FlowProcessor(timeoutMs),
-        // timers disabled entirely when detection is off — ProcessingTime
-        // mode would keep micro-batches running continuously for nothing
-        if (timeoutMs > 0) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Append()
-      )
+    keyed(ds, timeoutMs = timeoutMs)(key)(_ => new FlowProcessor(timeoutMs))
   }
 }

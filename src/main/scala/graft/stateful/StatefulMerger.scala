@@ -1,16 +1,16 @@
 package graft.stateful
 
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.model.StreamEnvelop
 
 /** Change-suppression: emit a row only when its (normalized) payload differs
   * from the last emitted payload for the same key.
   * Reference pattern/merge/StatefulMerger.java:25-122: per-key ValueState of a
   * composite payload hash, excluded fields removed before hashing; equal hash
-  * → suppress, else update state + emit. TTL default 24h.
+  * → suppress, else update state + emit. This is the batch face; the
+  * streaming face is [[Processors.suppress]], whose `ttlMs` native state
+  * TTL plays the reference's `StateTtlConfig` (24 h there).
   *
   * `opCol`: include this column in the hashed composite as a `__op` entry —
   * the reference's MongoToKafka chain adds "__op" to the merged map
@@ -21,7 +21,6 @@ final case class StatefulMerger(
     keyCols: Seq[String],
     payloadCol: String,
     excludedFields: Seq[String] = Seq.empty,
-    ttlMs: Long = 24 * 3600 * 1000,
     opCol: Option[String] = None
 ) {
 
@@ -40,71 +39,6 @@ final case class StatefulMerger(
       .withColumn("_prev", lag(col("_canon"), 1).over(w))
       .filter(col("_prev").isNull || col("_canon") =!= col("_prev"))
       .drop("_canon", "_prev")
-  }
-
-  /** Streaming face: per-key last-hash state with processing-time TTL.
-    * State carries (hash, expiry deadline). The deadline is re-anchored to
-    * now+ttl on every ACCEPTED write (reference StateTtlConfig
-    * OnCreateAndWrite — a suppressed duplicate does not postpone expiry),
-    * but the timeout itself must be re-armed on EVERY invocation: Spark's
-    * GroupState contract clears a stored timeout whenever the function runs
-    * for a key without re-setting it, so a duplicate-only micro-batch that
-    * skipped setTimeoutDuration would silently cancel the pending TTL and
-    * pin the last-hash state forever.
-    */
-  def streaming(
-      ds: Dataset[StreamEnvelop],
-      key: StreamEnvelop => String
-  ): Dataset[StreamEnvelop] = {
-    import ds.sparkSession.implicits._
-    val conf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    ds.groupByKey(key)
-      .flatMapGroupsWithState(OutputMode.Append, conf)(stateFunc _)
-  }
-
-  /** State function behind [[streaming]], named so the TTL contract can be
-    * pinned with [[org.apache.spark.sql.streaming.TestGroupState]].
-    *
-    * CHECKPOINT COMPATIBILITY: the state encoding changed from `Long`
-    * (hash) to `(Long, Long)` (hash, TTL deadline). A streaming query
-    * restarted from a checkpoint written by the old encoding will fail to
-    * decode its state store — wipe the checkpoint (or use a fresh
-    * checkpoint location) when upgrading across that change.
-    */
-  private[graft] def stateFunc(
-      key: String,
-      events: Iterator[StreamEnvelop],
-      state: GroupState[(Long, Long)]
-  ): Iterator[StreamEnvelop] = {
-    val excluded = excludedFields.toSet
-    val includeOp = opCol.isDefined
-    val ttl = ttlMs
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      var last = state.getOption.map(_._1)
-      val out = events.filter { e =>
-        val h = StatefulMerger.hashPayload(
-          e.payloadJson, excluded, if (includeOp) Some(e.operation) else None)
-        val changed = !last.contains(h)
-        if (changed) last = Some(h)
-        changed
-      }.toVector
-      if (out.nonEmpty) {
-        val deadline =
-          if (ttl > 0) state.getCurrentProcessingTimeMs() + ttl else Long.MaxValue
-        last.foreach(h => state.update((h, deadline)))
-      }
-      // Re-arm from the stored deadline even when this invocation only
-      // suppressed duplicates — skipping it would clear the pending TTL.
-      if (ttl > 0 && state.exists) {
-        val remaining = math.max(1L, state.get._2 - state.getCurrentProcessingTimeMs())
-        state.setTimeoutDuration(remaining)
-      }
-      out.iterator
-    }
   }
 }
 

@@ -37,41 +37,62 @@ class ProcessorsSpec extends SparkSpec {
     // is tested against. Polled, not processAllAvailable: with a
     // processing-time TTL the engine keeps running no-data batches and
     // processAllAvailable never returns.
+    //
+    // Processors.suppress runs the same feed as a second query, on a second
+    // MemoryStream fed in lockstep (a MemoryStream trims the batches one
+    // query commits, so two queries cannot share one). An unchanged
+    // payload is its duplicate, so key "a" must behave as above. Key "c"
+    // changes its payload in the duplicate batch: an accepted write, which
+    // re-anchors c's TTL, so c's last row — sent after the first
+    // sighting's expiry but before the re-anchored one — stays suppressed.
     implicit val sc = spark.sqlContext
     val ttlMs = 10000L
-    val mem = MemoryStream[StreamEnvelop]
-    val q = Processors.dedup(mem.toDS(), _.primaryKey, ttlMs)
-      .writeStream.format("memory").queryName("tws_dedup_ttl").outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(200L))
-      .start()
+    val mems = Seq(MemoryStream[StreamEnvelop], MemoryStream[StreamEnvelop])
+    def feed(rows: StreamEnvelop*): Unit = mems.foreach(_.addData(rows: _*))
+    def start(out: org.apache.spark.sql.Dataset[StreamEnvelop], table: String) =
+      out.writeStream.format("memory").queryName(table).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(200L))
+        .start()
+    val qs = Seq(
+      start(Processors.dedup(mems(0).toDS(), _.primaryKey, ttlMs), "tws_dedup_ttl"),
+      start(Processors.suppress(mems(1).toDS(), _.primaryKey, ttlMs, Set.empty), "tws_suppress_ttl"))
     try {
-      def keys() = spark.table("tws_dedup_ttl").select("primaryKey").as[String].collect().toSeq
-      def await(what: String)(cond: Seq[String] => Boolean): Long = {
+      def keys(table: String) = spark.table(table).select("primaryKey").as[String].collect().toSeq
+      def await(what: String, tables: String*)(cond: Seq[String] => Boolean): Long = {
         val deadline = System.currentTimeMillis() + 30000
-        while (!cond(keys()) && System.currentTimeMillis() < deadline) Thread.sleep(100)
-        assert(cond(keys()), s"timed out waiting for $what: ${keys()}")
+        def ok = tables.forall(t => cond(keys(t)))
+        while (!ok && System.currentTimeMillis() < deadline) Thread.sleep(100)
+        assert(ok, s"timed out waiting for $what: ${tables.map(keys)}")
         System.currentTimeMillis()
       }
+      val both = Seq("tws_dedup_ttl", "tws_suppress_ttl")
       // first sighting: its batch runs between `sent` and `seen`, so the
       // state expires between sent + ttl and seen + ttl
       val sent = System.currentTimeMillis()
-      mem.addData(mkEnv("i", "a", "{}", 1))
-      val seen = await("first sighting")(_ == Seq("a"))
+      feed(mkEnv("i", "a", "{}", 1), mkEnv("i", "c", """{"x": 1}""", 1))
+      val seen = await("first sighting", both: _*)(_.sorted == Seq("a", "c"))
       // duplicate 3 s later, well inside the TTL. The marker key "b" rides
       // in the same micro-batch, so its arrival proves the duplicate was
       // processed.
       Thread.sleep(3000)
-      mem.addData(mkEnv("i", "a", "{}", 2), mkEnv("i", "b", "{}", 3))
-      val dupDone = await("duplicate batch")(_.contains("b"))
+      val dupSent = System.currentTimeMillis()
+      feed(mkEnv("i", "a", "{}", 2), mkEnv("i", "b", "{}", 3), mkEnv("i", "c", """{"x": 2}""", 3))
+      val dupDone = await("duplicate batch", both: _*)(_.contains("b"))
       assert(dupDone - sent < ttlMs - 1000, "duplicate batch ran too close to expiry to test it")
-      assert(keys().count(_ == "a") === 1, "duplicate inside the TTL was emitted")
+      both.foreach(t => assert(keys(t).count(_ == "a") === 1, s"$t: duplicate inside the TTL was emitted"))
+      assert(keys("tws_suppress_ttl").count(_ == "c") === 2, "a changed payload was suppressed")
       // 1 s past the first sighting's expiry, and ~2 s before the expiry
       // the duplicate would have set had it re-anchored the TTL: the key
       // re-emits only if the duplicate did not postpone it
       Thread.sleep(math.max(0L, seen + ttlMs + 1000 - System.currentTimeMillis()))
-      mem.addData(mkEnv("i", "a", "{}", 4))
-      await("re-emission after expiry")(_.count(_ == "a") == 2)
-    } finally q.stop()
+      feed(mkEnv("i", "a", "{}", 4), mkEnv("i", "c", """{"x": 2}""", 4))
+      val reDone = await("re-emission after expiry", both: _*)(_.count(_ == "a") == 2)
+      // c's accepted write in the duplicate batch re-anchored its expiry
+      // past dupSent + ttl, and this batch ran before that
+      assert(reDone - dupSent < ttlMs, "re-emission batch ran past the re-anchored expiry")
+      assert(keys("tws_suppress_ttl").count(_ == "c") === 2,
+        "an accepted write did not re-anchor the TTL")
+    } finally qs.foreach(_.stop())
   }
 
   test("Processors.cdcPipeline: DELETE after a payload-equal update is not suppressed") {
@@ -117,28 +138,36 @@ class ProcessorsSpec extends SparkSpec {
 
   test("Processors.cdcPipeline: null-key rows pass through untouched and never reach state") {
     implicit val sc = spark.sqlContext
-    val mem = MemoryStream[StreamEnvelop]
-    val out = Processors.cdcPipeline(mem.toDS(), ttlMs = 0, Set.empty)
-    val q = out.writeStream.format("memory").queryName("tws_cdc_nullkey").outputMode("append").start()
-    try {
-      // same (null key, eventTime) and same payload twice: nothing to
-      // dedup or suppress against, so both flow through as they came
-      val nullRows = Seq(mkEnv("insert", null, """{"v": 1}""", 1), mkEnv("insert", null, """{"v": 1}""", 1))
-      mem.addData(nullRows: _*)
-      q.processAllAvailable()
-      assert(spark.table("tws_cdc_nullkey").as[StreamEnvelop].collect().toSeq === nullRows)
-      assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum === 0L, "null-key rows wrote state")
-      // a real "" key shares the null rows' group and is still deduped
-      mem.addData(mkEnv("insert", "", """{"v": 2}""", 1), mkEnv("insert", "", """{"v": 2}""", 1),
-        mkEnv("insert", null, """{"v": 1}""", 1))
-      q.processAllAvailable()
-      val got = spark.table("tws_cdc_nullkey")
-        .select($"primaryKey", $"payloadJson").as[(String, String)].collect().toSeq
-      assert(got.count(_._1 == null) === 3)
-      assert(got.filter(_._1 != null) === Seq(("", """{"v": 2}""")))
-      // the zero above is a real count: the "" key's state shows up
-      assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum > 0L)
-    } finally q.stop()
+    // Processors.suppress keeps the same rule: for this feed, its
+    // unchanged-payload suppression drops exactly what cdcPipeline's
+    // (key, eventTime) dedup drops
+    type Face = org.apache.spark.sql.Dataset[StreamEnvelop] => org.apache.spark.sql.Dataset[StreamEnvelop]
+    val faces = Seq[(String, Face)](
+      "tws_cdc_nullkey" -> (Processors.cdcPipeline(_, ttlMs = 0, Set.empty)),
+      "tws_suppress_nullkey" -> (Processors.suppress(_, _.primaryKey, ttlMs = 0, Set.empty)))
+    faces.foreach { case (table, face) =>
+      val mem = MemoryStream[StreamEnvelop]
+      val q = face(mem.toDS()).writeStream.format("memory").queryName(table).outputMode("append").start()
+      try {
+        // same (null key, eventTime) and same payload twice: nothing to
+        // dedup or suppress against, so both flow through as they came
+        val nullRows = Seq(mkEnv("insert", null, """{"v": 1}""", 1), mkEnv("insert", null, """{"v": 1}""", 1))
+        mem.addData(nullRows: _*)
+        q.processAllAvailable()
+        assert(spark.table(table).as[StreamEnvelop].collect().toSeq === nullRows, table)
+        assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum === 0L, s"$table: null-key rows wrote state")
+        // a real "" key shares the null rows' group and is still deduped
+        mem.addData(mkEnv("insert", "", """{"v": 2}""", 1), mkEnv("insert", "", """{"v": 2}""", 1),
+          mkEnv("insert", null, """{"v": 1}""", 1))
+        q.processAllAvailable()
+        val got = spark.table(table)
+          .select($"primaryKey", $"payloadJson").as[(String, String)].collect().toSeq
+        assert(got.count(_._1 == null) === 3, table)
+        assert(got.filter(_._1 != null) === Seq(("", """{"v": 2}""")), table)
+        // the zero above is a real count: the "" key's state shows up
+        assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum > 0L, table)
+      } finally q.stop()
+    }
   }
 
   test("Processors.materialize (transformWithState): changelog with delete reset") {

@@ -417,20 +417,28 @@ class PropertiesSpec extends SparkSpec {
   }
 
   test("property: run-length-collapsed MG fold == arrival-by-arrival Misra-Gries, all feeds") {
-    // pins the closed-form algebra heavyHittersBatch (and its DuckDB
-    // oracle) rests on: a run of c identical arrivals folds to the same
-    // summary as c single arrivals, for every feed shape — full summary
-    // evictions, c == mmin boundary, empty-summary wipeouts included
+    // pins the closed-form algebra both heavy-hitters faces (and the batch
+    // face's DuckDB oracle) rest on: a run of c identical arrivals folds to
+    // the same summary as c single arrivals, for every feed shape — full
+    // summary evictions, c == mmin boundary, empty-summary wipeouts
+    // included — from every prior summary the streaming processor can
+    // restore (empty for the batch face; up to k + 1 counters, as after a
+    // restart with a smaller k)
     val feedGen = for {
       nItems <- Gen.choose(1, 12)
       len <- Gen.choose(0, 120)
       items <- Gen.listOfN(len, Gen.choose(0, nItems - 1).map(i => s"i$i"))
       k <- Gen.choose(1, 6)
-    } yield (items, k)
-    val p = Prop.forAll(feedGen) { case (items, k) =>
-      // reference: the streaming processor's arrival-by-arrival fold over
-      // batch-sorted rows (Processors.HeavyHittersProcessor lines, verbatim)
-      val m = scala.collection.mutable.HashMap.empty[String, Long]
+      priorSize <- Gen.choose(0, k + 1)
+      priorItems <- Gen.pick(priorSize, (0 until 14).map(i => s"i$i"))
+      priorCounts <- Gen.listOfN(priorSize, Gen.choose(1L, 20L))
+      priorExtra <- Gen.choose(0L, 30L)
+    } yield (items, k, priorItems.toList.zip(priorCounts), priorExtra)
+    val p = Prop.forAll(feedGen) { case (items, k, prior, priorExtra) =>
+      val priorTotal = prior.map(_._2).sum + priorExtra
+      // reference: the arrival-by-arrival fold over batch-sorted rows,
+      // starting from the prior summary
+      val m = scala.collection.mutable.HashMap.from(prior)
       items.sorted.foreach { it =>
         m.get(it) match {
           case Some(c) => m(it) = c + 1
@@ -445,8 +453,8 @@ class PropertiesSpec extends SparkSpec {
       val ref = m.toVector.sortBy { case (i, c) => (-c, i) }
       val runs = items.groupBy(identity).view.mapValues(_.size.toLong)
         .toVector.sortBy(_._1)
-      val (got, total) = graft.stateful.Processors.mgFoldRuns(runs.iterator, k)
-      got == ref && total == items.length.toLong
+      val (got, total) = graft.stateful.Processors.mgFoldRuns(runs.iterator, k, prior, priorTotal)
+      got == ref && total == priorTotal + items.length
     }
     assert(holds(p))
   }

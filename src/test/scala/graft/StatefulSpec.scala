@@ -129,11 +129,10 @@ class StatefulSpec extends SparkSpec {
 
   // -------------------------------------------------------- streaming faces
 
-  test("StatefulMerger.streaming suppresses per-key unchanged payloads across batches") {
+  test("Processors.suppress suppresses per-key unchanged payloads across batches") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[StreamEnvelop]
-    val out = StatefulMerger(Seq("primaryKey"), "payloadJson", Seq("updatedAt"), ttlMs = 0)
-      .streaming(mem.toDS(), _.primaryKey)
+    val out = Processors.suppress(mem.toDS(), _.primaryKey, ttlMs = 0, Set("updatedAt"))
     val q = out.writeStream.format("memory").queryName("merger_out").outputMode("append").start()
     try {
       mem.addData(
@@ -169,49 +168,6 @@ class StatefulSpec extends SparkSpec {
         .select("event_count", "actions").as[(Long, String)].collect()
       assert(got.contains((2L, "a1,a2")))
     } finally q.stop()
-  }
-
-  // ------------------------------------------------- GroupState TTL contract
-  //
-  // Spark clears a stored timeout whenever the function runs for a key
-  // without re-setting it (FlatMapGroupsWithStateExec writes NO_TIMESTAMP),
-  // so a duplicate-only invocation that skips setTimeoutDuration silently
-  // cancels the pending TTL: state never expires, the key never re-emits
-  // (ADVICE r2, high ×2). Pinned with TestGroupState.
-
-  import org.apache.spark.api.java.Optional
-  import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-
-  private def mkState[S](init: Option[S], nowMs: Long, timedOut: Boolean = false): TestGroupState[S] =
-    TestGroupState.create[S](
-      init.map(Optional.of[S]).getOrElse(Optional.empty[S]()),
-      GroupStateTimeout.ProcessingTimeTimeout,
-      nowMs,
-      Optional.empty[Long](),
-      timedOut)
-
-  test("StatefulMerger TTL: suppressed batch re-arms; accepted write re-anchors the deadline") {
-    val m = StatefulMerger(Seq("k"), "payloadJson", ttlMs = 10000)
-    // accepted write at t=1000 -> deadline 11000
-    val s1 = mkState[(Long, Long)](None, 1000)
-    assert(m.stateFunc("k", Iterator(mkEnv("u", "k", """{"x":1}""", 1)), s1).size === 1)
-    assert(s1.get._2 === 11000L && s1.getTimeoutTimestampMs.get === 11000L)
-    // all-suppressed batch at t=5000 -> out.isEmpty, but the pending TTL
-    // keeps running from the stored deadline instead of being cleared
-    val s2 = mkState[(Long, Long)](Some(s1.get), 5000)
-    assert(m.stateFunc("k", Iterator(mkEnv("u", "k", """{"x":1}""", 2)), s2).isEmpty)
-    assert(s2.getTimeoutTimestampMs.isPresent, "suppressed-only batch cancelled the 24h TTL")
-    assert(s2.getTimeoutTimestampMs.get === 11000L)
-    // a CHANGED payload at t=7000 is an accepted write -> OnCreateAndWrite
-    // re-anchors the deadline to now+ttl
-    val s3 = mkState[(Long, Long)](Some(s1.get), 7000)
-    assert(m.stateFunc("k", Iterator(mkEnv("u", "k", """{"x":2}""", 3)), s3).size === 1)
-    assert(s3.getTimeoutTimestampMs.get === 17000L)
-    // expiry removes state; the same payload then re-emits
-    val s4 = mkState[(Long, Long)](Some(s3.get), 18000, timedOut = true)
-    assert(m.stateFunc("k", Iterator.empty, s4).isEmpty && s4.isRemoved)
-    val s5 = mkState[(Long, Long)](None, 19000)
-    assert(m.stateFunc("k", Iterator(mkEnv("u", "k", """{"x":2}""", 4)), s5).size === 1)
   }
 
   test("StatefulMerger.batch with opCol: null operation does not null-suppress the row") {

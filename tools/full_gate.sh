@@ -39,6 +39,20 @@ if grep -rnE --include='*.scala' \
   echo "full_gate: catalog statement under connectors/; Bucketing's marker describes an index" >&2
   exit 1
 fi
+# one keyed-state API with one wiring: no line of code in src/main may call
+# flatMapGroupsWithState, and none outside stateful/Processors.scala (whose
+# `keyed` is the wiring) may call transformWithState
+if grep -rn --include='*.scala' 'flatMapGroupsWithState' src/main \
+    | grep -Ev '^[^:]+:[0-9]+:[[:space:]]*(\*|//|/\*)'; then
+  echo "full_gate: flatMapGroupsWithState in src/main; use Processors.keyed" >&2
+  exit 1
+fi
+if grep -rn --include='*.scala' '\.transformWithState(' src \
+    | grep -v '^src/main/scala/graft/stateful/Processors\.scala:' \
+    | grep -Ev '^[^:]+:[0-9]+:[[:space:]]*(\*|//|/\*)'; then
+  echo "full_gate: transformWithState outside stateful/Processors.scala; use Processors.keyed" >&2
+  exit 1
+fi
 # test-time budget: the full suite must finish inside a 2670 s timeout, so a run
 # over 90% of that (2400 s) fails here instead of silently on the timeout
 TEST_LOG=/tmp/graft_gate_tests.log
