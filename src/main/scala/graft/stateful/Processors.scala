@@ -554,9 +554,9 @@ object Processors {
       op: Option[String]
   ): Boolean = {
     val h = StatefulMerger.hashPayload(e.payloadJson, excludedFields, op)
-    val changed = !lastHash.exists() || lastHash.get() != h
-    if (changed) lastHash.update(h)
-    changed
+    val differs = !lastHash.exists() || lastHash.get() != h
+    if (differs) lastHash.update(h)
+    differs
   }
 
   /** Group key for null-key rows: a null grouping key crashes
@@ -576,9 +576,8 @@ object Processors {
 
   /** Change suppression on its own — the streaming face of
     * [[StatefulMerger]] (reference pattern/merge/StatefulMerger.java:25-122):
-    * a row passes iff its canonical payload, minus `excludedFields` and
-    * with the operation in the composite when `withOp`, differs from the
-    * last one its key emitted. State is that hash per key, with native TTL
+    * a row passes iff its canonical payload, minus `excludedFields`,
+    * differs from the last one its key emitted. State is that hash per key, with native TTL
     * re-anchored by accepted rows only (see [[changed]]).
     *
     * A row whose key is null has nothing to suppress against: it groups
@@ -588,8 +587,7 @@ object Processors {
   class SuppressProcessor(
       ttl: TTLConfig,
       rowKey: StreamEnvelop => String,
-      excludedFields: Set[String],
-      withOp: Boolean)
+      excludedFields: Set[String])
       extends StatefulProcessor[String, StreamEnvelop, StreamEnvelop] {
     @transient private var lastHash: ValueState[Long] = _
 
@@ -601,22 +599,19 @@ object Processors {
         rows: Iterator[StreamEnvelop],
         timerValues: TimerValues
     ): Iterator[StreamEnvelop] =
-      rows.filter { e =>
-        rowKey(e) == null ||
-        changed(lastHash, e, excludedFields, if (withOp) Some(e.operation) else None)
-      }.toVector.iterator
+      rows.filter(e => rowKey(e) == null || changed(lastHash, e, excludedFields, None))
+        .toVector.iterator
   }
 
   def suppress(
       ds: Dataset[StreamEnvelop],
       key: StreamEnvelop => String,
       ttlMs: Long,
-      excludedFields: Set[String],
-      withOp: Boolean = false
+      excludedFields: Set[String]
   ): Dataset[StreamEnvelop] = {
     import ds.sparkSession.implicits._
     keyed(ds, ttlMs)(e => Option(key(e)).getOrElse(NullKeyGroup))(
-      new SuppressProcessor(_, key, excludedFields, withOp))
+      new SuppressProcessor(_, key, excludedFields))
   }
 
   /** One update of one session window (a changelog of session results):

@@ -15,7 +15,9 @@ import org.apache.spark.sql.functions._
   * `opCol`: include this column in the hashed composite as a `__op` entry —
   * the reference's MongoToKafka chain adds "__op" to the merged map
   * (job/cdc/MongoToKafkaJob.java buildChain) so a DELETE whose payload
-  * canonicalizes equal to the prior event's payload is still emitted.
+  * canonicalizes equal to the prior event's payload is still emitted. In
+  * streaming that chain is [[Processors.cdcPipeline]], which always joins
+  * the operation; [[Processors.suppress]] hashes the payload alone.
   */
 final case class StatefulMerger(
     keyCols: Seq[String],
