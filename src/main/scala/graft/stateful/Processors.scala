@@ -577,8 +577,9 @@ object Processors {
   /** Change suppression on its own — the streaming face of
     * [[StatefulMerger]] (reference pattern/merge/StatefulMerger.java:25-122):
     * a row passes iff its canonical payload, minus `excludedFields`,
-    * differs from the last one its key emitted. State is that hash per key, with native TTL
-    * re-anchored by accepted rows only (see [[changed]]).
+    * differs from the last one its key emitted. State is that hash per
+    * key, with native TTL re-anchored by accepted rows only (see
+    * [[changed]]).
     *
     * A row whose key is null has nothing to suppress against: it groups
     * under the [[cdcPipeline]] placeholder, passes through untouched and
